@@ -1,26 +1,31 @@
-"""Session-scoped cache hygiene for persisted intermediates.
+"""Session-scoped lifecycle for persisted caches and local checkpoints.
 
 Several registry queries persist() an intermediate relation that two
 downstream branches share (LSH signature tables, per-vector norms,
-curation signals, the quarantine reader's parsed relation). That is
-correct for a one-query-per-process harness — the cache dies with the
-session — but a long-lived session COMPOSING many registry calls
-accumulates storage-memory it can never reclaim without the nuclear
-``spark.catalog.clearCache()`` (round-4 VERDICT "what's wrong" #2/#3).
+curation signals, the quarantine reader's parsed relation), and cut
+long lineages with ``localCheckpoint``. A one-query-per-process
+harness never notices — the storage dies with the session — but a
+long-lived session COMPOSING many calls would accumulate storage it
+cannot reclaim without the nuclear ``spark.catalog.clearCache()``,
+which also drops the caller's own caches and does not touch
+checkpoint blocks at all.
 
-This module is the lease between the two usage patterns:
+This module owns both lifecycles:
 
-- producers mark caches with :func:`tracked_persist` instead of bare
-  ``df.persist()`` — same laziness, same semantics, plus registration;
+- producers mark caches with :func:`tracked_persist` and lineage cuts
+  with :func:`tracked_checkpoint` instead of the bare calls — same
+  semantics, plus registration;
 - a composing session calls :func:`release_tracked` between queries
   (or wraps work in :func:`tracked_caches`) to return storage memory
-  to baseline without disturbing caches IT created by other means —
-  unlike ``clearCache``, which drops every cache in the session
-  including the caller's own.
+  to baseline without disturbing frames IT persisted by other means;
+- :func:`free_checkpoint` is the one per-frame checkpoint release,
+  used by :func:`release_tracked` and by any owner that scopes a
+  checkpoint itself (the pipeline frees each table's batch when that
+  table's run ends, leaving every tracked frame alone).
 
-Driver-side bookkeeping only: a list of (weakly-interesting) DataFrame
-handles per SparkSession id. No executor traffic until release, and
-``unpersist(blocking=False)`` makes release itself non-blocking.
+Driver-side bookkeeping only: a list of DataFrame handles per
+SparkSession id. No executor traffic until release, and a
+non-blocking release does not wait for the executors.
 """
 
 from __future__ import annotations
@@ -34,9 +39,7 @@ from pyspark.sql import DataFrame
 _TRACKED: dict[int, list[DataFrame]] = {}
 # localCheckpoint results, tracked separately: their blocks live
 # OUTSIDE the persist lifecycle (DataFrame.unpersist is a no-op on
-# them; clearCache does not touch them), so without this registry a
-# composing session leaks corpus-scale checkpoint blocks it can never
-# reclaim (r12 ADVICE #2).
+# them; clearCache does not touch them)
 _TRACKED_CKPT: dict[int, list[DataFrame]] = {}
 
 
@@ -61,11 +64,7 @@ def track(df: DataFrame) -> DataFrame:
 
 def tracked_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """``df.localCheckpoint(eager)`` + register the checkpointed frame
-    so :func:`release_tracked` can free its blocks (r13; closes the
-    r12 ADVICE leak: checkpoint blocks are invisible to both
-    ``DataFrame.unpersist`` and ``clearCache``, so the engine's
-    lineage cuts — graph edges, IVF shortlists, trained centroids —
-    accumulated storage a composing session could never reclaim).
+    so :func:`release_tracked` can free its blocks.
 
     Release semantics differ from a persisted cache: a checkpointed
     frame has NO lineage behind its blocks, so re-executing the frame
@@ -78,11 +77,21 @@ def tracked_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return out
 
 
-def _free_checkpoint(df: DataFrame, blocking: bool) -> None:
-    """Drop a localCheckpoint's blocks: the persisted RDD hides behind
-    the LogicalRDD the checkpoint returned (Dataset.checkpoint wraps
-    the materialized internal RDD), reachable via the logical plan."""
-    df._jdf.queryExecution().logical().rdd().unpersist(blocking)
+def free_checkpoint(df: DataFrame, blocking: bool = False) -> None:
+    """Drop the blocks of a frame returned by ``localCheckpoint``. The
+    frame must not be executed afterwards: it has no lineage to
+    recompute from. The RDD leaves the session's storage listing
+    before this returns; ``blocking`` only waits for the executors to
+    delete the blocks. Never raises: a never-materialized checkpoint
+    (``eager=False``) or a stopped session has nothing left to free.
+
+    The persisted RDD hides behind the LogicalRDD the checkpoint
+    returned (Dataset.checkpoint wraps the materialized internal
+    RDD), reachable via the logical plan."""
+    try:
+        df._jdf.queryExecution().logical().rdd().unpersist(blocking)
+    except Exception:
+        pass
 
 
 def release_tracked(spark=None, blocking: bool = False) -> int:
@@ -105,10 +114,7 @@ def release_tracked(spark=None, blocking: bool = False) -> int:
                 pass  # session already stopped — nothing left to free
             n += 1
         for df in _TRACKED_CKPT.pop(k, []):
-            try:
-                _free_checkpoint(df, blocking)
-            except Exception:
-                pass  # never-materialized (eager=False) or session gone
+            free_checkpoint(df, blocking)
             n += 1
     return n
 
@@ -127,11 +133,11 @@ def tracked_caches(spark=None, blocking: bool = False) -> Iterator[None]:
 # manager ends model-sized (≤ 33 LR buckets, d = 64 PCA rows), so with
 # AQE's coalescing disabled the session-wide shuffle width (= core
 # count locally, thousands on a cluster) would launch that many reduce
-# tasks per step × N steps for a handful of groups — the r12 driver
-# data showed classifier_train_lr ANTI-scaling 32c vs 8c (11.6 s vs
-# 7.1 s) for exactly this reason. 8 covers the largest model (64 rows)
-# with healthy parallelism while staying scheduler-cheap at any core
-# count; map-side parallelism (scan splits) is unaffected by this key.
+# tasks per step × N steps for a handful of groups — at 32 local cores
+# classifier_train_lr ran slower than at 8 (11.6 s vs 7.1 s) for
+# exactly this reason. 8 covers the largest model (64 rows) with
+# healthy parallelism while staying scheduler-cheap at any core count;
+# map-side parallelism (scan splits) is unaffected by this key.
 AQE_OFF_REDUCE_WIDTH = 8
 
 
@@ -143,19 +149,19 @@ def aqe_off(spark) -> Iterator[None]:
     fixed small-state aggregate whose reduce side is bounded by the
     model, not the data, so AQE's runtime re-planning has nothing to
     improve at any scale while its per-stage materialization adds one
-    extra job per step (r12; measured 7.8 s vs 12.0 s on the 20-step
-    LR loop at sf0.1, identical results). Corpus-shaped plans should
+    extra job per step (measured 7.8 s vs 12.0 s on the 20-step LR
+    loop at sf0.1, identical results). Corpus-shaped plans should
     keep AQE on — it is what turns the tiny-iterate joins into
     broadcasts locally while falling back to shuffle joins at scale
     (graph_pagerank's rounds measured FASTER with AQE for exactly that
-    reason; see OPTIMIZATION_r12.md).
+    reason).
 
     Also pins ``spark.sql.shuffle.partitions`` to
-    :data:`AQE_OFF_REDUCE_WIDTH` for the block (r13): with AQE's
-    coalescing off, the model-sized per-step aggregates would
-    otherwise reduce at the full session width — wasteful at 32 local
-    cores and pathological at cluster widths (see the constant's
-    comment). Restored on exit with the AQE flag.
+    :data:`AQE_OFF_REDUCE_WIDTH` for the block: with AQE's coalescing
+    off, the model-sized per-step aggregates would otherwise reduce at
+    the full session width — wasteful at 32 local cores and
+    pathological at cluster widths (see the constant's comment).
+    Restored on exit with the AQE flag.
 
     NOT re-entrant by design: the manager toggles shared session conf,
     so plans must not be built concurrently on the same session while

@@ -8,11 +8,10 @@ distributed range-partitioned sort + per-partition offsets (one tiny
 count job) — every partition keeps working, and the positions are
 bit-identical to the window's on every engine. First proven by
 export_shuffle (operators/scans.py), shared by corpus_interleave and
-events_rfm. r11 shipped the recipe over an RDD ``zipWithIndex`` hop;
-r12's default is pure-JVM (``monotonically_increasing_id`` +
-cumulative-offset lookup — measured 1.5-1.9x faster at sf1/sf10 on
-the table-grain callers, A/B in BASELINE.md r12, tools/
-ab_global_position.py).
+events_rfm. The default is pure-JVM (``monotonically_increasing_id`` +
+cumulative-offset lookup), measured 1.5-1.9x faster at sf1/sf10 on
+the table-grain callers than the same recipe over an RDD
+``zipWithIndex`` hop in an interleaved A/B.
 
 ``ntile_from_position`` is the positional half of the same story:
 ntile(k)'s bucket depends only on (rank, N), so a global ntile window

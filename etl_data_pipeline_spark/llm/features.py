@@ -14,6 +14,8 @@ text_tfidf uses for ln().
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -322,8 +324,19 @@ def _lr_wmap(support: list[int], w: dict[int, float]):
     pure driver-side Python — measured 1.07 s vs 0.013 s for 20
     builds. repr(float) round-trips exactly and the D suffix parses
     as DOUBLE, so the literal map is bit-identical to the F.lit form
-    (asserted before the swap; the oracle replays the same values)."""
-    entries = ", ".join(f"{j}L, {w[j]!r}D" for j in support)
+    (asserted before the swap; the oracle replays the same values).
+
+    Always typed ``map<bigint,double>``: a non-finite weight renders
+    as a cast string (``infD``/``nanD`` would not parse) and an empty
+    support as a cast empty map (bare ``map()`` is untyped,
+    ``map<void,void>``)."""
+
+    def lit(v: float) -> str:
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+
+    if not support:
+        return F.expr("CAST(map() AS map<bigint,double>)")
+    entries = ", ".join(f"{j}L, {lit(w[j])}" for j in support)
     return F.expr(f"map({entries})")
 
 

@@ -21,6 +21,12 @@ Semantics preserved exactly (SURVEY.md §2.C):
 Deliberate fix over the reference: the sink can be idempotent
 (merge_keys) so a crash between load and watermark-write replays
 safely instead of duplicating rows (§2.C #5/#7).
+
+A table takes one of two paths, by its watermark: a data column, or
+the version feed of a manifest-table source. The paths differ only in
+how they resolve the watermark, read the batch and gate an empty
+batch; both then hand the batch to one load step — expectations gate,
+latest-per-key compaction, sink write, watermark advance.
 """
 
 from __future__ import annotations
@@ -32,8 +38,11 @@ from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
+from etl_data_pipeline_spark.functions.caching import free_checkpoint
 from etl_data_pipeline_spark.schema import validate_schema
 from etl_data_pipeline_spark.sinks import (
     _target_path,
@@ -50,6 +59,10 @@ from etl_data_pipeline_spark.watermark import (
 )
 
 log = logging.getLogger(__name__)
+
+# engine column carrying each version-feed row's source commit version;
+# it orders the latest-per-key compaction and never reaches a sink
+_FEED_VERSION = "_feed_version"
 
 
 def incremental_source_options(t: TableSpec, raw_watermark: str | None) -> dict:
@@ -133,12 +146,10 @@ class IncrementalPipeline:
 
     @staticmethod
     def _validate_sink_config(t: TableSpec) -> None:
-        """Pure-config sink contract, checked BEFORE any data work.
-        Previously the upsert check sat after the empty gate, the
-        checkpoint materialization, and the expectations gate — so an
-        all-quarantined (or empty) batch returned early, advancing the
-        watermark and masking the static misconfiguration until some
-        later batch happened to carry clean rows.
+        """Pure-config sink contract, checked BEFORE any data work, so
+        an empty or all-quarantined batch cannot advance the watermark
+        while masking a static misconfiguration until some later batch
+        happens to carry clean rows.
 
         - mode 'upsert' requires manifest + merge_keys: a silent
           append degrade would duplicate every updated key — the exact
@@ -178,7 +189,7 @@ class IncrementalPipeline:
         is captured FIRST and both the feed and the recorded progress
         are pinned to it (read_changes until_version), so a commit
         landing mid-run is simply next run's delta — never skipped,
-        never double-read. No localCheckpoint is needed, unlike the
+        never double-read. No checkpoint is needed, unlike the
         column-watermark path: the feed resolves to IMMUTABLE
         directories, so every action over it reads identical bytes by
         construction.
@@ -195,6 +206,7 @@ class IncrementalPipeline:
             VacuumedError,
             read_changes,
             read_manifest,
+            read_table,
         )
 
         opts = dict(t.source_options)
@@ -205,13 +217,11 @@ class IncrementalPipeline:
             # passes and the replay builds it) OR a lost/corrupted
             # watermark store against a populated sink, where a
             # full-feed plain append would duplicate every row: the
-            # same guard every other replaying degrade path takes
-            # (previously this path alone skipped it — r9 review).
+            # same guard every other replaying degrade path takes.
             self._guard_resync_duplication(t, "missing version watermark")
         try:
             # a NEGATIVE recorded version is corruption, not progress:
-            # treat like any unparseable value (the old max(0, ...)
-            # silently clamped it into an unguarded full feed)
+            # treat it like any unparseable value
             since = int(raw) if raw is not None else 0
             if since < 0:
                 raise ValueError(f"negative version watermark {raw!r}")
@@ -269,7 +279,7 @@ class IncrementalPipeline:
         # orders by business time — which can keep a stale row when a
         # correction re-emits a key with an older timestamp). The
         # column is compacted away again before any sink write.
-        ver_col = "_feed_version" if t.merge_keys else None
+        ver_col = _FEED_VERSION if t.merge_keys else None
         try:
             df = read_changes(
                 self.spark,
@@ -284,12 +294,9 @@ class IncrementalPipeline:
             # falling behind retention (its since-snapshot VACUUMED).
             # Either way the feed cannot produce the delta; the only
             # consistent answer is the SNAPSHOT at the pinned head
-            # (idempotent under merge keys). Anything else propagates.
-            # TYPED classes, not message sniffing: a table path that
-            # happens to contain 'overwrite' must not route an
-            # unrelated error into a full-snapshot resync (r9 review).
-            from etl_data_pipeline_spark.sinks.manifest import read_table
-
+            # (idempotent under merge keys). Anything else propagates:
+            # the classes are typed, so a table path that happens to
+            # contain 'overwrite' never routes an unrelated error here.
             log.warning(
                 "table %s: %s — resyncing from the full snapshot", t.name, e
             )
@@ -299,8 +306,6 @@ class IncrementalPipeline:
                 # one snapshot = one version; per-key ordering inside
                 # it is unknowable, so same-key duplicates (if the
                 # overwritten source kept any) still fail merge loudly
-                from pyspark.sql import functions as F
-
                 df = df.withColumn(ver_col, F.lit(head).cast("long"))
         if t.expected_schema:
             # validate_schema PROJECTS to the declared columns — keep
@@ -316,43 +321,9 @@ class IncrementalPipeline:
             return TableRunResult(
                 t.name, "skipped_empty", rows=0, new_watermark=head
             )
-        if t.expectations:
-            # same gate as the column path (this path previously
-            # skipped it entirely — the configured quality contract
-            # silently unenforced for version-feed tables, r9 review).
-            # Batch key = the frozen SINCE version: stable across
-            # replays of the same delta, so quarantine overwrites the
-            # same batch=* subdir.
-            df = self._apply_expectations(t, df, since)
-            if df is None:  # drop mode, zero clean rows
-                self.store.set(t.name, head)
-                return TableRunResult(
-                    t.name, "loaded", rows=0, new_watermark=head
-                )
-        if ver_col:
-            df = self._compact_feed_versions(t, df, ver_col)
-        if (
-            t.merge_keys
-            and t.sink_format == "manifest"
-            and t.sink_options.get("mode") == "upsert"
-        ):
-            # CDC feed: later versions REPLACE same-key rows — the
-            # content-fence append would anti-join the changed rows
-            # away and keep stale values forever (this path previously
-            # ignored mode='upsert' silently, r9 review)
-            self._merge_upsert_sink(t, df)
-        elif t.merge_keys and t.sink_format == "manifest":
-            write_sink(
-                df, "manifest", t.name, {**t.sink_options, "merge_keys": t.merge_keys}
-            )
-        elif t.merge_keys:
-            idempotent_append_parquet(
-                self.spark, df, t.name, dict(t.sink_options), t.merge_keys
-            )
-        else:
-            write_sink(df, t.sink_format, t.name, dict(t.sink_options))
-        self.store.set(t.name, head)  # only after successful load
-        return TableRunResult(t.name, "loaded", new_watermark=head)
+        # batch key = the frozen SINCE version: stable across replays
+        # of the same delta, so quarantine overwrites the same subdir
+        return self._load(t, df, since, head, ver_col)
 
     def _guard_resync_duplication(self, t: TableSpec, reason: str) -> None:
         """Every version-feed degrade path that REPLAYS rows (full
@@ -394,6 +365,11 @@ class IncrementalPipeline:
         materialize the whole batch just to discover it is empty. For
         batches too large for executor storage, stage to a temp
         parquet and re-read instead (same guarantee, disk cost).
+
+        The checkpoint belongs to this table's run alone: its blocks
+        are freed when the run ends, on success and on error, and no
+        other frame in the session is touched — tables share one
+        session and run concurrently.
         """
         raw = self.store.get(t.name)
         wm_value = parse_watermark(raw, t.watermark_type) if t.is_incremental else None
@@ -436,7 +412,7 @@ class IncrementalPipeline:
             return TableRunResult(t.name, "skipped_empty", rows=0)
         # Eager local checkpoint: materializes the batch once and cuts
         # lineage — every action below reads these blocks, never the
-        # live source. (Blocks are freed when the RDD is GC'd.)
+        # live source.
         df = df.localCheckpoint()
         try:
             # Compute the batch max BEFORE the write so a mid-write
@@ -448,29 +424,45 @@ class IncrementalPipeline:
             new_wm = (
                 max_watermark(df, t.watermark_column) if t.is_incremental else None
             )
+            # Batch key = the FROZEN stored watermark (raw), not new_wm:
+            # the upper bound changes when rows arrive between a failed
+            # write and its replay, which would scatter the same batch's
+            # violations across two batch=* subdirs. An upsert batch is
+            # compacted by the watermark column, the only ordering the
+            # spec declares (None on a full-load table: its batch must
+            # already be key-unique or merge fails loudly).
+            upsert = t.sink_options.get("mode") == "upsert"
+            return self._load(
+                t, df, raw, new_wm, t.watermark_column if upsert else None
+            )
+        finally:
+            free_checkpoint(df)
 
-            if t.expectations:
-                # Batch key = the FROZEN stored watermark (raw), not
-                # new_wm: the upper bound changes when rows arrive
-                # between a failed write and its replay, which would
-                # scatter the same batch's violations across two
-                # batch=* subdirs. The lower bound is stable until the
-                # batch commits, so replays overwrite the same subdir.
-                df = self._apply_expectations(t, df, raw)
-                if df is None:  # drop mode, zero clean rows
-                    if t.is_incremental and new_wm is not None:
-                        self.store.set(t.name, new_wm)
-                    return TableRunResult(
-                        t.name, "loaded", rows=0, new_watermark=new_wm
-                    )
+    def _load(
+        self,
+        t: TableSpec,
+        df: DataFrame,
+        batch_key: Any,
+        new_wm: Any,
+        order_by: str | None,
+    ) -> TableRunResult:
+        """The load step both paths share: expectations gate →
+        latest-per-key compaction by ``order_by`` (skipped when None) →
+        sink write → watermark advance to ``new_wm`` (skipped when
+        None). ``batch_key`` names the quarantine subdir.
 
-            # sink config already validated in run_table (pure config,
-            # checked before any data work)
-            if (
-                t.merge_keys
-                and t.sink_format == "manifest"
-                and t.sink_options.get("mode") == "upsert"
-            ):
+        The watermark is recorded only after the write returns, so a
+        failed write leaves it untouched and the next run replays the
+        batch. In drop mode a batch whose every row was quarantined
+        writes nothing, yet the watermark still advances over it and
+        the result is ``loaded`` with 0 rows."""
+        if t.expectations:
+            df = self._apply_expectations(t, df, batch_key)
+        if df is not None:  # None: drop mode quarantined every row
+            if order_by:
+                df = self._latest_per_key(t, df, order_by)
+            # sink config already validated in run_table
+            if t.sink_options.get("mode") == "upsert":
                 self._merge_upsert_sink(t, df)
             elif t.merge_keys and t.sink_format == "manifest":
                 # manifest's own content fence: anti-join inside the
@@ -488,21 +480,18 @@ class IncrementalPipeline:
                 )
             else:
                 write_sink(df, t.sink_format, t.name, dict(t.sink_options))
-
-            if t.is_incremental and new_wm is not None:
-                self.store.set(t.name, new_wm)  # only after successful load
-            return TableRunResult(t.name, "loaded", new_watermark=new_wm)
-        finally:
-            # Checkpoint blocks have no explicit release API; dropping
-            # the reference lets the ContextCleaner reclaim them.
-            del df
+        if new_wm is not None:
+            self.store.set(t.name, new_wm)
+        return TableRunResult(
+            t.name, "loaded", rows=0 if df is None else None, new_watermark=new_wm
+        )
 
     def _apply_expectations(self, t: TableSpec, df, batch_wm=None):
         """Run the declarative quality gate (expectations.py) on the
-        checkpointed batch. 'fail' raises with per-rule counts (the
-        table fails isolated, watermark frozen → retry after upstream
-        fix); 'drop' quarantines violating rows to parquet beside the
-        sink and returns the clean subset (None when nothing passed).
+        batch. 'fail' raises with per-rule counts (the table fails
+        isolated, watermark frozen → retry after upstream fix); 'drop'
+        quarantines violating rows to parquet beside the sink and
+        returns the clean subset (None when nothing passed).
 
         Quarantine writes are IDEMPOTENT per batch: rows land in a
         deterministic ``batch=<stored-watermark>`` subdir in overwrite
@@ -551,19 +540,19 @@ class IncrementalPipeline:
             qdir,
             {k: v for k, v in report.counts.items() if v},
         )
-        # clean subset may be empty: caller skips the write but still
-        # advances the watermark over the whole batch
         return None if report.total == report.n_violations else report.passed
 
     @staticmethod
-    def _tiebreak_expr(dtype, col):
-        """Deterministic-merge tiebreak expression for one column.
-        Spark cannot ORDER BY MapType (AnalysisException), so columns
-        whose type contains a map sort by their JSON rendering instead
-        — the same row always serializes the same way, so a replay
-        still picks the same winner. Orderable types sort natively."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import ArrayType, MapType, StructType
+    def _latest_per_key(t: TableSpec, df: DataFrame, order_by: str) -> DataFrame:
+        """Last-write-wins compaction: one row per merge key, the one
+        with the greatest ``order_by``. Sinks that merge need unique
+        keys, and a batch can carry several changes of one key. Ties
+        break on the remaining columns, so a replay after a mid-write
+        crash commits the same winner. Spark cannot ORDER BY a map, so
+        a column whose type contains one sorts by its JSON rendering
+        (the same row always serializes the same way). The engine's
+        feed-version column is dropped once it has ordered the batch.
+        One window over the batch only — it never touches the sink."""
 
         def orderable(dt):
             if isinstance(dt, MapType):
@@ -574,37 +563,17 @@ class IncrementalPipeline:
                 return all(orderable(f.dataType) for f in dt.fields)
             return True
 
-        return col if orderable(dtype) else F.to_json(col)
-
-    def _compact_feed_versions(self, t: TableSpec, df, ver_col: str):
-        """Last-write-wins compaction of a version feed's delta by the
-        SOURCE COMMIT VERSION: a key updated in >=2 source versions
-        since the watermark arrives as >=2 delta rows, and only the
-        feed version orders them — a data watermark column orders by
-        business time, which keeps a stale row when a correction
-        re-emits a key with an older timestamp. Ties (same key updated
-        twice in ONE commit, or an overwrite-resync snapshot where
-        every row carries the head version) break on the remaining
-        columns deterministically, so a replay after a mid-write crash
-        commits the same winner. The engine column is dropped before
-        any sink sees the batch. One window over the delta only —
-        O(batch log batch), never touches the sink table."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         tiebreak = [
-            self._tiebreak_expr(df.schema[c].dataType, F.col(c)).desc()
+            (F.col(c) if orderable(df.schema[c].dataType) else F.to_json(c)).desc()
             for c in df.columns
-            if c != ver_col and c not in t.merge_keys
+            if c != order_by and c not in t.merge_keys
         ]
         w = Window.partitionBy(*t.merge_keys).orderBy(
-            F.col(ver_col).desc(), *tiebreak
+            F.col(order_by).desc(), *tiebreak
         )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", ver_col)
-        )
+        out = df.withColumn("_rn", F.row_number().over(w))
+        out = out.filter("_rn = 1").drop("_rn")
+        return out.drop(_FEED_VERSION) if order_by == _FEED_VERSION else out
 
     def _merge_upsert_sink(self, t: TableSpec, df) -> None:
         """CDC upsert sink: ``sink_options={'mode': 'upsert'}`` on a
@@ -613,25 +582,15 @@ class IncrementalPipeline:
         content-fence append — the append fence de-duplicates REPLAYS
         of identical rows, but a CDC source emits NEW versions of an
         existing key, which an append would duplicate and only a merge
-        can replace.
-
-        A CDC batch can carry several changes for one key; merge
-        requires unique keys, so the batch is first compacted to the
-        newest change per key BY THE WATERMARK COLUMN (the only
-        ordering the spec declares), with the remaining row columns as
-        a DETERMINISTIC tiebreak — same-watermark changes to one key
-        must pick the same winner on every run, or a replay after a
-        mid-write crash could commit a different table state than the
-        first attempt (breaking merge's replay idempotency). A
-        full-load table has no ordering, so there the batch must
-        already be key-unique or merge fails loudly.
+        can replace. Merge needs unique keys: an incremental batch
+        arrives compacted to one row per key (see _latest_per_key),
+        deterministically, which keeps a replay after a mid-write
+        crash idempotent; a full-load batch has no ordering, so it
+        must already be key-unique or merge fails loudly.
 
         ``partition_by`` in sink_options reaches the table's FIRST
-        commit (it is a table property thereafter); ``txn`` passes
-        through for orchestrators that fence by app/run id."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
+        commit (it is a table property thereafter). A ``txn`` option
+        is rejected: see below."""
         from etl_data_pipeline_spark.sinks.manifest import merge_upsert
 
         opts = t.sink_options
@@ -651,27 +610,11 @@ class IncrementalPipeline:
                 "sinks.manifest.merge_upsert directly with a per-run "
                 "version)"
             )
-        path = _target_path(t.name, opts)
-        batch = df
-        if t.is_incremental and t.watermark_column:
-            tiebreak = [
-                self._tiebreak_expr(batch.schema[c].dataType, F.col(c)).desc()
-                for c in batch.columns
-                if c != t.watermark_column and c not in t.merge_keys
-            ]
-            w = Window.partitionBy(*t.merge_keys).orderBy(
-                F.col(t.watermark_column).desc(), *tiebreak
-            )
-            batch = (
-                batch.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
         partition_by = opts.get("partition_by")
         merge_upsert(
             self.spark,
-            path,
-            batch,
+            _target_path(t.name, opts),
+            df,
             t.merge_keys,
             partition_by=tuple(partition_by) if partition_by else None,
         )

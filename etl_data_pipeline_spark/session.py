@@ -33,6 +33,9 @@ TPCH_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# the directory that holds the etl_data_pipeline_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "etl_data_pipeline_spark",
@@ -85,7 +88,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # Shuffled-hash over sort-merge when the planner's size
         # conditions are met, plus the AQE runtime SMJ→SHJ rewrite for
-        # small post-shuffle partitions (guide §3.1/§9; r13 bench-wide
+        # small post-shuffle partitions (guide §3.1/§9; bench-wide
         # interleaved A/B: 52-query total 119.6→114.8 s, biggest wins
         # on the hash-heavy dedup/graph family — dedup_embedding_cosine
         # 7.7→5.3, graph_pagerank 10.3→8.9 — a handful of sub-second
@@ -94,16 +97,14 @@ def get_spark(
         # falls back to SMJ otherwise) and AQE skew-join continues to
         # split oversized partitions; the 128m rewrite threshold only
         # fires when EVERY post-shuffle partition is below it, so a
-        # skewed build side keeps the spill-safe SMJ. Env-overridable
-        # for deployments that want the old default.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "128m"),
-        )
+        # skewed build side keeps the spill-safe SMJ. A deployment
+        # that wants Spark's defaults passes them via extra_conf.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
+        # Python workers import this package (UDFs call its functions):
+        # put its parent directory on their path so they start from any
+        # working directory. Spark merges it with the worker's own PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

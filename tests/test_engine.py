@@ -126,3 +126,38 @@ def test_xml_registry_round_trip_and_pipeline(spark, tmp_path):
     got = read_source(spark, "xml", "orders", {"dir": str(sinkd)})
     assert sorted(r.order_id for r in got.collect()) == list(range(1, 8))
     assert [r.status for r in pipe.run()] == ["skipped_empty"]
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """A fresh process started outside the repo, with the package only
+    on the driver's sys.path: its Python workers still import the
+    package, so a UDF that calls a package function returns rows."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import functions as F
+from etl_data_pipeline_spark.session import get_spark
+from etl_data_pipeline_spark.watermark import parse_watermark
+
+spark = get_spark("cwd_probe", master="local[1]", shuffle_partitions=1)
+udf = F.udf(lambda s: parse_watermark(s, "id"), "long")
+rows = spark.range(3).select(udf(F.col("id").cast("string")).alias("w"))
+print("ROWS", sorted(r.w for r in rows.collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "ROWS [0, 1, 2]" in out.stdout, out.stderr[-3000:]

@@ -850,3 +850,27 @@ def test_char_entropy_orders_texts_sensibly(spark):
         out = {r.doc_id: r for r in text_char_entropy(spark, tmp).collect()}
     assert out[1].char_entropy == 0.0 and out[1].n_distinct_chars == 1
     assert 0 < out[2].char_entropy < out[3].char_entropy
+
+
+def test_lr_wmap_is_typed_for_empty_and_non_finite_weights(spark, monkeypatch):
+    """The LR weight map stays ``map<bigint,double>`` on the edge
+    cases: an empty support and non-finite weights both evaluate,
+    while a finite map keeps its literal rendering exactly."""
+    import math
+
+    from etl_data_pipeline_spark.llm import features
+    from etl_data_pipeline_spark.llm.features import _lr_wmap
+
+    def evaluate(support, w):
+        df = spark.range(1).select(_lr_wmap(support, w).alias("m"))
+        return df.dtypes[0][1], df.first()["m"]
+
+    assert evaluate([], {}) == ("map<bigint,double>", {})
+    dtype, m = evaluate([1, 2, 3], {1: math.inf, 2: -math.inf, 3: math.nan})
+    assert dtype == "map<bigint,double>"
+    assert m[1] == math.inf and m[2] == -math.inf and math.isnan(m[3])
+    finite = {4: 0.1, 7: -2.5e-300}
+    assert evaluate([4, 7], finite) == ("map<bigint,double>", finite)
+    with monkeypatch.context() as mp:
+        mp.setattr(features.F, "expr", lambda text: text)
+        assert _lr_wmap([4, 7], finite) == "map(4L, 0.1D, 7L, -2.5e-300D)"

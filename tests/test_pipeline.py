@@ -735,44 +735,104 @@ def test_pipeline_version_feed_over_partitioned_source(spark, sf_dir, tmp_path):
 
 
 def test_version_feed_honors_upsert_mode(spark, tmp_path):
-    """r9 review: a CDC-configured version feed (manifest sink, mode=
-    'upsert') previously fell into the content-fence append, which
-    anti-joins CHANGED rows away by key — updates silently dropped,
-    stale values kept forever. The version-feed path now routes
-    mode='upsert' to the row-level merge like the column path."""
+    """A CDC-configured version feed (manifest sink, mode='upsert')
+    routes to the row-level merge: the content-fence append would
+    anti-join CHANGED rows away by key and keep stale values forever.
+    Two changes of one key inside one delta are ordered by the commit
+    version, also when the spec names a data watermark column — the
+    later commit wins though it carries the older business time."""
     from etl_data_pipeline_spark.sinks.manifest import commit as mcommit
     from etl_data_pipeline_spark.sinks.manifest import read_table as mread
 
-    src_dir = str(tmp_path / "msrc")
-    src_t = os.path.join(src_dir, "kv")
-    mcommit(spark.createDataFrame([(1, "old"), (2, "b")], "k long, v string"), src_t)
+    schema = "k long, v string, ts long"
+    for wm_col in (None, "ts"):
+        base = tmp_path / str(wm_col)
+        src_t = str(base / "msrc" / "kv")
+        mcommit(spark.createDataFrame([(1, "old", 5), (2, "b", 5)], schema), src_t)
+        spec = PipelineSpec(
+            tables=[
+                TableSpec(
+                    name="kv",
+                    watermark_column=wm_col,
+                    watermark_type="version",
+                    source_format="manifest",
+                    source_options={"dir": str(base / "msrc")},
+                    sink_format="manifest",
+                    sink_options={"dir": str(base / "sink"), "mode": "upsert"},
+                    merge_keys=("k",),
+                )
+            ]
+        )
+        pipe = IncrementalPipeline(spark, spec, WatermarkStore(base / "wm.json"))
+        assert pipe.run()[0].status == "loaded"
+        for row in [(1, "mid", 9), (1, "new", 1)]:  # one delta, two versions
+            mcommit(spark.createDataFrame([row], schema), src_t, mode="append")
+        assert pipe.run()[0].status == "loaded"
+        sunk = mread(spark, str(base / "sink" / "kv")).collect()
+        got = {(r.k, r.v, r.ts) for r in sunk}
+        assert got == {(1, "new", 1), (2, "b", 5)}, wm_col  # replaced, not stale
 
+
+def test_parallel_run_frees_every_batch_checkpoint(spark, tmp_path):
+    """Four column-watermark tables load in parallel on one session —
+    parquet idempotent append, manifest content fence, manifest upsert
+    and a drop-mode quarantine. Each table's batch checkpoint is freed
+    when its run ends, so no RDD the run created stays in storage, with
+    no GC settling; a frame the caller tracked stays cached."""
+    from etl_data_pipeline_spark.expectations import Expectation
+    from etl_data_pipeline_spark.functions.caching import (
+        release_tracked,
+        tracked_persist,
+    )
+
+    def stored():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    src = str(tmp_path / "src")
+    rows = [(i, i % 5, i * 10 if i % 7 else -1) for i in range(1, 41)]
+    for name in ("p", "f", "u", "d"):
+        spark.createDataFrame(rows, "id long, k long, x long").write.parquet(
+            os.path.join(src, f"{name}.parquet")
+        )
+    sink = {"dir": str(tmp_path / "sink")}
+    common = dict(
+        watermark_column="id", watermark_type="id", source_options={"dir": src}
+    )
     spec = PipelineSpec(
         tables=[
+            TableSpec(name="p", merge_keys=("id",), sink_options=sink, **common),
             TableSpec(
-                name="kv",
-                watermark_type="version",
-                source_format="manifest",
-                source_options={"dir": src_dir},
-                sink_format="manifest",
-                sink_options={"dir": str(tmp_path / "sink"), "mode": "upsert"},
-                merge_keys=("k",),
-            )
+                name="f", merge_keys=("id",), sink_format="manifest",
+                sink_options=sink, **common,
+            ),
+            TableSpec(
+                name="u", merge_keys=("k",), sink_format="manifest",
+                sink_options={**sink, "mode": "upsert"}, **common,
+            ),
+            TableSpec(
+                name="d", sink_options=sink, expectations_mode="drop",
+                expectations=(Expectation.in_range("x", lo=0),),
+                **common,
+            ),
         ]
     )
-    store = WatermarkStore(tmp_path / "wm.json")
-    pipe = IncrementalPipeline(spark, spec, store)
-    assert pipe.run()[0].status == "loaded"
-    # a NEW VERSION of key 1 arrives in the feed
-    mcommit(
-        spark.createDataFrame([(1, "new")], "k long, v string"), src_t, mode="append"
-    )
-    assert pipe.run()[0].status == "loaded"
-    got = {
-        (r.k, r.v)
-        for r in mread(spark, os.path.join(str(tmp_path / "sink"), "kv")).collect()
-    }
-    assert got == {(1, "new"), (2, "b")}  # replaced, not stale
+    # storage only gains RDDs this test creates (the cleaner may drop
+    # blocks earlier tests left behind), so set differences are exact
+    held = stored()
+    mine = tracked_persist(spark.range(10))
+    mine.count()
+    before = stored()
+    mine_rdds = before - held
+    try:
+        r = IncrementalPipeline(spark, spec, WatermarkStore(tmp_path / "wm.json")).run()
+        after = stored()
+        assert [x.status for x in r] == ["loaded"] * 4, r
+        assert after - before == set()  # every batch checkpoint is gone
+        assert mine_rdds and mine_rdds <= after  # the caller's cache survived
+    finally:
+        release_tracked(spark, blocking=True)
+    assert spark.read.parquet(str(tmp_path / "sink" / "d")).count() == 35
+    assert spark.read.parquet(str(tmp_path / "sink" / "d_quarantine")).count() == 5
 
 
 def test_version_feed_runs_expectations(spark, tmp_path):
