@@ -50,40 +50,18 @@ _SQL_EDGES_CTE = """e0 AS MATERIALIZED (
 # vs 7 s materialized. Semantics identical; planning hint only.
 
 
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    # distinct on the raw INT keys, prefix-concat AFTER (r12, guide
-    # §2.3 "narrower types"): the dedup shuffle carries two longs per
-    # pair instead of two ~10-byte strings, and the exchange compares
-    # longs, not strings. The constant prefixes are injective per
-    # column, so distinct-then-concat ≡ concat-then-distinct — the
-    # oracle's string-built edge set is unchanged.
-    ipairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk")
-        )
-        .distinct()
-    )
-    c = F.concat(F.lit("c"), F.col("ck"))
-    s = F.concat(F.lit("s"), F.col("sk"))
-    return ipairs.select(c.alias("src"), s.alias("dst")).union(
-        ipairs.select(s.alias("src"), c.alias("dst"))
-    )
-
-
 def _edges_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``_edges`` in a LONG key domain: customer ck → 2·ck, supplier
-    sk → 2·sk + 1 (injective, side recoverable from the low bit). The
-    iterative consumers (pagerank rounds, BFS frontiers) hash, join,
-    aggregate and EXCHANGE node keys once per round — carrying 8-byte
-    longs instead of 'c…'/'s…' strings shrinks every per-round shuffle
-    and replaces string hashing/compares in the loop's hot joins
-    (guide §2.3 "narrower types", extending the r12 int-keyed edge
-    dedup to the whole loop). ``_node_str`` is the exact inverse,
-    applied ONCE at each query's output so the public/oracle string
-    ids are unchanged."""
+    """The symmetrized co-purchase edge list (``_SQL_EDGES_CTE``) in a
+    LONG key domain: customer ck → 2·ck, supplier sk → 2·sk + 1
+    (injective, side recoverable from the low bit). The pairs are
+    deduplicated on the raw int keys. The iterative consumers
+    (pagerank rounds, BFS frontiers) hash, join, aggregate and
+    EXCHANGE node keys once per round — carrying 8-byte longs instead
+    of 'c…'/'s…' strings shrinks every per-round shuffle and replaces
+    string hashing/compares in the loop's hot joins (guide §2.3
+    "narrower types"). ``_node_str`` is the exact inverse, applied
+    ONCE at each query's output so the public/oracle string ids are
+    unchanged."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     ipairs = (

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from functools import reduce
 from typing import Callable, Iterator, Protocol
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -147,22 +148,13 @@ def read_parquet_if_exists(
             raise
         if lease_held:
             return None
-        # TOCTOU: without the lease, the path can vanish INSIDE a live
-        # swap's two-rename window AFTER the recovery check above saw
-        # it present — returning None here would report "first write"
-        # for a sink that fully exists. Retry ONCE under the lease:
-        # no swap can be mid-flight there, so a second PATH_NOT_FOUND
-        # is genuine.
-        with writer_lease(path):
-            _recover_interrupted_swap(path)
-            try:
-                df = spark.read.parquet(path)
-                df.schema
-                return df
-            except AnalysisException as e2:
-                if _is_path_not_found(e2):
-                    return None
-                raise
+    # TOCTOU: without the lease, the path can vanish INSIDE a live
+    # swap's two-rename window AFTER the recovery check above saw it
+    # present — returning None here would report "first write" for a
+    # sink that fully exists. Retry ONCE under the lease: no swap can
+    # be mid-flight there, so a second PATH_NOT_FOUND is genuine.
+    with writer_lease(path):
+        return read_parquet_if_exists(spark, path, lease_held=True)
 
 
 def _is_path_not_found(e: AnalysisException) -> bool:
@@ -290,12 +282,12 @@ def _pglive_append(df: DataFrame, table: str, options: dict) -> None:
     publish (write_pg_staged) — distributed AND exactly-once under
     stage retry / speculation.
 
-    MIGRATION (r11): the default flipped from driver-side to
-    distributed, which also changes FAILURE semantics — per-partition
-    commits can leave a partial table when one partition fails after
-    others committed, where the driver path was one all-or-nothing
-    transaction. Configs that set none of 'distributed'/'driver_side'/
-    'atomic'/'staged' get a one-time warning pointing here; set
+    The distributed default has different FAILURE semantics from the
+    driver-side path — per-partition commits can leave a partial table
+    when one partition fails after others committed, where the driver
+    path is one all-or-nothing transaction. Configs that set none of
+    'distributed'/'driver_side'/'atomic'/'staged' get a one-time
+    warning pointing here; set
     ``staged: true`` (all-or-nothing AND distributed), ``atomic: true``
     (full replace), or ``driver_side: true`` (old semantics) to choose
     explicitly."""
@@ -311,9 +303,8 @@ def _pglive_append(df: DataFrame, table: str, options: dict) -> None:
     elif options.get("staged"):
         write_pg_staged(df, table, options)
     elif options.get("driver_side") or (
-        # pre-r11 configs selected the paths with 'distributed'
-        # (default False = driver-side); an explicit False must keep
-        # meaning driver-side, not silently invert with the new default
+        # an explicit 'distributed': False selects the driver-side
+        # path, never the distributed default
         "distributed" in options and not options["distributed"]
     ):
         write_pg(df, table, options)
@@ -367,40 +358,42 @@ def write_sink(df: DataFrame, fmt: str, table: str, options: dict) -> None:
     fn(df, table, options)
 
 
-def _first_write_swap(df: DataFrame, path: str) -> None:
-    """First write via stage + single rename (caller holds the lease).
-    A direct write to the target creates the directory at job START,
-    so a crash mid-job leaves a footerless target whose next read is
-    UNABLE_TO_INFER_SCHEMA — not PATH_NOT_FOUND — permanently failing
-    first-write detection until someone deletes the directory by hand.
-    Staged, a crash leaves the target ABSENT and the replay clean."""
-    import shutil
+def _validate_batch_keys(df: DataFrame, keys: tuple[str, ...] | list[str], op: str):
+    """The merge-key contract of every keyed upsert (manifest
+    ``merge_upsert``, SCD1 and SCD2 parquet upserts, first writes
+    included): no NULL key and no duplicate key in the batch, checked
+    in one aggregate. Two batch rows for one key would make a merge or
+    SCD1 keep both (breaking one-row-per-key) and SCD2 open two
+    'current' versions, a chain fork nothing can repair.
 
-    staging = path + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    df.write.mode("overwrite").parquet(staging)
-    os.replace(staging, path)
-
-
-def _validate_batch_keys(df: DataFrame, keys: tuple[str, ...], op: str) -> None:
-    """Reject NULL or intra-batch duplicate merge keys LOUDLY (the
-    manifest merge's contract, applied to the parquet upserts): two
-    batch rows for one key would make SCD1 keep both (breaking
-    one-row-per-key) and SCD2 open two 'current' versions — the
-    permanent chain fork its docstring says nothing can repair."""
-    from functools import reduce
-
+    Returns the stats row: ``n`` rows plus ``kmin``/``kmax`` of the
+    first key, which the manifest merge prunes directories with. For a
+    TIMESTAMP first key they are integer epoch-microsecond instants
+    (``unix_micros``), the unit the footer stats are normalised to —
+    collected datetimes would render in the session timezone and
+    mis-prune under any non-UTC session."""
+    missing = [k for k in keys if k not in df.columns]
+    if missing:
+        raise ValueError(f"{op}: merge keys {missing} not in batch columns")
+    kmin, kmax = F.min(keys[0]), F.max(keys[0])
+    if df.schema[keys[0]].dataType.simpleString() == "timestamp":
+        kmin, kmax = F.unix_micros(kmin), F.unix_micros(kmax)
     null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
     stats = df.agg(
         F.count("*").alias("n"),
         F.count_distinct(*[F.col(k) for k in keys]).alias("nk"),
         F.sum(F.when(null_key, 1).otherwise(0)).alias("n_null"),
+        kmin.alias("kmin"),
+        kmax.alias("kmax"),
     ).first()
     if stats["n"] and stats["n_null"]:
+        # checked FIRST: count_distinct skips null-containing key
+        # tuples, so a null key would otherwise surface as a
+        # misleading 'duplicate keys' error
         raise ValueError(
             f"{op}: batch has {stats['n_null']} row(s) with NULL in "
             f"merge keys {tuple(keys)}; a null key can never match a "
-            f"sink row — repair upstream"
+            f"row to replace — repair upstream"
         )
     if stats["n"] != stats["nk"]:
         raise ValueError(
@@ -409,6 +402,7 @@ def _validate_batch_keys(df: DataFrame, keys: tuple[str, ...], op: str) -> None:
             f"upstream — last-write-wins needs an ordering only the "
             f"caller knows"
         )
+    return stats
 
 
 def atomic_overwrite_parquet(df: DataFrame, table: str, options: dict) -> None:
@@ -448,11 +442,19 @@ def atomic_overwrite_parquet(df: DataFrame, table: str, options: dict) -> None:
 def _overwrite_swap_locked(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Staged write + two-rename swap. Caller MUST hold
-    ``writer_lease(path)`` — this is the only code that touches
-    ``.staging``/``.old``, and the lease is what keeps two writers
-    from interleaving those renames. ``partition_by`` preserves a
-    hive layout through the swap (compact_parquet)."""
+    """Staged write + two-rename swap, and the only way a parquet sink
+    is first written. Caller MUST hold ``writer_lease(path)`` — this
+    is the only code that touches ``.staging``/``.old``, and the lease
+    is what keeps two writers from interleaving those renames.
+    ``partition_by`` preserves a hive layout through the swap
+    (compact_parquet).
+
+    A first write must be staged too: a direct write creates the
+    target directory at job START, so a crash mid-job leaves a
+    footerless target whose next read is UNABLE_TO_INFER_SCHEMA, not
+    PATH_NOT_FOUND — first-write detection then fails until someone
+    deletes the directory by hand. Staged, a crash leaves the target
+    absent and the replay clean."""
     import shutil
 
     staging = path + ".staging"
@@ -593,7 +595,7 @@ def upsert_overwrite_parquet(
         # read here would silently drop all unmatched sink rows).
         existing = read_parquet_if_exists(spark, path, lease_held=True)
         if existing is None:
-            _first_write_swap(df, path)
+            _overwrite_swap_locked(df, path)
             return
         kept = existing.join(
             df.select(*merge_keys).distinct(), on=list(merge_keys), how="left_anti"
@@ -658,7 +660,7 @@ def scd2_upsert_parquet(
 def _scd2_upsert_locked(spark, df, path, as_version, key_cols, compare, data_cols, ts):
     existing = read_parquet_if_exists(spark, path, lease_held=True)
     if existing is None:
-        _first_write_swap(as_version, path)
+        _overwrite_swap_locked(as_version, path)
         return
 
     # persist: the merge reads `existing` through four independent
@@ -757,14 +759,12 @@ def compact_parquet(
             # every row of one partition value to a single task — one
             # output file per leaf dir regardless of size, silently
             # ignoring target_file_bytes for any partition larger than
-            # it (ADVICE r9). Salt each partition value into
+            # it. Salt each partition value into
             # ~target-sized buckets instead: bucket count per value is
             # derived from its row share of the on-disk bytes (the
             # sizing scan reads only partition columns — cheap), and a
             # 1-bucket partition keeps salt 0, so small partitions
             # still compact to one file.
-            from functools import reduce as _reduce
-
             bux = df.groupBy(*parts).agg(F.count(F.lit(1)).alias("_rows"))
             total_rows = bux.agg(F.sum("_rows")).first()[0]
             bytes_per_row = total / max(1, total_rows or 0)
@@ -781,7 +781,7 @@ def compact_parquet(
             n_files = int(
                 bux.agg(F.sum("_nb")).first()[0] or 1
             )
-            cond = _reduce(
+            cond = reduce(
                 lambda a, b: a & b,
                 [
                     F.col(f"d.{c}").eqNullSafe(F.col(f"b.{c}"))
@@ -935,14 +935,12 @@ def idempotent_append_parquet(
         # first-write ONLY on a true missing path; any other read error
         # aborts the append (a degraded read would replay duplicates).
         sink = read_parquet_if_exists(spark, path, lease_held=True)
-        existing = None if sink is None else sink.select(*merge_keys).distinct()
-        if existing is None:
-            # first write via stage + rename: a crashed plain append
-            # leaves path holding only _temporary, and the next read
-            # is UNABLE_TO_INFER_SCHEMA, not first-write (see
-            # _first_write_swap). Later appends are safe: the commit
-            # protocol only publishes files at job commit.
-            _first_write_swap(df, path)
+        if sink is None:
+            # first write via the staged swap (see _overwrite_swap_locked);
+            # later appends are safe: the commit protocol only publishes
+            # files at job commit.
+            _overwrite_swap_locked(df, path)
             return
+        existing = sink.select(*merge_keys).distinct()
         out = df.join(existing, on=list(merge_keys), how="left_anti")
         out.write.mode("append").parquet(path)

@@ -24,11 +24,10 @@ no missing-path window, with no reader-side locking.
 **Append is O(delta), not O(table)**: an append commit writes ONLY the
 incoming rows as a new delta directory and publishes a manifest whose
 ``dirs`` list is the previous list plus that directory — the Delta/
-Iceberg file-list idiom. (The first cut of this module rewrote the
-whole table per append; at 100 TB that is an O(table) write per
-micro-batch — disqualifying for the streaming sink.) The cost moves to
-READS as the dir list grows — ``compact()`` folds the list back to one
-directory as a new version, the standard small-files answer.
+Iceberg file-list idiom; rewriting the whole table per append would
+be an O(table) write per micro-batch. The cost moves to READS as the
+dir list grows — ``compact()`` folds the list back to one directory as
+a new version, the standard small-files answer.
 
 Schema lives IN the manifest (ordered column -> Spark simpleString
 type), so append-time compatibility checks never touch data files:
@@ -47,13 +46,12 @@ semantics: retain at least your longest-running reader. Because
 versions share delta dirs, vacuum deletes a data dir only when NO
 retained version references it.
 
-Honest scope note (VERDICT r3 "missing" #2): this is the single-node /
-POSIX-rename instantiation of the table-format idea — correct
-concurrent-writer behavior on one host via flock. On S3-class object
-stores rename is not atomic and flock does not exist; there you swap
-the pointer with a conditional PUT (If-Match) or use Delta/Iceberg —
-the API here is deliberately shaped so that swap is the only piece to
-replace.
+Scope: this is the single-node / POSIX-rename instantiation of the
+table-format idea — correct concurrent-writer behavior on one host via
+flock. On S3-class object stores rename is not atomic and flock does
+not exist; there you swap the pointer with a conditional PUT
+(If-Match) or use Delta/Iceberg — the API here is deliberately shaped
+so that swap is the only piece to replace.
 """
 
 from __future__ import annotations
@@ -67,7 +65,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_data_pipeline_spark.sinks import writer_lease
+from etl_data_pipeline_spark.sinks import _validate_batch_keys, writer_lease
 
 MANIFEST = "MANIFEST.json"
 
@@ -78,7 +76,7 @@ class FeedBrokenError(ValueError):
     must re-sync from a full snapshot. A TYPED class (not message
     sniffing): the message embeds the table path, and a path that
     happens to contain 'overwrite' must not be classified as a feed
-    break by substring matching (r9 review)."""
+    break by substring matching."""
 
 
 class VacuumedError(FileNotFoundError):
@@ -104,8 +102,9 @@ def _snapshot_path(table_dir: str, version: int) -> str:
 
 
 def _normalize(m: dict | None) -> dict | None:
-    """Accept both manifest generations: the first cut recorded a
-    single ``dir``; current manifests record a ``dirs`` list."""
+    """Accept both manifest formats: a legacy (first-cut) manifest
+    records a single ``dir``; current manifests record a ``dirs``
+    list."""
     if m is not None and "dirs" not in m and "dir" in m:
         m = dict(m)
         m["dirs"] = [m.pop("dir")]
@@ -248,104 +247,144 @@ def _commit_locked(
 ) -> dict:
     """Steps 1-4 of commit(); caller holds the manifest writer lease."""
     cur = read_manifest(table_dir)
-    # partitioning is a TABLE property, not a per-commit choice: the
-    # first commit fixes it; appends must match (or omit it — the
-    # manifest's layout is authoritative); changing it needs overwrite
-    cur_parts = tuple((cur or {}).get("partition_by") or ())
-    if mode == "append" and cur is not None:
-        if partition_by is not None and tuple(partition_by) != cur_parts:
-            raise ValueError(
-                f"append to {table_dir!r} changes partition_by "
-                f"{cur_parts} -> {tuple(partition_by)}; repartitioning "
-                f"the layout requires an overwrite commit"
-            )
-        partition_by = cur_parts or None
-    parts = tuple(partition_by or ())
-    prev_txn: dict[str, int] = dict((cur or {}).get("txn", {}))
+    appending = mode == "append" and cur is not None
+    if appending:
+        parts = _table_layout(cur, partition_by, f"append to {table_dir!r}")
+    else:
+        parts = tuple(partition_by or ())
+    marks = _txn_fence(cur, txn)
+    if marks is None:
+        return cur  # replayed batch: already committed, skip
+    if not appending:
+        return _publish(
+            table_dir, cur, fence, _parquet_writer(df, parts), [], 0,
+            _schema_of(df), marks, parts, data_change,
+        )
+    schema = _check_schema(cur, df, merge_schema, table_dir)
+    out = df
+    if merge_keys:
+        keys = list(merge_keys)
+        prev_keys = _read_dirs(
+            df.sparkSession, table_dir, cur["dirs"], cur.get("schema")
+        ).select(*keys).distinct()
+        # persist: the anti-joined plan (a full-table key scan) is
+        # evaluated by BOTH the emptiness probe and the write —
+        # unpersisted it would run twice per batch, and a
+        # non-deterministic input could even diverge between them
+        out = df.join(prev_keys, on=keys, how="left_anti").persist()
+    try:
+        # all rows already present and no txn mark to record:
+        # true no-op — don't burn a version on an empty delta
+        if merge_keys and txn is None and out.limit(1).count() == 0:
+            return cur
+        return _publish(
+            table_dir, cur, fence, _parquet_writer(out, parts),
+            list(cur["dirs"]), 0, schema, marks, parts, data_change,
+        )
+    finally:
+        if merge_keys:
+            out.unpersist()
+
+
+def _txn_fence(cur: dict | None, txn: tuple[str, int] | None) -> dict | None:
+    """The txn marks the next version records: the table's
+    ``{app_id: highest committed version}`` plus ``txn``. None when
+    ``txn`` is at or below its app's mark — a replayed batch that must
+    not commit again."""
+    marks: dict[str, int] = dict((cur or {}).get("txn", {}))
     if txn is not None:
         app_id, txn_version = txn
-        if app_id in prev_txn and int(txn_version) <= prev_txn[app_id]:
-            return cur  # replayed batch: already committed, skip
-        prev_txn[app_id] = int(txn_version)
+        if app_id in marks and int(txn_version) <= marks[app_id]:
+            return None
+        marks[app_id] = int(txn_version)
+    return marks
+
+
+def _table_layout(
+    cur: dict, partition_by: tuple[str, ...] | None, what: str
+) -> tuple[str, ...]:
+    """The partition columns of a write that adds to ``cur``.
+    Partitioning is a table property: the first commit fixes it, and a
+    later append or merge must restate it unchanged or omit it."""
+    cur_parts = tuple(cur.get("partition_by") or ())
+    if partition_by is not None and tuple(partition_by) != cur_parts:
+        raise ValueError(
+            f"{what} changes partition_by {cur_parts} -> "
+            f"{tuple(partition_by)}; repartitioning the layout requires "
+            f"an overwrite commit"
+        )
+    return cur_parts
+
+
+def _parquet_writer(out: DataFrame, parts: tuple[str, ...]):
+    """Delta writer for :func:`_publish`: ``out`` as parquet, hive
+    partitioned by ``parts``."""
+
+    def write(data_dir: str) -> None:
+        missing = [c for c in parts if c not in out.columns]
+        if missing:
+            raise ValueError(
+                f"partition_by columns {missing} not in the DataFrame "
+                f"(columns: {out.columns})"
+            )
+        w = out.write.partitionBy(*parts) if parts else out.write
+        w.parquet(data_dir)
+
+    return write
+
+
+def _publish(
+    table_dir: str,
+    cur: dict | None,
+    fence: int,
+    write,
+    kept: list[str],
+    dropped_rows: int,
+    schema: dict[str, str],
+    marks: dict[str, int],
+    parts: tuple[str, ...] = (),
+    data_change: bool = True,
+) -> dict:
+    """Commit one version; the caller holds the writer lease.
+
+    ``write(data_dir)`` fills the version's new delta directory; the
+    version's ``dirs`` are ``kept`` (directories of ``cur`` it carries
+    over) plus that directory. ``dropped_rows`` is the row count of the
+    ``cur`` directories it does not keep.
+
+    The first commit to a legacy table backfills its version
+    snapshots, so its time travel survives. A crash before the pointer
+    swap leaves an orphan directory and an unchanged manifest (the
+    next commit of this version clears it).
+    Row counts come from parquet footers: ``delta_rows`` is the new
+    directory's rows (0 for a layout-only commit), ``total_rows`` the
+    running total, None when a kept directory's rows are unknown (a
+    legacy manifest without a recorded total)."""
     version = 1 if cur is None else cur["version"] + 1
     if cur is not None and not os.path.isdir(os.path.join(table_dir, "_manifests")):
         _backfill_legacy_snapshots(table_dir, cur)
     rel = os.path.join("_versions", f"v{version:08d}")
     data_dir = os.path.join(table_dir, rel)
     shutil.rmtree(data_dir, ignore_errors=True)  # crashed orphan of a failed commit
-    out = df
-    keyed = False
-    if mode == "append" and cur is not None:
-        schema = _check_schema(cur, df, merge_schema, table_dir)
-        if merge_keys:
-            keys = list(merge_keys)
-            prev_keys = _read_dirs(
-                df.sparkSession, table_dir, cur["dirs"], cur.get("schema")
-            ).select(*keys).distinct()
-            # persist: the anti-joined plan (a full-table key scan) is
-            # evaluated by BOTH the emptiness probe and the write —
-            # unpersisted it would run twice per batch, and a
-            # non-deterministic input could even diverge between them
-            out = df.join(prev_keys, on=keys, how="left_anti").persist()
-            keyed = True
-            # all rows already present and no txn mark to record:
-            # true no-op — don't burn a version on an empty delta
-            if txn is None and out.limit(1).count() == 0:
-                out.unpersist()
-                return cur
-        dirs = list(cur["dirs"]) + [rel]
-    else:
-        schema = _schema_of(df)
-        dirs = [rel]
-    try:
-        if parts:
-            missing = [c for c in parts if c not in out.columns]
-            if missing:
-                raise ValueError(
-                    f"partition_by columns {missing} not in the DataFrame "
-                    f"(columns: {out.columns})"
-                )
-            out.write.partitionBy(*parts).parquet(data_dir)
-        else:
-            out.write.parquet(data_dir)
-    finally:
-        if keyed:
-            out.unpersist()
-    manifest = {"version": version, "dirs": dirs, "schema": schema, "fence": fence}
+    write(data_dir)
+    delta = _dir_rowcount(data_dir)
+    prev_total = (cur or {}).get("total_rows")
+    manifest = {"version": version, "dirs": kept + [rel], "schema": schema, "fence": fence}
     if parts:
         manifest["partition_by"] = list(parts)
-    _record_rowcounts(manifest, cur, data_dir, appended=len(dirs) > 1, data_change=data_change)
+    manifest["delta_rows"] = delta if data_change else 0
+    if not kept:
+        manifest["total_rows"] = delta
+    else:
+        manifest["total_rows"] = (
+            None if prev_total is None else prev_total - dropped_rows + delta
+        )
     if not data_change:
         # layout-only commit (compaction): logically the same rows —
         # the change feed skips it instead of re-emitting the table
         manifest["data_change"] = False
-    if prev_txn:
-        manifest["txn"] = prev_txn  # carried forward + this commit's mark
-    return _publish_version(table_dir, data_dir, manifest)
-
-
-def _record_rowcounts(
-    manifest: dict, cur: dict | None, data_dir: str, appended: bool, data_change: bool = True
-) -> None:
-    """Audit bookkeeping (DESCRIBE HISTORY's numRows): per-commit delta
-    row count from parquet footers, running total carried through the
-    manifest. Layout-only commits keep the total and contribute no
-    delta. Legacy manifests without a recorded total simply restart
-    the running total from this commit's perspective (None = unknown),
-    never guessing."""
-    delta = _dir_rowcount(data_dir)
-    manifest["delta_rows"] = delta if data_change else 0
-    if not appended:
-        manifest["total_rows"] = delta
-    else:
-        prev_total = (cur or {}).get("total_rows")
-        manifest["total_rows"] = None if prev_total is None else prev_total + delta
-
-
-def _publish_version(table_dir: str, data_dir: str, manifest: dict) -> dict:
-    """The durable publish tail shared by every commit flavor: fsync
-    the data, write the immutable snapshot, swap the pointer in ONE
-    atomic rename, fsync the rename."""
+    if marks:
+        manifest["txn"] = marks
     # data must be durable BEFORE the pointer is — including the
     # _versions/ dirent naming the new directory (losing that to a
     # power cut while MANIFEST.json survived would orphan the commit)
@@ -357,7 +396,7 @@ def _publish_version(table_dir: str, data_dir: str, manifest: dict) -> dict:
         os.close(pfd)
     payload = json.dumps(manifest)
     # immutable snapshot first (time travel), then the pointer swap
-    snap = _snapshot_path(table_dir, manifest["version"])
+    snap = _snapshot_path(table_dir, version)
     os.makedirs(os.path.dirname(snap), exist_ok=True)
     _write_durable(snap, payload)
     fd, tmp = tempfile.mkstemp(dir=table_dir, suffix=".manifest.tmp")
@@ -399,20 +438,9 @@ def commit_staged_files(
     os.makedirs(table_dir, exist_ok=True)
     with writer_lease(_manifest_path(table_dir)) as fence:
         cur = read_manifest(table_dir)
-        prev_txn: dict[str, int] = dict((cur or {}).get("txn", {}))
-        if txn is not None:
-            app_id, txn_version = txn
-            if app_id in prev_txn and int(txn_version) <= prev_txn[app_id]:
-                return cur  # replayed batch: already committed, skip
-            prev_txn[app_id] = int(txn_version)
-        version = 1 if cur is None else cur["version"] + 1
-        if cur is not None and not os.path.isdir(
-            os.path.join(table_dir, "_manifests")
-        ):
-            _backfill_legacy_snapshots(table_dir, cur)
-        rel = os.path.join("_versions", f"v{version:08d}")
-        data_dir = os.path.join(table_dir, rel)
-        shutil.rmtree(data_dir, ignore_errors=True)
+        marks = _txn_fence(cur, txn)
+        if marks is None:
+            return cur  # replayed batch: already committed, skip
         if cur is not None and cur.get("partition_by"):
             raise ValueError(
                 f"{table_dir!r} is hive-partitioned by "
@@ -420,25 +448,17 @@ def commit_staged_files(
                 f"flat files — use the DataFrame commit() path for "
                 f"partitioned tables"
             )
+        out_schema, kept = dict(schema), []
         if mode == "append" and cur is not None:
-            out_schema = _check_schema_dict(cur, dict(schema), merge_schema, table_dir)
-            dirs = list(cur["dirs"]) + [rel]
-        else:
-            out_schema = dict(schema)
-            dirs = [rel]
-        os.makedirs(data_dir)
-        for i, f in enumerate(staged_files):
-            os.replace(f, os.path.join(data_dir, f"part-{i:05d}.parquet"))
-        manifest = {
-            "version": version,
-            "dirs": dirs,
-            "schema": out_schema,
-            "fence": fence,
-        }
-        _record_rowcounts(manifest, cur, data_dir, appended=len(dirs) > 1)
-        if prev_txn:
-            manifest["txn"] = prev_txn
-        return _publish_version(table_dir, data_dir, manifest)
+            out_schema = _check_schema_dict(cur, out_schema, merge_schema, table_dir)
+            kept = list(cur["dirs"])
+
+        def move(data_dir: str) -> None:
+            os.makedirs(data_dir)
+            for i, f in enumerate(staged_files):
+                os.replace(f, os.path.join(data_dir, f"part-{i:05d}.parquet"))
+
+        return _publish(table_dir, cur, fence, move, kept, 0, out_schema, marks)
 
 
 def _backfill_legacy_snapshots(table_dir: str, cur: dict) -> None:
@@ -562,7 +582,10 @@ def _read_dirs(
 
 def _range_disjoint(rng, lo, hi) -> bool:
     """True when [rng.min, rng.max] provably misses [lo, hi] (either
-    bound may be None = unbounded). Incomparable types keep the dir."""
+    bound may be None = unbounded). Unknown stats (``rng`` None) and
+    incomparable types keep the dir."""
+    if rng is None:
+        return False
     try:
         if lo is not None and rng[1] < lo:
             return True
@@ -587,17 +610,14 @@ def prune_dirs(
     (write_zordered) pay off on the READ side: clustered files give
     narrow per-dir ranges, so a selective filter touches a strict
     subset of dirs."""
-    kept = []
-    for d in dirs:
-        skip = False
-        for col, (lo, hi) in ranges.items():
-            rng = _dir_key_range_cached(table_dir, d, col)
-            if rng is not None and _range_disjoint(rng, lo, hi):
-                skip = True
-                break
-        if not skip:
-            kept.append(d)
-    return kept
+    return [
+        d
+        for d in dirs
+        if not any(
+            _range_disjoint(_dir_key_range_cached(table_dir, d, col), lo, hi)
+            for col, (lo, hi) in ranges.items()
+        )
+    ]
 
 
 def read_table(
@@ -837,7 +857,7 @@ def _norm_stat(v):
     comparison raises TypeError, silently disabling pruning for every
     timestamp-keyed merge. Both sides are therefore normalized to the
     INTEGER epoch-microsecond instant (the batch side via
-    F.unix_micros in _validate_merge_batch): converting either side
+    F.unix_micros in _validate_batch_keys): converting either side
     to a naive wall-clock rendering instead would be WRONG under a
     non-UTC session timezone (shifted ranges ⇒ a dir wrongly pruned ⇒
     silent row loss in merges) and ambiguous inside DST folds —
@@ -884,58 +904,6 @@ def _dir_key_range(table_dir: str, rel_dir: str, column: str):
             except (ValueError, TypeError):
                 return None
     return None if lo is None else (lo, hi)
-
-
-def _validate_merge_batch(batch: DataFrame, keys: list[str]):
-    """Key-contract checks shared by BOTH merge paths (first write
-    included — a fresh table must not be born violating the contract):
-    no NULL keys, no duplicate keys. Returns the stats row (n, kmin,
-    kmax on the first key) so callers don't re-aggregate.
-
-    For a TIMESTAMP first key, kmin/kmax are the integer
-    epoch-microsecond INSTANTS (unix_micros), matching _norm_stat's
-    footer normalization — collecting the datetime would render it in
-    the session timezone, and comparing wall-clock renderings against
-    UTC instants mis-prunes under any non-UTC session (see
-    _norm_stat)."""
-    from pyspark.sql import functions as F
-
-    missing = [k for k in keys if k not in batch.columns]
-    if missing:
-        raise ValueError(f"merge keys {missing} not in batch columns")
-    k0 = F.col(keys[0])
-    if batch.schema[keys[0]].dataType.simpleString() == "timestamp":
-        kmin, kmax = F.unix_micros(F.min(k0)), F.unix_micros(F.max(k0))
-    else:
-        kmin, kmax = F.min(k0), F.max(k0)
-    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
-    stats = batch.agg(
-        F.count("*").alias("n"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("nk"),
-        F.sum(F.when(null_key, 1).otherwise(0)).alias("n_null"),
-        kmin.alias("kmin"),
-        kmax.alias("kmax"),
-    ).first()
-    if stats["n"] and stats["n_null"]:
-        # checked FIRST: count_distinct skips null-containing key
-        # tuples, so a null key would otherwise surface as a
-        # misleading 'duplicate keys' error — and a null key can never
-        # match for replacement anyway (SQL null semantics in the
-        # anti-join would silently turn the update into a
-        # duplicate-looking insert)
-        raise ValueError(
-            f"merge batch has {stats['n_null']} row(s) with NULL in "
-            f"merge keys {tuple(keys)}; a null key cannot match a "
-            f"row to replace — filter or repair them upstream"
-        )
-    if stats["n"] != stats["nk"]:
-        raise ValueError(
-            f"merge batch has duplicate keys ({stats['n']} rows, "
-            f"{stats['nk']} distinct {tuple(keys)}); deduplicate "
-            f"upstream — last-write-wins needs an ordering only the "
-            f"caller knows"
-        )
-    return stats
 
 
 def _dir_key_range_cached(table_dir: str, rel_dir: str, column: str):
@@ -1059,7 +1027,7 @@ def merge_upsert(
     The reference has no update path at all — its sink is append-only
     and replays duplicate (util.py:251-271, SURVEY.md §2.C #5); this
     is the engine-side upsert endpoint for CDC-style workloads, the
-    manifest twin of scd1_upsert on the staged-swap sinks.
+    manifest twin of upsert_overwrite_parquet on the staged-swap sinks.
     """
     keys = list(merge_keys)
     if not keys:
@@ -1092,82 +1060,42 @@ def _merge_locked(
         # first write: merge degenerates to the initial commit — but
         # the key contract holds from birth (a first batch with
         # duplicate or NULL keys would poison every later merge)
-        _validate_merge_batch(batch, keys)
+        _validate_batch_keys(batch, keys, "merge_upsert")
         return _commit_locked(
             batch, table_dir, "overwrite", fence, txn=txn,
             partition_by=partition_by,
         )
-    cur_parts = tuple(cur.get("partition_by") or ())
-    if partition_by is not None and tuple(partition_by) != cur_parts:
-        raise ValueError(
-            f"merge into {table_dir!r} changes partition_by "
-            f"{cur_parts} -> {tuple(partition_by)}; repartitioning the "
-            f"layout requires an overwrite commit"
-        )
-    prev_txn: dict[str, int] = dict(cur.get("txn", {}))
-    if txn is not None:
-        app_id, txn_version = txn
-        if app_id in prev_txn and int(txn_version) <= prev_txn[app_id]:
-            return cur  # replayed batch: already merged
-        prev_txn[app_id] = int(txn_version)
+    parts = _table_layout(cur, partition_by, f"merge into {table_dir!r}")
+    marks = _txn_fence(cur, txn)
+    if marks is None:
+        return cur  # replayed batch: already merged
     schema = _check_schema(cur, batch, merge_schema=False, table_dir=table_dir)
-    stats = _validate_merge_batch(batch, keys)
+    stats = _validate_batch_keys(batch, keys, "merge_upsert")
     if stats["n"] == 0 and txn is None:
         return cur  # empty batch: nothing to merge, no version burned
+    # An empty batch WITH a txn still commits (an empty delta carrying
+    # the mark, as commit() does): returning early would leave a hole
+    # in the (app_id -> batch) sequence, and a later out-of-order replay
+    # of this batch id WITH data would not be fenced. Nothing can
+    # match, so every dir is kept.
     touched: list[str] = []
     kept: list[str] = []
-    if stats["n"] == 0:
-        # empty batch WITH a txn: record the high-water mark the same
-        # way commit() does (an empty delta carrying the mark) —
-        # returning early would leave a hole in the (app_id -> batch)
-        # sequence, and a later out-of-order replay of this batch id
-        # WITH data would not be fenced. Nothing can match, so no dir
-        # is touched.
-        kept = list(cur["dirs"])
-    else:
-        for d in cur["dirs"]:
-            rng = _dir_key_range_cached(table_dir, d, keys[0])
-            # one audited comparison path (incomparable types: never
-            # prune — _range_disjoint keeps the dir on TypeError)
-            disjoint = rng is not None and _range_disjoint(
-                rng, stats["kmin"], stats["kmax"]
-            )
-            (kept if disjoint else touched).append(d)
+    for d in cur["dirs"]:
+        disjoint = stats["n"] == 0 or _range_disjoint(
+            _dir_key_range_cached(table_dir, d, keys[0]),
+            stats["kmin"], stats["kmax"],
+        )
+        (kept if disjoint else touched).append(d)
+    out = batch
     if touched:
         existing = _read_dirs(spark, table_dir, touched, schema)
         survivors = existing.join(batch.select(*keys), on=keys, how="left_anti")
         out = survivors.unionByName(batch)
-    else:
-        out = batch
-    version = cur["version"] + 1
-    rel = os.path.join("_versions", f"v{version:08d}")
-    data_dir = os.path.join(table_dir, rel)
-    shutil.rmtree(data_dir, ignore_errors=True)
-    parts = cur_parts
-    if parts:
-        out.write.partitionBy(*parts).parquet(data_dir)
-    else:
-        out.write.parquet(data_dir)
-    manifest = {
-        "version": version,
-        "dirs": kept + [rel],
-        "schema": schema,
-        "fence": fence,
-    }
-    if parts:
-        manifest["partition_by"] = list(parts)
-    new_rows = _dir_rowcount(data_dir)
-    touched_rows = sum(
-        _dir_rowcount(os.path.join(table_dir, d)) for d in touched
+    dropped_rows = sum(_dir_rowcount(os.path.join(table_dir, d)) for d in touched)
+    return _publish(
+        table_dir, cur, fence, _parquet_writer(out, parts), kept,
+        dropped_rows, schema, marks, parts,
     )
-    manifest["delta_rows"] = new_rows
-    prev_total = cur.get("total_rows")
-    manifest["total_rows"] = (
-        None if prev_total is None else prev_total - touched_rows + new_rows
-    )
-    if prev_txn:
-        manifest["txn"] = prev_txn
-    return _publish_version(table_dir, data_dir, manifest)
 
 
 def compact(

@@ -1352,7 +1352,6 @@ def _varint_matrix(u, prefix: int):
 def _column_values(col, kind):
     """Arrow column -> int64/float/bool numpy values (nulls filled
     with 0 — the branch byte masks them out of the stream)."""
-    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 

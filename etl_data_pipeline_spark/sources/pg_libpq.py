@@ -710,8 +710,8 @@ def write_pg_atomic(df, table: str, options: dict) -> None:
     complete old table or the complete new one — a crash anywhere
     before the COMMIT leaves the target untouched (at worst an
     orphaned ``<target>__stage`` that the next run clears). Mirrors
-    the file sinks' staged-swap contract (_first_write_swap) on the
-    server side.
+    the file sinks' staged-swap contract (_overwrite_swap_locked) on
+    the server side.
 
     The stage is created from the target's own shape when the target
     exists (``CREATE TABLE .. (LIKE .. INCLUDING ALL)``), else from

@@ -957,12 +957,6 @@ def run_incremental_rollup(
     crash window between data-swap and state-write — the same §2.C #5
     gap the reference has, but non-idempotent for aggregates.)
     """
-    from etl_data_pipeline_spark.sinks import (
-        _overwrite_swap_locked,
-        read_parquet_if_exists,
-        writer_lease,
-    )
-
     agg_table = "rollup_hourly"
     agg_path = os.path.join(target_dir, agg_table)
     # schema forwarded so hive-partitioned sources (whose partition
@@ -1014,12 +1008,6 @@ def run_stream_hll_rollup(
     last_batch_id-in-table exactly-once contract as the other merging
     sinks — replayed batches are no-ops, data and dedup state swap
     atomically under the writer lease."""
-    from etl_data_pipeline_spark.sinks import (
-        _overwrite_swap_locked,
-        read_parquet_if_exists,
-        writer_lease,
-    )
-
     agg_path = os.path.join(target_dir, "hll_weekly")
     stream = events_file_stream(spark, source_dir, schema=schema)
 
@@ -1066,12 +1054,6 @@ def run_stream_cms(
     last_batch_id-in-table exactly-once contract as the other merging
     sinks — replayed batches are no-ops."""
     from etl_data_pipeline_spark.operators.aggregates import cms_cell_array
-    from etl_data_pipeline_spark.sinks import (
-        _overwrite_swap_locked,
-        read_parquet_if_exists,
-        writer_lease,
-    )
-
     agg_path = os.path.join(target_dir, "cms_sketch")
     stream = events_file_stream(spark, source_dir, schema=schema)
 

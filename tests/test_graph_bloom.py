@@ -53,7 +53,10 @@ def test_bfs_levels_are_true_shortest_paths(spark, sf_dir):
         side = "c" if dist % 2 == 1 else "s"
         assert node.startswith(side), (node, dist)
     # dist-1 set == direct neighbors of the source
-    edges = graph._edges(spark, sf_dir).collect()
+    edges = graph._edges_long(spark, sf_dir).select(
+        graph._node_str(F.col("src")).alias("src"),
+        graph._node_str(F.col("dst")).alias("dst"),
+    ).collect()
     neigh = {e.dst for e in edges if e.src == sources[0]}
     assert {n for n, d in by_node.items() if d == 1} == neigh
 

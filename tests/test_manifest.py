@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.sinks.manifest import (
     commit,
+    merge_upsert,
     read_manifest,
     read_table,
     vacuum,
@@ -381,10 +382,26 @@ def test_append_writes_only_the_delta(spark, tmp_path):
     assert read_table(spark, t).count() == 1007
 
 
-def test_legacy_single_dir_manifest_still_reads(spark, tmp_path):
+def _legacy_append(spark, t):
+    return commit(_frame(spark, 3, "c"), t, mode="append")
+
+
+def _legacy_merge(spark, t):
+    # keys 4-5 replace rows of v2, keys 6-8 are new: 9 rows, as the append
+    batch = spark.range(4, 9).select(F.col("id").alias("k"), F.lit("c").alias("v"))
+    return merge_upsert(spark, t, batch, ("k",))
+
+
+@pytest.mark.parametrize(
+    "write, n_dirs",
+    [(_legacy_append, 2), (_legacy_merge, 1)],
+    ids=["commit", "merge_upsert"],
+)
+def test_legacy_single_dir_manifest_still_reads(spark, tmp_path, write, n_dirs):
     """Tables written by the first-cut manifest format ({'dir': ...},
-    full-rewrite versions, no snapshot files) stay readable, appendable
-    and vacuum-able."""
+    full-rewrite versions, no snapshot files) stay readable, writable
+    and vacuum-able; the first write of either kind (append commit or
+    merge) backfills the legacy snapshots, so time travel survives."""
     t = str(tmp_path / "t")
     # hand-build a legacy table: two full-rewrite version dirs + a
     # single-dir manifest pointing at v2
@@ -397,8 +414,8 @@ def test_legacy_single_dir_manifest_still_reads(spark, tmp_path):
         )
     assert read_table(spark, t).count() == 6
     assert read_table(spark, t, version=1).count() == 4  # legacy time travel
-    m3 = commit(_frame(spark, 3, "c"), t, mode="append")  # schema derived from data
-    assert m3["version"] == 3 and len(m3["dirs"]) == 2
+    m3 = write(spark, t)  # schema derived from data
+    assert m3["version"] == 3 and len(m3["dirs"]) == n_dirs
     assert read_table(spark, t).count() == 9
     # migration backfilled snapshots: pre-migration time travel survives
     assert read_table(spark, t, version=1).count() == 4
@@ -406,6 +423,7 @@ def test_legacy_single_dir_manifest_still_reads(spark, tmp_path):
     removed = vacuum(t, keep_last=2)  # keeps v2 (legacy) + v3
     assert removed == [1]
     assert read_table(spark, t).count() == 9
+    assert read_table(spark, t, version=2).count() == 6
 
 
 def test_change_feed_reads_only_the_delta_dirs(spark, tmp_path):
@@ -727,9 +745,11 @@ def test_vacuum_reclaims_stale_staging_spools(spark, tmp_path):
 
 def test_manifest_tracks_row_counts(spark, tmp_path):
     """Audit bookkeeping: per-commit delta_rows (footer metadata, no
-    data read) and a running total_rows; compaction contributes zero
-    delta and preserves the total."""
-    from etl_data_pipeline_spark.sinks.manifest import compact
+    data read) and a running total_rows, for every commit kind that
+    shares the manifest publish step — overwrite, keyed append,
+    compaction (zero delta, total preserved), merge and staged-file
+    append."""
+    from etl_data_pipeline_spark.sinks.manifest import commit_staged_files, compact
 
     t = str(tmp_path / "t")
     m1 = commit(_frame(spark, 5, "a"), t)
@@ -741,6 +761,20 @@ def test_manifest_tracks_row_counts(spark, tmp_path):
     m3 = commit(_frame(spark, 2, "c"), t)  # overwrite resets
     assert (m3["delta_rows"], m3["total_rows"]) == (2, 2)
     assert read_table(spark, t).count() == 2
+    # merge: the rewritten dir's survivors plus the batch are the delta;
+    # the total drops the rewritten dir and adds the delta
+    batch = spark.range(1, 4).select(F.col("id").alias("k"), F.lit("d").alias("v"))
+    m4 = merge_upsert(spark, t, batch, ("k",))
+    assert (m4["delta_rows"], m4["total_rows"]) == (4, 4)  # k=0 + k=1..3
+    # staged-file append: the moved files' rows are the delta
+    staged = str(tmp_path / "staged")
+    _frame(spark, 6, "e").coalesce(1).write.parquet(staged)
+    files = sorted(
+        os.path.join(staged, f) for f in os.listdir(staged) if f.endswith(".parquet")
+    )
+    m5 = commit_staged_files(t, files, {"k": "bigint", "v": "string"})
+    assert (m5["delta_rows"], m5["total_rows"]) == (6, 10)
+    assert read_table(spark, t).count() == 10
 
 
 def test_partitioned_table_roundtrip_and_layout_rules(spark, tmp_path):

@@ -28,7 +28,7 @@ def _kv_spec(src_dir, tmp_path, **over):
 def test_version_feed_multi_version_key_upsert(spark, tmp_path):
     """ADVICE r9 (medium): a key updated in >=2 source versions since
     the watermark used to arrive as duplicate merge keys in the
-    unioned delta — _validate_merge_batch raised and the table wedged
+    unioned delta — the merge-key check raised and the table wedged
     permanently (every retry re-reads the same or a larger range). The
     delta is now compacted last-write-wins by the FEED VERSION before
     the merge."""

@@ -132,12 +132,12 @@ def test_pagerank_bases_stay_copartitioned(spark, sf_dir):
     reprint (the cache's own build), never between the join and an
     InMemoryTableScan."""
     from etl_data_pipeline_spark.functions.caching import release_tracked
-    from etl_data_pipeline_spark.operators.graph import _edges
+    from etl_data_pipeline_spark.operators.graph import _edges_long
     from etl_data_pipeline_spark.functions.caching import tracked_persist
 
     p = spark.sparkContext.defaultParallelism
     edges = tracked_persist(
-        _edges(spark, sf_dir).localCheckpoint().repartition(p, "src")
+        _edges_long(spark, sf_dir).localCheckpoint().repartition(p, "src")
     )
     deg = tracked_persist(
         edges.groupBy("src")

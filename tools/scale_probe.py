@@ -96,6 +96,7 @@ def main() -> None:
 
     import __spark_entry__ as em
     from bench import wait_for_quiet_host
+    from etl_data_pipeline_spark.functions.caching import release_tracked
     from etl_data_pipeline_spark.session import get_spark
 
     # same quiet-window discipline as bench.py: exponents computed
@@ -118,6 +119,8 @@ def main() -> None:
             t0 = time.time()
             qs[name](spark, d).write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
+            # checkpoint blocks too: clearCache cannot free them
+            release_tracked(spark)
             spark.catalog.clearCache()
             if r or not warm:
                 ts.append(dt)

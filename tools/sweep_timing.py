@@ -64,15 +64,17 @@ QUIET_MOPS = 18.0
 def _run_standalone(spark, fn, sf_dir: str, reps: int) -> float:
     """Median of ``reps`` cache-cleared standalone runs (post-warmup:
     the sweep already ran this query, so codegen is hot)."""
-    import statistics as _st
+    from etl_data_pipeline_spark.functions.caching import release_tracked
 
     ts = []
     for _ in range(reps):
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         ts.append(time.time() - t0)
+        # checkpoint blocks too: clearCache cannot free them
+        release_tracked(spark)
         spark.catalog.clearCache()
-    return _st.median(ts)
+    return statistics.median(ts)
 
 
 def _storage_leaks(spark, retries: int = 8, wait: float = 5.0) -> list[str]:
@@ -148,6 +150,7 @@ def main() -> int:
 
     import __spark_entry__ as em
     from bench import cpu_probe
+    from etl_data_pipeline_spark.functions.caching import release_tracked
     from etl_data_pipeline_spark.session import get_spark
 
     probe_start = cpu_probe()  # before the JVM exists
@@ -170,6 +173,9 @@ def main() -> int:
                 times[name].append(time.time() - t0)
             except Exception as e:  # sweep must report, not die
                 errors.append((name, str(e)[:160]))
+            # checkpoint blocks too: clearCache cannot free them, and
+            # they would pile up across the whole sweep
+            release_tracked(spark)
             spark.catalog.clearCache()
         print(f"-- pass {p + 1}/{passes} done (load {os.getloadavg()[0]:.1f})")
 
