@@ -38,7 +38,7 @@ from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -54,7 +54,6 @@ from etl_data_pipeline_spark.spec import PipelineSpec, TableSpec
 from etl_data_pipeline_spark.watermark import (
     WatermarkStore,
     apply_watermark,
-    max_watermark,
     parse_watermark,
 )
 
@@ -314,7 +313,7 @@ class IncrementalPipeline:
             df = (
                 df.select(*validated.columns, ver_col) if ver_col else validated
             )
-        if df.limit(1).count() == 0:
+        if df.isEmpty():
             # only layout/empty commits since the watermark: advance it
             # anyway so those manifests are never rescanned
             self.store.set(t.name, head)
@@ -347,24 +346,24 @@ class IncrementalPipeline:
         """One table's read -> gate -> load -> watermark-advance cycle
         (app.py:96-172).
 
-        The cycle runs three actions over the batch: a cheap empty
-        gate on the live source, then watermark max + sink write over
-        ONE pinned snapshot. On a non-snapshot source (a live JDBC
-        table), rows arriving between the max scan and the write scan
-        would be written with keys ABOVE the recorded watermark and
-        re-read next run — duplicates on non-idempotent sinks. The
-        reference never had this window only because it fetched rows
-        once into memory; we pin the max/write pair with
-        localCheckpoint(): unlike persist() (best-effort — eviction or
-        executor loss silently recomputes partitions from the live
-        source, reopening the window), a checkpoint cuts lineage, so a
-        lost block FAILS the run instead of silently re-reading — and
-        a failed run never advances the watermark, which is the safe
-        side. The gate stays OUTSIDE the snapshot deliberately: it
-        only decides skip-vs-load, and checkpointing first would
-        materialize the whole batch just to discover it is empty. For
-        batches too large for executor storage, stage to a temp
-        parquet and re-read instead (same guarantee, disk cost).
+        One Spark job reads the batch before the sink write: an eager
+        localCheckpoint whose Observation also returns the batch's row
+        count and watermark max. The count gates an empty batch (skip,
+        watermark unchanged); the max is taken over the whole batch
+        before the expectations gate, so in drop mode the watermark
+        also covers quarantined rows and a fixed row re-arrives with a
+        new watermark instead of replaying forever. Gate, max and
+        write all see ONE pinned snapshot. On a non-snapshot source (a
+        live JDBC table), rows arriving between a max scan and a write
+        scan would be written with keys ABOVE the recorded watermark
+        and re-read next run — duplicates on non-idempotent sinks.
+        Unlike persist() (best-effort — eviction or executor loss
+        silently recomputes partitions from the live source), a
+        checkpoint cuts lineage, so a lost block FAILS the run instead
+        of silently re-reading — and a failed run never advances the
+        watermark, which is the safe side. For batches too large for
+        executor storage, stage to a temp parquet and re-read instead
+        (same guarantee, disk cost).
 
         The checkpoint belongs to this table's run alone: its blocks
         are freed when the run ends, on success and on error, and no
@@ -398,42 +397,33 @@ class IncrementalPipeline:
         if t.expected_schema:
             df = validate_schema(df, t.expected_schema, allow_extra=True)
         df = apply_watermark(df, t.watermark_column, wm_value)
-        # Empty-gate FIRST, on the live source, without a full count:
-        # limit(1) touches at most one partition at 100 TB, unlike the
-        # reference's len(data) which materialized everything
-        # (app.py:147-153, util.py:170). It must run BEFORE the
-        # checkpoint: localCheckpoint is eager, so gating after it
-        # would pay a full batch materialization on the no-new-data
-        # path — the common case for a frequently-polled incremental
-        # table. (Rows arriving between this probe and the checkpoint
-        # simply load now instead of next run — same batch, one max.)
-        if df.limit(1).count() == 0:
-            log.info("table %s: no new data, skipping load", t.name)
-            return TableRunResult(t.name, "skipped_empty", rows=0)
-        # Eager local checkpoint: materializes the batch once and cuts
-        # lineage — every action below reads these blocks, never the
-        # live source.
-        df = df.localCheckpoint()
+        # Gating after the checkpoint costs nothing extra: an empty
+        # batch materializes nothing, so the no-new-data path runs this
+        # one job, as the reference's len(data) gate (app.py:147-153)
+        # ran one fetch.
+        batch = Observation()
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        if t.is_incremental:
+            # NULLs are skipped by max, matching util.py:414
+            metrics.append(F.max(F.col(t.watermark_column)).alias("wm"))
+        df = df.observe(batch, *metrics).localCheckpoint()
         try:
-            # Compute the batch max BEFORE the write so a mid-write
-            # failure leaves the watermark untouched (app.py:157->168).
-            # Also before the expectations gate: in drop mode the
-            # watermark covers the WHOLE batch (quarantined rows
-            # included), so a fixed row re-arrives with a NEW watermark
-            # instead of replaying forever.
-            new_wm = (
-                max_watermark(df, t.watermark_column) if t.is_incremental else None
-            )
-            # Batch key = the FROZEN stored watermark (raw), not new_wm:
-            # the upper bound changes when rows arrive between a failed
-            # write and its replay, which would scatter the same batch's
-            # violations across two batch=* subdirs. An upsert batch is
-            # compacted by the watermark column, the only ordering the
-            # spec declares (None on a full-load table: its batch must
-            # already be key-unique or merge fails loudly).
+            observed = batch.get
+            if observed["rows"] == 0:
+                log.info("table %s: no new data, skipping load", t.name)
+                return TableRunResult(t.name, "skipped_empty", rows=0)
+            # Batch key = the FROZEN stored watermark (raw), not the
+            # new max: the upper bound changes when rows arrive between
+            # a failed write and its replay, which would scatter the
+            # same batch's violations across two batch=* subdirs. An
+            # upsert batch is compacted by the watermark column, the
+            # only ordering the spec declares (None on a full-load
+            # table: its batch must already be key-unique or merge
+            # fails loudly).
             upsert = t.sink_options.get("mode") == "upsert"
             return self._load(
-                t, df, raw, new_wm, t.watermark_column if upsert else None
+                t, df, raw, observed.get("wm"),
+                t.watermark_column if upsert else None,
             )
         finally:
             free_checkpoint(df)

@@ -203,8 +203,11 @@ def commit(
       key already exists in the current version are anti-joined away
       (the manifest twin of idempotent_append_parquet, fixing the
       reference's replay duplication, SURVEY.md §2.C #5/#7). A replay
-      whose rows all already landed is a no-op: NO new version is
-      written and the current manifest is returned unchanged.
+      whose rows all already landed is a no-op: the delta is written
+      first and counted from its parquet footers, and an empty one is
+      removed again — NO new version is published and the current
+      manifest is returned unchanged. With a ``txn`` the empty delta
+      still commits, to record the mark.
     - ``txn``: TRANSACTION fence ``(app_id, version)`` for streaming
       foreachBatch — the manifest records the highest committed
       version per app_id (Delta's txnAppId/txnVersion idiom), and a
@@ -267,23 +270,15 @@ def _commit_locked(
         prev_keys = _read_dirs(
             df.sparkSession, table_dir, cur["dirs"], cur.get("schema")
         ).select(*keys).distinct()
-        # persist: the anti-joined plan (a full-table key scan) is
-        # evaluated by BOTH the emptiness probe and the write —
-        # unpersisted it would run twice per batch, and a
-        # non-deterministic input could even diverge between them
-        out = df.join(prev_keys, on=keys, how="left_anti").persist()
-    try:
-        # all rows already present and no txn mark to record:
-        # true no-op — don't burn a version on an empty delta
-        if merge_keys and txn is None and out.limit(1).count() == 0:
-            return cur
-        return _publish(
-            table_dir, cur, fence, _parquet_writer(out, parts),
-            list(cur["dirs"]), 0, schema, marks, parts, data_change,
-        )
-    finally:
-        if merge_keys:
-            out.unpersist()
+        out = df.join(prev_keys, on=keys, how="left_anti")
+    # write first, then count: the anti-joined delta is evaluated once,
+    # by the write, and an empty one (every row already present, no
+    # txn mark to record) publishes nothing — no version is burned
+    return _publish(
+        table_dir, cur, fence, _parquet_writer(out, parts),
+        list(cur["dirs"]), 0, schema, marks, parts, data_change,
+        skip_empty=bool(merge_keys) and txn is None,
+    )
 
 
 def _txn_fence(cur: dict | None, txn: tuple[str, int] | None) -> dict | None:
@@ -344,13 +339,16 @@ def _publish(
     marks: dict[str, int],
     parts: tuple[str, ...] = (),
     data_change: bool = True,
+    skip_empty: bool = False,
 ) -> dict:
     """Commit one version; the caller holds the writer lease.
 
     ``write(data_dir)`` fills the version's new delta directory; the
     version's ``dirs`` are ``kept`` (directories of ``cur`` it carries
     over) plus that directory. ``dropped_rows`` is the row count of the
-    ``cur`` directories it does not keep.
+    ``cur`` directories it does not keep. With ``skip_empty`` a
+    delta that wrote no rows is removed and ``cur`` returned: nothing
+    is published.
 
     The first commit to a legacy table backfills its version
     snapshots, so its time travel survives. A crash before the pointer
@@ -361,13 +359,16 @@ def _publish(
     running total, None when a kept directory's rows are unknown (a
     legacy manifest without a recorded total)."""
     version = 1 if cur is None else cur["version"] + 1
-    if cur is not None and not os.path.isdir(os.path.join(table_dir, "_manifests")):
-        _backfill_legacy_snapshots(table_dir, cur)
     rel = os.path.join("_versions", f"v{version:08d}")
     data_dir = os.path.join(table_dir, rel)
     shutil.rmtree(data_dir, ignore_errors=True)  # crashed orphan of a failed commit
     write(data_dir)
     delta = _dir_rowcount(data_dir)
+    if skip_empty and delta == 0:
+        shutil.rmtree(data_dir, ignore_errors=True)
+        return cur
+    if cur is not None and not os.path.isdir(os.path.join(table_dir, "_manifests")):
+        _backfill_legacy_snapshots(table_dir, cur)
     prev_total = (cur or {}).get("total_rows")
     manifest = {"version": version, "dirs": kept + [rel], "schema": schema, "fence": fence}
     if parts:

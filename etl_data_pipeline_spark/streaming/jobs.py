@@ -1675,7 +1675,7 @@ def run_incremental_ann_index(
             # skipping the commit (and its txn mark) is safe because a
             # replay re-derives the same empty append and the decision
             # overwrite is idempotent.
-            if cells.limit(1).count() == 0:
+            if cells.isEmpty():
                 return
             # ONE atomic O(delta) append; the txn fence makes a replayed
             # batch a read-nothing no-op. One file per touched inverted

@@ -279,6 +279,33 @@ def test_merge_keys_append_is_replay_idempotent(spark, tmp_path):
     assert out.filter("v = 'b'").count() == 3  # only the unseen keys landed
 
 
+@pytest.mark.parametrize("partition_by", [None, ("v",)])
+def test_full_replay_publishes_nothing(spark, tmp_path, partition_by):
+    """The content fence decides from the delta it wrote: a full
+    replay returns the current manifest and leaves no directory for
+    the version it did not publish."""
+    t = str(tmp_path / "t")
+    m1 = commit(_frame(spark, 5, "a"), t, partition_by=partition_by)
+    m = commit(_frame(spark, 5, "a"), t, mode="append", merge_keys=("k",))
+    assert m == m1 == read_manifest(t)
+    assert not os.path.exists(os.path.join(t, "_versions", "v00000002"))
+    assert read_table(spark, t).count() == 5
+
+
+def test_empty_delta_with_txn_still_commits_the_mark(spark, tmp_path):
+    """An empty content-fenced delta under a txn still publishes a
+    version: it records the mark, so the batch is never replayed."""
+    t = str(tmp_path / "t")
+    commit(_frame(spark, 5, "a"), t)
+    m = commit(
+        _frame(spark, 5, "a"), t, mode="append", merge_keys=("k",),
+        txn=("app", 0),
+    )
+    assert (m["version"], m["txn"], m["delta_rows"]) == (2, {"app": 0}, 0)
+    assert read_manifest(t) == m
+    assert read_table(spark, t).count() == 5
+
+
 def test_txn_fence_is_exactly_once(spark, tmp_path):
     """Transaction fence: a (app_id, version) at-or-below the recorded
     high-water mark is skipped entirely; marks survive later commits

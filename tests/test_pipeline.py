@@ -932,3 +932,169 @@ def test_version_feed_missing_watermark_guards_populated_sink(spark, tmp_path):
     assert r.status == "failed" and "duplicate" in (r.error or "")
     # sink untouched by the refused replay
     assert spark.read.parquet(str(tmp_path / "sink" / "kv")).count() == 2
+
+
+def _jobs_of(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted
+    in a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_table_job_counts(spark, tmp_path):
+    """The eager batch checkpoint is the only job that reads a column
+    watermark batch before the sink write (its Observation carries the
+    empty gate and the watermark max), and the manifest content fence
+    decides from the delta it wrote. Upper bounds on the jobs of one
+    run_table call, 1000 + 1000 rows landed as parquet."""
+    from etl_data_pipeline_spark.sinks.manifest import read_manifest
+
+    src = str(tmp_path / "src")
+    sink = {"dir": str(tmp_path / "sink")}
+    common = dict(
+        watermark_column="id", watermark_type="id", source_options={"dir": src}
+    )
+    plain = TableSpec(name="plain", sink_options=sink, **common)
+    pm = TableSpec(name="pm", merge_keys=("id",), sink_options=sink, **common)
+    mm = TableSpec(
+        name="mm", merge_keys=("id",), sink_format="manifest",
+        sink_options=sink, **common,
+    )
+
+    def land(t, lo):
+        batch = spark.range(lo, lo + 1000).withColumn("x", F.col("id") % 7)
+        batch.write.mode("append").parquet(os.path.join(src, f"{t.name}.parquet"))
+
+    store = WatermarkStore(tmp_path / "wm.json")
+    pipe = IncrementalPipeline(spark, PipelineSpec(tables=[plain, pm, mm]), store)
+
+    def run(t, status, max_jobs):
+        r, jobs = _jobs_of(spark, lambda: pipe.run_table(t))
+        assert r.status == status, (t.name, r)
+        assert jobs <= max_jobs, (t.name, status, jobs)
+        return r
+
+    land(plain, 0)
+    run(plain, "loaded", 3)
+    run(plain, "skipped_empty", 2)
+    assert store.get("plain") == "999"
+    for t in (pm, mm):
+        land(t, 0)
+        assert pipe.run_table(t).status == "loaded"
+        land(t, 1000)
+    run(pm, "loaded", 5)
+    run(mm, "loaded", 4)
+    mm_dir = str(tmp_path / "sink" / "mm")
+    version = read_manifest(mm_dir)["version"]
+    store.clear("mm")  # full replay: every row already landed
+    run(mm, "loaded", 5)
+    assert read_manifest(mm_dir)["version"] == version
+    assert spark.read.parquet(str(tmp_path / "sink" / "pm")).count() == 2000
+    assert store.get("pm") == store.get("mm") == "1999"
+
+
+def test_empty_batch_over_zero_partitions_skips(spark, tmp_path):
+    """A batch whose scan has no partitions at all — a source
+    partitioned on the watermark column, every file pruned — skips
+    without blocking on the observed metrics and leaves no RDD in
+    storage."""
+    import threading
+
+    src = str(tmp_path / "src")
+    path = os.path.join(src, "t.parquet")
+    spark.range(1, 6).select("id", F.lit("a").alias("v")).write.partitionBy(
+        "id"
+    ).parquet(path)
+    spec = PipelineSpec(
+        tables=[
+            TableSpec(
+                name="t", watermark_column="id", watermark_type="id",
+                source_options={"dir": src},
+                sink_options={"dir": str(tmp_path / "sink")},
+            )
+        ]
+    )
+    store = WatermarkStore(tmp_path / "wm.json")
+    pipe = IncrementalPipeline(spark, spec, store)
+    assert pipe.run_table(spec.tables[0]).status == "loaded"
+    assert store.get("t") == "5"
+    assert spark.read.parquet(path).filter("id > 5").rdd.getNumPartitions() == 0
+
+    def stored():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    out = {}
+    worker = threading.Thread(
+        target=lambda: out.update(r=pipe.run_table(spec.tables[0])), daemon=True
+    )
+    worker.start()
+    worker.join(120)
+    assert not worker.is_alive(), "run_table blocked on an empty scan"
+    assert (out["r"].status, out["r"].rows) == ("skipped_empty", 0)
+    assert stored() - before == set()
+    assert store.get("t") == "5"
+
+
+def test_timestamp_watermark_stores_the_batch_max(spark, tmp_path):
+    """The observed max of a timestamp watermark is stored exactly as
+    ``max_watermark`` renders it over the same batch."""
+    import datetime
+
+    from etl_data_pipeline_spark.watermark import max_watermark
+
+    src = str(tmp_path / "src")
+    path = os.path.join(src, "t.parquet")
+    spark.createDataFrame(
+        [
+            (1, datetime.datetime(2024, 1, 2, 3, 4, 5, 123456)),
+            (2, datetime.datetime(2024, 5, 6, 7, 8, 9, 1)),
+            (3, None),
+        ],
+        "id long, ts timestamp",
+    ).write.parquet(path)
+    spec = PipelineSpec(
+        tables=[
+            TableSpec(
+                name="t", watermark_column="ts", watermark_type="timestamp",
+                source_options={"dir": src},
+                sink_options={"dir": str(tmp_path / "sink")},
+            )
+        ]
+    )
+    store = WatermarkStore(tmp_path / "wm.json")
+    assert IncrementalPipeline(spark, spec, store).run()[0].status == "loaded"
+    expected = max_watermark(spark.read.parquet(path), "ts")
+    assert expected is not None
+    assert store.get("t") == str(expected)
+
+
+def test_all_null_watermark_batch_loads_and_keeps_the_watermark(spark, tmp_path):
+    """A batch whose watermark column is entirely NULL loads its rows;
+    its max is NULL, so the stored watermark stays as it was."""
+    src = str(tmp_path / "src")
+    batch = spark.createDataFrame([(None, "a"), (None, "b")], "id long, v string")
+    batch.write.parquet(os.path.join(src, "t.parquet"))
+    spec = PipelineSpec(
+        tables=[
+            TableSpec(
+                name="t", watermark_column="id", watermark_type="id",
+                source_options={"dir": src},
+                sink_options={"dir": str(tmp_path / "sink")},
+            )
+        ]
+    )
+    store = WatermarkStore(tmp_path / "wm.json")
+    r = IncrementalPipeline(spark, spec, store).run()[0]
+    assert (r.status, r.new_watermark) == ("loaded", None)
+    assert spark.read.parquet(str(tmp_path / "sink" / "t")).count() == 2
+    assert store.get("t") is None
