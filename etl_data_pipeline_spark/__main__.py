@@ -58,14 +58,13 @@ def build_spec(env: str, table_list: str, tables_list_path: str) -> PipelineSpec
                     if tgt["DB_TYPE"] == "pglive"
                     else {"dir": tgt["PATH"]}
                 ),
-                # replay idempotency (merge on the watermark key) is a
-                # parquet/manifest capability; DB sinks (jdbc/pglive)
-                # are plain appends — the reference's own semantics
-                # (§2.C #5: crash between load and watermark-write can
-                # replay rows there). Setting merge_keys for a DB sink
-                # used to make _validate_sink_config reject EVERY
-                # watermarked CLI table on a jdbc target — found by
-                # the live-PostgreSQL CLI test.
+                # merge on the watermark key is a parquet/manifest
+                # capability; DB sinks take no merge_keys
+                # (_validate_sink_config rejects them). A pglive sink
+                # publishes each batch all-or-nothing, so a failed run
+                # leaves nothing to duplicate; the replay window left
+                # there is a crash between the publish and the
+                # watermark write (§2.C #5).
                 merge_keys=(
                     (s.watermark_column,)
                     if s.watermark_column

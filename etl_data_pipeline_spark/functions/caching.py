@@ -55,13 +55,6 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return out
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted frame (e.g. one the caller had to
-    persist through a different code path) for release."""
-    _TRACKED.setdefault(_session_key(df), []).append(df)
-    return df
-
-
 def tracked_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """``df.localCheckpoint(eager)`` + register the checkpointed frame
     so :func:`release_tracked` can free its blocks.

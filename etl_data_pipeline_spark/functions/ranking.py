@@ -30,15 +30,14 @@ def with_global_position(
 ) -> DataFrame:
     """``df`` sorted by ``order`` (a list of Column sort expressions
     that MUST form a total order — include a unique tiebreak) with a
-    dense ``start``-based long position appended. Pure-JVM since r12:
-    one distributed range sort, ``monotonically_increasing_id`` to
-    read off (partition-id, row-in-partition) without any shuffle or
-    Python hop, a partition-count aggregate over the materialized
-    relation (tiny: one row per partition), and a broadcast join of
-    the cumulative offsets. No single-partition stage, no row ever
-    crosses the Python worker — the r11 zipWithIndex recipe kept that
-    discipline everywhere EXCEPT the pickle round-trip of the RDD hop;
-    this closes it (r11 VERDICT item 2; A/B in BASELINE.md r12).
+    dense ``start``-based long position appended. Pure-JVM: one
+    distributed range sort, ``monotonically_increasing_id`` to read
+    off (partition-id, row-in-partition) without any shuffle or Python
+    hop, a partition-count aggregate over the materialized relation
+    (tiny: one row per partition), and a broadcast join of the
+    cumulative offsets. No single-partition stage, and no row crosses
+    the Python worker (an RDD ``zipWithIndex`` hop would pickle every
+    row).
 
     The sorted relation is localCheckpointed (lazily) so the id
     assignment is FROZEN before the two consumers read it — without
@@ -76,24 +75,6 @@ def with_global_position(
     return ordered.withColumn(
         pos_col, (off + local + F.lit(start)).cast("long")
     ).drop(mid)
-
-
-def with_global_position_rdd(
-    df: DataFrame, order, pos_col: str = "pos", start: int = 1
-) -> DataFrame:
-    """The r11 recipe, kept for the A/B record: distributed range sort
-    + RDD ``zipWithIndex``. Same positions, but every row pays a
-    pickle round-trip through the Python worker — superseded by the
-    pure-JVM ``with_global_position`` (BASELINE.md r12 A/B)."""
-    ordered = df.orderBy(*order)
-    n = len(ordered.columns)
-    schema = T.StructType(
-        list(ordered.schema.fields) + [T.StructField(pos_col, T.LongType(), False)]
-    )
-    rdd = ordered.rdd.zipWithIndex().map(
-        lambda t, _n=n, _s=start: tuple(t[0][i] for i in range(_n)) + (t[1] + _s,)
-    )
-    return ordered.sparkSession.createDataFrame(rdd, schema)
 
 
 def ntile_from_position(

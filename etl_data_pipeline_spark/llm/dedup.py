@@ -60,10 +60,6 @@ MINHASH_AB = [
 ]
 
 
-def _toks() -> Column:
-    return F.array_distinct(F.split(F.col("text"), " "))
-
-
 # Hard ceiling on block size for the two DELIBERATELY-quadratic
 # exhibits (dedup_ngram_jaccard, dedup_levenshtein). Within-block pair
 # volume is rows²/2, so 50k rows caps a block at ~1.25B candidate pairs

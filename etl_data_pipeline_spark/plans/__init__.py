@@ -55,10 +55,6 @@ def exchange_count(plan: str) -> int:
     return len(re.findall(r"\(\d+\) Exchange\b", plan))
 
 
-def is_shuffle_free(plan: str) -> bool:
-    return exchange_count(plan) == 0
-
-
 def global_window_count(plan: str) -> int:
     """Number of UNPARTITIONED window specs in the plan — each one
     Spark executes by moving the window's entire input through ONE

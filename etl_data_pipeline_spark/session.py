@@ -178,10 +178,6 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(partitions or sc.defaultParallelism)
 
 
-def load_all_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every harness table as a temp view for ``spark.sql``."""
     for t in TPCH_TABLES:

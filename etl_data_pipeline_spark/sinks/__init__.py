@@ -266,71 +266,14 @@ def _xml_append(df: DataFrame, table: str, options: dict) -> None:
 
 
 def _pglive_append(df: DataFrame, table: str, options: dict) -> None:
-    """Live PostgreSQL append over libpq (sources/pg_libpq.py):
-    batched $n-parameterized multi-row INSERTs — the reference's
-    execute_batch (util.py:226-247) on its real target engine.
+    """Live PostgreSQL over libpq: ``write_pg`` (sources/pg_libpq.py)
+    stages the batch from every partition in parallel and publishes it
+    in one transaction — all-or-nothing and exactly once per batch. It
+    appends, or replaces the target with ``atomic: true``; it reads
+    only ``conninfo``, ``dbtable`` and ``atomic``."""
+    from etl_data_pipeline_spark.sources.pg_libpq import write_pg
 
-    DEFAULT is the DISTRIBUTED path: every Spark partition writes over
-    its OWN connection (the parallel Spark-JDBC-writer shape), so a
-    big batch never funnels through the driver — the scale-safe
-    default a 100 TB pipeline needs. ``driver_side: true`` opts into
-    the reference-parity collect-then-insert path (util.py:226 shape,
-    kept for parity tests and tiny control tables); ``atomic: true``
-    routes to the staged-table + transactional-rename REPLACE
-    (write_pg_atomic) — all-or-nothing on the server, the reference's
-    commit/rollback semantics; ``staged: true`` to the per-run staged
-    publish (write_pg_staged) — distributed AND exactly-once under
-    stage retry / speculation.
-
-    The distributed default has different FAILURE semantics from the
-    driver-side path — per-partition commits can leave a partial table
-    when one partition fails after others committed, where the driver
-    path is one all-or-nothing transaction. Configs that set none of
-    'distributed'/'driver_side'/'atomic'/'staged' get a one-time
-    warning pointing here; set
-    ``staged: true`` (all-or-nothing AND distributed), ``atomic: true``
-    (full replace), or ``driver_side: true`` (old semantics) to choose
-    explicitly."""
-    from etl_data_pipeline_spark.sources.pg_libpq import (
-        write_pg,
-        write_pg_atomic,
-        write_pg_distributed,
-        write_pg_staged,
-    )
-
-    if options.get("atomic"):
-        write_pg_atomic(df, table, options)
-    elif options.get("staged"):
-        write_pg_staged(df, table, options)
-    elif options.get("driver_side") or (
-        # an explicit 'distributed': False selects the driver-side
-        # path, never the distributed default
-        "distributed" in options and not options["distributed"]
-    ):
-        write_pg(df, table, options)
-    else:
-        if not any(
-            k in options for k in ("distributed", "driver_side", "staged")
-        ):
-            global _warned_pglive_default
-            if not _warned_pglive_default:
-                _warned_pglive_default = True
-                import warnings
-
-                warnings.warn(
-                    "pglive sink now defaults to the DISTRIBUTED "
-                    "per-partition writer (r11): a mid-write failure "
-                    "can leave a partial append where the pre-r11 "
-                    "driver-side path was all-or-nothing. Set "
-                    "'staged': true (distributed + exactly-once), "
-                    "'driver_side': true (old semantics), or "
-                    "'distributed': true to silence this.",
-                    stacklevel=3,
-                )
-        write_pg_distributed(df, table, options)
-
-
-_warned_pglive_default = False
+    write_pg(df, table, options)
 
 
 SINKS: dict[str, SinkFn] = {

@@ -605,9 +605,10 @@ def _xml_source(spark: SparkSession, table: str, options: dict) -> DataFrame:
 def _pglive_source(spark: SparkSession, table: str, options: dict) -> DataFrame:
     """Live PostgreSQL over libpq (sources/pg_libpq.py) — the
     reference's actual target engine. With ``partition_column`` +
-    ``num_partitions`` the read is DISTRIBUTED (per-task libpq
-    connections over range predicates — the Spark-JDBC shape);
-    otherwise driver-side reference-parity. Incremental pushdown rides
+    ``num_partitions`` the read is sliced: per-task libpq connections
+    over range predicates, the Spark-JDBC shape. Otherwise one SELECT
+    runs on the driver. Both plans decode with one typed decoder, so
+    they return the same schema and values. Incremental pushdown rides
     the SAME jdbc_incremental_dbtable subquery (dialect 'postgres'),
     so the PG paths share one SQL contract."""
     from etl_data_pipeline_spark.sources.pg_libpq import (

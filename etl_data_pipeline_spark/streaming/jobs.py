@@ -161,15 +161,6 @@ def tumbling_counts(stream: DataFrame, watermark: str = "10 minutes") -> DataFra
     )
 
 
-def sliding_counts(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def session_counts(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows (stateful; state store per user+session)."""
     return (

@@ -18,7 +18,13 @@ no network) and run:
   id and timestamp watermark types, filtering ON THE SERVER;
 - the reference's entire incremental loop END TO END: PG -> PG
   two-batch copy through IncrementalPipeline with the 'pglive'
-  source/sink (driver-side reference-parity adapters over libpq).
+  source/sink;
+- the sink's one write path: partitions stage rows in parallel and
+  one transaction publishes the batch (append, or replace with
+  ``atomic: true``), so a failed batch leaves nothing behind and its
+  replay loads every row once;
+- the two read plans (driver-side and range-sliced), which share one
+  typed decoder.
 
 Skipped wholesale when the server binaries / libpq / the unprivileged
 user are unavailable.
@@ -30,6 +36,7 @@ import datetime as dt
 import os
 import shutil
 import subprocess
+import types
 import uuid
 
 import pytest
@@ -66,6 +73,42 @@ def _run_as_pg_user(cmd: str) -> subprocess.CompletedProcess:
     return subprocess.run(
         ["/bin/sh", "-c", cmd], capture_output=True, text=True, cwd="/tmp"
     )
+
+
+def publish_tail(monkeypatch, options: dict) -> list[str]:
+    """The publish transaction ``_pglive_append`` sends for one write
+    with ``options`` into an existing target ``t``, without a server:
+    a stub connection records the statements and the partition leg is
+    a no-op. Returns the statements after the last BEGIN."""
+    from pyspark.sql import types as T
+
+    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
+    from etl_data_pipeline_spark.sinks import _pglive_append
+
+    sent: list[str] = []
+
+    class Recorder:
+        def __init__(self, conninfo):
+            pass
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            pass
+
+        def execute(self, sql, params=()):
+            sent.append(sql)
+            return None, [(1,)]  # the existence probe finds the target
+
+    monkeypatch.setattr(pgmod, "PgConnection", Recorder)
+    monkeypatch.setattr(pgmod, "_stage_partitions", lambda df, st, o: None)
+    frame = types.SimpleNamespace(
+        columns=["id"],
+        schema=T.StructType([T.StructField("id", T.LongType())]),
+    )
+    _pglive_append(frame, "t", {"conninfo": "x", **options})
+    return sent[len(sent) - sent[::-1].index("BEGIN"):]
 
 
 @pytest.fixture(scope="module")
@@ -427,8 +470,9 @@ def test_partitioned_distributed_read(pg, spark):
 
 
 def test_distributed_write_round_trip(pg, spark):
-    """The parallel write path: N partitions each insert over their
-    own connection; the table ends with exactly the frame's rows."""
+    """The parallel write path: N partitions each stage their rows
+    over their own connection; the table ends with exactly the
+    frame's rows. The legacy 'distributed' key is ignored."""
     from pyspark.sql import functions as F
 
     from etl_data_pipeline_spark.sinks import write_sink
@@ -462,7 +506,7 @@ def test_complex_columns_rejected_loudly(pg, spark):
 
 
 def test_atomic_swap_replaces_all_or_nothing(pg, spark):
-    """write_pg_atomic: the reference's per-table commit/rollback
+    """``atomic: true``: the reference's per-table commit/rollback
     (util.py:233-242) as a staged table + ONE transactional
     DROP+RENAME on the live server — readers see complete old or
     complete new, never a mix; the stage table is gone afterwards."""
@@ -479,45 +523,50 @@ def test_atomic_swap_replaces_all_or_nothing(pg, spark):
     write_sink(v2, "pglive", "atomic_t", {"conninfo": pg, "atomic": True})
     got = read_source(spark, "pglive", "atomic_t", {"conninfo": pg})
     assert [(r.id, r.s) for r in got.collect()] == [(9, "z")]
+    assert got.columns == ["id", "s"]  # the stage's __pid is dropped
     with PgConnection(pg) as c:
         _, rows = c.execute(
             "SELECT 1 FROM information_schema.tables "
-            "WHERE table_name = 'atomic_t__stage'"
+            "WHERE table_name LIKE 'atomic_t__w%'"
         )
         assert rows == []  # stage renamed away, no orphan
 
 
 def test_atomic_swap_crash_window_leaves_target_intact(pg, spark, monkeypatch):
-    """A failure BEFORE the rename transaction leaves the target
-    untouched (at worst an orphaned stage); the next atomic run clears
-    the orphan and succeeds."""
+    """A failure after the stage is written but BEFORE the publish
+    transaction leaves the target untouched and drops the per-run
+    stage; the next atomic run succeeds."""
     import etl_data_pipeline_spark.sources.pg_libpq as pgmod
     from etl_data_pipeline_spark.sources import read_source
     from etl_data_pipeline_spark.sources.pg_libpq import PgConnection
 
+    replace = {"conninfo": pg, "atomic": True}
     v1 = spark.createDataFrame([(1, "keep")], "id bigint, s string")
-    pgmod.write_pg_atomic(v1, "crash_t", {"conninfo": pg})
+    pgmod.write_pg(v1, "crash_t", replace)
 
     v2 = spark.createDataFrame([(2, "lost")], "id bigint, s string")
-    real = pgmod.write_pg_distributed
+    real = pgmod._stage_partitions
 
-    def boom(df, table, options):
-        real(df, table, options)  # stage IS written...
-        raise RuntimeError("simulated crash before the rename txn")
+    def boom(df, stage, options):
+        real(df, stage, options)  # stage IS written...
+        raise RuntimeError("simulated crash before the publish txn")
 
-    monkeypatch.setattr(pgmod, "write_pg_distributed", boom)
+    monkeypatch.setattr(pgmod, "_stage_partitions", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        pgmod.write_pg_atomic(v2, "crash_t", {"conninfo": pg})
+        pgmod.write_pg(v2, "crash_t", replace)
     monkeypatch.undo()
 
     got = read_source(spark, "pglive", "crash_t", {"conninfo": pg})
     assert [(r.id, r.s) for r in got.collect()] == [(1, "keep")]  # intact
-    with PgConnection(pg) as c:  # orphaned stage holds the dead batch
-        _, rows = c.execute('SELECT count(*) FROM "crash_t__stage"')
-        assert rows == [(1,)]
+    with PgConnection(pg) as c:
+        _, rows = c.execute(
+            "SELECT table_name FROM information_schema.tables "
+            "WHERE table_name LIKE 'crash_t__w%'"
+        )
+        assert rows == []  # the dead batch's stage was dropped
 
     v3 = spark.createDataFrame([(3, "new")], "id bigint, s string")
-    pgmod.write_pg_atomic(v3, "crash_t", {"conninfo": pg})  # clears orphan
+    pgmod.write_pg(v3, "crash_t", replace)
     got = read_source(spark, "pglive", "crash_t", {"conninfo": pg})
     assert [(r.id, r.s) for r in got.collect()] == [(3, "new")]
 
@@ -526,9 +575,12 @@ def test_timestamptz_instant_survives_non_utc_driver_tz(pg, spark):
     """ADVICE r10: with the session pinned to UTC on connect and
     timestamps rendered/parsed as UTC instants, a driver host in ANY
     timezone round-trips the same instant. Simulated by flipping the
-    Python process TZ to America/New_York for the whole write+read."""
+    Python process TZ to America/New_York for the whole write+read;
+    the partition writer also runs in-process, so its instant fixers
+    meet the non-UTC zone as they would on a non-UTC executor."""
     import time
 
+    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
     from etl_data_pipeline_spark.sinks import write_sink
     from etl_data_pipeline_spark.sources import (
         jdbc_create_table_ddl,
@@ -543,14 +595,18 @@ def test_timestamptz_instant_survives_non_utc_driver_tz(pg, spark):
         c.execute(
             jdbc_create_table_ddl("tz_dst", "ts timestamp", dialect="postgres")
         )
+        c.execute("CREATE TABLE tz_stage (LIKE tz_dst)")
+        c.execute('ALTER TABLE tz_stage ADD COLUMN "__pid" integer')
     old_tz = os.environ.get("TZ")
     os.environ["TZ"] = "America/New_York"
     time.tzset()
     try:
         df = read_source(spark, "pglive", "tz_src", {"conninfo": pg})
-        # both write paths must preserve the instant from a non-UTC host
-        write_sink(df, "pglive", "tz_dst", {"conninfo": pg, "driver_side": True})
         write_sink(df, "pglive", "tz_dst", {"conninfo": pg})
+        pgmod._write_staged_partition(
+            pg, "tz_stage", df.columns, pgmod._instant_fixers(df.schema),
+            0, df.collect(),
+        )
     finally:
         if old_tz is None:
             os.environ.pop("TZ", None)
@@ -558,6 +614,7 @@ def test_timestamptz_instant_survives_non_utc_driver_tz(pg, spark):
             os.environ["TZ"] = old_tz
         time.tzset()
     with PgConnection(pg) as c:  # session tz pinned UTC -> text is UTC
+        c.execute("INSERT INTO tz_dst SELECT ts FROM tz_stage")
         _, rows = c.execute("SELECT ts::text FROM tz_dst")
         assert rows == [(instant,), (instant,)]
 
@@ -695,7 +752,7 @@ def test_literal_insert_matches_parameterized_write(pg, spark):
         c.execute(jdbc_create_table_ddl("wire_par", schema, "postgres"))
         c.execute(jdbc_insert_statement("wire_lit", cols, [row], "postgres"))
     df = spark.createDataFrame([row], schema.replace(" not null", ""))
-    write_sink(df, "pglive", "wire_par", {"conninfo": pg, "driver_side": True})
+    write_sink(df, "pglive", "wire_par", {"conninfo": pg})
     with PgConnection(pg) as c:
         _, lit = c.execute("SELECT * FROM wire_lit")
         _, par = c.execute("SELECT * FROM wire_par")
@@ -749,35 +806,32 @@ def test_full_refresh_pipeline_atomic_replace_no_duplicates(pg, spark, tmp_path)
 
 
 def test_distributed_write_rolls_back_failed_partition(pg, spark):
-    """Each partition writes in ONE transaction: a task failing
-    mid-partition (constraint violation in a later chunk) leaves ZERO
-    of that partition's rows behind — the ordinary task-retry path
-    re-inserts exactly once instead of duplicating the chunks that
-    landed before the failure."""
+    """The stage carries the target's constraints: a partition failing
+    mid-write (constraint violation in a later chunk) fails the whole
+    write before the publish, so the target holds ZERO rows — neither
+    the chunks that landed before the failure nor the partitions that
+    finished cleanly."""
     from pyspark.sql import functions as F
 
-    from etl_data_pipeline_spark.sources.pg_libpq import (
-        PgConnection,
-        write_pg_distributed,
-    )
+    from etl_data_pipeline_spark.sources.pg_libpq import PgConnection, write_pg
 
     with PgConnection(pg) as c:
         c.execute("CREATE TABLE txn_t (id bigint CHECK (id >= 0))")
-    # one partition, >2 insert chunks (500 rows/statement), with the
-    # violating row in the LAST chunk — earlier chunks insert cleanly
-    # and must be rolled back with it
-    df = (
-        spark.range(1200)
-        .select(
-            F.when(F.col("id") == 1150, F.lit(-1)).otherwise(F.col("id")).alias("id")
-        )
-        .coalesce(1)
+    # three partitions of >2 insert chunks (500 rows/statement), with
+    # the violating row in the LAST chunk of the last partition
+    df = spark.range(0, 3600, numPartitions=3).select(
+        F.when(F.col("id") == 3550, F.lit(-1)).otherwise(F.col("id")).alias("id")
     )
     with pytest.raises(Exception, match="check|violates|23514"):
-        write_pg_distributed(df, "txn_t", {"conninfo": pg})
+        write_pg(df, "txn_t", {"conninfo": pg})
     with PgConnection(pg) as c:
         _, rows = c.execute("SELECT count(*) FROM txn_t")
-    assert rows == [(0,)]  # nothing from the failed partition survived
+        assert rows == [(0,)]  # nothing of the failed batch survived
+        _, rows = c.execute(
+            "SELECT table_name FROM information_schema.tables "
+            "WHERE table_name LIKE 'txn_t__w%'"
+        )
+        assert rows == []
 
 
 def test_atomic_swap_schema_qualified_target(pg, spark):
@@ -790,16 +844,70 @@ def test_atomic_swap_schema_qualified_target(pg, spark):
     with PgConnection(pg) as c:
         c.execute("CREATE SCHEMA IF NOT EXISTS aux")
     v1 = spark.createDataFrame([(1, "a")], "id bigint, s string")
-    pgmod.write_pg_atomic(v1, "x", {"conninfo": pg, "dbtable": "aux.qual_t"})
+    qual = {"conninfo": pg, "dbtable": "aux.qual_t", "atomic": True}
+    pgmod.write_pg(v1, "x", qual)
     v2 = spark.createDataFrame([(2, "b")], "id bigint, s string")
-    pgmod.write_pg_atomic(v2, "x", {"conninfo": pg, "dbtable": "aux.qual_t"})
+    pgmod.write_pg(v2, "x", qual)
     with PgConnection(pg) as c:
         _, rows = c.execute("SELECT id, s FROM aux.qual_t")
         assert rows == [(2, "b")]  # replaced in the right schema
         _, leftover = c.execute(
             "SELECT 1 FROM information_schema.tables "
-            "WHERE table_schema = 'aux' AND table_name = 'qual_t__stage'"
+            "WHERE table_schema = 'aux' AND table_name LIKE 'qual_t__w%'"
         )
         assert leftover == []
     with pytest.raises(ValueError, match="plain lower-case"):
-        pgmod.write_pg_atomic(v1, "x", {"conninfo": pg, "dbtable": '"Mixed"'})
+        pgmod.write_pg(v1, "x", {"conninfo": pg, "dbtable": '"Mixed"'})
+
+
+def test_failed_batch_publishes_nothing_and_replays_once(pg, spark, tmp_path):
+    """With the CLI's sink options (conninfo, dbtable) a batch lands
+    all-or-nothing: a row that violates the target's CHECK fails the
+    run with the target still empty and the watermark unset, so the
+    next run loads every row exactly once instead of appending again
+    the partitions that landed before the failure."""
+    from etl_data_pipeline_spark.pipeline import IncrementalPipeline
+    from etl_data_pipeline_spark.sources.pg_libpq import PgConnection
+    from etl_data_pipeline_spark.spec import PipelineSpec, TableSpec
+    from etl_data_pipeline_spark.watermark import WatermarkStore
+
+    src_tbl = f"rp_src_{uuid.uuid4().hex[:8]}"
+    dst_tbl = f"{src_tbl}_dst"
+    with PgConnection(pg) as c:
+        c.execute(f"CREATE TABLE {src_tbl} (id BIGINT, v TEXT)")
+        c.execute(
+            f"INSERT INTO {src_tbl} "
+            "SELECT g, 'v' || g FROM generate_series(0, 399) g"
+        )
+        c.execute(
+            f"CREATE TABLE {dst_tbl} "
+            "(id BIGINT CONSTRAINT not_350 CHECK (id <> 350), v TEXT)"
+        )
+    spec = PipelineSpec(
+        tables=[
+            TableSpec(
+                name=src_tbl,
+                watermark_column="id",
+                watermark_type="id",
+                source_format="pglive",
+                source_options={"conninfo": pg},
+                sink_format="pglive",
+                sink_options={"conninfo": pg, "dbtable": dst_tbl},
+            )
+        ]
+    )
+    store = WatermarkStore(tmp_path / "wm.json")
+    pipe = IncrementalPipeline(spark, spec, store)
+    r = pipe.run()[0]
+    assert r.status == "failed", (r.status, r.error)
+    with PgConnection(pg) as c:
+        _, rows = c.execute(f"SELECT count(*) FROM {dst_tbl}")
+        assert rows == [(0,)]  # nothing published
+        c.execute(f"ALTER TABLE {dst_tbl} DROP CONSTRAINT not_350")
+    r = pipe.run()[0]
+    assert r.status == "loaded" and r.new_watermark == 399, (r.status, r.error)
+    with PgConnection(pg) as c:
+        _, rows = c.execute(
+            f"SELECT count(*), count(DISTINCT id) FROM {dst_tbl}"
+        )
+    assert rows == [(400, 400)]  # every id once

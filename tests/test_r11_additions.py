@@ -126,28 +126,23 @@ def test_ntile_from_position_matches_spark_ntile(spark):
 
 
 def test_pglive_sink_option_routing(monkeypatch):
-    """The sink selector's contract, incl. back-compat: the pre-r11
-    'distributed' key keeps its meaning (an explicit False pins the
-    driver-side path — it must not silently invert under the new
-    distributed-by-default), 'driver_side' opts into reference parity,
-    'atomic' wins over both."""
-    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
-    from etl_data_pipeline_spark.sinks import _pglive_append
+    """The sink reads one routing option: every legacy key
+    ('distributed' either way, 'driver_side', 'staged') appends
+    through the one staged publish, and only 'atomic' replaces."""
+    from tests.test_pg_live import publish_tail
 
-    calls = []
-    monkeypatch.setattr(pgmod, "write_pg", lambda df, t, o: calls.append("driver"))
-    monkeypatch.setattr(
-        pgmod, "write_pg_distributed", lambda df, t, o: calls.append("dist")
-    )
-    monkeypatch.setattr(
-        pgmod, "write_pg_atomic", lambda df, t, o: calls.append("atomic")
-    )
-    _pglive_append(None, "t", {})  # new default: distributed
-    _pglive_append(None, "t", {"distributed": True})  # legacy spelling
-    _pglive_append(None, "t", {"distributed": False})  # legacy driver pin
-    _pglive_append(None, "t", {"driver_side": True})
-    _pglive_append(None, "t", {"atomic": True, "driver_side": True})
-    assert calls == ["dist", "dist", "driver", "driver", "atomic"]
+    for opts in (
+        {},
+        {"distributed": True},
+        {"distributed": False},
+        {"driver_side": True},
+        {"staged": True},
+    ):
+        tail = publish_tail(monkeypatch, opts)
+        assert tail[0].startswith("INSERT INTO t ("), (opts, tail)
+        assert tail[1].startswith("DROP TABLE t__w"), (opts, tail)
+    tail = publish_tail(monkeypatch, {"atomic": True, "driver_side": True})
+    assert tail[1] == "DROP TABLE t" and tail[2].endswith(" RENAME TO t"), tail
 
 
 def test_rotation_order_touched_tier():

@@ -1,12 +1,13 @@
 """Round-12 additions: exactly-once staged PG publish, atomic-swap
 concurrency/identifier guards, read-path SQLSTATE fallback, bound
 coercion + integer stride, balanced-paren window-spec counting, and
-the pglive default-change warning."""
+the pglive sink's option routing."""
 
 from __future__ import annotations
 
 import datetime as dt
 import threading
+import uuid
 import warnings
 
 import pytest
@@ -16,7 +17,7 @@ from tests.test_pg_live import _SKIP, pg  # noqa: F401  (fixture reuse)
 pg_required = pytest.mark.skipif(_SKIP is not None, reason=_SKIP or "")
 
 
-# ---- write_pg_staged: distributed + exactly-once ----------------------
+# ---- write_pg: distributed + exactly-once -----------------------------
 
 
 @pg_required
@@ -49,10 +50,10 @@ def test_staged_write_round_trip(pg, spark):
 
 @pg_required
 def test_staged_replayed_partition_publishes_exactly_once(pg, spark, monkeypatch):
-    """The at-least-once window write_pg_distributed documents — a
-    task whose COMMIT landed but whose success never reached the
-    driver replays — publishes EXACTLY ONCE through the staged path:
-    the replay's xact-locked DELETE wipes its predecessor's rows."""
+    """A task whose COMMIT landed but whose success never reached the
+    driver replays — and still publishes EXACTLY ONCE through the
+    staged path: the replay's xact-locked DELETE wipes its
+    predecessor's rows."""
     import etl_data_pipeline_spark.sources.pg_libpq as pgmod
     from etl_data_pipeline_spark.sources import read_source
 
@@ -74,7 +75,7 @@ def test_staged_replayed_partition_publishes_exactly_once(pg, spark, monkeypatch
         )
 
     monkeypatch.setattr(pgmod, "_stage_partitions", with_replay)
-    pgmod.write_pg_staged(df, "replay_t", {"conninfo": pg})
+    pgmod.write_pg(df, "replay_t", {"conninfo": pg})
     back = read_source(spark, "pglive", "replay_t", {"conninfo": pg})
     got = sorted((r.id, r.v) for r in back.collect())
     assert got == [(i, f"r-{i}") for i in range(40)]  # no duplicates
@@ -89,7 +90,7 @@ def test_staged_failure_leaves_target_untouched(pg, spark, monkeypatch):
     from etl_data_pipeline_spark.sources.pg_libpq import PgConnection
 
     v1 = spark.createDataFrame([(1, "keep")], "id bigint, v string")
-    pgmod.write_pg_staged(v1, "staged_crash_t", {"conninfo": pg})
+    pgmod.write_pg(v1, "staged_crash_t", {"conninfo": pg})
 
     def boom(frame, stage, options):
         raise RuntimeError("simulated executor loss before publish")
@@ -97,7 +98,7 @@ def test_staged_failure_leaves_target_untouched(pg, spark, monkeypatch):
     monkeypatch.setattr(pgmod, "_stage_partitions", boom)
     v2 = spark.createDataFrame([(2, "lost")], "id bigint, v string")
     with pytest.raises(RuntimeError, match="simulated executor loss"):
-        pgmod.write_pg_staged(v2, "staged_crash_t", {"conninfo": pg})
+        pgmod.write_pg(v2, "staged_crash_t", {"conninfo": pg})
     monkeypatch.undo()
 
     back = read_source(spark, "pglive", "staged_crash_t", {"conninfo": pg})
@@ -113,9 +114,9 @@ def test_staged_failure_leaves_target_untouched(pg, spark, monkeypatch):
 @pg_required
 def test_incremental_pipeline_with_staged_sink(pg, spark, tmp_path):
     """The reference's incremental loop with the exactly-once staged
-    sink selected via spec options — proves the option plumbs through
-    PipelineSpec -> write_sink -> write_pg_staged end to end, each
-    batch publishing atomically and appending (not replacing)."""
+    sink, with the legacy 'staged' key still in the spec options —
+    PipelineSpec -> write_sink -> write_pg end to end, each batch
+    publishing atomically and appending (not replacing)."""
     import uuid
 
     from etl_data_pipeline_spark.pipeline import IncrementalPipeline
@@ -161,33 +162,33 @@ def test_incremental_pipeline_with_staged_sink(pg, spark, tmp_path):
         assert leftover == []  # every batch's stage published and dropped
 
 
-# ---- write_pg_atomic hardening (ADVICE r12) ---------------------------
+# ---- write_pg hardening -----------------------------------------------
 
 
 def test_atomic_and_staged_reject_overlong_stage_names(spark):
     """A target whose stage name would pass PostgreSQL's 63-byte
-    NAMEDATALEN limit is rejected up front — the server would silently
-    truncate it and the later DROP/RENAME would address a different
-    identifier. Raised before any connection is opened."""
-    from etl_data_pipeline_spark.sources.pg_libpq import (
-        write_pg_atomic,
-        write_pg_staged,
-    )
+    NAMEDATALEN limit is rejected up front, for appends and replaces
+    alike — the server would silently truncate it and the later
+    statements would address a different identifier. Raised before
+    any connection is opened."""
+    from etl_data_pipeline_spark.sources.pg_libpq import write_pg
 
     df = spark.createDataFrame([(1,)], "id bigint")
-    long_target = "t" + "x" * 60  # 61 bytes; +7 for __stage > 63
-    with pytest.raises(ValueError, match="63-byte identifier limit"):
-        write_pg_atomic(df, long_target, {"conninfo": "host=/nowhere"})
-    with pytest.raises(ValueError, match="63-byte identifier limit"):
-        write_pg_staged(df, long_target, {"conninfo": "host=/nowhere"})
+    long_target = "t" + "x" * 60  # 61 bytes; +13 for __w<token> > 63
+    for atomic in (False, True):
+        with pytest.raises(ValueError, match="63-byte identifier limit"):
+            write_pg(
+                df, long_target, {"conninfo": "host=/nowhere", "atomic": atomic}
+            )
 
 
 @pg_required
 def test_atomic_concurrent_writers_serialize(pg, spark):
-    """Two concurrent atomic writers to one target share the fixed
-    '<target>__stage' name; the advisory lock serializes them so the
-    survivor is one COMPLETE batch, never a DROP/CREATE/INSERT
-    interleaving (mixed or duplicated rows)."""
+    """Two concurrent atomic writers to one absent target: each stages
+    into its own per-run table, one creates the target under the
+    first-write lock, and the publishes serialize on the target's
+    lock — the survivor is one COMPLETE batch, never mixed or
+    duplicated rows."""
     import etl_data_pipeline_spark.sources.pg_libpq as pgmod
     from etl_data_pipeline_spark.sources import read_source
 
@@ -197,7 +198,7 @@ def test_atomic_concurrent_writers_serialize(pg, spark):
 
     def run(frame):
         try:
-            pgmod.write_pg_atomic(frame, "contended_t", {"conninfo": pg})
+            pgmod.write_pg(frame, "contended_t", {"conninfo": pg, "atomic": True})
         except Exception as e:  # pragma: no cover - failure detail
             errs.append(e)
 
@@ -212,6 +213,43 @@ def test_atomic_concurrent_writers_serialize(pg, spark):
     tags = {v for _, v in rows}
     assert tags in ({"a"}, {"b"})  # one complete batch, never a mix
     assert len(rows) == (50 if tags == {"a"} else 30)
+
+
+@pg_required
+@pytest.mark.parametrize("atomic", [False, True], ids=["append", "replace"])
+def test_concurrent_first_writes_create_the_target_once(pg, spark, atomic):
+    """Two writers into an ABSENT target: the existence check and the
+    CREATE run in one transaction under an advisory lock on the target
+    name, so one writer creates the table and the other finds it —
+    neither fails on a duplicate relation or type. Appends land both
+    batches; replaces leave one complete batch."""
+    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
+    from etl_data_pipeline_spark.sources.pg_libpq import PgConnection
+
+    a = spark.createDataFrame([(i, "a") for i in range(50)], "id bigint, v string")
+    b = spark.createDataFrame([(i, "b") for i in range(30)], "id bigint, v string")
+    for _ in range(3):
+        target = f"first_{uuid.uuid4().hex[:8]}"
+        errs = []
+
+        def run(frame):
+            try:
+                pgmod.write_pg(frame, target, {"conninfo": pg, "atomic": atomic})
+            except Exception as e:  # pragma: no cover - failure detail
+                errs.append(e)
+
+        threads = [threading.Thread(target=run, args=(f,)) for f in (a, b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errs, errs
+        with PgConnection(pg) as c:
+            _, rows = c.execute(f"SELECT v, count(*) FROM {target} GROUP BY v")
+        if atomic:
+            assert sorted(rows) in ([("a", 50)], [("b", 30)])
+        else:
+            assert sorted(rows) == [("a", 50), ("b", 30)]
 
 
 # ---- _range_predicates: bound coercion + integer stride ---------------
@@ -301,43 +339,30 @@ def test_global_window_count_still_counts_partitioned_as_zero():
 # ---- pglive default-change warning ------------------------------------
 
 
-def test_pglive_default_emits_one_migration_warning(monkeypatch):
-    """Configs that set none of distributed/driver_side/atomic/staged
-    ride the r11 default flip — they get ONE warning naming the
-    failure-semantics change, not one per batch."""
-    import etl_data_pipeline_spark.sinks as sinks
-    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
+def test_pglive_default_emits_no_warning(monkeypatch):
+    """The default config (conninfo only, as the CLI builds it) has one
+    write path with one failure contract, so nothing is left to warn
+    about — repeated writes and legacy keys alike stay silent."""
+    from tests.test_pg_live import publish_tail
 
-    monkeypatch.setattr(pgmod, "write_pg_distributed", lambda df, t, o: None)
-    monkeypatch.setattr(sinks, "_warned_pglive_default", False)
     with warnings.catch_warnings(record=True) as seen:
         warnings.simplefilter("always")
-        sinks._pglive_append(None, "t", {"conninfo": "x"})
-        sinks._pglive_append(None, "t", {"conninfo": "x"})
-    msgs = [w for w in seen if "DISTRIBUTED" in str(w.message)]
-    assert len(msgs) == 1
-    # an explicit choice stays silent
-    with warnings.catch_warnings(record=True) as seen:
-        warnings.simplefilter("always")
-        sinks._pglive_append(None, "t", {"conninfo": "x", "distributed": True})
-    assert not [w for w in seen if "DISTRIBUTED" in str(w.message)]
+        publish_tail(monkeypatch, {})
+        publish_tail(monkeypatch, {})
+        publish_tail(monkeypatch, {"distributed": True})
+    assert seen == []
 
 
 def test_pglive_staged_routing(monkeypatch):
-    """'staged' routes to write_pg_staged; 'atomic' still wins."""
-    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
-    from etl_data_pipeline_spark.sinks import _pglive_append
+    """'staged' appends like the default; 'atomic' replaces with or
+    without it."""
+    from tests.test_pg_live import publish_tail
 
-    calls = []
-    monkeypatch.setattr(
-        pgmod, "write_pg_staged", lambda df, t, o: calls.append("staged")
+    assert publish_tail(monkeypatch, {"staged": True})[0].startswith(
+        "INSERT INTO t ("
     )
-    monkeypatch.setattr(
-        pgmod, "write_pg_atomic", lambda df, t, o: calls.append("atomic")
-    )
-    _pglive_append(None, "t", {"staged": True})
-    _pglive_append(None, "t", {"staged": True, "atomic": True})
-    assert calls == ["staged", "atomic"]
+    tail = publish_tail(monkeypatch, {"staged": True, "atomic": True})
+    assert tail[-2].endswith(" RENAME TO t"), tail
 
 
 # ---- corpus_domain_cap -------------------------------------------------
