@@ -498,17 +498,11 @@ class IncrementalPipeline:
         report = check_expectations(df, t.expectations)
         if report.ok:
             return df
-        mode = t.expectations_mode
-        if mode == "fail":
+        if t.expectations_mode == "fail":
             raise ExpectationError(
                 f"table {t.name}: {report.n_violations}/{report.total} rows "
                 f"violate expectations "
                 f"{ {k: v for k, v in report.counts.items() if v} }"
-            )
-        if mode != "drop":
-            raise ValueError(
-                f"table {t.name}: unknown expectations_mode {mode!r} "
-                f"(use 'fail' or 'drop')"
             )
         opts = t.sink_options
         qdir = opts.get("quarantine_dir") or (

@@ -24,7 +24,6 @@ from typing import Callable, Iterator, Protocol
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 
 class SinkFn(Protocol):
@@ -91,86 +90,34 @@ def writer_lease(path: str) -> Iterator[int]:
 
 def _recover_interrupted_swap(path: str) -> None:
     """Heal a crashed atomic_overwrite_parquet swap: the two-rename
-    window can leave NO live target but a complete ``.old`` backup.
-    Called with the writer lease HELD by every swap; the read path
-    goes through ``_recover_interrupted_swap_safe`` instead — a reader
-    (upsert/idempotent-append/rollup) that saw the bare missing path
-    would wrongly conclude 'first write' and discard the backed-up
-    data on its next write."""
+    window can leave NO live target but a complete ``.old`` backup,
+    which is restored here. Caller MUST hold ``writer_lease(path)`` —
+    only then is a missing target with a ``.old`` beside it a crashed
+    swap and not a live one, and only then does the restore not race a
+    writer's final rename."""
     backup = path + ".old"
     if path and not os.path.exists(path) and os.path.exists(backup):
         os.replace(backup, path)
 
 
-def _recover_interrupted_swap_safe(path: str) -> None:
-    """Lease-aware recovery for READERS. The bare check cannot tell a
-    crashed swap from a LIVE one (both show target-missing +
-    ``.old``-present); restoring ``.old`` under a live writer's feet
-    would make its final rename land on a non-empty directory and
-    fail. So: only when recovery LOOKS needed, take the lease (waiting
-    out any live writer) and re-check before touching anything."""
-    if not path or os.path.exists(path) or not os.path.exists(path + ".old"):
-        return
-    with writer_lease(path):
-        _recover_interrupted_swap(path)
+def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None ONLY when the path does not
+    exist. Caller MUST hold ``writer_lease(path)``: a crashed swap's
+    ``.old`` is restored first, and no swap can be mid-flight, so a
+    missing path really is a first write.
 
-
-def read_parquet_if_exists(
-    spark: SparkSession, path: str, lease_held: bool = False
-) -> DataFrame | None:
-    """``spark.read.parquet(path)``, or None ONLY when the path
-    genuinely does not exist.
-
-    Any other read failure (permissions, corrupt footer, transient FS
-    error) PROPAGATES. A sink that treats "cannot read" as "first
-    write" silently becomes destructive exactly when the data is in
-    trouble: upsert would overwrite-drop every unmatched sink row,
-    idempotent append would degrade to a duplicating plain append, and
-    the rollup would lose its batch-id dedup state and double-count on
-    replay. Only the specific PATH_NOT_FOUND condition is first-write.
-
-    ``lease_held``: callers already inside ``writer_lease(path)`` must
-    say so — recovery then runs directly (taking the lease again from
-    the same thread would self-deadlock).
+    Any failure to read an existing target (permissions, corrupt
+    footer, a directory with no parquet files) PROPAGATES. A sink that
+    treats "cannot read" as "first write" silently becomes destructive
+    exactly when the data is in trouble: upsert would overwrite-drop
+    every unmatched sink row, idempotent append would degrade to a
+    duplicating plain append, and the rollup would lose its batch-id
+    dedup state and double-count on replay.
     """
-    if lease_held:
-        _recover_interrupted_swap(path)
-    else:
-        _recover_interrupted_swap_safe(path)
-    try:
-        df = spark.read.parquet(path)
-        # force analysis now so a missing path surfaces here, not at
-        # the first downstream action
-        df.schema
-        return df
-    except AnalysisException as e:
-        if not _is_path_not_found(e):
-            raise
-        if lease_held:
-            return None
-    # TOCTOU: without the lease, the path can vanish INSIDE a live
-    # swap's two-rename window AFTER the recovery check above saw it
-    # present — returning None here would report "first write" for a
-    # sink that fully exists. Retry ONCE under the lease: no swap can
-    # be mid-flight there, so a second PATH_NOT_FOUND is genuine.
-    with writer_lease(path):
-        return read_parquet_if_exists(spark, path, lease_held=True)
-
-
-def _is_path_not_found(e: AnalysisException) -> bool:
-    cond = None
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(e, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:
-                cond = None
-            if cond:
-                break
-    return cond == "PATH_NOT_FOUND" or (
-        cond is None and "PATH_NOT_FOUND" in str(e)
-    )
+    _recover_interrupted_swap(path)
+    if not os.path.exists(path):
+        return None
+    return spark.read.parquet(path)
 
 
 def _target_path(table: str, options: dict, suffix: str = "") -> str:
@@ -362,20 +309,16 @@ def atomic_overwrite_parquet(df: DataFrame, table: str, options: dict) -> None:
     (flock sidecar + fencing token) — two concurrent overwrites, or an
     overwrite racing an upsert/SCD2 on the same target, queue up and
     each sees the other's completed state; the target is always ONE
-    writer's complete dataset, never an interleaving. The swap itself
-    is two renames (path -> .old, .staging -> path), so there is a
-    window where the target path does not exist — a concurrent READER
-    in that window errors, and a crash in it leaves the data only in
-    ``.old``. This function therefore (a) RECOVERS on entry (under the
-    lease): a missing target with a live ``.old`` backup is restored
-    before anything else, so a crashed swap heals on the next write
-    (the engine's read paths heal too, via the lease-aware
-    ``_recover_interrupted_swap_safe``); (b) documents that ad-hoc
-    readers must not race writers on a bare directory. For true
-    single-rename atomicity point readers at a manifest/symlink
-    swapped in one rename, or use a table format (Delta/Iceberg) — on
-    object stores rename is not atomic and the table-format route is
-    the only one.
+    writer's complete dataset, never an interleaving. Every engine read
+    of a parquet state target holds the same lease
+    (``read_parquet_if_exists``), so it never sees the two-rename
+    window where the target path does not exist, and a crash in that
+    window (data only in ``.old``) is healed by the next leased read or
+    write. Ad-hoc readers that skip the lease must not race writers on
+    a bare directory. For true single-rename atomicity point readers
+    at a manifest/symlink swapped in one rename, or use a table format
+    (Delta/Iceberg) — on object stores rename is not atomic and the
+    table-format route is the only one.
     """
     path = _target_path(table, options)
     with writer_lease(path):
@@ -394,10 +337,10 @@ def _overwrite_swap_locked(
 
     A first write must be staged too: a direct write creates the
     target directory at job START, so a crash mid-job leaves a
-    footerless target whose next read is UNABLE_TO_INFER_SCHEMA, not
-    PATH_NOT_FOUND — first-write detection then fails until someone
-    deletes the directory by hand. Staged, a crash leaves the target
-    absent and the replay clean."""
+    footerless target that exists — its next read raises
+    UNABLE_TO_INFER_SCHEMA instead of reporting a first write, until
+    someone deletes the directory by hand. Staged, a crash leaves the
+    target absent and the replay clean."""
     import shutil
 
     staging = path + ".staging"
@@ -536,7 +479,7 @@ def upsert_overwrite_parquet(
         # first-write ONLY on a true missing path; any other read error
         # aborts the upsert (see read_parquet_if_exists — a degraded
         # read here would silently drop all unmatched sink rows).
-        existing = read_parquet_if_exists(spark, path, lease_held=True)
+        existing = read_parquet_if_exists(spark, path)
         if existing is None:
             _overwrite_swap_locked(df, path)
             return
@@ -601,7 +544,7 @@ def scd2_upsert_parquet(
 
 
 def _scd2_upsert_locked(spark, df, path, as_version, key_cols, compare, data_cols, ts):
-    existing = read_parquet_if_exists(spark, path, lease_held=True)
+    existing = read_parquet_if_exists(spark, path)
     if existing is None:
         _overwrite_swap_locked(as_version, path)
         return
@@ -877,7 +820,7 @@ def idempotent_append_parquet(
     with writer_lease(path):
         # first-write ONLY on a true missing path; any other read error
         # aborts the append (a degraded read would replay duplicates).
-        sink = read_parquet_if_exists(spark, path, lease_held=True)
+        sink = read_parquet_if_exists(spark, path)
         if sink is None:
             # first write via the staged swap (see _overwrite_swap_locked);
             # later appends are safe: the commit protocol only publishes

@@ -554,9 +554,11 @@ def write_pg(df, table: str, options: dict) -> None:
        or speculative attempt replaces its predecessor.
     3. One driver transaction publishes. An append (the default) runs
        ``INSERT INTO target SELECT .. FROM stage`` and drops the stage;
-       ``atomic: true`` replaces the target — drops ``__pid``, drops
-       the target and renames the stage into place (DDL is
-       transactional here). Readers see the whole batch or none of it.
+       ``atomic: true`` replaces the target — drops ``__pid``, hands
+       every sequence the target owns (a ``serial`` column's) to the
+       stage's same column, drops the target and renames the stage
+       into place (DDL is transactional here). Readers see the whole
+       batch or none of it.
 
     The stage carries the target's constraints, so a violating row
     fails the write before anything is published. A failure before the
@@ -597,6 +599,19 @@ def write_pg(df, table: str, options: dict) -> None:
     if options.get("atomic"):
         publish = [
             f'ALTER TABLE {stage} DROP COLUMN "__pid"',
+            # a serial column's sequence is owned by the target, and the
+            # stage's copied default still calls it: hand it to the
+            # stage's column, or dropping the target fails (2BP01)
+            f"DO $$ DECLARE r record; BEGIN FOR r IN "
+            f"SELECT s.oid::regclass AS seq, a.attname AS col "
+            f"FROM pg_depend d "
+            f"JOIN pg_class s ON s.oid = d.objid AND s.relkind = 'S' "
+            f"JOIN pg_attribute a "
+            f"ON a.attrelid = d.refobjid AND a.attnum = d.refobjsubid "
+            f"WHERE d.classid = 'pg_class'::regclass "
+            f"AND d.refobjid = '{target}'::regclass AND d.deptype = 'a' "
+            f"LOOP EXECUTE format('ALTER SEQUENCE %s OWNED BY {stage}.%I', "
+            f"r.seq, r.col); END LOOP; END $$",
             f"DROP TABLE {target}",
             f"ALTER TABLE {stage} RENAME TO {bare_target}",
         ]

@@ -857,18 +857,17 @@ def _fenced_merge_swap(
     """The shared body of the three merging rollup sinks (hourly
     rollup, weekly HLL, CMS): read under the writer lease, batch-id
     fence, per-batch partial, fold into the existing state, atomic
-    swap. One definition — the r9 review found the sequence
-    copy-pasted per sink, where a fence-ordering or swap-protocol fix
-    would have to land identically three times or silently drift.
+    swap. One definition, so a fence-ordering or swap-protocol fix
+    lands once for all three sinks.
 
     The WHOLE read-dedup-merge-swap holds the lease: one stream's
     batches are serial, but a second stream (or a compaction) on the
     same target would otherwise read the same last_batch_id, pass the
     dedup check, and its swap would overwrite this batch's
     contribution — the lost-update race the other merging sinks close
-    the same way. First-refresh ONLY on a true missing path: any other
-    read error aborts the merge, else the batch-id dedup state is lost
-    and a replayed batch double-counts.
+    the same way. First-refresh ONLY on a missing path: any other read
+    error aborts the merge, else the batch-id dedup state is lost and a
+    replayed batch double-counts.
 
     Fence read is ONE row, not an aggregate: every row of these
     tables carries the identical last_batch_id (written as a single
@@ -877,12 +876,11 @@ def _fenced_merge_swap(
     keeps its own body: its rows retain their ORIGINAL batch ids, so
     max() there is genuinely required.)
 
-    CONTRACT (ADVICE r9): every caller must rewrite the WHOLE table
-    each batch with one uniform last_batch_id literal — a sink that
-    kept per-row batch ids would under-read the fence here and
-    double-count replays. The uniform-id invariant is asserted under
-    ETL_DEBUG_FENCE=1 (a distinct-count over the fence column — too
-    expensive per micro-batch to run unconditionally)."""
+    CONTRACT: every caller must rewrite the WHOLE table each batch with
+    one uniform last_batch_id literal — a sink that kept per-row batch
+    ids would under-read the fence here and double-count replays. The
+    swap below writes the fence as one literal, so the invariant holds
+    by construction."""
     from etl_data_pipeline_spark.sinks import (
         _overwrite_swap_locked,
         read_parquet_if_exists,
@@ -890,19 +888,7 @@ def _fenced_merge_swap(
     )
 
     with writer_lease(agg_path):
-        existing = read_parquet_if_exists(spark, agg_path, lease_held=True)
-        if existing is not None and os.environ.get("ETL_DEBUG_FENCE") == "1":
-            ndistinct = (
-                existing.select("last_batch_id").distinct().limit(2).count()
-            )
-            if ndistinct > 1:
-                raise AssertionError(
-                    f"_fenced_merge_swap contract violated at {agg_path!r}: "
-                    f"rows carry >1 distinct last_batch_id — this helper "
-                    f"requires whole-table rewrites with one uniform fence "
-                    f"id (per-row batch ids need a max() fence, see "
-                    f"run_incremental_dedup)"
-                )
+        existing = read_parquet_if_exists(spark, agg_path)
         row = (
             existing.select("last_batch_id").first()
             if existing is not None
@@ -1376,7 +1362,7 @@ def run_incremental_dedup(
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
         with writer_lease(index_path):
-            index = read_parquet_if_exists(spark, index_path, lease_held=True)
+            index = read_parquet_if_exists(spark, index_path)
             last = (
                 index.agg(F.max("last_batch_id")).first()[0]
                 if index is not None
@@ -1850,7 +1836,7 @@ def run_incremental_domain_cap(
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         with writer_lease(state_path):
-            state = read_parquet_if_exists(spark, state_path, lease_held=True)
+            state = read_parquet_if_exists(spark, state_path)
             last = (
                 state.agg(F.max("last_batch_id")).first()[0]
                 if state is not None

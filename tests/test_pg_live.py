@@ -860,6 +860,31 @@ def test_atomic_swap_schema_qualified_target(pg, spark):
         pgmod.write_pg(v1, "x", {"conninfo": pg, "dbtable": '"Mixed"'})
 
 
+def test_atomic_replace_keeps_serial_sequence(pg, spark):
+    """Replacing a target whose ``serial`` column owns a sequence: the
+    stage's copied default calls that sequence, so the publish hands
+    it to the stage before dropping the target. Two replaces succeed
+    and a later default insert draws from the same sequence."""
+    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
+    from etl_data_pipeline_spark.sources.pg_libpq import PgConnection
+
+    with PgConnection(pg) as c:
+        c.execute("CREATE TABLE ser_t (id serial, v text)")
+        _, rows = c.execute("INSERT INTO ser_t (v) VALUES ('a') RETURNING id")
+        assert rows == [(1,)]
+    replace = {"conninfo": pg, "atomic": True}
+    for i, v in ((100, "x"), (200, "y")):
+        batch = spark.createDataFrame([(i, v)], "id int, v string")
+        pgmod.write_pg(batch, "ser_t", replace)
+    with PgConnection(pg) as c:
+        _, rows = c.execute("INSERT INTO ser_t (v) VALUES ('z') RETURNING id")
+        assert rows == [(2,)]  # the sequence carried on, not reset
+        _, rows = c.execute("SELECT pg_get_serial_sequence('ser_t', 'id')")
+        assert rows == [("public.ser_t_id_seq",)]
+        _, rows = c.execute("SELECT id, v FROM ser_t ORDER BY id")
+        assert rows == [(2, "z"), (200, "y")]
+
+
 def test_failed_batch_publishes_nothing_and_replays_once(pg, spark, tmp_path):
     """With the CLI's sink options (conninfo, dbtable) a batch lands
     all-or-nothing: a row that violates the target's CHECK fails the

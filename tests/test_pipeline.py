@@ -236,14 +236,19 @@ def test_compact_crash_window_heals_via_standard_recovery(spark, tmp_path):
     the sink read paths must restore the data — the former private
     '.precompact' convention was invisible to recovery and lost the
     whole table on the next first-write."""
-    from etl_data_pipeline_spark.sinks import compact_parquet, read_parquet_if_exists
+    from etl_data_pipeline_spark.sinks import (
+        compact_parquet,
+        read_parquet_if_exists,
+        writer_lease,
+    )
 
     path = str(tmp_path / "frag")
     spark.range(100).write.parquet(path)
     compact_parquet(spark, path, target_file_bytes=1 << 30)
     os.replace(path, path + ".old")  # simulate dying mid-swap
-    recovered = read_parquet_if_exists(spark, path)
-    assert recovered is not None and recovered.count() == 100
+    with writer_lease(path):
+        recovered = read_parquet_if_exists(spark, path)
+        assert recovered is not None and recovered.count() == 100
 
 
 def test_upsert_overwrite_last_write_wins(spark, tmp_path):

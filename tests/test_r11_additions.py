@@ -142,7 +142,7 @@ def test_pglive_sink_option_routing(monkeypatch):
         assert tail[0].startswith("INSERT INTO t ("), (opts, tail)
         assert tail[1].startswith("DROP TABLE t__w"), (opts, tail)
     tail = publish_tail(monkeypatch, {"atomic": True, "driver_side": True})
-    assert tail[1] == "DROP TABLE t" and tail[2].endswith(" RENAME TO t"), tail
+    assert tail[-3] == "DROP TABLE t" and tail[-2].endswith(" RENAME TO t"), tail
 
 
 def test_rotation_order_touched_tier():

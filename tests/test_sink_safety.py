@@ -1,6 +1,6 @@
-"""Safety-contract tests for the idempotent/atomic sinks (ADVICE r1):
-a sink must never mistake a broken read for a first write, a crashed
-swap must heal, and the as-of join must carry a matched row's NULLs.
+"""Safety-contract tests for the idempotent/atomic sinks: a sink must
+never mistake a broken read for a first write, a crashed swap must
+heal, and the as-of join must carry a matched row's NULLs.
 """
 
 import os
@@ -16,12 +16,51 @@ from etl_data_pipeline_spark.sinks import (
     idempotent_append_parquet,
     read_parquet_if_exists,
     upsert_overwrite_parquet,
+    writer_lease,
 )
 
 
 def test_read_parquet_if_exists_missing_path_is_none(spark):
     with tempfile.TemporaryDirectory() as tmp:
-        assert read_parquet_if_exists(spark, os.path.join(tmp, "nope")) is None
+        path = os.path.join(tmp, "nope")
+        with writer_lease(path):
+            assert read_parquet_if_exists(spark, path) is None
+
+
+def test_first_write_makes_no_parquet_read(spark, tmp_path, monkeypatch):
+    """A first write into an absent target is decided by a filesystem
+    check under the lease, not by a Spark read that fails analysis."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        calls.append(paths)
+        return real(self, *paths, **options)
+
+    df = spark.range(3).withColumnRenamed("id", "k")
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    idempotent_append_parquet(spark, df, "t", {"dir": str(tmp_path)}, ("k",))
+    monkeypatch.undo()
+    assert calls == []
+    assert spark.read.parquet(str(tmp_path / "t")).count() == 3
+
+
+def test_existing_dir_without_parquet_is_not_a_first_write(spark, tmp_path):
+    """A target directory that exists but holds no parquet files (say,
+    debris of a direct write that died) raises; it is never reported
+    as absent, so no sink overwrites it as a first write."""
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    with writer_lease(path):
+        with pytest.raises(Exception) as exc:
+            read_parquet_if_exists(spark, path)
+    assert "PATH_NOT_FOUND" not in str(exc.value)
+    df = spark.range(3).withColumnRenamed("id", "k")
+    with pytest.raises(Exception):
+        idempotent_append_parquet(spark, df, "t", {"path": path}, ("k",))
+    assert os.listdir(path) == []
 
 
 def test_read_parquet_if_exists_corrupt_sink_raises(spark):
@@ -32,7 +71,7 @@ def test_read_parquet_if_exists_corrupt_sink_raises(spark):
         os.makedirs(path)
         with open(os.path.join(path, "part-0000.parquet"), "w") as f:
             f.write("this is not parquet")
-        with pytest.raises(Exception) as exc:
+        with writer_lease(path), pytest.raises(Exception) as exc:
             df = read_parquet_if_exists(spark, path)
             if df is not None:  # reads that defer analysis: force it
                 df.collect()
@@ -74,8 +113,9 @@ def test_interrupted_swap_recovers_on_next_read(spark):
         # simulate the crash window: target renamed away, swap died
         os.replace(path, path + ".old")
         assert not os.path.exists(path)
-        recovered = read_parquet_if_exists(spark, path)
-        assert recovered is not None and recovered.count() == 5
+        with writer_lease(path):
+            recovered = read_parquet_if_exists(spark, path)
+            assert recovered is not None and recovered.count() == 5
         assert os.path.exists(path) and not os.path.exists(path + ".old")
 
 
