@@ -37,10 +37,12 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Every callable pins the session timezone to UTC around DataFrame
-    construction and restores it (operators/__init__.py:_pinned_utc),
-    so oracle agreement does not depend on the harness container's TZ
-    and host sessions keep their own setting."""
+    Every callable builds its DataFrame under the UTC session time
+    zone (operators/__init__.py:_pinned_utc): on the caller's session
+    when it is already UTC, otherwise on a UTC session derived from it,
+    with the result re-rooted into the caller's. Oracle agreement does
+    not depend on the harness container's TZ, and the caller's session
+    conf is never changed."""
     return dict(_QUERIES)
 
 

@@ -141,26 +141,17 @@ BENCH_QUERIES = [
 # reports it directly instead of leaving the judge to re-slice.
 R1_HEADLINE = BENCH_QUERIES[: BENCH_QUERIES.index("text_contamination")]
 
-# Quiet-host single-thread throughput (Mops/s) the floors were
-# recorded at — shared convention with tools/sweep_timing.py. The
-# probe-normalized total scales the wall by min(probe/QUIET, 1.0), so
-# a run on a contended host self-adjudicates instead of reading as a
-# regression.
-QUIET_MOPS = 18.0
-
-# Quiet-host wall seconds of the in-JVM control query below (r13,
-# VERDICT r12 "what's wrong" #1): the r12 round proved that the
-# loadavg gate AND the pure-Python spin probe both pass while every
-# Spark query runs ~35% slow — the contention that burned that round
-# was memory-bandwidth/IO-class, invisible to a no-allocation spin
-# loop (the probe read FASTER on the degraded host). The control is a
-# fixed shuffle+aggregate over GENERATED data (no input files, no
-# Python rows): it exercises exactly the JVM codegen + hash + exchange
-# write/read + memory-bandwidth path the bench queries live on, so its
-# wall time moves with the same contention they feel. Reference value
-# recorded in BASELINE.md: best-of-6 on this host at loadavg 0.34,
-# r13 session (post-JIT runs read 2.17-2.54 s; if the true quiet floor
-# is lower the normalization under-discounts, i.e. errs conservative).
+# Quiet-host wall seconds of the in-JVM control query below. Host
+# contention of the memory-bandwidth/IO class can pass a loadavg gate
+# (and a pure-Python spin loop) while every Spark query runs ~35%
+# slow. The control is a fixed shuffle+aggregate over GENERATED data
+# (no input files, no Python rows): it exercises exactly the JVM
+# codegen + hash + exchange write/read + memory-bandwidth path the
+# bench queries live on, so its wall time moves with the same
+# contention they feel. Reference value recorded in BASELINE.md:
+# best-of-6 at loadavg 0.34 (post-JIT runs read 2.17-2.54 s; if the
+# true quiet floor is lower the normalization under-discounts, i.e.
+# errs conservative).
 QUIET_CONTROL_SEC = 2.17
 
 
@@ -173,7 +164,7 @@ def spark_control(spark) -> float:
     (range + modular arithmetic), reads nothing, and is NOT part of
     the timed query set: it runs OUTSIDE the timed region, purely so
     a driver comparison can normalize for host contention that
-    loadavg and the spin probe cannot see."""
+    loadavg cannot see."""
     from pyspark.sql import functions as F
 
     df = (
@@ -214,27 +205,6 @@ def wait_for_quiet_host() -> tuple[float, bool]:
         time.sleep(min(15.0, budget - waited))
 
 
-def cpu_probe(spins: int = 3_000_000) -> float:
-    """Single-thread CPU throughput in Mops/s from a fixed pure-Python
-    spin loop — the machine-speed control BASELINE.md's r9 adjudication
-    ran ad hoc (rounds 8 AND 9 both burned judge effort on host-level
-    inflation that loadavg alone could not distinguish from a real
-    regression). Recorded in the bench JSON so a driver-vs-floor ratio
-    can be normalized by relative host speed: this loop has no I/O, no
-    allocation churn, and no JVM involvement, so its rate moves ONLY
-    with CPU contention / VM throttling. Reference quiet-host rate is
-    recorded alongside each floor in BASELINE.md."""
-    best = 0.0
-    for _ in range(3):  # best-of-3: immune to one descheduling blip
-        acc = 0
-        t0 = time.perf_counter()
-        for i in range(spins):
-            acc += i & 1023
-        dt = time.perf_counter() - t0
-        best = max(best, spins / dt / 1e6)
-    return round(best, 1)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -245,7 +215,6 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     waited_sec, hot_host = wait_for_quiet_host()
-    cpu_mops_start = cpu_probe()  # before the JVM exists
 
     qs = entrymod.queries()
     spark = get_spark("bench")
@@ -294,8 +263,6 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     control_end = spark_control(spark)  # end bracket, JIT already warm
     control = min(control_start, control_end)
-    cpu_mops_end = cpu_probe()
-    probe = min(cpu_mops_start, cpu_mops_end)
     print(
         json.dumps(
             {
@@ -308,18 +275,9 @@ def main() -> None:
                 "loadavg": [round(load_start, 2), round(os.getloadavg()[0], 2)],
                 "hot_host": hot_host,
                 "quiet_wait_sec": waited_sec,
-                # [before JVM startup, after the timed passes]: a pair
-                # brackets the run, so mid-run throttling is visible
-                "cpu_probe_mops": [cpu_mops_start, cpu_mops_end],
-                # total scaled to the quiet-host reference speed (the
-                # sweep's convention, QUIET_MOPS) — compare THIS against
-                # recorded floors when cpu_probe reads a loaded host
-                "probe_normalized_total": round(
-                    total * min(probe / QUIET_MOPS, 1.0), 3
-                ),
                 # In-JVM control brackets [start, end] (seconds; see
                 # spark_control — catches the memory-bandwidth-class
-                # contention the spin probe cannot). The normalized
+                # contention loadavg cannot). The normalized
                 # total scales by min(quiet/control, 1.0): clamped so a
                 # faster-than-reference host can never INFLATE a
                 # result, only a slower one discounts toward its

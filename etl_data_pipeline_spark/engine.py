@@ -120,7 +120,9 @@ class EtlEngine:
     def release_caches(self, blocking: bool = False) -> int:
         """Return this session's tracked storage memory to baseline
         (functions/caching.py) — for long-lived sessions composing
-        many registry queries."""
+        many registry queries. Call it once the queries' results are
+        consumed: a frame they returned that was built on a tracked
+        checkpoint fails for good if executed afterwards."""
         from etl_data_pipeline_spark.functions.caching import release_tracked
 
         return release_tracked(self.spark, blocking=blocking)

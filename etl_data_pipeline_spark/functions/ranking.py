@@ -42,7 +42,10 @@ def with_global_position(
     The sorted relation is localCheckpointed (lazily) so the id
     assignment is FROZEN before the two consumers read it — without
     that, the count pass and the emit pass could re-plan the sort
-    independently and disagree on partition boundaries."""
+    independently and disagree on partition boundaries. The checkpoint
+    is tracked, and the result has no lineage behind it: after
+    ``release_tracked`` frees it, executing the result fails for good
+    (it does not recompute)."""
     from etl_data_pipeline_spark.functions.caching import tracked_checkpoint
 
     mid = "__wgp_mid"

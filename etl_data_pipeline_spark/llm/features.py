@@ -21,7 +21,12 @@ from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.functions.hashing import md5_long60, sql_md5_long60
 from etl_data_pipeline_spark.functions.rounding import hround, sql_round
-from etl_data_pipeline_spark.session import load_table
+from etl_data_pipeline_spark.session import (
+    MODEL_LOOP_CONF,
+    derived_session,
+    load_table,
+    reroot,
+)
 
 NEG_K = 4  # negative samples drawn per user
 DECAY_TAU_DAYS = 7.0  # recency half-life scale for decayed features
@@ -279,7 +284,7 @@ def _round6_py(x: float) -> float:
     """Driver-side hround(x, 6): floor(x·10⁶ + 0.5)/10⁶ in Python
     floats — the identical IEEE-754 op sequence rounding.hround emits
     in the JVM (np_round's formula), so a driver-computed weight step
-    is bit-equal to the r11 executor-computed one."""
+    is bit-equal to an executor-computed one."""
     import math
 
     return math.floor(x * 1000000 + 0.5) / 1000000
@@ -294,19 +299,14 @@ def _lr_trained_weights(spark: SparkSession, sf_dir: str):
     embedding_pca_power's exactness recipe applied to a supervised
     trainer.
 
-    r12 restructure (guide §1.2 step 1 — fix the distributed
-    algorithm): the model (≤ 33 (j, w) pairs) is DRIVER-held through
-    the loop, the MLlib pattern (gradient aggregate → driver update);
-    each step is ONE distributed pass — a map-only margin fold over
-    the persisted doc-grain design (weights enter as a literal map,
-    no broadcast join, no groupBy(doc_id) exchange), explode(js) →
-    33-group partial-aggregated gradient, 33 rows collected. The r11
-    form paid per step: a broadcast build of W, a per-doc margin
-    exchange, a corpus⋈corpus doc_id join, a re-computed train-count
-    subplan, and an eager localCheckpoint job — measured 14.0 s at
-    sf0.1 vs 2.6 s restructured (isolated A/B, this round). Driver
-    state is O(LR_BUCKETS) scalars — model-sized, never corpus-sized;
-    the corpus-grain passes stay fully distributed."""
+    The model (≤ 33 (j, w) pairs) is DRIVER-held through the loop, the
+    MLlib pattern (gradient aggregate → driver update); each step is
+    ONE distributed pass — a map-only margin fold over the persisted
+    doc-grain design (weights enter as a literal map, no broadcast
+    join, no groupBy(doc_id) exchange), explode(js) → 33-group
+    partial-aggregated gradient, 33 rows collected. Driver state is
+    O(LR_BUCKETS) scalars — model-sized, never corpus-sized; the
+    corpus-grain passes stay fully distributed."""
     X, support, w = _lr_train(spark, sf_dir)
     W = spark.createDataFrame(
         [(j, w[j]) for j in support], "j bigint, w double"
@@ -319,7 +319,7 @@ def _lr_wmap(support: list[int], w: dict[int, float]):
     how a consumer attaches weights without a join.
 
     Built as ONE sql-parsed expression instead of per-entry F.lit
-    calls (r13): the trainer rebuilds this map EVERY STEP, and the
+    calls: the trainer rebuilds this map EVERY STEP, and the
     ~70 py4j round-trips of the column-API form cost ~50 ms/step of
     pure driver-side Python — measured 1.07 s vs 0.013 s for 20
     builds. repr(float) round-trips exactly and the D suffix parses
@@ -343,40 +343,31 @@ def _lr_wmap(support: list[int], w: dict[int, float]):
 def _lr_train(spark: SparkSession, sf_dir: str):
     """The training loop shared by the trainer/eval/score queries:
     returns (X doc-grain design, feature support, trained w dict) —
-    see _lr_trained_weights for the algorithm and its contract."""
+    see _lr_trained_weights for the algorithm and its contract. The
+    gradient steps run on a derived session with MODEL_LOOP_CONF
+    (AQE off, a model-sized reduce width): each is a fixed 2-stage
+    aggregate ending in ≤ 33 rows. ``spark`` itself is not touched."""
     X = _lr_design(spark, sf_dir)
     Xt = X.filter("is_train")
     # two scalar build queries over the persisted design: the train
-    # count (the r11 1-row crossJoin subplan re-ran per step) and the
-    # feature support (the r11 W0 = distinct-j relation)
+    # count and the feature support
     n = Xt.count()
     support = sorted(
         r[0] for r in X.select(F.explode("js").alias("j")).distinct().collect()
     )
     w = {j: 0.0 for j in support}
-    # aqe_off: each step is a fixed 2-stage aggregate ending in ≤ 33
-    # rows — see the context manager's docstring. Measured (this
-    # round, interleaved): 7.8 s vs 12.0 s for the 20-step loop at
-    # sf0.1, identical weights.
-    from etl_data_pipeline_spark.functions.caching import aqe_off
-
-    with aqe_off(spark):
-        for _step in range(LR_STEPS):
-            m = _lr_margin(_lr_wmap(support, w))
-            p = hround(F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 6)
-            grad = (
-                Xt.select(
-                    (p - F.col("y")).alias("d"), F.explode("js").alias("j")
-                )
-                .groupBy("j")
-                .agg(hround(F.sum("d") / F.lit(n), 6).alias("g"))
-                .collect()
-            )
-            g = {r["j"]: r["g"] for r in grad}
-            w = {
-                j: _round6_py(w[j] - LR_RATE * g.get(j, 0.0))
-                for j in support
-            }
+    Xt = reroot(Xt, derived_session(spark, MODEL_LOOP_CONF))
+    for _step in range(LR_STEPS):
+        m = _lr_margin(_lr_wmap(support, w))
+        p = hround(F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 6)
+        grad = (
+            Xt.select((p - F.col("y")).alias("d"), F.explode("js").alias("j"))
+            .groupBy("j")
+            .agg(hround(F.sum("d") / F.lit(n), 6).alias("g"))
+            .collect()
+        )
+        g = {r["j"]: r["g"] for r in grad}
+        w = {j: _round6_py(w[j] - LR_RATE * g.get(j, 0.0)) for j in support}
     return X, support, w
 
 

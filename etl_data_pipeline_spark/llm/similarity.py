@@ -28,7 +28,13 @@ from etl_data_pipeline_spark.functions.caching import (
 )
 from etl_data_pipeline_spark.functions.rounding import hround, sql_round
 from etl_data_pipeline_spark.llm.vector import cosine, dot as _dot, rank_topk, scored_pairs
-from etl_data_pipeline_spark.session import load_table, spread
+from etl_data_pipeline_spark.session import (
+    MODEL_LOOP_CONF,
+    derived_session,
+    load_table,
+    reroot,
+    spread,
+)
 
 TOP_K = 5
 QUERY_MOD = 100  # query set = vec_id % 100 == 0
@@ -1513,7 +1519,8 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pca_power_iterate(cov_ut: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The PCA_ITERS rounded power-iteration loop; returns (final
-    iterate (i, x), persisted full matrix (i, j, c))."""
+    iterate (i, x), persisted full matrix (i, j, c)), both in
+    ``cov_ut``'s session, which the loop does not touch."""
     # persist the UPPER TRIANGLE before mirroring: both union branches
     # otherwise re-run the corpus-sized covariance aggregation (the
     # dim_i < dim_j filter pushes below the aggregate, so the branches
@@ -1535,33 +1542,32 @@ def _pca_power_iterate(cov_ut: DataFrame) -> tuple[DataFrame, DataFrame]:
         .unionAll(lower)
         .repartition(1)
     )
-    vec = cov.select(F.col("i")).distinct().select(
-        "i", F.lit(PCA_INIT).alias("x")
-    )
-    # aqe_off: the iterate is d-sized — see the context manager's
-    # docstring (measured here: 4.1→3.4 s median on
-    # embedding_pca_project at sf0.1, identical output).
-    from etl_data_pipeline_spark.functions.caching import aqe_off
-
-    with aqe_off(cov.sparkSession):
-        for _ in range(PCA_ITERS):
-            # localCheckpoint (not persist): the norm aggregate AND the
-            # normalized iterate both reference the matvec, so each step
-            # would otherwise DOUBLE the logical plan (2^T growth) and
-            # Catalyst re-optimization explodes — the iterative-DataFrame
-            # trap dedup_clusters documents; persist alone doesn't help
-            # because the optimizer still walks the un-truncated lineage.
-            y = tracked_checkpoint(
-                cov.join(F.broadcast(vec.withColumnRenamed("i", "j")), "j")
-                .groupBy("i")
-                .agg(hround(F.sum(F.col("c") * F.col("x")), 6).alias("y"))
-                .coalesce(1)
-            )
-            norm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-            vec = y.crossJoin(F.broadcast(norm)).select(
-                "i", hround(F.col("y") / F.col("nrm"), 6).alias("x")
-            )
-    return vec, cov
+    # the steps run on a derived session with MODEL_LOOP_CONF (AQE
+    # off, a model-sized reduce width): the iterate is d-sized (on a
+    # 32-core host: 4.1→3.4 s median on embedding_pca_project at
+    # sf0.1, identical output)
+    mat = reroot(cov, derived_session(cov.sparkSession, MODEL_LOOP_CONF))
+    vec = mat.select(F.col("i")).distinct().select("i", F.lit(PCA_INIT).alias("x"))
+    for _ in range(PCA_ITERS):
+        # localCheckpoint (not persist): the norm aggregate AND the
+        # normalized iterate both reference the matvec, so each step
+        # would otherwise DOUBLE the logical plan (2^T growth) and
+        # Catalyst re-optimization explodes — the iterative-DataFrame
+        # trap dedup_clusters documents; persist alone doesn't help
+        # because the optimizer still walks the un-truncated lineage.
+        y = tracked_checkpoint(
+            mat.join(F.broadcast(vec.withColumnRenamed("i", "j")), "j")
+            .groupBy("i")
+            .agg(hround(F.sum(F.col("c") * F.col("x")), 6).alias("y"))
+            .coalesce(1)
+        )
+        norm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
+        vec = y.crossJoin(F.broadcast(norm)).select(
+            "i", hround(F.col("y") / F.col("nrm"), 6).alias("x")
+        )
+    # back in the caller's session: what consumes the iterate plans
+    # with the caller's conf (AQE on)
+    return reroot(vec, cov.sparkSession), cov
 
 
 def _pca_eigen_output(vec: DataFrame, cov: DataFrame) -> DataFrame:

@@ -17,6 +17,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_data_pipeline_spark.session import derived_session, reroot
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -110,28 +112,24 @@ def _load_hoist() -> list[str]:
 
 
 def _pinned_utc(fn: QueryFn) -> QueryFn:
-    """Pin the session timezone to UTC while ``fn`` builds its
-    DataFrame, restoring the caller's setting afterward. The DuckDB
-    oracles format naive timestamps as stored, so Spark's
+    """Build ``fn``'s DataFrame under the UTC session time zone. The
+    DuckDB oracles format naive timestamps as stored, so Spark's
     session-TZ-dependent expressions (date_format/to_date/date_trunc)
-    only agree with them under UTC. Restoring is safe because
-    timezone-aware expressions capture their zone at ANALYSIS time
-    (DataFrame creation) — the returned frame keeps UTC semantics when
-    executed later, and the caller's own queries keep their TZ. Both
-    registry consumers (__spark_entry__ and EtlEngine) inherit this."""
+    only agree with them under UTC. A caller already on UTC (every
+    ``get_spark`` session) gets ``fn`` itself. Any other caller's query
+    is built on a UTC :func:`~etl_data_pipeline_spark.session.derived_session`
+    and re-rooted into the caller's session: time-zone-aware
+    expressions keep the zone they were analysed with, and the caller's
+    session keeps its own. Both registry consumers (__spark_entry__
+    and EtlEngine) inherit this."""
     import functools
+
+    key = "spark.sql.session.timeZone"
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = "spark.sql.session.timeZone"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "UTC")
-        try:
+        if spark.conf.get(key) == "UTC":
             return fn(spark, sf_dir)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        return reroot(fn(derived_session(spark, {key: "UTC"}), sf_dir), spark)
 
     return wrapped

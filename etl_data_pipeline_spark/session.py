@@ -15,8 +15,11 @@ deployment-independent.
 from __future__ import annotations
 
 import os
+import threading
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TPCH_TABLES = (
     "region",
@@ -35,6 +38,31 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # the directory that holds the etl_data_pipeline_spark package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_CLONE_LOCK = threading.Lock()
+
+# Conf of the model-sized iterate loops (the LR trainer's gradient
+# steps, PCA's power iteration), which build on a derived_session of
+# their own. Each step is a fixed small-state aggregate whose reduce
+# side is bounded by the model, not the data, so AQE's runtime
+# re-planning has nothing to improve at any scale while its per-stage
+# materialisation adds one job per step (on a 32-core host: 7.8 s vs
+# 12.0 s for the 20-step LR loop at sf0.1, identical weights). With
+# AQE's coalescing off, the steps would reduce at the full session
+# width (= core count locally, thousands on a cluster) for a handful
+# of groups — at 32 local cores classifier_train_lr ran slower than at
+# 8 (11.6 s vs 7.1 s) — so the width is pinned to AQE_OFF_REDUCE_WIDTH,
+# which covers the largest model (64 rows). Without AQE's skew split,
+# a shuffled-hash join could not spill, so the loops prefer sort-merge
+# (their joins are broadcasts anyway). Corpus-shaped plans keep AQE:
+# it is what turns the tiny-iterate joins into broadcasts locally
+# while falling back to shuffle joins at scale.
+AQE_OFF_REDUCE_WIDTH = 8
+MODEL_LOOP_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": str(AQE_OFF_REDUCE_WIDTH),
+    "spark.sql.join.preferSortMergeJoin": "true",
+}
 
 
 def get_spark(
@@ -111,6 +139,43 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def derived_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A session derived from ``spark``: a clone carrying ``spark``'s
+    current runtime SQL conf (and temp views and functions) with
+    ``conf`` applied on top. It shares the SparkContext, the cache and
+    the FAIR pools with ``spark``, which is left untouched, so threads
+    building on ``spark`` concurrently never see ``conf``. This is the
+    engine's one way to run work under a different SQL conf: build it
+    on the derived session, and :func:`reroot` the result back if the
+    caller should plan it under its own conf.
+
+    ``newSession`` would not do: it starts from the conf the session
+    was built with and drops what was set on ``spark`` since."""
+    with _CLONE_LOCK:
+        # the constructor points RDD.toDF at the newest session; keep
+        # it on the caller's
+        to_df = RDD.toDF
+        clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+        RDD.toDF = to_df
+    for k, v in conf.items():
+        clone.conf.set(k, v)
+    return clone
+
+
+def reroot(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analysed plan as a frame of ``spark``: later operators
+    and the execution plan under ``spark``'s conf. What analysis fixed
+    stays fixed: the schema and the session time zone of
+    time-zone-aware expressions; ``df``'s file relations keep reading
+    with the conf of the session they were read on. Persisted and
+    checkpointed subplans keep serving from their blocks (the cache is
+    shared by every session of a context)."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one harness table (TESTDATA.md) as a DataFrame.
 
@@ -123,44 +188,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TimestampType so downstream expressions (``unix_micros``, window
     RANGE frames) see ONE type:
 
-    - parquet TIMESTAMP(NANOS): Spark's vectorized reader rejects it;
-      read as long nanos (``nanosAsLong``) and convert by exact
-      integer division (``DIV 1000`` — no double round-trip, which
-      would lose precision above 2^53 ns). The option is SCOPED to
-      this read (the schema is captured at analysis, so restoring
-      immediately is safe): left set session-wide it would silently
-      turn TIMESTAMP(NANOS) columns of any UNRELATED later parquet
-      read into bigint.
+    - parquet TIMESTAMP(NANOS): Spark's vectorized reader rejects it.
+      The raw read is analysed on a :func:`derived_session` with
+      ``nanosAsLong`` on, so ``ts`` reads as long nanos, and re-rooted
+      into ``spark``, where ``ts`` converts by exact integer division
+      (``DIV 1000`` — no double round-trip, which would lose precision
+      above 2^53 ns). ``spark``'s own ``nanosAsLong`` is never set:
+      set session-wide it would turn TIMESTAMP(NANOS) columns of any
+      unrelated parquet read into bigint.
     - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 infers
       TIMESTAMP_NTZ, which ``unix_micros`` rejects; cast to TIMESTAMP
       (bit-identical wall-clock values — the session TZ is pinned UTC
       in get_spark, so the NTZ→TZ reinterpretation is the identity).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        from pyspark.sql import functions as F
-
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        try:
-            prev: str | None = spark.conf.get(key)
-        except Exception:
-            prev = None
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(path)
-            # force analysis inside the scoped window
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-            elif ts_type == "timestamp_ntz":
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        return df
-    return spark.read.parquet(path)
+    if name != "events":
+        return spark.read.parquet(path)
+    nanos = derived_session(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
+    df = reroot(nanos.read.parquet(path), spark)
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

@@ -554,9 +554,10 @@ def write_pg(df, table: str, options: dict) -> None:
        or speculative attempt replaces its predecessor.
     3. One driver transaction publishes. An append (the default) runs
        ``INSERT INTO target SELECT .. FROM stage`` and drops the stage;
-       ``atomic: true`` replaces the target — drops ``__pid``, hands
-       every sequence the target owns (a ``serial`` column's) to the
-       stage's same column, drops the target and renames the stage
+       ``atomic: true`` replaces the target — drops ``__pid``, moves
+       the stage's identity sequences to where the target's stand,
+       hands every sequence the target owns (a ``serial`` column's) to
+       the stage's same column, drops the target and renames the stage
        into place (DDL is transactional here). Readers see the whole
        batch or none of it.
 
@@ -599,6 +600,16 @@ def write_pg(df, table: str, options: dict) -> None:
     if options.get("atomic"):
         publish = [
             f'ALTER TABLE {stage} DROP COLUMN "__pid"',
+            # an identity column's sequence cannot change owner, and the
+            # stage's is a fresh one: move it to where the target's
+            # stands, or the next default restarts at 1
+            f"DO $$ DECLARE r record; BEGIN FOR r IN "
+            f"SELECT pg_get_serial_sequence('{target}', attname) AS src, "
+            f"pg_get_serial_sequence('{stage}', attname) AS dst "
+            f"FROM pg_attribute WHERE attrelid = '{target}'::regclass "
+            f"AND attidentity <> '' AND NOT attisdropped "
+            f"LOOP EXECUTE format('SELECT setval(%L, last_value, is_called) "
+            f"FROM %s', r.dst, r.src); END LOOP; END $$",
             # a serial column's sequence is owned by the target, and the
             # stage's copied default still calls it: hand it to the
             # stage's column, or dropping the target fails (2BP01)

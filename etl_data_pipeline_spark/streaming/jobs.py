@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_data_pipeline_spark.functions.rounding import hround
+from etl_data_pipeline_spark.session import derived_session
 from etl_data_pipeline_spark.watermark import WatermarkStore, parse_watermark
 
 
@@ -50,40 +51,27 @@ STATE_STORE_PROVIDERS = {
 }
 
 
-class use_state_store:
-    """Context manager selecting the streaming state-store backend for
-    queries STARTED inside the block (the provider is captured at
-    query start from the session conf; running queries keep theirs).
+def state_store_session(spark: SparkSession, provider: str) -> SparkSession:
+    """A session derived from ``spark`` (``session.derived_session``)
+    whose streaming queries keep their state in ``provider``'s store
+    (a key of STATE_STORE_PROVIDERS). Start a query from a frame of
+    this session to select the backend; ``spark`` keeps its own, and
+    a query captures its provider when it starts.
 
-    ``use_state_store(spark, "rocksdb")`` is the scale switch for the
-    applyInPandasWithState jobs in this module — behavior is identical
-    by contract (tests pin parity), only the state residency changes:
-    executor heap + checkpoint snapshots (default) vs local RocksDB
-    instances checkpointed to the same location. Restores the previous
-    setting on exit so test sessions are not polluted."""
-
-    _KEY = "spark.sql.streaming.stateStore.providerClass"
-
-    def __init__(self, spark: SparkSession, provider: str):
-        if provider not in STATE_STORE_PROVIDERS:
-            raise ValueError(
-                f"unknown state store {provider!r}"
-                f" (use one of {sorted(STATE_STORE_PROVIDERS)})"
-            )
-        self.spark = spark
-        self.provider = STATE_STORE_PROVIDERS[provider]
-
-    def __enter__(self):
-        self._prev = self.spark.conf.get(self._KEY, None)
-        self.spark.conf.set(self._KEY, self.provider)
-        return self.spark
-
-    def __exit__(self, *exc):
-        if self._prev is None:
-            self.spark.conf.unset(self._KEY)
-        else:
-            self.spark.conf.set(self._KEY, self._prev)
-        return False
+    ``state_store_session(spark, "rocksdb")`` is the scale switch for
+    the applyInPandasWithState jobs in this module — behavior is
+    identical by contract (tests pin parity), only the state residency
+    changes: executor heap + checkpoint snapshots (default) vs local
+    RocksDB instances checkpointed to the same location."""
+    if provider not in STATE_STORE_PROVIDERS:
+        raise ValueError(
+            f"unknown state store {provider!r}"
+            f" (use one of {sorted(STATE_STORE_PROVIDERS)})"
+        )
+    return derived_session(
+        spark,
+        {"spark.sql.streaming.stateStore.providerClass": STATE_STORE_PROVIDERS[provider]},
+    )
 
 
 def _schema_from_one_footer(source_dir: str):
@@ -402,7 +390,7 @@ def running_user_totals_tws(stream: DataFrame) -> DataFrame:
 
     State: one named ValueState ("totals": n, s) per user — same
     O(|users|) residency, same checkpoint/recovery contract, and it
-    composes with use_state_store(spark, "rocksdb") like any other
+    runs on a state_store_session(spark, "rocksdb") like any other
     stateful operator.
 
     RUNTIME REQUIREMENT: the transformWithState protocol speaks

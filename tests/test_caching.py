@@ -71,8 +71,10 @@ def test_composing_session_storage_returns_to_baseline(spark, sf_dir):
     engine's localCheckpoint sites register with the tracker too
     (tracked_checkpoint), so the checkpointed IVF family is IN scope —
     the r12 narrowing (dedup_semantic routed around the checkpoint
-    gap) is reverted, closing the r12 ADVICE item."""
-    from etl_data_pipeline_spark.llm import curation, dedup, similarity
+    gap) is reverted, closing the r12 ADVICE item. The LR and PCA
+    loops persist and checkpoint on a session derived from the
+    caller's; release by the caller's session frees those too."""
+    from etl_data_pipeline_spark.llm import curation, dedup, features, similarity
 
     release_tracked(spark, blocking=True)  # clean slate
     baseline = _cached_rdd_count(spark)
@@ -87,6 +89,8 @@ def test_composing_session_storage_returns_to_baseline(spark, sf_dir):
         similarity.sim_ann_ivf,
         dedup.dedup_semantic,
         curation.pipeline_corpus_curation_v2,
+        features.classifier_train_lr,
+        similarity.embedding_pca_project,
         dedup.dedup_ngram_jaccard,   # repeat: the leak was cumulative
         dedup.dedup_minhash_lsh,
         similarity.sim_ann_ivf,

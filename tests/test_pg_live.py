@@ -885,6 +885,29 @@ def test_atomic_replace_keeps_serial_sequence(pg, spark):
         assert rows == [(2, "z"), (200, "y")]
 
 
+def test_atomic_replace_keeps_identity_sequence(pg, spark):
+    """Replacing a target with a ``GENERATED … AS IDENTITY`` column: the
+    stage gets its own identity sequence, so the publish moves it to
+    the target's position. After 3 default inserts and a replace with
+    id 1, the next default insert does not return 1."""
+    import etl_data_pipeline_spark.sources.pg_libpq as pgmod
+    from etl_data_pipeline_spark.sources.pg_libpq import PgConnection
+
+    with PgConnection(pg) as c:
+        c.execute(
+            "CREATE TABLE idt (id int GENERATED BY DEFAULT AS IDENTITY, v text)"
+        )
+        for v in ("a", "b", "c"):
+            c.execute("INSERT INTO idt (v) VALUES ($1)", (v,))
+    batch = spark.createDataFrame([(1, "x")], "id int, v string")
+    pgmod.write_pg(batch, "idt", {"conninfo": pg, "atomic": True})
+    with PgConnection(pg) as c:
+        _, rows = c.execute("INSERT INTO idt (v) VALUES ('z') RETURNING id")
+        assert rows == [(4,)]
+        _, rows = c.execute("SELECT id, v FROM idt ORDER BY id")
+        assert rows == [(1, "x"), (4, "z")]
+
+
 def test_failed_batch_publishes_nothing_and_replays_once(pg, spark, tmp_path):
     """With the CLI's sink options (conninfo, dbtable) a batch lands
     all-or-nothing: a row that violates the target's CHECK fails the

@@ -661,48 +661,48 @@ def test_incremental_domain_cap_kill_restart_sf01(spark, tmp_path):
     src = str(tmp_path / "soak_src"); stage = str(tmp_path / "soak_stage")
     tgt = str(tmp_path / "soak_tgt")
     os.makedirs(src); os.makedirs(tgt)
-    with jobs.use_state_store(spark, "rocksdb"):
-        for i in range(3):
-            deliver(src, stage, i)
-        q1 = jobs.run_incremental_domain_cap(
-            spark, src, tgt, trigger={"processingTime": "200 milliseconds"}
-        )
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            if decided_count(tgt) >= len(chunks[0]):  # >=1 batch committed
-                break
-            time.sleep(0.3)
-        else:
-            q1.stop()
-            raise AssertionError("domcap soak phase 1: no progress in 180s")
-        q1.stop()  # kill mid-stream
-        q1.awaitTermination(60)
-        for i in range(3, 5):
-            deliver(src, stage, i)
-        q2 = jobs.run_incremental_domain_cap(
-            spark, src, tgt, trigger={"processingTime": "200 milliseconds"}
-        )
+    rocks = jobs.state_store_session(spark, "rocksdb")
+    for i in range(3):
+        deliver(src, stage, i)
+    q1 = jobs.run_incremental_domain_cap(
+        rocks, src, tgt, trigger={"processingTime": "200 milliseconds"}
+    )
+    deadline = time.time() + 180
+    while time.time() < deadline:
+        if decided_count(tgt) >= len(chunks[0]):  # >=1 batch committed
+            break
+        time.sleep(0.3)
+    else:
+        q1.stop()
+        raise AssertionError("domcap soak phase 1: no progress in 180s")
+    q1.stop()  # kill mid-stream
+    q1.awaitTermination(60)
+    for i in range(3, 5):
+        deliver(src, stage, i)
+    q2 = jobs.run_incremental_domain_cap(
+        rocks, src, tgt, trigger={"processingTime": "200 milliseconds"}
+    )
 
-        def fully_settled():
-            """All docs decided AND the state swap for the LAST batch
-            landed (decisions are written before the state swap)."""
-            if decided_count(tgt) != len(ids):
-                return False
-            try:
-                st = spark.read.parquet(os.path.join(tgt, "domcap_state"))
-                return (
-                    st.agg(F.sum("docs_pre")).first()[0] == len(ids)
-                )
-            except Exception:
-                return False
+    def fully_settled():
+        """All docs decided AND the state swap for the LAST batch
+        landed (decisions are written before the state swap)."""
+        if decided_count(tgt) != len(ids):
+            return False
+        try:
+            st = spark.read.parquet(os.path.join(tgt, "domcap_state"))
+            return (
+                st.agg(F.sum("docs_pre")).first()[0] == len(ids)
+            )
+        except Exception:
+            return False
 
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            if fully_settled():
-                break
-            time.sleep(0.3)
-        q2.stop()
-        q2.awaitTermination(60)
+    deadline = time.time() + 180
+    while time.time() < deadline:
+        if fully_settled():
+            break
+        time.sleep(0.3)
+    q2.stop()
+    q2.awaitTermination(60)
     assert decided_count(tgt) == len(ids)
 
     # --- straight-through reference run (availableNow, default store) ---

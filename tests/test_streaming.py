@@ -991,10 +991,9 @@ def test_conversion_sessions_rocksdb_state_store_parity(spark, tmp_path):
     (the at-scale backend: keyed state on local disk, not executor
     heap) must produce EXACTLY the sessions the default HDFS-backed
     provider produces — and both must equal the Python reference. Also
-    pins that the provider conf round-trips (set inside the block,
-    restored after)."""
+    pins that the provider is set on the derived session only: the
+    caller's conf is never changed."""
     from etl_data_pipeline_spark.session import load_table
-    from etl_data_pipeline_spark.streaming.jobs import use_state_store
     from tests.conftest import SF_DIR
 
     key = "spark.sql.streaming.stateStore.providerClass"
@@ -1006,27 +1005,25 @@ def test_conversion_sessions_rocksdb_state_store_parity(spark, tmp_path):
     for i, c in enumerate(_time_quartile_chunks(ev)):
         _write_stream_file(c, src, i)
 
-    with use_state_store(spark, "rocksdb"):
-        assert "RocksDB" in spark.conf.get(key)
-        stream = jobs.events_file_stream(spark, src, max_files_per_trigger=1)
-        got = _run_to_memory(
-            spark, jobs.conversion_sessions(stream, gap_secs=1800), "t_rocks"
-        )
-        got_set = {
-            (r.user_id, str(r.session_start), str(r.session_end),
-             r.n_events, r.ended_by)
-            for r in got.collect()
-        }
-    assert spark.conf.get(key, None) == before  # restored
+    rocks = jobs.state_store_session(spark, "rocksdb")
+    assert "RocksDB" in rocks.conf.get(key)
+    stream = jobs.events_file_stream(rocks, src, max_files_per_trigger=1)
+    got = _run_to_memory(
+        rocks, jobs.conversion_sessions(stream, gap_secs=1800), "t_rocks"
+    )
+    got_set = {
+        (r.user_id, str(r.session_start), str(r.session_end),
+         r.n_events, r.ended_by)
+        for r in got.collect()
+    }
+    assert spark.conf.get(key, None) == before  # caller untouched
     expected = _conv_sessions_reference(ev.collect())
     assert got_set == expected
 
 
-def test_use_state_store_rejects_unknown_provider(spark):
-    from etl_data_pipeline_spark.streaming.jobs import use_state_store
-
+def test_state_store_session_rejects_unknown_provider(spark):
     with pytest.raises(ValueError, match="unknown state store"):
-        use_state_store(spark, "cassandra")
+        jobs.state_store_session(spark, "cassandra")
 
 
 def test_transform_with_state_parity_with_apply_in_pandas(spark, event_chunks):
@@ -1111,7 +1108,7 @@ def test_processing_time_soak_rocksdb_kill_restart(spark, sf_dir, tmp_path):
         shutil.move(part, os.path.join(src, f"chunk_{i}.parquet"))
 
     def start_query():
-        stream = jobs.events_file_stream(spark, src, max_files_per_trigger=1)
+        stream = jobs.events_file_stream(rocks, src, max_files_per_trigger=1)
         out = jobs.running_user_totals(stream)
 
         def _collect(df, bid):
@@ -1141,34 +1138,34 @@ def test_processing_time_soak_rocksdb_kill_restart(spark, sf_dir, tmp_path):
             .first()[0]
         )
 
-    with jobs.use_state_store(spark, "rocksdb"):
-        # phase 1: 4 chunk files arrive; kill after >=2 committed batches
-        for i in range(4):
-            deliver_chunk(i)
-        q1 = start_query()
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 2:
-                break
-            time.sleep(0.2)
-        else:
-            q1.stop()
-            raise AssertionError("soak phase 1: no progress within 120s")
-        q1.stop()  # kill mid-stream: some of the 4 files may be unprocessed
-        q1.awaitTermination(60)
+    rocks = jobs.state_store_session(spark, "rocksdb")
+    # phase 1: 4 chunk files arrive; kill after >=2 committed batches
+    for i in range(4):
+        deliver_chunk(i)
+    q1 = start_query()
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        p = q1.lastProgress
+        if p is not None and p["batchId"] >= 2:
+            break
+        time.sleep(0.2)
+    else:
+        q1.stop()
+        raise AssertionError("soak phase 1: no progress within 120s")
+    q1.stop()  # kill mid-stream: some of the 4 files may be unprocessed
+    q1.awaitTermination(60)
 
-        # phase 2: 4 more files arrive while down; restart from checkpoint
-        for i in range(4, 8):
-            deliver_chunk(i)
-        q2 = start_query()
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if events_seen() == total_events:
-                break
-            time.sleep(0.3)
-        q2.stop()
-        q2.awaitTermination(60)
+    # phase 2: 4 more files arrive while down; restart from checkpoint
+    for i in range(4, 8):
+        deliver_chunk(i)
+    q2 = start_query()
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        if events_seen() == total_events:
+            break
+        time.sleep(0.3)
+    q2.stop()
+    q2.awaitTermination(60)
 
     assert events_seen() == total_events, "state lost or double-counted events"
     # exactly-once equality with the batch twin, value-level
@@ -1358,51 +1355,51 @@ def test_incremental_dedup_soak_sf01_kill_restart(spark, tmp_path):
     os.makedirs(src)
     os.makedirs(tgt)
     seed_index(tgt)
-    with jobs.use_state_store(spark, "rocksdb"):
-        for i in range(3):
-            deliver(src, stage, i, chunks[i])
-        q1 = jobs.run_incremental_dedup(
-            spark, src, tgt, trigger={"processingTime": "200 milliseconds"}
-        )
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            if decided_count(tgt) >= 100:  # >=1 batch committed
-                break
-            time.sleep(0.3)
-        else:
-            q1.stop()
-            raise AssertionError("dedup soak phase 1: no progress in 180s")
-        q1.stop()  # kill mid-stream
-        q1.awaitTermination(60)
-        for i in range(3, 5):
-            deliver(src, stage, i, chunks[i])
-        q2 = jobs.run_incremental_dedup(
-            spark, src, tgt, trigger={"processingTime": "200 milliseconds"}
-        )
+    rocks = jobs.state_store_session(spark, "rocksdb")
+    for i in range(3):
+        deliver(src, stage, i, chunks[i])
+    q1 = jobs.run_incremental_dedup(
+        rocks, src, tgt, trigger={"processingTime": "200 milliseconds"}
+    )
+    deadline = time.time() + 180
+    while time.time() < deadline:
+        if decided_count(tgt) >= 100:  # >=1 batch committed
+            break
+        time.sleep(0.3)
+    else:
+        q1.stop()
+        raise AssertionError("dedup soak phase 1: no progress in 180s")
+    q1.stop()  # kill mid-stream
+    q1.awaitTermination(60)
+    for i in range(3, 5):
+        deliver(src, stage, i, chunks[i])
+    q2 = jobs.run_incremental_dedup(
+        rocks, src, tgt, trigger={"processingTime": "200 milliseconds"}
+    )
 
-        def fully_settled():
-            """All 500 decided AND every keep has landed in the index —
-            decisions are written BEFORE the index swap inside a batch,
-            so polling decisions alone can stop the query mid-merge."""
-            if decided_count(tgt) != 500:
-                return False
-            try:
-                dec = spark.read.parquet(os.path.join(tgt, "dedup_decisions"))
-                keeps = dec.filter(F.col("decision") == "keep").count()
-                idx_n = spark.read.parquet(
-                    os.path.join(tgt, "dedup_index")
-                ).count()
-            except Exception:
-                return False
-            return idx_n == 4500 + keeps
+    def fully_settled():
+        """All 500 decided AND every keep has landed in the index —
+        decisions are written BEFORE the index swap inside a batch,
+        so polling decisions alone can stop the query mid-merge."""
+        if decided_count(tgt) != 500:
+            return False
+        try:
+            dec = spark.read.parquet(os.path.join(tgt, "dedup_decisions"))
+            keeps = dec.filter(F.col("decision") == "keep").count()
+            idx_n = spark.read.parquet(
+                os.path.join(tgt, "dedup_index")
+            ).count()
+        except Exception:
+            return False
+        return idx_n == 4500 + keeps
 
-        deadline = time.time() + 180
-        while time.time() < deadline:
-            if fully_settled():
-                break
-            time.sleep(0.3)
-        q2.stop()
-        q2.awaitTermination(60)
+    deadline = time.time() + 180
+    while time.time() < deadline:
+        if fully_settled():
+            break
+        time.sleep(0.3)
+    q2.stop()
+    q2.awaitTermination(60)
     assert decided_count(tgt) == 500
 
     # --- straight-through reference run (availableNow, default store) ---

@@ -10,26 +10,13 @@ a query's reps land minutes apart and the median absorbs first-run
 codegen warmup and transient host load; the cache is cleared after
 every query so persisted intermediates never flatter the next rep.
 
-Round-5 automation: the "2x suspects" procedure the builder ran by
-hand in rounds 2-4 (BASELINE.md) is now part of the sweep. Every query
+The "2x suspects" procedure (BASELINE.md) is part of the sweep. Every query
 whose sweep median exceeds its recorded floor (tools/floors.json, the
 round-3 quiet table) by ``--margin`` is re-run STANDALONE at
 completion (after ``--settle`` seconds for load to drain) and both
 numbers are reported in a markdown suspects table — sweep-vs-floor
 deltas that vanish standalone are load interaction, not plan
 regressions; the ones that don't are flagged REGRESSION loudly.
-
-Round-11 automation (round-10 VERDICT item 6): the REGRESSION verdict
-is NORMALIZED by relative host speed, using the same pure-Python
-cpu_probe bench.py records — rounds 5, 8, 9 and 10 each paid manual
-adjudication labor for uniform host-level inflation that loadavg
-could not distinguish from a plan regression. Suspect SELECTION stays
-raw (a lenient filter could hide a real regression behind one slow
-probe; a false-positive suspect only costs a standalone re-run); the
-standalone verdict scales by min(probe/QUIET_MOPS, 1) with a probe
-taken fresh after the settle, so a host at half speed no longer
-flags every floor-level query as REGRESSION. --update-floors skips
-recording new floors when the host probes below 0.9× quiet.
 
 Usage: python tools/sweep_timing.py [sf_dir] [threshold_secs]
          [--passes N] [--table out.md] [--floors floors.json]
@@ -53,13 +40,6 @@ SKIP = {"dedup_levenshtein"}
 
 
 DEFAULT_FLOORS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "floors.json")
-
-# Quiet-host reference rate for the cpu_probe normalization: the
-# floors were recorded at ~17-19 Mops (BASELINE.md r10 quiet snapshot
-# probe [16.8, 18.6]); 18.0 is the midpoint. A probe BELOW this scales
-# measured walls DOWN proportionally before any floor comparison.
-QUIET_MOPS = 18.0
-
 
 def _run_standalone(spark, fn, sf_dir: str, reps: int) -> float:
     """Median of ``reps`` cache-cleared standalone runs (post-warmup:
@@ -149,11 +129,9 @@ def main() -> int:
     threshold = float(args[1]) if len(args) > 1 else 8.0
 
     import __spark_entry__ as em
-    from bench import cpu_probe
     from etl_data_pipeline_spark.functions.caching import release_tracked
     from etl_data_pipeline_spark.session import get_spark
 
-    probe_start = cpu_probe()  # before the JVM exists
     spark = get_spark("sweep")
     spark.sparkContext.setLogLevel("ERROR")
     names = [n for n in em.queries() if n not in SKIP]
@@ -215,65 +193,42 @@ def main() -> int:
         # host-relative references; after enough host drift the whole
         # sub-second tier reads 1.5-3x and every sweep (and every
         # judge) re-pays the same adjudication — a recorded rebase
-        # with the cpu probe attached resets the reference honestly.
+        # resets the reference honestly.
         # Use with --passes >= 2 so medians absorb cold codegen.
-        probe_now = cpu_probe()
         for n, t in med.items():
             floors[n] = round(t, 2)
-        floors["_meta"] = {
-            "rebased_with_passes": passes,
-            "cpu_probe_mops": [round(probe_start, 1), round(probe_now, 1)],
-            "sf_dir": sf_dir,
-        }
+        floors["_meta"] = {"rebased_with_passes": passes, "sf_dir": sf_dir}
         with open(floors_path, "w") as f:
             json.dump(dict(sorted(floors.items(), key=lambda kv: str(kv[0]))), f, indent=1)
-        print(
-            f"rebased {len(med)} floors -> {floors_path} "
-            f"(probe [{probe_start:.1f}, {probe_now:.1f}])"
-        )
+        print(f"rebased {len(med)} floors -> {floors_path}")
         suspects, new_queries, update_floors = [], [], False
     if not rebase_floors:
-        # The SELECTION stays raw (un-normalized): a lenient filter
-        # could hide a real regression behind one transiently slow
-        # probe, and a false-positive suspect only costs a standalone
-        # re-run. The normalization is applied at the VERDICT, with a
-        # probe taken fresh after the settle — the measurement it
-        # actually brackets (VERDICT r10 #6).
-        probe_now = cpu_probe()
-        print(
-            f"-- cpu probe: start {probe_start:.1f} / now {probe_now:.1f} "
-            f"Mops (quiet ref {QUIET_MOPS})"
-        )
         suspects = sorted(
             (n for n in med if n in floors and med[n] > floors[n] + margin),
             key=lambda n: floors[n] - med[n],
         )
         new_queries = sorted(n for n in med if n not in floors)
-    factor = 1.0
     if suspects:
         if settle > 0:
             print(f"-- settling {settle:.0f}s before standalone suspect re-runs")
             time.sleep(settle)
-        alone_factor = min(cpu_probe() / QUIET_MOPS, 1.0)  # post-settle speed
         print(
             f"\n## suspects: {len(suspects)} over floor+{margin}s "
-            f"(standalone x{suspect_reps}, loadavg {os.getloadavg()[0]:.1f}, "
-            f"verdict probe-normalized by {alone_factor:.2f})\n"
+            f"(standalone x{suspect_reps}, loadavg {os.getloadavg()[0]:.1f})\n"
         )
-        print("| query | floor | sweep | standalone | alone_norm | verdict |")
-        print("|---|---|---|---|---|---|")
+        print("| query | floor | sweep | standalone | verdict |")
+        print("|---|---|---|---|---|")
         regressions = []
         for n in suspects:
             alone = _run_standalone(spark, qs[n], sf_dir, suspect_reps)
-            alone_norm = alone * alone_factor
             # three tiers: "at floor" within margin; "elevated" up to
             # the historical 2x gate (the uniform host-class band every
             # round since r5 has adjudicated — same VM, slower day);
             # REGRESSION only past 2x floor, which is what a genuine
             # plan break looks like (r11's real catch was 7.5x).
-            if alone_norm <= floors[n] + margin:
+            if alone <= floors[n] + margin:
                 verdict = "at floor"
-            elif alone_norm <= 2 * floors[n] + margin:
+            elif alone <= 2 * floors[n] + margin:
                 verdict = "elevated"
             else:
                 verdict = "REGRESSION"
@@ -281,7 +236,7 @@ def main() -> int:
                 regressions.append(n)
             print(
                 f"| {n} | {floors[n]:.2f} | {med[n]:.2f} | {alone:.2f} |"
-                f" {alone_norm:.2f} | {verdict} |"
+                f" {verdict} |"
             )
             if update_floors and alone < floors[n]:
                 floors[n] = round(alone, 2)
@@ -294,13 +249,8 @@ def main() -> int:
         print(
             "== no suspects: every query at-or-below floor+margin =="
         )
-    slow_host = min(probe_start, probe_now) < 0.9 * QUIET_MOPS
     for n in new_queries:
-        hot = " [host below quiet ref — floor may be inflated]" if slow_host else ""
-        print(f"NEW FLOOR {n}: {med[n]:.2f}s (no recorded floor){hot}")
-        if update_floors and slow_host:
-            print(f"   (skipping floor record for {n}: host below quiet ref)")
-            continue
+        print(f"NEW FLOOR {n}: {med[n]:.2f}s (no recorded floor)")
         if update_floors:
             floors[n] = round(med[n], 2)
     if update_floors and floors:
