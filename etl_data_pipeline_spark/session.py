@@ -107,9 +107,6 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         # Arrow for pandas UDF / toPandas exchanges.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python DataSource filter pushdown (manifest_table reader
-        # prunes parquet row groups executor-side); default-off in 4.1
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Keep broadcast autodetection on; dims like region/nation/part
         # broadcast automatically, we also force it where we know better.

@@ -71,7 +71,8 @@ MANIFEST = "MANIFEST.json"
 
 
 class FeedBrokenError(ValueError):
-    """read_changes cannot produce the requested delta because an
+    """The change feed (read_changes, the manifest_table stream)
+    cannot produce the requested delta because an
     overwrite/merge dropped directories inside the range — consumers
     must re-sync from a full snapshot. A TYPED class (not message
     sniffing): the message embeds the table path, and a path that
@@ -136,22 +137,7 @@ def _check_schema(
         # legacy manifest without a recorded schema: derive from data
         spark = df.sparkSession
         prev = _schema_of(spark.read.parquet(os.path.join(table_dir, cur["dirs"][-1])))
-        cur = {**cur, "schema": prev}
-    return _check_schema_dict(cur, _schema_of(df), merge_schema, table_dir)
-
-
-def _check_schema_dict(
-    cur: dict, new: dict[str, str], merge_schema: bool, table_dir: str
-) -> dict[str, str]:
-    """Core of :func:`_check_schema` for callers that hold a schema
-    dict rather than a DataFrame (the staged-files writer)."""
-    prev = cur.get("schema")
-    if prev is None:
-        raise ValueError(
-            f"append to {table_dir!r}: legacy manifest records no schema; "
-            f"run one DataFrame-based commit() first (it backfills the "
-            f"schema) or overwrite"
-        )
+    new = _schema_of(df)
     conflicts = {
         c: (prev[c], new[c]) for c in new if c in prev and prev[c] != new[c]
     }
@@ -412,54 +398,6 @@ def _publish(
     finally:
         os.close(dfd)
     return manifest
-
-
-def commit_staged_files(
-    table_dir: str,
-    staged_files: list[str],
-    schema: dict[str, str],
-    mode: str = "append",
-    merge_schema: bool = False,
-    txn: tuple[str, int] | None = None,
-) -> dict:
-    """Commit ALREADY-WRITTEN parquet files as the table's next
-    version — the zero-copy publish path for writers that produce
-    files on executors (the ``manifest_table`` Spark DataSource
-    writer): each staged file is MOVED (os.replace, same filesystem)
-    into the new immutable delta directory, so the commit's data cost
-    is O(#files) renames regardless of row volume. Same lease, same
-    fences (txn), same schema contract, same single-rename publish as
-    :func:`commit`.
-
-    ``schema`` is the writer's column -> Spark simpleString type map
-    (the DataFrame schema the files were written with).
-    """
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be overwrite/append, not {mode!r}")
-    os.makedirs(table_dir, exist_ok=True)
-    with writer_lease(_manifest_path(table_dir)) as fence:
-        cur = read_manifest(table_dir)
-        marks = _txn_fence(cur, txn)
-        if marks is None:
-            return cur  # replayed batch: already committed, skip
-        if cur is not None and cur.get("partition_by"):
-            raise ValueError(
-                f"{table_dir!r} is hive-partitioned by "
-                f"{cur['partition_by']}; the staged-files writer emits "
-                f"flat files — use the DataFrame commit() path for "
-                f"partitioned tables"
-            )
-        out_schema, kept = dict(schema), []
-        if mode == "append" and cur is not None:
-            out_schema = _check_schema_dict(cur, out_schema, merge_schema, table_dir)
-            kept = list(cur["dirs"])
-
-        def move(data_dir: str) -> None:
-            os.makedirs(data_dir)
-            for i, f in enumerate(staged_files):
-                os.replace(f, os.path.join(data_dir, f"part-{i:05d}.parquet"))
-
-        return _publish(table_dir, cur, fence, move, kept, 0, out_schema, marks)
 
 
 def _backfill_legacy_snapshots(table_dir: str, cur: dict) -> None:
@@ -729,10 +667,11 @@ def read_changes(
     Compaction commits are layout-only (``data_change: false``) and
     are skipped — their rows were already emitted by the append
     commits that produced them. A real OVERWRITE inside the range
-    breaks append-only semantics and raises (the consumer must
-    re-sync from a snapshot, exactly Delta CDF's contract); a
-    snapshot already vacuumed raises the standard 'vacuumed' error —
-    size retention to outlast your slowest consumer.
+    breaks append-only semantics and raises :class:`FeedBrokenError`
+    (the consumer must re-sync from a snapshot, exactly Delta CDF's
+    contract); a snapshot already vacuumed raises
+    :class:`VacuumedError` — size retention to outlast your slowest
+    consumer. Both come from :func:`plan_changes`.
 
     ``until_version`` pins the feed's UPPER bound (default: the
     current version). An incremental consumer that records its
@@ -751,6 +690,53 @@ def read_changes(
     """
     from pyspark.sql import functions as F
 
+    by_version, schema = plan_changes(table_dir, since_version, until_version)
+    if not by_version:
+        # empty feed with the bound version's schema, so downstream
+        # unions and writes see stable columns
+        if schema:
+            out = spark.createDataFrame([], _ddl(schema))
+        else:
+            out = _read_dirs(
+                spark, table_dir, read_manifest(table_dir)["dirs"], None
+            ).limit(0)
+        if version_column:
+            out = out.withColumn(version_column, F.lit(None).cast("long"))
+        return out
+    if version_column is None:
+        added = [d for _v, dirs in by_version for d in dirs]
+        return _read_dirs(spark, table_dir, added, schema)
+    # one frame per COMMIT (not per dir): the version literal is the
+    # same for every dir a commit added, and the commit count in a feed
+    # range is small by construction (a consumer reading a 10k-version
+    # backlog should snapshot-resync, not feed)
+    frames = [
+        _read_dirs(spark, table_dir, dirs, schema).withColumn(
+            version_column, F.lit(v).cast("long")
+        )
+        for v, dirs in by_version
+    ]
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+
+
+def plan_changes(
+    table_dir: str, since_version: int, until_version: int | None = None
+) -> tuple[list[tuple[int, list[str]]], dict[str, str] | None]:
+    """The change feed's plan over versions (since, until]: the delta
+    directories each data-changing version added, as ``[(version,
+    dirs)]`` in commit order, and the table schema as of ``until``
+    (default: the current version). Manifest bookkeeping only — no
+    data is read. The one planner behind both :func:`read_changes` and
+    the ``manifest_table`` stream (streaming/manifest_source.py).
+
+    Layout-only versions (``data_change: false``) add nothing and only
+    shift the baseline. Raises ``ValueError`` for bounds outside
+    ``0 <= since <= until <= current``, :class:`FeedBrokenError` when a
+    data-changing version inside the range drops a directory (an
+    overwrite or merge), and :class:`VacuumedError` when a snapshot
+    the plan needs was reclaimed."""
     cur = read_manifest(table_dir)
     if cur is None:
         raise FileNotFoundError(f"no committed version in {table_dir!r}")
@@ -769,7 +755,6 @@ def read_changes(
         prev: set[str] = set()
     else:
         prev = set(_load_snapshot(table_dir, since_version, cur)["dirs"])
-    added: list[str] = []
     by_version: list[tuple[int, list[str]]] = []
     for v in range(since_version + 1, head + 1):
         m = _load_snapshot(table_dir, v, cur)
@@ -781,10 +766,9 @@ def read_changes(
                     f"change feed of {table_dir!r} broken by an "
                     f"overwrite/merge at version {v} (directories "
                     f"{sorted(removed)} dropped); re-sync from a full "
-                    f"snapshot"
+                    f"snapshot (a stream restarts with startingVersion={v})"
                 )
-            new = [d for d in m["dirs"] if d not in prev and d not in added]
-            added.extend(new)
+            new = [d for d in m["dirs"] if d not in prev]
             if new:
                 by_version.append((v, new))
         # layout-only versions shift the baseline without logical change
@@ -796,32 +780,7 @@ def read_changes(
         if head == 0
         else _load_snapshot(table_dir, head, cur).get("schema")
     )
-    if not added:
-        # empty feed with the bound version's schema, so downstream
-        # unions and writes see stable columns
-        if schema:
-            ddl = _ddl(schema)
-            out = spark.createDataFrame([], ddl)
-        else:
-            out = _read_dirs(spark, table_dir, cur["dirs"], None).limit(0)
-        if version_column:
-            out = out.withColumn(version_column, F.lit(None).cast("long"))
-        return out
-    if version_column is None:
-        return _read_dirs(spark, table_dir, added, schema)
-    # one frame per COMMIT (not per dir): the version literal is the
-    # same for every dir a commit added, and the commit count in a feed
-    # range is small by construction (a consumer reading a 10k-version
-    # backlog should snapshot-resync, not feed)
-    frames = [
-        _read_dirs(spark, table_dir, dirs, schema).withColumn(
-            version_column, F.lit(v).cast("long")
-        )
-        for v, dirs in by_version
-    ]
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    )
+    return by_version, schema
 
 
 def history(table_dir: str) -> list[dict]:
@@ -1150,10 +1109,12 @@ def vacuum(
     snapshots numbered ABOVE the current version (under the lease no
     commit is in flight, so anything above current is provably
     garbage), stray ``.manifest.tmp`` files, and ``_staging`` spool
-    files older than ``staging_ttl_secs`` (a crashed DataSource writer
-    job leaks its staged parquet; an AGE threshold — not existence —
-    guards live writer tasks, which stage without the lease). Returns
-    the dropped COMMITTED version numbers."""
+    files older than ``staging_ttl_secs`` (earlier releases shipped an
+    executor-side DataSource writer that spooled parquet into
+    ``_staging`` before its commit; a crashed job leaked them on
+    existing tables, and an AGE threshold — not existence — kept live
+    spools, which were written without the lease, safe). Returns the
+    dropped COMMITTED version numbers."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1: the live version is never vacuumed")
     mpath = _manifest_path(table_dir)

@@ -552,9 +552,8 @@ def _orc_source(spark: SparkSession, table: str, options: dict) -> DataFrame:
 
 def _manifest_source(spark: SparkSession, table: str, options: dict) -> DataFrame:
     """Read a manifest-pointer table (sinks/manifest.py) through the
-    same registry that writes it, closing the write-only asymmetry the
-    round-4 VERDICT flagged: a pipeline that commits a manifest table
-    can now use it as the SOURCE of a downstream incremental run.
+    same registry that writes it: a pipeline that commits a manifest
+    table can use it as the SOURCE of a downstream incremental run.
 
     ``version: N`` in options pins a historical version (time travel);
     default is the current manifest. ``changes_since: N`` reads the

@@ -5,7 +5,7 @@ The spark-avro module is an external jar this environment cannot
 fetch, but the FORMAT is public and simple (Avro 1.12 spec: binary
 encoding + object container files), so the engine implements it
 directly on Spark 4's Python DataSource API, the same mechanism as
-the ``manifest_table`` format (streaming/manifest_source.py):
+the ``manifest_table`` stream source (streaming/manifest_source.py):
 
 - ``spark.read.format("avro_py").load(path)`` — schema inferred from
   the file header; reads are SPLIT BY BYTE RANGE with Hadoop-style
@@ -1730,8 +1730,8 @@ class AvroArrowWriter(DataSourceArrowWriter):
     files are unlinked in overwrite mode, and the directory entry is
     fsynced last. A crash mid-commit leaves a superset (old + some new
     files — duplicates a reader can detect) rather than an empty or
-    truncated directory. For an atomic swap, write through the
-    manifest_table format instead."""
+    truncated directory. For an atomic swap, commit to a manifest
+    table instead (sinks.manifest.commit: one pointer rename)."""
 
     def __init__(self, options: dict, schema, overwrite: bool):
         self.path = _opt(options, "path")

@@ -1,22 +1,23 @@
-"""Spark DataSource over manifest tables: batch snapshot reads AND a
-streaming CHANGE-FEED source whose offsets ARE manifest versions.
-
-This is the Spark-4-native face of sinks/manifest.py (the Python
-DataSource API, SPARK-44076): register once, then
+"""Spark streaming CHANGE-FEED source over manifest tables, whose
+offsets ARE manifest versions (the Python DataSource API, SPARK-44076):
 
     spark.dataSource.register(ManifestTableDataSource)
-    # batch: the current snapshot (or version=N time travel)
-    spark.read.format("manifest_table").option("path", t).load()
-    # streaming: every micro-batch is the rows of newly committed
-    # versions — offsets checkpoint as {"version": N}
+    # every micro-batch is the rows of newly committed versions —
+    # offsets checkpoint as {"version": N}
     spark.readStream.format("manifest_table").option("path", t).load()
+
+Batch reads and writes of a manifest table go through
+sinks/manifest.py (``read_table``/``commit``, or the ``manifest``
+source and sink of the registries); an exactly-once stream INTO a
+manifest table is ``foreachBatch`` + ``commit(..., txn=(app_id,
+batch_id))``.
 
 Why offsets-as-versions is the right streaming contract here:
 
 - the planner (driver) decides a batch as (start_version, end_version]
-  and expands it to the DELTA DIRECTORIES those commits added — the
-  same O(delta) bookkeeping as manifest.read_changes, never a table
-  scan;
+  and expands it to the DELTA DIRECTORIES those commits added with
+  manifest.plan_changes — the same O(delta) bookkeeping, bounds checks
+  and typed errors as manifest.read_changes, never a table scan;
 - partitions are individual parquet FILES of those directories, so a
   large commit fans out across executors (each executor reads its
   file with pyarrow and yields Arrow record batches — no driver
@@ -27,10 +28,10 @@ Why offsets-as-versions is the right streaming contract here:
   bookkeeping);
 - layout-only versions (compaction, ``data_change: false``) plan ZERO
   partitions — consumers never re-see compacted rows;
-- an OVERWRITE inside the range fails the batch loudly (append-only
-  feeds cannot express removals — Delta CDF's contract), and vacuum
-  retention must outlast the consumer's lag, exactly as for
-  read_changes.
+- an OVERWRITE inside the range fails the batch loudly with
+  ``FeedBrokenError`` (append-only feeds cannot express removals —
+  Delta CDF's contract), and vacuum retention must outlast the
+  consumer's lag, exactly as for read_changes.
 
 Schema: resolved from the manifest (the table's recorded column ->
 type map) at plan time; evolved columns are null-filled per file on
@@ -45,17 +46,12 @@ from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
 from pyspark.sql.types import StructType
 
 FORMAT_NAME = "manifest_table"
-
-
-def _manifest_ddl(schema: dict[str, str]) -> str:
-    return ", ".join(f"`{c}` {t}" for c, t in schema.items())
 
 
 def _opt(options: dict, name: str, default=None):
@@ -102,10 +98,9 @@ class _FilePartition(InputPartition):
     driver — executors have no SparkContext to parse DDL with — plus
     the file's hive-partition values (raw strings from the path)."""
 
-    def __init__(self, file_path: str, arrow_schema, filters=(), part_values=None):
+    def __init__(self, file_path: str, arrow_schema, part_values=None):
         self.file_path = file_path
         self.arrow_schema = arrow_schema
-        self.filters = tuple(filters)
         self.part_values = dict(part_values or {})
 
 
@@ -191,334 +186,6 @@ def _read_file_as_arrow(file_path: str, want, part_values=None) -> Iterator:
         yield pa.RecordBatch.from_arrays(arrays, schema=want)
 
 
-def _filters_to_arrow_expression(filters, file_cols):
-    """Pushed Spark filters -> (pyarrow dataset expression | None,
-    provably_empty). Executor-side, per file: a filter on a column the
-    file predates (schema evolution) reads as all-null there — IsNull
-    passes every row (drop the clause), anything else passes none
-    (the whole file is skippable)."""
-    import pyarrow.dataset as ds
-
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        IsNotNull,
-        IsNull,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    expr = None
-    for f in filters:
-        col = f.attribute[0]
-        if col not in file_cols:
-            if isinstance(f, IsNull):
-                continue  # all-null column: trivially true
-            return None, True  # no row of this file can match
-        field = ds.field(col)
-        if isinstance(f, EqualTo):
-            e = field == f.value
-        elif isinstance(f, GreaterThan):
-            e = field > f.value
-        elif isinstance(f, GreaterThanOrEqual):
-            e = field >= f.value
-        elif isinstance(f, LessThan):
-            e = field < f.value
-        elif isinstance(f, LessThanOrEqual):
-            e = field <= f.value
-        elif isinstance(f, IsNull):
-            e = field.is_null()
-        elif isinstance(f, IsNotNull):
-            e = ~field.is_null()
-        elif isinstance(f, In):
-            e = field.isin(list(f.value))
-        else:  # pragma: no cover — pushFilters only accepts the above
-            continue
-        expr = e if expr is None else expr & e
-    return expr, False
-
-
-def _read_file_filtered(file_path: str, want, filters, part_values=None) -> Iterator:
-    """Executor-side filtered read: pyarrow dataset scanner applies the
-    pushed expression with parquet row-group statistics pruning, then
-    batches are conformed to the table schema. Filters on partition
-    columns were already applied at PLAN time (directory pruning) and
-    are excluded from the scan expression here. Falls back to the
-    plain reader when nothing was pushed."""
-    part_values = part_values or {}
-    filters = [f for f in filters if f.attribute[0] not in part_values]
-    if not filters:
-        yield from _read_file_as_arrow(file_path, want, part_values)
-        return
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    have = {f.name for f in pq.ParquetFile(file_path).schema_arrow}
-    expr, empty = _filters_to_arrow_expression(filters, have)
-    if empty:
-        return
-    read_cols = [f.name for f in want if f.name in have]
-    scanner = ds.dataset(file_path, format="parquet").scanner(
-        columns=read_cols, filter=expr
-    )
-    for batch in scanner.to_batches():
-        arrays = []
-        for field in want:
-            if field.name in have:
-                arrays.append(
-                    batch.column(read_cols.index(field.name)).cast(field.type)
-                )
-            elif field.name in part_values:
-                arrays.append(_const_array(part_values[field.name], field, batch.num_rows))
-            else:
-                arrays.append(pa.nulls(batch.num_rows, type=field.type))
-        yield pa.RecordBatch.from_arrays(arrays, schema=want)
-
-
-def _typed_part_value(raw, simple: str):
-    """Raw hive path string -> comparable Python value per the
-    manifest type (None = hive null; unparseable -> None, meaning
-    'unknown, do not prune')."""
-    import datetime
-
-    if raw is None:
-        return None
-    try:
-        if simple in ("tinyint", "smallint", "int", "bigint"):
-            return int(raw)
-        if simple in ("float", "double") or simple.startswith("decimal"):
-            return float(raw)
-        if simple == "boolean":
-            return raw.lower() == "true"
-        if simple == "date":
-            return datetime.date.fromisoformat(raw)
-        return raw  # string and anything else: compare as path string
-    except (ValueError, TypeError):
-        return None
-
-
-def _partition_prunes_file(filters, part_values, schema) -> bool:
-    """Driver-side directory pruning: True when a pushed filter on a
-    partition column PROVABLY rejects every row of the file. Unknown/
-    unparseable values never prune (correctness over pruning; Spark
-    re-evaluates all filters anyway)."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        IsNotNull,
-        IsNull,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    for f in filters:
-        col = f.attribute[0]
-        if col not in part_values:
-            continue
-        raw = part_values[col]
-        if raw is None:  # hive null partition
-            if isinstance(f, (EqualTo, GreaterThan, GreaterThanOrEqual,
-                              LessThan, LessThanOrEqual, In, IsNotNull)):
-                return True  # null matches none of these
-            continue  # IsNull: passes
-        if isinstance(f, IsNull):
-            return True  # non-null partition: no row is null
-        v = _typed_part_value(raw, (schema or {}).get(col, "string"))
-        if v is None:
-            continue  # unparseable: keep the file
-        try:
-            if isinstance(f, EqualTo) and not v == f.value:
-                return True
-            if isinstance(f, GreaterThan) and not v > f.value:
-                return True
-            if isinstance(f, GreaterThanOrEqual) and not v >= f.value:
-                return True
-            if isinstance(f, LessThan) and not v < f.value:
-                return True
-            if isinstance(f, LessThanOrEqual) and not v <= f.value:
-                return True
-            if isinstance(f, In) and v not in list(f.value):
-                return True
-        except TypeError:
-            continue  # incomparable literal: keep the file
-    return False
-
-
-def _filters_to_ranges(filters) -> dict[str, tuple]:
-    """Fold pushed comparison filters into per-column (lo, hi) ranges
-    for DIRECTORY-level stats pruning. Only shapes whose rejection is
-    provable from a min/max range participate; everything else is
-    simply absent (no pruning on that column)."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    ranges: dict[str, tuple] = {}
-
-    def tighten(col, lo, hi):
-        cur = ranges.get(col, (None, None))
-        nlo = lo if cur[0] is None else (cur[0] if lo is None else max(cur[0], lo))
-        nhi = hi if cur[1] is None else (cur[1] if hi is None else min(cur[1], hi))
-        ranges[col] = (nlo, nhi)
-
-    for f in filters:
-        attr = getattr(f, "attribute", ())
-        if len(attr) != 1:
-            continue
-        col = attr[0]
-        try:
-            if isinstance(f, EqualTo):
-                tighten(col, f.value, f.value)
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                # footer ranges are CLOSED: pruning with the inclusive
-                # bound is safe for the strict operator too (a dir
-                # whose max == v cannot satisfy col > v only when all
-                # values equal v — not provable, so we keep it)
-                tighten(col, f.value, None)
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                tighten(col, None, f.value)
-            elif isinstance(f, In) and f.value:
-                vals = list(f.value)
-                tighten(col, min(vals), max(vals))
-        except TypeError:
-            continue
-    return ranges
-
-
-def _prune_dirs_by_stats(table_dir: str, dirs: list[str], filters) -> list[str]:
-    """Dir-level pruning via the cached parquet footer min/max sidecar
-    (manifest.prune_dirs — the same stats merge pruning maintains):
-    fewer dirs means fewer files listed, fewer partitions, fewer tasks.
-    Row-group pruning still applies inside kept files, and Spark
-    re-evaluates every filter — this only removes provably-dead IO."""
-    if not filters:
-        return dirs
-    from etl_data_pipeline_spark.sinks.manifest import prune_dirs
-
-    ranges = _filters_to_ranges(filters)
-    if not ranges:
-        return dirs
-    return prune_dirs(table_dir, dirs, ranges)
-
-
-_PUSHABLE = None  # lazily-built tuple of supported Filter classes
-
-
-def _pushable_classes():
-    global _PUSHABLE
-    if _PUSHABLE is None:
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            IsNotNull,
-            IsNull,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        _PUSHABLE = (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            IsNotNull,
-            IsNull,
-            LessThan,
-            LessThanOrEqual,
-        )
-    return _PUSHABLE
-
-
-class ManifestBatchReader(DataSourceReader):
-    """Snapshot read (current version, or ``version`` option).
-
-    Supports FILTER PUSHDOWN (pushFilters, Spark 4.1): simple
-    comparisons are translated to pyarrow dataset expressions on the
-    executor, which prune parquet ROW GROUPS by statistics before
-    decoding — the DataSource equivalent of the native reader's
-    PushedFilters. Every filter is also returned to Spark for
-    re-evaluation (pruning is an optimization, never the correctness
-    boundary)."""
-
-    def __init__(self, options: dict):
-        self.table_dir = _table_path(options)
-        from etl_data_pipeline_spark.sinks.manifest import (
-            _load_snapshot,
-            read_manifest,
-        )
-
-        cur = read_manifest(self.table_dir)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {self.table_dir!r}")
-        version = _opt(options, "version")
-        m = (
-            cur
-            if version is None
-            else _load_snapshot(self.table_dir, int(version), cur)
-        )
-        self._dirs = m["dirs"]
-        self._schema = m.get("schema") or cur.get("schema") or {}
-
-    def pushFilters(self, filters):
-        def _safe_value(v) -> bool:
-            # restrict pushed literals to types whose Arrow comparison
-            # semantics are unambiguous; timestamps (tz-aware column vs
-            # naive literal) stay Spark-side — they are still returned
-            # below, so nothing is lost but the pruning
-            import datetime
-
-            if v is None or isinstance(v, (bool, int, float, str, datetime.date)):
-                return not isinstance(v, datetime.datetime)
-            if isinstance(v, (list, tuple)):
-                return all(_safe_value(x) for x in v)
-            return False
-
-        self._filters = []
-        for f in filters:
-            # single-segment column paths on supported comparison shapes
-            if (
-                isinstance(f, _pushable_classes())
-                and len(getattr(f, "attribute", ())) == 1
-                and _safe_value(getattr(f, "value", None))
-            ):
-                self._filters.append(f)
-            yield f  # Spark re-evaluates everything — pushdown only prunes
-
-    def partitions(self) -> Sequence[InputPartition]:
-        want = _arrow_schema_for(self._schema)
-        filters = tuple(getattr(self, "_filters", ()))
-        dirs = _prune_dirs_by_stats(self.table_dir, self._dirs, filters)
-        return [
-            _FilePartition(f, want, filters, pv)
-            for f, pv in _list_parquet_files(self.table_dir, dirs)
-            if not _partition_prunes_file(filters, pv, self._schema)
-        ]
-
-    def read(self, partition: _FilePartition) -> Iterator:
-        if partition is None:
-            # every file was pruned: Spark still schedules one task
-            # with a None partition for an empty partitions() list
-            return iter(())
-        return _read_file_filtered(
-            partition.file_path,
-            partition.arrow_schema,
-            partition.filters,
-            partition.part_values,
-        )
-
-
 class ManifestFeedStreamReader(DataSourceStreamReader):
     """Change-feed stream: offset = manifest version."""
 
@@ -540,43 +207,17 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
     # -- batch planning (driver) --------------------------------------
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        from etl_data_pipeline_spark.sinks.manifest import (
-            _load_snapshot,
-            read_manifest,
-        )
+        from etl_data_pipeline_spark.sinks.manifest import plan_changes
 
         lo, hi = int(start["version"]), int(end["version"])
         if hi <= lo:
             return []
-        cur = read_manifest(self.table_dir)
-        if cur is None:
-            raise FileNotFoundError(f"no committed version in {self.table_dir!r}")
-        prev: set[str] = (
-            set() if lo == 0 else set(_load_snapshot(self.table_dir, lo, cur)["dirs"])
-        )
-        added: list[str] = []
-        for v in range(lo + 1, hi + 1):
-            m = _load_snapshot(self.table_dir, v, cur)
-            dirs = set(m["dirs"])
-            if m.get("data_change", True):
-                removed = prev - dirs
-                if removed:
-                    raise ValueError(
-                        f"{FORMAT_NAME} stream over {self.table_dir!r} broken "
-                        f"by an overwrite at version {v}; restart the query "
-                        f"with startingVersion={v} (snapshot resync)"
-                    )
-                added.extend(d for d in m["dirs"] if d not in prev and d not in added)
-            prev = dirs
-        schema = (
-            cur.get("schema")
-            if hi == 0 or hi == cur["version"]
-            else _load_snapshot(self.table_dir, hi, cur).get("schema")
-        )
+        by_version, schema = plan_changes(self.table_dir, lo, hi)
         want = _arrow_schema_for(schema or {})
         return [
-            _FilePartition(f, want, part_values=pv)
-            for f, pv in _list_parquet_files(self.table_dir, added)
+            _FilePartition(f, want, pv)
+            for _v, dirs in by_version
+            for f, pv in _list_parquet_files(self.table_dir, dirs)
         ]
 
     # -- executor-side read -------------------------------------------
@@ -593,14 +234,14 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
 
 
 class ManifestTableDataSource(DataSource):
-    """``manifest_table`` format: batch snapshot + streaming change feed."""
+    """``manifest_table`` format: the streaming change feed only."""
 
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
 
     def schema(self) -> StructType | str:
-        from etl_data_pipeline_spark.sinks.manifest import read_manifest
+        from etl_data_pipeline_spark.sinks.manifest import _ddl, read_manifest
 
         cur = read_manifest(_table_path(self.options))
         if cur is None or not cur.get("schema"):
@@ -608,19 +249,10 @@ class ManifestTableDataSource(DataSource):
                 f"{FORMAT_NAME}: cannot infer schema — table has no committed "
                 f"manifest schema (pass .schema(...) explicitly)"
             )
-        return _manifest_ddl(cur["schema"])
-
-    def reader(self, schema) -> ManifestBatchReader:
-        return ManifestBatchReader(dict(self.options))
+        return _ddl(cur["schema"])
 
     def streamReader(self, schema) -> ManifestFeedStreamReader:
         return ManifestFeedStreamReader(dict(self.options))
-
-    def writer(self, schema, overwrite: bool) -> "ManifestArrowWriter":
-        return ManifestArrowWriter(dict(self.options), schema, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool) -> "ManifestStreamArrowWriter":
-        return ManifestStreamArrowWriter(dict(self.options), schema)
 
 
 def register(spark) -> None:
@@ -635,139 +267,3 @@ def register(spark) -> None:
     jss = getattr(spark, "_jsparkSession", None)
     if jss is not None:  # classic py4j session (not Spark Connect)
         spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(jss)
-
-
-# -- write path -------------------------------------------------------
-
-from dataclasses import dataclass  # noqa: E402
-
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSourceArrowWriter,
-    DataSourceStreamArrowWriter,
-    WriterCommitMessage,
-)
-
-
-@dataclass
-class _StagedFile(WriterCommitMessage):
-    path: str
-    rows: int
-
-
-def _write_staged_file(table_dir: str, iterator) -> "_StagedFile":
-    """Executor-side: spool this task's Arrow batches into ONE staged
-    parquet file under table/_staging (same filesystem as the table,
-    so the driver-side commit is a pure rename). Empty tasks stage
-    nothing."""
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    staging = os.path.join(table_dir, "_staging")
-    os.makedirs(staging, exist_ok=True)
-    path = os.path.join(staging, f"{uuid.uuid4().hex}.parquet")
-    writer = None
-    rows = 0
-    try:
-        for batch in iterator:
-            if writer is None:
-                writer = pq.ParquetWriter(path, batch.schema)
-            writer.write_batch(batch)
-            rows += batch.num_rows
-    finally:
-        if writer is not None:
-            writer.close()
-    if writer is None:
-        return _StagedFile(path="", rows=0)
-    return _StagedFile(path=path, rows=rows)
-
-
-def _cleanup_staged(messages) -> list[str]:
-    files = [m.path for m in (messages or []) if m and getattr(m, "path", "")]
-    for f in files:
-        try:
-            os.unlink(f)
-        except FileNotFoundError:
-            pass
-    return files
-
-
-class ManifestArrowWriter(DataSourceArrowWriter):
-    """Batch write: df.write.format('manifest_table').mode(...).save().
-    Executors stage one parquet file per task; the driver publishes
-    them as ONE manifest commit (commit_staged_files — rename-only, so
-    the publish is atomic and O(#files) regardless of volume).
-    SaveMode append -> manifest append (schema-checked; mergeSchema
-    option opts into evolution); overwrite -> new snapshot version."""
-
-    def __init__(self, options: dict, schema, overwrite: bool):
-        self.table_dir = _table_path(options)
-        self.schema_dict = {f.name: f.dataType.simpleString() for f in schema.fields}
-        self.mode = "overwrite" if overwrite else "append"
-        self.merge_schema = str(_opt(options, "mergeSchema", "false")).lower() == "true"
-
-    def write(self, iterator):
-        return _write_staged_file(self.table_dir, iterator)
-
-    def commit(self, messages) -> None:
-        from etl_data_pipeline_spark.sinks.manifest import commit_staged_files
-
-        files = [m.path for m in messages if m and m.path]
-        try:
-            commit_staged_files(
-                self.table_dir,
-                files,
-                self.schema_dict,
-                mode=self.mode,
-                merge_schema=self.merge_schema,
-            )
-        except Exception:
-            _cleanup_staged(messages)  # failed publish: drop the staging
-            raise
-
-    def abort(self, messages) -> None:
-        _cleanup_staged(messages)
-
-
-class ManifestStreamArrowWriter(DataSourceStreamArrowWriter):
-    """Streaming write: df.writeStream.format('manifest_table').
-    Each micro-batch publishes as one manifest commit carrying
-    txn=(appId, batchId) — the same exactly-once fence as
-    run_stream_to_manifest, but through the standard sink API: a
-    replayed batch id is detected inside the lease and the staged
-    files are simply discarded."""
-
-    def __init__(self, options: dict, schema):
-        self.table_dir = _table_path(options)
-        self.schema_dict = {f.name: f.dataType.simpleString() for f in schema.fields}
-        self.app_id = str(_opt(options, "appId", "manifest_stream"))
-        self.merge_schema = str(_opt(options, "mergeSchema", "false")).lower() == "true"
-
-    def write(self, iterator):
-        return _write_staged_file(self.table_dir, iterator)
-
-    def commit(self, messages, batchId: int) -> None:
-        from etl_data_pipeline_spark.sinks.manifest import (
-            commit_staged_files,
-            read_manifest,
-        )
-
-        files = [m.path for m in messages if m and m.path]
-        try:
-            before = read_manifest(self.table_dir)
-            m = commit_staged_files(
-                self.table_dir,
-                files,
-                self.schema_dict,
-                mode="append",
-                merge_schema=self.merge_schema,
-                txn=(self.app_id, int(batchId)),
-            )
-            if before is not None and m == before:
-                _cleanup_staged(messages)  # replayed batch: fenced out
-        except Exception:
-            _cleanup_staged(messages)
-            raise
-
-    def abort(self, messages, batchId: int) -> None:
-        _cleanup_staged(messages)

@@ -749,9 +749,9 @@ def test_model_based_random_op_sequence(spark, tmp_path):
 
 
 def test_vacuum_reclaims_stale_staging_spools(spark, tmp_path):
-    """Crashed DataSource writer jobs leak _staging parquet; vacuum
-    deletes spools past the age threshold but never touches fresh
-    ones (a LIVE writer task may be staging right now)."""
+    """Crashed writer jobs of earlier releases left _staging parquet
+    on existing tables; vacuum deletes spools past the age threshold
+    but never touches fresh ones."""
     import time
 
     t = str(tmp_path / "t")
@@ -774,9 +774,8 @@ def test_manifest_tracks_row_counts(spark, tmp_path):
     """Audit bookkeeping: per-commit delta_rows (footer metadata, no
     data read) and a running total_rows, for every commit kind that
     shares the manifest publish step — overwrite, keyed append,
-    compaction (zero delta, total preserved), merge and staged-file
-    append."""
-    from etl_data_pipeline_spark.sinks.manifest import commit_staged_files, compact
+    compaction (zero delta, total preserved) and merge."""
+    from etl_data_pipeline_spark.sinks.manifest import compact
 
     t = str(tmp_path / "t")
     m1 = commit(_frame(spark, 5, "a"), t)
@@ -793,15 +792,7 @@ def test_manifest_tracks_row_counts(spark, tmp_path):
     batch = spark.range(1, 4).select(F.col("id").alias("k"), F.lit("d").alias("v"))
     m4 = merge_upsert(spark, t, batch, ("k",))
     assert (m4["delta_rows"], m4["total_rows"]) == (4, 4)  # k=0 + k=1..3
-    # staged-file append: the moved files' rows are the delta
-    staged = str(tmp_path / "staged")
-    _frame(spark, 6, "e").coalesce(1).write.parquet(staged)
-    files = sorted(
-        os.path.join(staged, f) for f in os.listdir(staged) if f.endswith(".parquet")
-    )
-    m5 = commit_staged_files(t, files, {"k": "bigint", "v": "string"})
-    assert (m5["delta_rows"], m5["total_rows"]) == (6, 10)
-    assert read_table(spark, t).count() == 10
+    assert read_table(spark, t).count() == 4
 
 
 def test_partitioned_table_roundtrip_and_layout_rules(spark, tmp_path):
@@ -857,18 +848,6 @@ def test_partitioned_table_null_partition_value(spark, tmp_path):
     out = read_table(spark, t)
     assert out.filter("part IS NULL").count() == 1
     assert out.filter("part = 'p1'").count() == 2
-
-
-def test_staged_files_writer_rejects_partitioned_tables(spark, tmp_path):
-    from etl_data_pipeline_spark.sinks.manifest import commit_staged_files
-
-    t = str(tmp_path / "t")
-    df = spark.range(10).select(
-        F.col("id").alias("k"), (F.col("id") % 2).cast("int").alias("p")
-    )
-    commit(df, t, partition_by=("p",))
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        commit_staged_files(t, [], {"k": "bigint", "p": "int"}, mode="append")
 
 
 def test_read_table_where_prunes_dirs_and_matches_filter(spark, tmp_path):

@@ -1,13 +1,21 @@
-"""Python DataSource over manifest tables (streaming/manifest_source):
-batch snapshot + time travel through spark.read, and the version-offset
-streaming change feed through spark.readStream."""
+"""The manifest_table streaming source (streaming/manifest_source):
+the version-offset change feed through spark.readStream, its agreement
+with manifest.read_changes, and the batch reads and exactly-once
+stream writes that go through read_table/commit."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from etl_data_pipeline_spark.sinks.manifest import commit, compact, read_manifest
+from etl_data_pipeline_spark.sinks.manifest import (
+    commit,
+    compact,
+    read_changes,
+    read_manifest,
+    read_table,
+)
 from etl_data_pipeline_spark.streaming import manifest_source
 
 
@@ -22,20 +30,24 @@ def _frame(spark, n, tag, base=0):
     )
 
 
-def test_batch_read_and_time_travel(spark, tmp_path):
-    t = str(tmp_path / "t")
-    commit(_frame(spark, 5, "a"), t)
-    commit(_frame(spark, 8, "b", base=100), t, mode="append")
-    df = spark.read.format("manifest_table").option("path", t).load()
-    assert df.schema.simpleString() == "struct<k:bigint,v:string>"
-    assert df.count() == 13
-    v1 = spark.read.format("manifest_table").option("path", t).option("version", 1).load()
-    assert v1.count() == 5 and v1.select("v").distinct().first().v == "a"
+def _drain_to_memory(spark, t, name, starting_version=0):
+    """availableNow stream of the table's change feed into a memory
+    table; returns the delivered rows as a DataFrame."""
+    q = (
+        spark.readStream.format("manifest_table")
+        .option("path", t).option("startingVersion", starting_version).load()
+        .writeStream.format("memory").queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return spark.table(name)
 
 
-def test_batch_read_typed_columns_roundtrip(spark, sf_dir, tmp_path):
-    """Arrow-side type mapping: timestamps, arrays, doubles survive the
-    DataSource byte-for-byte vs a direct parquet read."""
+def test_stream_read_typed_columns_roundtrip(spark, sf_dir, tmp_path):
+    """Arrow-side type mapping on the executor: timestamps, arrays,
+    doubles survive the change-feed stream byte-for-byte vs the
+    committed frame."""
     t = str(tmp_path / "t")
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).limit(200)
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).limit(50)
@@ -43,7 +55,7 @@ def test_batch_read_typed_columns_roundtrip(spark, sf_dir, tmp_path):
         emb.select("embedding").limit(1)
     )
     commit(joined, t)
-    back = spark.read.format("manifest_table").option("path", t).load()
+    back = _drain_to_memory(spark, t, "typed_feed")
     assert back.schema == joined.schema
     a = sorted(joined.collect(), key=lambda r: r.event_id)
     b = sorted(back.collect(), key=lambda r: r.event_id)
@@ -122,67 +134,17 @@ def test_stream_feed_overwrite_fails_loudly(spark, tmp_path):
         run_once()
 
 
-def test_batch_read_reads_evolved_old_files_nullfilled(spark, tmp_path):
-    """Old delta files lack evolved columns; the Arrow reader
-    null-fills them per file under the current schema."""
-    t = str(tmp_path / "t")
-    commit(_frame(spark, 3, "a"), t)
-    commit(
-        _frame(spark, 2, "b", base=10).withColumn("extra", F.lit(7)),
-        t,
-        mode="append",
-        merge_schema=True,
-    )
-    df = spark.read.format("manifest_table").option("path", t).load()
-    assert set(df.columns) == {"k", "v", "extra"}
-    assert df.filter("extra IS NULL").count() == 3
-    assert df.filter("extra = 7").count() == 2
-
-
-def test_batch_writer_append_and_overwrite(spark, tmp_path):
-    """df.write.format('manifest_table'): executor-staged files publish
-    as one atomic commit; append is schema-checked, overwrite
-    snapshots; no staging debris on success."""
-    t = str(tmp_path / "t")
-    _frame(spark, 5, "a").write.format("manifest_table").option("path", t).mode(
-        "append"
-    ).save()
-    _frame(spark, 3, "b", base=50).write.format("manifest_table").option(
-        "path", t
-    ).mode("append").save()
-    m = read_manifest(t)
-    assert m["version"] == 2
-    assert spark.read.format("manifest_table").option("path", t).load().count() == 8
-    # schema drift without mergeSchema: fail loudly, nothing committed
-    drifted = _frame(spark, 2, "x").withColumn("extra", F.lit(1))
-    with pytest.raises(Exception, match="drifts the schema"):
-        drifted.write.format("manifest_table").option("path", t).mode("append").save()
-    assert read_manifest(t)["version"] == 2
-    assert os.listdir(os.path.join(t, "_staging")) == []  # staging cleaned
-    # opt-in evolution
-    drifted.write.format("manifest_table").option("path", t).option(
-        "mergeSchema", "true"
-    ).mode("append").save()
-    out = spark.read.format("manifest_table").option("path", t).load()
-    assert set(out.columns) == {"k", "v", "extra"}
-    assert out.filter("extra IS NULL").count() == 8
-    # overwrite snapshots
-    _frame(spark, 4, "z").write.format("manifest_table").option("path", t).mode(
-        "overwrite"
-    ).save()
-    assert spark.read.format("manifest_table").option("path", t).load().count() == 4
-
-
 def test_stream_writer_exactly_once(spark, tmp_path):
-    """df.writeStream.format('manifest_table'): one commit per batch id
-    under the txn fence; a forced replay (fresh checkpoint, same
-    appId) is fenced out file-for-file."""
-    from etl_data_pipeline_spark.sinks.manifest import read_table
-
+    """foreachBatch + commit(txn=(app_id, batch_id)): one commit per
+    batch id under the txn fence; a forced replay (fresh checkpoint,
+    same app id) is fenced out."""
     t = str(tmp_path / "t")
     src = str(tmp_path / "src")
     ev = _frame(spark, 20, "s").repartition(4)
     ev.write.parquet(src)
+
+    def land(batch_df, batch_id):
+        commit(batch_df, t, mode="append", txn=("ingest", int(batch_id)))
 
     def run(ckpt):
         stream = (
@@ -191,8 +153,7 @@ def test_stream_writer_exactly_once(spark, tmp_path):
             .parquet(src)
         )
         q = (
-            stream.writeStream.format("manifest_table")
-            .option("path", t).option("appId", "ingest")
+            stream.writeStream.foreachBatch(land)
             .option("checkpointLocation", str(tmp_path / ckpt))
             .trigger(availableNow=True)
             .start()
@@ -203,36 +164,12 @@ def test_stream_writer_exactly_once(spark, tmp_path):
     m = read_manifest(t)
     assert read_table(spark, t).count() == 20
     n_files = len([f for f in os.listdir(src) if f.endswith(".parquet")])
+    assert m["version"] == n_files  # one commit per micro-batch
     assert m["txn"] == {"ingest": n_files - 1}
 
     run("ck2")  # forced full replay with the same app
     assert read_manifest(t)["version"] == m["version"]  # nothing re-landed
     assert read_table(spark, t).count() == 20
-    assert os.listdir(os.path.join(t, "_staging")) == []  # replays cleaned up
-
-
-def test_batch_reader_filter_pushdown(spark, tmp_path):
-    """pushFilters: simple predicates prune executor-side via pyarrow
-    row-group statistics; results are identical to the unfiltered path
-    (Spark re-evaluates every filter — pruning is never the
-    correctness boundary), including filters on evolved columns old
-    files predate."""
-    t = str(tmp_path / "t")
-    commit(_frame(spark, 1000, "a").repartition(4), t)
-    commit(
-        _frame(spark, 100, "b", base=5000).withColumn("extra", F.lit(1)),
-        t,
-        mode="append",
-        merge_schema=True,
-    )
-    df = spark.read.format("manifest_table").option("path", t).load()
-    assert df.filter("k >= 900 AND k < 5050").count() == 100 + 50
-    assert df.filter(F.col("v") == "b").count() == 100
-    assert df.filter("k IN (3, 5000, 5001)").count() == 3
-    # evolved column: old files are all-null for it
-    assert df.filter("extra IS NULL").count() == 1000
-    assert df.filter("extra = 1").count() == 100
-    assert df.filter("extra IS NOT NULL AND k < 5010").count() == 10
 
 
 def test_golden_path_pipeline_to_stream_composition(spark, sf_dir, tmp_path):
@@ -309,10 +246,10 @@ def test_golden_path_pipeline_to_stream_composition(spark, sf_dir, tmp_path):
 
 
 def test_datasource_partitioned_table_reads_and_prunes(spark, tmp_path):
-    """DataSource over a hive-partitioned manifest table: partition
-    values are injected from paths with the recorded types (incl. the
-    null partition), filters on partition columns prune whole files at
-    PLAN time, and the streaming feed carries partition columns too."""
+    """A hive-partitioned manifest table: read_table casts partition
+    values to the recorded types (incl. the null partition) and
+    filters on partition columns count right; the streaming feed
+    injects partition columns from the paths too."""
     t = str(tmp_path / "t")
     df = spark.range(90).select(
         F.col("id").alias("k"),
@@ -326,7 +263,7 @@ def test_datasource_partitioned_table_reads_and_prunes(spark, tmp_path):
         t,
         mode="append",
     )
-    out = spark.read.format("manifest_table").option("path", t).load()
+    out = read_table(spark, t)
     assert out.schema.simpleString() == "struct<k:bigint,bucket:int,v:string>"
     assert out.count() == 91
     assert out.filter("bucket = 2").count() == 30  # typed partition compare
@@ -365,59 +302,68 @@ def _zordered_range_frame(spark, lo, hi):
     )
 
 
-def test_batch_reader_stats_prune_whole_dirs(spark, tmp_path):
-    """Dir-level IO pruning from the cached footer-stats sidecar: on a
-    table of z-ordered ingest batches, a selective filter must yield
-    PARTITIONS from a strict subset of delta dirs (fewer tasks, less
-    IO at 100 TB), while results stay identical to the unfiltered
-    read (Spark re-evaluates every filter)."""
-    from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
-
-    from etl_data_pipeline_spark.streaming.manifest_source import (
-        ManifestBatchReader,
-    )
-
-    t = str(tmp_path / "t")
-    for lo in (0, 1000, 2000, 3000):
-        commit(_zordered_range_frame(spark, lo, lo + 1000), t,
-               mode="append" if lo else "overwrite")
-    dirs = read_manifest(t)["dirs"]
-    assert len(dirs) == 4
-
-    full = ManifestBatchReader({"path": t})
-    n_full = len(full.partitions())
-
-    pruned = ManifestBatchReader({"path": t})
-    kept_filters = list(pruned.pushFilters([
-        GreaterThanOrEqual(("k",), 2100), LessThanOrEqual(("k",), 2200),
-    ]))
-    assert len(kept_filters) == 2  # Spark re-evaluates everything
-    parts = pruned.partitions()
-    assert 0 < len(parts) < n_full
-    # every surviving partition comes from the ONE dir that can hold
-    # k in [2100, 2200]
-    touched = {p.file_path for p in parts}
-    other_dirs = [d for d in dirs if all(os.path.join(t, d) + os.sep
-                                         not in f for f in touched)]
-    assert len(other_dirs) == 3, (dirs, touched)
-
-    # end-to-end: filtered result equals the brute-force answer
-    df = spark.read.format("manifest_table").option("path", t).load()
-    got = df.filter("k >= 2100 AND k <= 2200")
-    assert got.count() == 101
-    assert got.agg(F.min("k"), F.max("k")).first() == (2100, 2200)
-
-
 def test_stats_pruning_never_wrong_on_unknown_columns(spark, tmp_path):
-    """Filters on columns with no usable stats (strings written across
-    commits, hive-partition-style values) must not prune anything
-    incorrectly — equality with the unfiltered+filter answer."""
+    """read_table(where=) prunes delta dirs by footer stats and must
+    never drop a dir that holds a match: string columns written across
+    commits, a column older dirs predate (no stats there), mixed
+    clauses — every count equals the unpruned answer."""
     t = str(tmp_path / "t")
     for lo in (0, 500):
         commit(_zordered_range_frame(spark, lo, lo + 500), t,
                mode="append" if lo else "overwrite")
-    df = spark.read.format("manifest_table").option("path", t).load()
-    assert df.filter(F.col("v") == "r500").count() == 500
-    assert df.filter("k = 250 AND v = 'r0'").count() == 1
-    assert df.filter("k IN (10, 510)").count() == 2
-    assert df.filter("k > 10000").count() == 0
+    commit(
+        _zordered_range_frame(spark, 1000, 1100).withColumn("extra", F.lit(1)),
+        t,
+        mode="append",
+        merge_schema=True,
+    )
+
+    def n(where):
+        return read_table(spark, t, where=where).count()
+
+    assert n({"v": "r500"}) == 500
+    assert n({"k": 250, "v": "r0"}) == 1
+    assert n({"k": (10000, None)}) == 0
+    assert n({"extra": 1}) == 100  # older dirs have no stats: kept
+    assert n({"extra": 1, "k": (None, 1049)}) == 50
+
+
+def test_stream_feed_matches_read_changes(spark, tmp_path):
+    """The stream and read_changes share one planner, so they deliver
+    the same rows: over a seeded sequence of appends, compactions and
+    one schema-evolving append, an availableNow stream started at
+    version lo while the head is hi delivers exactly
+    read_changes(lo, until_version=hi) (old files null-filled in the
+    evolved column). An overwrite inside the range breaks both."""
+    import random
+
+    from etl_data_pipeline_spark.sinks.manifest import FeedBrokenError
+
+    rng = random.Random(7)
+    ops = ["append", "append", "append", "compact", "compact", "evolve"]
+    rng.shuffle(ops)
+    t = str(tmp_path / "t")
+    commit(_frame(spark, rng.randint(1, 6), "v1"), t)
+    evolved = False
+    for head, op in enumerate(ops, start=2):
+        if op == "compact":
+            compact(spark, t)
+        else:
+            evolved = evolved or op == "evolve"
+            delta = _frame(spark, rng.randint(1, 6), f"v{head}", base=100 * head)
+            if evolved:
+                delta = delta.withColumn("extra", F.lit(head))
+            commit(delta, t, mode="append", merge_schema=op == "evolve")
+        lo = rng.randrange(0, head)
+        got = _drain_to_memory(spark, t, f"feed_{lo}_{head}", lo)
+        want = read_changes(spark, t, lo, until_version=head)
+        assert got.columns == want.columns
+        assert Counter(map(tuple, got.collect())) == Counter(
+            map(tuple, want.collect())
+        ), (ops, lo, head)
+    commit(_frame(spark, 3, "rebuilt"), t)  # overwrite at head + 1
+    lo = rng.randrange(0, head + 1)
+    with pytest.raises(FeedBrokenError, match="broken by an overwrite"):
+        read_changes(spark, t, lo)
+    with pytest.raises(Exception, match="broken by an overwrite"):
+        _drain_to_memory(spark, t, "feed_broken", lo)

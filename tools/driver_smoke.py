@@ -72,18 +72,17 @@ statuses = {x.table: x.status for x in r4}
 assert statuses["nonexistent"] == "failed" and statuses["region"] == "loaded"
 
 
-# 5. manifest round-trip smoke: commit -> standard-API read -> feed ->
-# version-keyed pipeline (round-5 surface)
-from etl_data_pipeline_spark.sinks.manifest import commit as mcommit, read_manifest
-from etl_data_pipeline_spark.streaming import manifest_source
+# 5. manifest round-trip smoke: commit -> read_table -> version-keyed
+# pipeline over the change feed
+from etl_data_pipeline_spark.sinks.manifest import commit as mcommit
+from etl_data_pipeline_spark.sinks.manifest import read_manifest, read_table
 
-manifest_source.register(spark)
 mt = os.path.join(tmp, "morders")
 src_orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 mcommit(src_orders.filter("o_orderkey < 1000"), mt)
 mcommit(src_orders.filter("o_orderkey >= 1000"), mt, mode="append")
 m = read_manifest(mt)
-back = spark.read.format("manifest_table").option("path", mt).load()
+back = read_table(spark, mt)
 assert back.count() == 1500 and m["version"] == 2 and m["total_rows"] == 1500
 vpipe = IncrementalPipeline(
     spark,
