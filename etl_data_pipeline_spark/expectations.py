@@ -28,6 +28,9 @@ Pipeline wiring (pipeline.py): ``TableSpec.expectations`` with
   errors); the clean subset loads and the watermark advances over the
   WHOLE batch — a fixed upstream row re-arrives with a new watermark,
   it is not replayed automatically.
+
+The pipeline checkpoints the marked batch, and the Observation on that
+checkpoint carries the counts, so the gate adds no job to the read.
 """
 
 from __future__ import annotations
@@ -155,6 +158,21 @@ class ExpectationReport:
     def ok(self) -> bool:
         return self.n_violations == 0
 
+    @classmethod
+    def of(
+        cls, marked: DataFrame, rules: Sequence[Expectation], counts
+    ) -> "ExpectationReport":
+        """Split a :func:`_marked` frame by the values of its
+        :func:`violation_metrics` (``counts``: a Row or a dict, such as
+        an Observation's). The split is two filters; it runs no job."""
+        return cls(
+            passed=marked.filter(F.size(_VIOL) == 0).drop(_VIOL),
+            violations=marked.filter(F.size(_VIOL) > 0),
+            counts={r.name: int(counts[r.name] or 0) for r in rules},
+            total=int(counts["total_rows"]),
+            n_violations=int(counts["violating_rows"] or 0),
+        )
+
 
 def _marked(df: DataFrame, rules: Sequence[Expectation]) -> DataFrame:
     names = [r.name for r in rules]
@@ -181,36 +199,40 @@ def _marked(df: DataFrame, rules: Sequence[Expectation]) -> DataFrame:
             checks.append(F.col(r.col).isNull() | F.col(marker).isNotNull())
         else:
             checks.append(r.column())
-    return work.withColumn(
-        _VIOL,
-        F.array_compact(
-            F.array(
-                *[
-                    F.when(~c, F.lit(r.name)).otherwise(F.lit(None))
-                    for r, c in zip(rules, checks)
-                ]
-            )
-        ),
-    ).select(*df.columns, _VIOL)
+    violated = F.array_compact(
+        F.array(
+            *[
+                F.when(~c, F.lit(r.name)).otherwise(F.lit(None))
+                for r, c in zip(rules, checks)
+            ]
+        )
+    )
+    return work.select(*df.columns, violated.alias(_VIOL))
 
 
-def violation_counts(df: DataFrame, rules: Sequence[Expectation]) -> DataFrame:
-    """The report as a LAZY 1-row DataFrame: ``total_rows``,
-    ``violating_rows``, then one violation-count column per rule (in
-    rule order, named by the rule). This is the declarative face —
-    usable as a registry query with a SQL oracle; check_expectations
-    materializes it for the pipeline gate."""
-    if not rules:
-        raise ValueError("violation_counts: empty rule list")
-    marked = _marked(df, rules)
-    return marked.agg(
+def violation_metrics(rules: Sequence[Expectation]) -> list[Column]:
+    """The aggregates over a :func:`_marked` frame: ``total_rows``,
+    ``violating_rows``, then one violation count per rule, named by the
+    rule. Explode-free (a sum of per-rule int casts), so they fit one
+    aggregate or one Observation whatever the rule count."""
+    return [
         F.count("*").alias("total_rows"),
         F.sum((F.size(_VIOL) > 0).cast("long")).alias("violating_rows"),
         *[
             F.sum(F.array_contains(_VIOL, r.name).cast("long")).alias(r.name)
             for r in rules
         ],
-    )
+    ]
+
+
+def violation_counts(df: DataFrame, rules: Sequence[Expectation]) -> DataFrame:
+    """The report as a LAZY 1-row DataFrame of
+    :func:`violation_metrics`. This is the declarative face — usable as
+    a registry query with a SQL oracle; check_expectations materializes
+    it for an ad-hoc gate."""
+    if not rules:
+        raise ValueError("violation_counts: empty rule list")
+    return _marked(df, rules).agg(*violation_metrics(rules))
 
 
 def check_expectations(
@@ -219,10 +241,11 @@ def check_expectations(
     """Evaluate every rule in one pass and split the batch.
 
     The marked frame is computed once (all rule Columns in a single
-    projection); the split is two filters over it. Counts come from
-    ONE aggregate over the marked frame — explode-free (a sum of
-    per-rule int casts), so the report costs two jobs total
-    regardless of rule count."""
+    projection); the split is two filters over it and the counts come
+    from ONE aggregate over the same marked frame, so the report costs
+    one aggregate regardless of rule count. The pipeline does not call
+    this: it takes the same counts from the Observation on its batch
+    checkpoint and splits that with :meth:`ExpectationReport.of`."""
     if not rules:
         raise ValueError("check_expectations: empty rule list")
     marked = _marked(df, rules)
@@ -231,23 +254,8 @@ def check_expectations(
     # join per rule built twice, and on a source that can change
     # between jobs a separate plan could even count a different batch
     # than it splits
-    agg = marked.agg(
-        F.count("*").alias("total_rows"),
-        F.sum((F.size(_VIOL) > 0).cast("long")).alias("violating_rows"),
-        *[
-            F.sum(F.array_contains(_VIOL, r.name).cast("long")).alias(r.name)
-            for r in rules
-        ],
-    ).first()
-    passed = marked.filter(F.size(_VIOL) == 0).drop(_VIOL)
-    violations = marked.filter(F.size(_VIOL) > 0)
-    counts = {r.name: int(agg[r.name] or 0) for r in rules}
-    return ExpectationReport(
-        passed=passed,
-        violations=violations,
-        counts=counts,
-        total=int(agg["total_rows"]),
-        n_violations=int(agg["violating_rows"] or 0),
+    return ExpectationReport.of(
+        marked, rules, marked.agg(*violation_metrics(rules)).first()
     )
 
 

@@ -24,9 +24,11 @@ safely instead of duplicating rows (§2.C #5/#7).
 
 A table takes one of two paths, by its watermark: a data column, or
 the version feed of a manifest-table source. The paths differ only in
-how they resolve the watermark, read the batch and gate an empty
-batch; both then hand the batch to one load step — expectations gate,
-latest-per-key compaction, sink write, watermark advance.
+how they resolve the watermark and read the batch; both then read it
+with one observed checkpoint (row count, watermark max, per-rule
+violation counts), gate an empty batch on that count, and hand the
+checkpoint to one load step — expectations split, latest-per-key
+compaction, sink write, watermark advance.
 """
 
 from __future__ import annotations
@@ -42,6 +44,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
+from etl_data_pipeline_spark.expectations import (
+    ExpectationError,
+    ExpectationReport,
+    _marked,
+    check_expectations,
+    violation_metrics,
+)
 from etl_data_pipeline_spark.functions.caching import free_checkpoint
 from etl_data_pipeline_spark.schema import validate_schema
 from etl_data_pipeline_spark.sinks import (
@@ -62,6 +71,8 @@ log = logging.getLogger(__name__)
 # engine column carrying each version-feed row's source commit version;
 # it orders the latest-per-key compaction and never reaches a sink
 _FEED_VERSION = "_feed_version"
+# the batch Observation's watermark max (its row count is total_rows)
+_WM_MAX = "_watermark_max"
 
 
 def incremental_source_options(t: TableSpec, raw_watermark: str | None) -> dict:
@@ -188,10 +199,11 @@ class IncrementalPipeline:
         is captured FIRST and both the feed and the recorded progress
         are pinned to it (read_changes until_version), so a commit
         landing mid-run is simply next run's delta — never skipped,
-        never double-read. No checkpoint is needed, unlike the
-        column-watermark path: the feed resolves to IMMUTABLE
-        directories, so every action over it reads identical bytes by
-        construction.
+        never double-read. The feed resolves to IMMUTABLE directories,
+        so every action over it would read identical bytes; the batch
+        is still read once, by the same observed checkpoint as the
+        column path, whose count gates the empty delta and whose
+        expectation counts come with it.
 
         Degrade paths mirror §2.C: unparseable recorded version → full
         feed; recorded version but wiped sink → full feed (rebuild);
@@ -313,16 +325,9 @@ class IncrementalPipeline:
             df = (
                 df.select(*validated.columns, ver_col) if ver_col else validated
             )
-        if df.isEmpty():
-            # only layout/empty commits since the watermark: advance it
-            # anyway so those manifests are never rescanned
-            self.store.set(t.name, head)
-            return TableRunResult(
-                t.name, "skipped_empty", rows=0, new_watermark=head
-            )
         # batch key = the frozen SINCE version: stable across replays
         # of the same delta, so quarantine overwrites the same subdir
-        return self._load(t, df, since, head, ver_col)
+        return self._read_and_load(t, df, since, ver_col, head=head)
 
     def _guard_resync_duplication(self, t: TableSpec, reason: str) -> None:
         """Every version-feed degrade path that REPLAYS rows (full
@@ -346,29 +351,18 @@ class IncrementalPipeline:
         """One table's read -> gate -> load -> watermark-advance cycle
         (app.py:96-172).
 
-        One Spark job reads the batch before the sink write: an eager
-        localCheckpoint whose Observation also returns the batch's row
-        count and watermark max. The count gates an empty batch (skip,
-        watermark unchanged); the max is taken over the whole batch
-        before the expectations gate, so in drop mode the watermark
-        also covers quarantined rows and a fixed row re-arrives with a
-        new watermark instead of replaying forever. Gate, max and
-        write all see ONE pinned snapshot. On a non-snapshot source (a
-        live JDBC table), rows arriving between a max scan and a write
-        scan would be written with keys ABOVE the recorded watermark
-        and re-read next run — duplicates on non-idempotent sinks.
-        Unlike persist() (best-effort — eviction or executor loss
-        silently recomputes partitions from the live source), a
-        checkpoint cuts lineage, so a lost block FAILS the run instead
-        of silently re-reading — and a failed run never advances the
-        watermark, which is the safe side. For batches too large for
-        executor storage, stage to a temp parquet and re-read instead
-        (same guarantee, disk cost).
-
-        The checkpoint belongs to this table's run alone: its blocks
-        are freed when the run ends, on success and on error, and no
-        other frame in the session is touched — tables share one
-        session and run concurrently.
+        The strict-> delta is read by :meth:`_read_and_load`'s one
+        checkpoint, so gate, watermark max and write all see ONE pinned
+        snapshot. On a non-snapshot source (a live JDBC table), rows
+        arriving between a max scan and a write scan would be written
+        with keys ABOVE the recorded watermark and re-read next run —
+        duplicates on non-idempotent sinks. Unlike persist()
+        (best-effort — eviction or executor loss silently recomputes
+        partitions from the live source), a checkpoint cuts lineage, so
+        a lost block FAILS the run instead of silently re-reading — and
+        a failed run never advances the watermark, which is the safe
+        side. For batches too large for executor storage, stage to a
+        temp parquet and re-read instead (same guarantee, disk cost).
         """
         raw = self.store.get(t.name)
         wm_value = parse_watermark(raw, t.watermark_type) if t.is_incremental else None
@@ -397,34 +391,68 @@ class IncrementalPipeline:
         if t.expected_schema:
             df = validate_schema(df, t.expected_schema, allow_extra=True)
         df = apply_watermark(df, t.watermark_column, wm_value)
-        # Gating after the checkpoint costs nothing extra: an empty
-        # batch materializes nothing, so the no-new-data path runs this
-        # one job, as the reference's len(data) gate (app.py:147-153)
-        # ran one fetch.
+        # Batch key = the FROZEN stored watermark (raw), not the new
+        # max: the upper bound changes when rows arrive between a failed
+        # write and its replay, which would scatter the same batch's
+        # violations across two batch=* subdirs. An upsert batch is
+        # compacted by the watermark column, the only ordering the spec
+        # declares (None on a full-load table: its batch must already be
+        # key-unique or merge fails loudly).
+        upsert = t.sink_options.get("mode") == "upsert"
+        return self._read_and_load(
+            t, df, raw, t.watermark_column if upsert else None,
+            wm_column=t.watermark_column if t.is_incremental else None,
+        )
+
+    def _read_and_load(
+        self,
+        t: TableSpec,
+        df: DataFrame,
+        batch_key: Any,
+        order_by: str | None,
+        wm_column: str | None = None,
+        head: int | None = None,
+    ) -> TableRunResult:
+        """Read the batch with ONE job, an eager localCheckpoint, and
+        load it. The checkpoint is taken over the expectations' marked
+        frame when the table has rules, and its Observation returns the
+        row count, the max of ``wm_column`` (NULLs skipped, matching
+        util.py:414) and the per-rule violation counts. The max covers
+        the whole batch, quarantined rows included, so in drop mode a
+        fixed row re-arrives with a new watermark instead of replaying
+        forever.
+
+        An empty batch materialises nothing and skips the load, as the
+        reference's len(data) gate (app.py:147-153) ran one fetch: the
+        column path leaves its watermark unchanged, the version feed
+        (``head`` given) advances to ``head`` so layout-only commits
+        are never rescanned. Otherwise the watermark advances to the
+        observed max, or to ``head``.
+
+        The checkpoint belongs to this table's run alone: its blocks
+        are freed when the run ends, on success and on error, and no
+        other frame in the session is touched — tables share one
+        session and run concurrently."""
         batch = Observation()
-        metrics = [F.count(F.lit(1)).alias("rows")]
-        if t.is_incremental:
-            # NULLs are skipped by max, matching util.py:414
-            metrics.append(F.max(F.col(t.watermark_column)).alias("wm"))
+        if t.expectations:
+            df = _marked(df, t.expectations)
+            metrics = violation_metrics(t.expectations)
+        else:
+            metrics = [F.count(F.lit(1)).alias("total_rows")]
+        if wm_column:
+            metrics.append(F.max(F.col(wm_column)).alias(_WM_MAX))
         df = df.observe(batch, *metrics).localCheckpoint()
         try:
             observed = batch.get
-            if observed["rows"] == 0:
+            if observed["total_rows"] == 0:
                 log.info("table %s: no new data, skipping load", t.name)
-                return TableRunResult(t.name, "skipped_empty", rows=0)
-            # Batch key = the FROZEN stored watermark (raw), not the
-            # new max: the upper bound changes when rows arrive between
-            # a failed write and its replay, which would scatter the
-            # same batch's violations across two batch=* subdirs. An
-            # upsert batch is compacted by the watermark column, the
-            # only ordering the spec declares (None on a full-load
-            # table: its batch must already be key-unique or merge
-            # fails loudly).
-            upsert = t.sink_options.get("mode") == "upsert"
-            return self._load(
-                t, df, raw, observed.get("wm"),
-                t.watermark_column if upsert else None,
-            )
+                if head is not None:
+                    self.store.set(t.name, head)
+                return TableRunResult(
+                    t.name, "skipped_empty", rows=0, new_watermark=head
+                )
+            new_wm = observed.get(_WM_MAX) if wm_column else head
+            return self._load(t, df, batch_key, new_wm, order_by, observed)
         finally:
             free_checkpoint(df)
 
@@ -435,19 +463,24 @@ class IncrementalPipeline:
         batch_key: Any,
         new_wm: Any,
         order_by: str | None,
+        observed: dict,
     ) -> TableRunResult:
-        """The load step both paths share: expectations gate →
+        """The load step both paths share, over the checkpointed batch
+        and its ``observed`` metrics: expectations split →
         latest-per-key compaction by ``order_by`` (skipped when None) →
         sink write → watermark advance to ``new_wm`` (skipped when
         None). ``batch_key`` names the quarantine subdir.
 
         The watermark is recorded only after the write returns, so a
         failed write leaves it untouched and the next run replays the
-        batch. In drop mode a batch whose every row was quarantined
-        writes nothing, yet the watermark still advances over it and
-        the result is ``loaded`` with 0 rows."""
+        batch. The result's ``rows`` are the batch's rows less the
+        quarantined ones. In drop mode a batch whose every row was
+        quarantined writes nothing, yet the watermark still advances
+        over it and the result is ``loaded`` with 0 rows."""
+        rows = observed["total_rows"]
         if t.expectations:
-            df = self._apply_expectations(t, df, batch_key)
+            df = self._apply_expectations(t, df, batch_key, observed)
+            rows -= observed["violating_rows"] or 0
         if df is not None:  # None: drop mode quarantined every row
             if order_by:
                 df = self._latest_per_key(t, df, order_by)
@@ -472,16 +505,19 @@ class IncrementalPipeline:
                 write_sink(df, t.sink_format, t.name, dict(t.sink_options))
         if new_wm is not None:
             self.store.set(t.name, new_wm)
-        return TableRunResult(
-            t.name, "loaded", rows=0 if df is None else None, new_watermark=new_wm
-        )
+        return TableRunResult(t.name, "loaded", rows=rows, new_watermark=new_wm)
 
-    def _apply_expectations(self, t: TableSpec, df, batch_wm=None):
+    def _apply_expectations(self, t: TableSpec, df, batch_wm=None, observed=None):
         """Run the declarative quality gate (expectations.py) on the
         batch. 'fail' raises with per-rule counts (the table fails
         isolated, watermark frozen → retry after upstream fix); 'drop'
         quarantines violating rows to parquet beside the sink and
         returns the clean subset (None when nothing passed).
+
+        In a pipeline run ``df`` is the marked, checkpointed batch and
+        ``observed`` its violation metrics, so the gate only splits it.
+        Without ``observed``, ``df`` is a plain batch that
+        check_expectations marks and counts itself.
 
         Quarantine writes are IDEMPOTENT per batch: rows land in a
         deterministic ``batch=<stored-watermark>`` subdir in overwrite
@@ -490,14 +526,12 @@ class IncrementalPipeline:
         new rows arrive between a failed sink write and the retry —
         so the replay overwrites the same subdir instead of leaving a
         stale sibling with duplicated violation rows."""
-        from etl_data_pipeline_spark.expectations import (
-            ExpectationError,
-            check_expectations,
-        )
-
-        report = check_expectations(df, t.expectations)
+        if observed is None:
+            report = check_expectations(df, t.expectations)
+        else:
+            report = ExpectationReport.of(df, t.expectations, observed)
         if report.ok:
-            return df
+            return report.passed
         if t.expectations_mode == "fail":
             raise ExpectationError(
                 f"table {t.name}: {report.n_violations}/{report.total} rows "

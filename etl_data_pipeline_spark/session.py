@@ -15,11 +15,13 @@ deployment-independent.
 from __future__ import annotations
 
 import os
+import re
 import threading
 
 from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region",
@@ -173,6 +175,115 @@ def reroot(df: DataFrame, spark: SparkSession) -> DataFrame:
     return DataFrame(jdf, spark)
 
 
+# path -> (inference key, the StructType Spark inferred under it). An
+# entry is used only while its key still matches, so two threads racing
+# on one path cost at most one extra inference, never a stale schema.
+_PARQUET_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# reader options that change which files a read lists or how many
+# footers inference merges; a read carrying one infers every time
+_LISTING_OPTIONS = frozenset(
+    {"mergeschema", "pathglobfilter", "recursivefilelookup", "modifiedbefore",
+     "modifiedafter", "basepath"}
+)
+# a file name whose URI form sorts as the name itself
+_PLAIN_NAME = re.compile(r"[A-Za-z0-9._=+-]+")
+# the session conf Spark 4.1's parquet schema inference consults
+_PARQUET_INFERENCE_CONF = (
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.files.ignoreCorruptFiles",
+)
+
+
+def _parquet_conf(spark: SparkSession) -> tuple:
+    return tuple((k, spark.conf.get(k, None)) for k in _PARQUET_INFERENCE_CONF)
+
+
+def parquet_first_file(
+    spark: SparkSession, path: str, options: dict | None = None
+) -> str | None:
+    """The one data file whose footer Spark's parquet schema inference
+    reads for ``path``, or None where inference reads anything else.
+
+    Without ``mergeSchema``, Spark 4.1 infers from a ``_common_metadata``
+    or ``_metadata`` summary if the listing holds one, else from the
+    first data file in path order; hidden names (a leading ``_`` or
+    ``.``) are not data. None for every layout outside that rule's
+    plain case — schema merging, a listing option, a summary file,
+    any subdirectory (hive partitions, nested data), a glob or URI
+    path, a name whose URI escaping could reorder it, or no data file
+    at all — so callers fall back to Spark's own inference there."""
+    return _first_file(path, options or {}, _parquet_conf(spark))
+
+
+def _first_file(path: str, options: dict, conf: tuple) -> str | None:
+    if (
+        _LISTING_OPTIONS & {k.lower() for k in options}
+        or (dict(conf)["spark.sql.parquet.mergeSchema"] or "").lower() == "true"
+        or ":" in path
+        or any(c in path for c in "*?[]{}")
+    ):
+        return None
+    if os.path.isfile(path):
+        name = os.path.basename(path)
+        return path if _PLAIN_NAME.fullmatch(name) and name[0] not in "_." else None
+    try:
+        entries = list(os.scandir(path))
+    except OSError:
+        return None
+    names = []
+    for e in entries:
+        if e.name.startswith(("_metadata", "_common_metadata")):
+            return None
+        if e.name.startswith(".") or (e.name.startswith("_") and "=" not in e.name):
+            continue
+        if e.name.endswith("._COPYING_"):
+            continue
+        if e.is_dir() or not _PLAIN_NAME.fullmatch(e.name):
+            return None
+        names.append(e.name)
+    return os.path.join(path, min(names)) if names else None
+
+
+def read_parquet(
+    spark: SparkSession, path: str, options: dict | None = None
+) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)``, without its
+    schema-inference job when the inferred schema is already known.
+
+    The memo holds, per path, the StructType Spark itself inferred,
+    keyed by everything that inference reads: the identity (path,
+    size, mtime, inode) of :func:`parquet_first_file`, the reader
+    options and the session's parquet conf. A file added after the
+    first, as a landing directory grows, changes nothing Spark would
+    infer and reuses the entry; a new first file or a rewritten one
+    infers again. Layouts without a single first file infer every
+    time, exactly as before."""
+    options = dict(options or {})
+    reader = spark.read.options(**options)
+    conf = _parquet_conf(spark)
+    first = _first_file(path, options, conf)
+    if first is None:
+        return reader.parquet(path)
+    st = os.stat(first)
+    key = (
+        first, st.st_size, st.st_mtime_ns, st.st_ino,
+        tuple(sorted(options.items())), conf,
+    )
+    hit = _PARQUET_SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return reader.schema(hit[1]).parquet(path)
+    # stat before the read: a file rewritten in between is keyed by
+    # its old identity, so the next read misses instead of reusing
+    df = reader.parquet(path)
+    _PARQUET_SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one harness table (TESTDATA.md) as a DataFrame.
 
@@ -200,9 +311,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name != "events":
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     nanos = derived_session(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
-    df = reroot(nanos.read.parquet(path), spark)
+    df = reroot(read_parquet(nanos, path), spark)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

@@ -9,10 +9,12 @@ deliberate fix that makes crash-replay safe.
 Scale notes:
 - Writers are per-partition parallel; 'batchsize' maps to the
   reference's execute_batch page_size=1000 (util.py:226-232).
-- The idempotent sink anti-joins NEW data against EXISTING keys; at
-  100 TB the existing side is pruned to the key columns only (column
-  pruning) and the anti-join is broadcast when the new batch is small —
-  never a full-table shuffle of the sink.
+- The idempotent sink anti-joins NEW data against EXISTING keys. The
+  sink side is a key-only scan, read with the batch's key schema (no
+  inference job), and its distinct keys are the anti-join's build side:
+  LeftAnti builds the right side, so the batch streams and is never
+  the broadcast. When the sink's keys outgrow a hash relation the plan
+  falls back to a shuffled anti-join (see idempotent_append_parquet).
 """
 
 from __future__ import annotations
@@ -24,6 +26,9 @@ from typing import Callable, Iterator, Protocol
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from etl_data_pipeline_spark.session import parquet_first_file
 
 
 class SinkFn(Protocol):
@@ -820,13 +825,44 @@ def idempotent_append_parquet(
     with writer_lease(path):
         # first-write ONLY on a true missing path; any other read error
         # aborts the append (a degraded read would replay duplicates).
-        sink = read_parquet_if_exists(spark, path)
+        sink = _read_sink_keys(spark, path, df.select(*merge_keys).schema)
         if sink is None:
             # first write via the staged swap (see _overwrite_swap_locked);
             # later appends are safe: the commit protocol only publishes
             # files at job commit.
             _overwrite_swap_locked(df, path)
             return
-        existing = sink.select(*merge_keys).distinct()
-        out = df.join(existing, on=list(merge_keys), how="left_anti")
+        out = df.join(sink.distinct(), on=list(merge_keys), how="left_anti")
         out.write.mode("append").parquet(path)
+
+
+def _read_sink_keys(
+    spark: SparkSession, path: str, key_schema: StructType
+) -> DataFrame | None:
+    """:func:`read_parquet_if_exists` narrowed to the key columns, read
+    with the batch's ``key_schema`` instead of an inference job (parquet
+    resolves columns by name). The footer of the file Spark would infer
+    from (``parquet_first_file``) must hold every key column first, so
+    a target that is empty, corrupt or keyless raises as inference
+    would; a sink key whose type the batch's cannot read fails the
+    scan, and with it the append. Layouts inference reads more of
+    (partitions, summaries) infer as before."""
+    import pyarrow.parquet as pq
+
+    _recover_interrupted_swap(path)
+    if not os.path.exists(path):
+        return None
+    keys = key_schema.names
+    first = parquet_first_file(spark, path)
+    if first is None:
+        return spark.read.parquet(path).select(*keys)
+    case = spark.conf.get("spark.sql.caseSensitive", "false") == "true"
+    fold = str if case else str.lower
+    have = {fold(n) for n in pq.read_schema(first).names}
+    missing = [k for k in keys if fold(k) not in have]
+    if missing:
+        raise ValueError(
+            f"sink {path!r} has no merge key column(s) {missing} "
+            f"(footer of {os.path.basename(first)})"
+        )
+    return spark.read.schema(key_schema).parquet(path)

@@ -21,14 +21,18 @@ from typing import Callable, Protocol
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_data_pipeline_spark.session import read_parquet
+
 
 class SourceFn(Protocol):
     def __call__(self, spark: SparkSession, table: str, options: dict) -> DataFrame: ...
 
 
 def _parquet_source(spark: SparkSession, table: str, options: dict) -> DataFrame:
+    # a landing directory's schema is inferred once per first file, not
+    # once per run
     path = options.get("path") or os.path.join(options["dir"], f"{table}.parquet")
-    return spark.read.options(**options.get("reader_options", {})).parquet(path)
+    return read_parquet(spark, path, options.get("reader_options"))
 
 
 def _csv_source(spark: SparkSession, table: str, options: dict) -> DataFrame:

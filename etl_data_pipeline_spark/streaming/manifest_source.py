@@ -33,6 +33,17 @@ Why offsets-as-versions is the right streaming contract here:
   Delta CDF's contract), and vacuum retention must outlast the
   consumer's lag, exactly as for read_changes.
 
+Triggers: a drain is ONE micro-batch. The reader has no admission
+control (Spark 4.1's Python ``DataSourceStreamReader`` offers no hook
+for it), so under ``trigger(availableNow=True)`` Spark logs that the
+source does not support Trigger.AvailableNow and falls back to a
+single batch — Trigger.Once semantics: the drain delivers every
+version committed up to the head it sees at start, however many, in
+one batch. After a crash that left a planned batch uncommitted, the
+next drain replays only that batch (its offset range is already in the
+checkpoint) and stops; versions committed since then arrive with the
+drain after it.
+
 Schema: resolved from the manifest (the table's recorded column ->
 type map) at plan time; evolved columns are null-filled per file on
 the EXECUTOR (Arrow-side), so old delta files read under the current

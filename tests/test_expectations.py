@@ -108,7 +108,7 @@ def test_pipeline_drop_mode_quarantines_and_advances(spark, tmp_path):
     rules = (Expectation.in_range("amount", lo=0.0),)
     pipe = IncrementalPipeline(spark, _spec(src, sinkd, "drop", rules), store)
     res = pipe.run()
-    assert res[0].status == "loaded"
+    assert (res[0].status, res[0].rows) == ("loaded", 2)  # 3 read, 1 quarantined
     assert store.get("orders") == "3"  # whole-batch watermark
     loaded = spark.read.parquet(str(sinkd / "orders"))
     assert sorted(r.id for r in loaded.collect()) == [1, 3]
@@ -354,7 +354,7 @@ def test_pipeline_fk_drop_mode(spark, tmp_path):
     res = IncrementalPipeline(
         spark, _fk_spec(src, sinkd, "drop", spark), store
     ).run()
-    assert res[0].status == "loaded"
+    assert (res[0].status, res[0].rows) == ("loaded", 2)
     assert store.get("orders") == "3"
     loaded = spark.read.parquet(str(sinkd / "orders"))
     assert sorted(r.id for r in loaded.collect()) == [1, 3]
@@ -362,3 +362,42 @@ def test_pipeline_fk_drop_mode(spark, tmp_path):
     qrows = quar.collect()
     assert [r.id for r in qrows] == [2]
     assert qrows[0]._violated == ["fk_cust"]
+
+
+def test_unique_rule_drop_mode_on_both_pipeline_paths(spark, tmp_path):
+    """A shuffling ``unique`` rule next to a Column rule, in drop mode,
+    on the column-watermark path and on the version feed: the same
+    quarantine rows, sink rows, loaded count and watermark advance."""
+    from etl_data_pipeline_spark.sinks.manifest import commit as mcommit
+
+    rows = [(1, "a"), (2, "b"), (2, "c"), (3, None), (4, "d")]
+    batch = spark.createDataFrame(rows, "id long, v string")
+    src = tmp_path / "src"
+    batch.write.parquet(str(src / "col.parquet"))
+    mcommit(batch, str(src / "feed"))
+    rules = (Expectation.unique("id"), Expectation.not_null("v"))
+    common = dict(
+        source_options={"dir": str(src)},
+        sink_options={"dir": str(tmp_path / "sink")},
+        expectations=rules,
+        expectations_mode="drop",
+    )
+    spec = PipelineSpec(tables=[
+        TableSpec(name="col", watermark_column="id", watermark_type="id", **common),
+        TableSpec(
+            name="feed", watermark_type="version", source_format="manifest", **common
+        ),
+    ])
+    store = WatermarkStore(tmp_path / "wm.json")
+    res = {r.table: r for r in IncrementalPipeline(spark, spec, store).run()}
+    assert {t: (r.status, r.rows) for t, r in res.items()} == {
+        "col": ("loaded", 2), "feed": ("loaded", 2)
+    }
+    assert (store.get("col"), store.get("feed")) == ("4", "1")
+    for t in ("col", "feed"):
+        sink = spark.read.parquet(str(tmp_path / "sink" / t))
+        assert sorted(r.id for r in sink.collect()) == [1, 4]
+        quar = spark.read.parquet(str(tmp_path / "sink" / f"{t}_quarantine"))
+        assert sorted((r.id, tuple(r._violated)) for r in quar.collect()) == [
+            (2, ("unique(id)",)), (2, ("unique(id)",)), (3, ("not_null(v)",))
+        ]

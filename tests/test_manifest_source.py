@@ -97,6 +97,27 @@ def test_stream_feed_delivers_only_new_versions(spark, tmp_path):
     assert run_once().count() == 10
 
 
+def test_available_now_drain_is_one_batch(spark, tmp_path):
+    """The source has no admission control, so availableNow falls back
+    to Trigger.Once: one drain over several committed versions delivers
+    every row in a single micro-batch."""
+    t = str(tmp_path / "t")
+    commit(_frame(spark, 5, "a"), t)
+    commit(_frame(spark, 3, "b", base=50), t, mode="append")
+    commit(_frame(spark, 2, "c", base=90), t, mode="append")
+    assert read_manifest(t)["version"] == 3
+    q = (
+        spark.readStream.format("manifest_table").option("path", t).load()
+        .writeStream.format("memory").queryName("one_batch_drain")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    batches = [(p.batchId, p.numInputRows) for p in q.recentProgress]
+    assert batches == [(0, 10)]
+    assert spark.table("one_batch_drain").count() == 10
+
+
 def test_stream_feed_starting_version(spark, tmp_path):
     t = str(tmp_path / "t")
     commit(_frame(spark, 5, "a"), t)

@@ -47,7 +47,7 @@ def test_incremental_golden_path(spark, sf_dir, tmp_path, split_source):
 
     # run 1: initial (full) load of batch-1
     r1 = pipe.run()
-    assert [x.status for x in r1] == ["loaded"]
+    assert [(x.status, x.rows) for x in r1] == [("loaded", 1000)]
     sink = lambda: spark.read.parquet(str(tmp_path / "sink" / "orders"))
     assert sink().count() == 1000
     assert store.get("orders") == "999"
@@ -59,7 +59,7 @@ def test_incremental_golden_path(spark, sf_dir, tmp_path, split_source):
 
     # run 2: copies ONLY the delta (strict >)
     r2 = pipe.run()
-    assert [x.status for x in r2] == ["loaded"]
+    assert [(x.status, x.rows) for x in r2] == [("loaded", orders.count() - 1000)]
     assert sink().count() == orders.count()
     assert sink().select("o_orderkey").distinct().count() == orders.count()
     assert store.get("orders") == str(orders.agg(F.max("o_orderkey")).first()[0])
@@ -515,7 +515,7 @@ def test_pipeline_version_feed_from_manifest(spark, sf_dir, tmp_path):
     store = WatermarkStore(tmp_path / "wm.json")
     pipe = IncrementalPipeline(spark, spec, store)
     r1 = pipe.run()[0]
-    assert r1.status == "loaded" and r1.new_watermark == 2
+    assert (r1.status, r1.rows, r1.new_watermark) == ("loaded", 1000, 2)
     sink = lambda: spark.read.parquet(str(tmp_path / "sink" / "orders"))
     assert sink().count() == 1000
     assert store.get("orders") == "2"
@@ -529,7 +529,9 @@ def test_pipeline_version_feed_from_manifest(spark, sf_dir, tmp_path):
     # new data arrives; only the delta is read and loaded
     mcommit(orders.filter(F.col("o_orderkey") >= 1000), src_t, mode="append")
     r3 = pipe.run()[0]
-    assert r3.status == "loaded" and r3.new_watermark == 4
+    assert (r3.status, r3.rows, r3.new_watermark) == (
+        "loaded", orders.count() - 1000, 4
+    )
     assert sink().count() == orders.count()
     assert sink().select("o_orderkey").distinct().count() == orders.count()
 
@@ -958,9 +960,12 @@ def _jobs_of(spark, fn):
 def test_run_table_job_counts(spark, tmp_path):
     """The eager batch checkpoint is the only job that reads a column
     watermark batch before the sink write (its Observation carries the
-    empty gate and the watermark max), and the manifest content fence
-    decides from the delta it wrote. Upper bounds on the jobs of one
-    run_table call, 1000 + 1000 rows landed as parquet."""
+    empty gate, the watermark max and the expectation counts), a
+    source whose first file is unchanged runs no schema inference, the
+    parquet sink's key scan infers nothing either, and the manifest
+    content fence decides from the delta it wrote. Upper bounds on the
+    jobs of one run_table call, 1000 + 1000 rows landed as parquet."""
+    from etl_data_pipeline_spark.expectations import Expectation
     from etl_data_pipeline_spark.sinks.manifest import read_manifest
 
     src = str(tmp_path / "src")
@@ -974,37 +979,49 @@ def test_run_table_job_counts(spark, tmp_path):
         name="mm", merge_keys=("id",), sink_format="manifest",
         sink_options=sink, **common,
     )
+    # x = id % 7, so x in {5, 6} fails: 285 rows of each landing
+    dm = TableSpec(
+        name="dm", sink_options=sink,
+        expectations=(Expectation.in_range("x", hi=4),),
+        expectations_mode="drop", **common,
+    )
 
     def land(t, lo):
         batch = spark.range(lo, lo + 1000).withColumn("x", F.col("id") % 7)
         batch.write.mode("append").parquet(os.path.join(src, f"{t.name}.parquet"))
 
     store = WatermarkStore(tmp_path / "wm.json")
-    pipe = IncrementalPipeline(spark, PipelineSpec(tables=[plain, pm, mm]), store)
+    pipe = IncrementalPipeline(
+        spark, PipelineSpec(tables=[plain, pm, mm, dm]), store
+    )
 
-    def run(t, status, max_jobs):
+    def run(t, status, max_jobs, rows):
         r, jobs = _jobs_of(spark, lambda: pipe.run_table(t))
-        assert r.status == status, (t.name, r)
+        assert (r.status, r.rows) == (status, rows), (t.name, r)
         assert jobs <= max_jobs, (t.name, status, jobs)
         return r
 
     land(plain, 0)
-    run(plain, "loaded", 3)
-    run(plain, "skipped_empty", 2)
+    run(plain, "loaded", 3, 1000)  # the first read infers the schema
+    run(plain, "skipped_empty", 1, 0)
     assert store.get("plain") == "999"
-    for t in (pm, mm):
+    for t in (pm, mm, dm):
         land(t, 0)
         assert pipe.run_table(t).status == "loaded"
         land(t, 1000)
-    run(pm, "loaded", 5)
-    run(mm, "loaded", 4)
+    # AQE runs a content fence's anti-join as 2 or 3 jobs
+    run(pm, "loaded", 4, 1000)
+    run(mm, "loaded", 4, 1000)
+    run(dm, "loaded", 4, 1000 - 285)  # + the quarantine write
+    run(dm, "skipped_empty", 1, 0)
     mm_dir = str(tmp_path / "sink" / "mm")
     version = read_manifest(mm_dir)["version"]
     store.clear("mm")  # full replay: every row already landed
-    run(mm, "loaded", 5)
+    run(mm, "loaded", 5, 2000)
     assert read_manifest(mm_dir)["version"] == version
     assert spark.read.parquet(str(tmp_path / "sink" / "pm")).count() == 2000
-    assert store.get("pm") == store.get("mm") == "1999"
+    assert spark.read.parquet(str(tmp_path / "sink" / "dm")).count() == 2000 - 570
+    assert store.get("pm") == store.get("mm") == store.get("dm") == "1999"
 
 
 def test_empty_batch_over_zero_partitions_skips(spark, tmp_path):

@@ -78,6 +78,49 @@ def test_read_parquet_if_exists_corrupt_sink_raises(spark):
         assert "PATH_NOT_FOUND" not in str(exc.value)
 
 
+def _data_files(path):
+    return sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+
+
+def test_idempotent_append_scans_keys_without_inference(spark, tmp_path):
+    """The sink's key scan reads with the batch's key schema: no
+    inference job, and a replayed key is still skipped."""
+    from tests.test_pipeline import _jobs_of
+
+    path = str(tmp_path / "t")
+    df = spark.range(4).select(F.col("id").alias("k"), F.lit("a").alias("v"))
+    idempotent_append_parquet(spark, df.filter("k < 2"), "t", {"path": path}, ("k",))
+    _, jobs = _jobs_of(
+        spark,
+        lambda: idempotent_append_parquet(spark, df, "t", {"path": path}, ("k",)),
+    )
+    assert jobs <= 3  # the anti-join's AQE stages; no parquet inference
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == [0, 1, 2, 3]
+
+
+def test_idempotent_append_into_sink_without_key_column_raises(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(3).withColumnRenamed("id", "other").write.parquet(path)
+    before = _data_files(path)
+    df = spark.range(3).withColumnRenamed("id", "k")
+    with pytest.raises(Exception, match="k"):
+        idempotent_append_parquet(spark, df, "t", {"path": path}, ("k",))
+    assert _data_files(path) == before
+
+
+def test_idempotent_append_key_type_clash_raises(spark, tmp_path):
+    """Sink keys are strings, the batch's are bigint: the key scan
+    cannot read them as the batch's type, and the append fails whole."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([("1",), ("2",)], "k string").write.parquet(path)
+    before = _data_files(path)
+    df = spark.range(5).withColumnRenamed("id", "k")
+    with pytest.raises(Exception):
+        idempotent_append_parquet(spark, df, "t", {"path": path}, ("k",))
+    assert _data_files(path) == before
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == ["1", "2"]
+
+
 def test_upsert_aborts_on_corrupt_sink(spark):
     df = spark.range(3).withColumnRenamed("id", "k")
     with tempfile.TemporaryDirectory() as tmp:
