@@ -48,7 +48,6 @@ from etl_data_pipeline_spark.expectations import (
     ExpectationError,
     ExpectationReport,
     _marked,
-    check_expectations,
     violation_metrics,
 )
 from etl_data_pipeline_spark.functions.caching import free_checkpoint
@@ -507,17 +506,15 @@ class IncrementalPipeline:
             self.store.set(t.name, new_wm)
         return TableRunResult(t.name, "loaded", rows=rows, new_watermark=new_wm)
 
-    def _apply_expectations(self, t: TableSpec, df, batch_wm=None, observed=None):
+    def _apply_expectations(self, t: TableSpec, df, batch_wm, observed: dict):
         """Run the declarative quality gate (expectations.py) on the
         batch. 'fail' raises with per-rule counts (the table fails
         isolated, watermark frozen → retry after upstream fix); 'drop'
         quarantines violating rows to parquet beside the sink and
         returns the clean subset (None when nothing passed).
 
-        In a pipeline run ``df`` is the marked, checkpointed batch and
-        ``observed`` its violation metrics, so the gate only splits it.
-        Without ``observed``, ``df`` is a plain batch that
-        check_expectations marks and counts itself.
+        ``df`` is the marked, checkpointed batch and ``observed`` its
+        violation metrics, so the gate only splits it.
 
         Quarantine writes are IDEMPOTENT per batch: rows land in a
         deterministic ``batch=<stored-watermark>`` subdir in overwrite
@@ -526,10 +523,7 @@ class IncrementalPipeline:
         new rows arrive between a failed sink write and the retry —
         so the replay overwrites the same subdir instead of leaving a
         stale sibling with duplicated violation rows."""
-        if observed is None:
-            report = check_expectations(df, t.expectations)
-        else:
-            report = ExpectationReport.of(df, t.expectations, observed)
+        report = ExpectationReport.of(df, t.expectations, observed)
         if report.ok:
             return report.passed
         if t.expectations_mode == "fail":

@@ -14,6 +14,7 @@ deployment-independent.
 
 from __future__ import annotations
 
+import errno
 import os
 import re
 import threading
@@ -220,12 +221,16 @@ def parquet_first_file(
     return _first_file(path, options or {}, _parquet_conf(spark))
 
 
+def _is_local(path: str) -> bool:
+    """A plain local filesystem path: no URI scheme and no glob."""
+    return ":" not in path and not any(c in path for c in "*?[]{}")
+
+
 def _first_file(path: str, options: dict, conf: tuple) -> str | None:
     if (
         _LISTING_OPTIONS & {k.lower() for k in options}
         or (dict(conf)["spark.sql.parquet.mergeSchema"] or "").lower() == "true"
-        or ":" in path
-        or any(c in path for c in "*?[]{}")
+        or not _is_local(path)
     ):
         return None
     if os.path.isfile(path):
@@ -262,7 +267,14 @@ def read_parquet(
     first, as a landing directory grows, changes nothing Spark would
     infer and reuses the entry; a new first file or a rewritten one
     infers again. Layouts without a single first file infer every
-    time, exactly as before."""
+    time, exactly as before.
+
+    A local ``path`` that does not exist raises ``FileNotFoundError``
+    before any reader is built: handed to Spark, the failed analysis
+    would also reach the session's listeners and log a
+    ``PATH_NOT_FOUND`` trace of its own."""
+    if _is_local(path) and not os.path.exists(path):
+        raise FileNotFoundError(errno.ENOENT, "no such parquet source", path)
     options = dict(options or {})
     reader = spark.read.options(**options)
     conf = _parquet_conf(spark)

@@ -21,6 +21,17 @@ no missing-path window, with no reader-side locking.
                                      "dirs": [...], "schema": {...}, ...}
       MANIFEST.json.lease         <- writer serialization (flock + fence)
 
+A manifest (the pointer and every snapshot) is one JSON object:
+``version`` (int), ``dirs`` (delta directories relative to the table),
+``schema`` (ordered column -> Spark simpleString type), ``fence``
+(the writer's fencing token), ``delta_rows`` and ``total_rows`` (row
+counts from parquet footers), and, only when set, ``partition_by``,
+``data_change: false`` (a layout-only commit) and ``txn`` ({app_id:
+highest committed version}). There is one format: every read of a
+manifest file rejects one without ``version``, ``dirs``, ``schema``
+or ``total_rows`` with a ``ValueError`` naming the table and the
+missing keys, before any data is read or written.
+
 **Append is O(delta), not O(table)**: an append commit writes ONLY the
 incoming rows as a new delta directory and publishes a manifest whose
 ``dirs`` list is the previous list plus that directory — the Delta/
@@ -68,6 +79,8 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_data_pipeline_spark.sinks import _validate_batch_keys, writer_lease
 
 MANIFEST = "MANIFEST.json"
+# the one suffix of every manifest temp, which vacuum sweeps
+_TMP_SUFFIX = ".manifest.tmp"
 
 
 class FeedBrokenError(ValueError):
@@ -102,13 +115,23 @@ def _snapshot_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, "_manifests", f"v{version:08d}.json")
 
 
-def _normalize(m: dict | None) -> dict | None:
-    """Accept both manifest formats: a legacy (first-cut) manifest
-    records a single ``dir``; current manifests record a ``dirs``
-    list."""
-    if m is not None and "dirs" not in m and "dir" in m:
-        m = dict(m)
-        m["dirs"] = [m.pop("dir")]
+_REQUIRED_KEYS = ("version", "dirs", "schema", "total_rows")
+
+
+def _load(path: str, table_dir: str) -> dict:
+    """One manifest file — the pointer or a version snapshot — checked
+    against the format :func:`_publish` writes. A manifest is on-disk
+    input the program does not control, so one outside the format is
+    a ``ValueError`` naming the table and the missing keys, never a
+    ``KeyError`` from deep inside a read or a commit."""
+    with open(path) as f:
+        m = json.load(f)
+    missing = [k for k in _REQUIRED_KEYS if not isinstance(m, dict) or m.get(k) is None]
+    if missing:
+        raise ValueError(
+            f"{path!r} of manifest table {table_dir!r} is not a manifest "
+            f"this module writes: missing keys {missing}"
+        )
     return m
 
 
@@ -117,8 +140,7 @@ def read_manifest(table_dir: str) -> dict | None:
     Pure read — no lock: the single-rename publish guarantees any
     reader sees a complete manifest."""
     try:
-        with open(_manifest_path(table_dir)) as f:
-            return _normalize(json.load(f))
+        return _load(_manifest_path(table_dir), table_dir)
     except FileNotFoundError:
         return None
 
@@ -132,11 +154,7 @@ def _check_schema(
 ) -> dict[str, str]:
     """Manifest-only append compatibility check (no data files read).
     Returns the merged schema the new version records."""
-    prev = cur.get("schema")
-    if prev is None:
-        # legacy manifest without a recorded schema: derive from data
-        spark = df.sparkSession
-        prev = _schema_of(spark.read.parquet(os.path.join(table_dir, cur["dirs"][-1])))
+    prev = cur["schema"]
     new = _schema_of(df)
     conflicts = {
         c: (prev[c], new[c]) for c in new if c in prev and prev[c] != new[c]
@@ -208,7 +226,7 @@ def commit(
     2. write the delta to _versions/v{n+1} — a failure here leaves an
        orphan directory and an UNCHANGED manifest (vacuum cleans it)
     3. write the version snapshot to _manifests/v{n+1}.json (fsynced)
-    4. write the pointer to a temp file, fsync, single os.replace onto
+    4. write the pointer the same way, a single os.replace onto
        MANIFEST.json — the commit point; crash before it = no commit,
        after it = committed. Readers never observe an intermediate
        state.
@@ -254,7 +272,7 @@ def _commit_locked(
     if merge_keys:
         keys = list(merge_keys)
         prev_keys = _read_dirs(
-            df.sparkSession, table_dir, cur["dirs"], cur.get("schema")
+            df.sparkSession, table_dir, cur["dirs"], cur["schema"]
         ).select(*keys).distinct()
         out = df.join(prev_keys, on=keys, how="left_anti")
     # write first, then count: the anti-joined delta is evaluated once,
@@ -336,14 +354,11 @@ def _publish(
     delta that wrote no rows is removed and ``cur`` returned: nothing
     is published.
 
-    The first commit to a legacy table backfills its version
-    snapshots, so its time travel survives. A crash before the pointer
-    swap leaves an orphan directory and an unchanged manifest (the
-    next commit of this version clears it).
+    A crash before the pointer swap leaves an orphan directory and an
+    unchanged manifest (the next commit of this version clears it).
     Row counts come from parquet footers: ``delta_rows`` is the new
     directory's rows (0 for a layout-only commit), ``total_rows`` the
-    running total, None when a kept directory's rows are unknown (a
-    legacy manifest without a recorded total)."""
+    running total."""
     version = 1 if cur is None else cur["version"] + 1
     rel = os.path.join("_versions", f"v{version:08d}")
     data_dir = os.path.join(table_dir, rel)
@@ -353,19 +368,13 @@ def _publish(
     if skip_empty and delta == 0:
         shutil.rmtree(data_dir, ignore_errors=True)
         return cur
-    if cur is not None and not os.path.isdir(os.path.join(table_dir, "_manifests")):
-        _backfill_legacy_snapshots(table_dir, cur)
-    prev_total = (cur or {}).get("total_rows")
     manifest = {"version": version, "dirs": kept + [rel], "schema": schema, "fence": fence}
     if parts:
         manifest["partition_by"] = list(parts)
     manifest["delta_rows"] = delta if data_change else 0
-    if not kept:
-        manifest["total_rows"] = delta
-    else:
-        manifest["total_rows"] = (
-            None if prev_total is None else prev_total - dropped_rows + delta
-        )
+    manifest["total_rows"] = (
+        cur["total_rows"] - dropped_rows if kept else 0
+    ) + delta
     if not data_change:
         # layout-only commit (compaction): logically the same rows —
         # the change feed skips it instead of re-emitting the table
@@ -376,67 +385,38 @@ def _publish(
     # _versions/ dirent naming the new directory (losing that to a
     # power cut while MANIFEST.json survived would orphan the commit)
     _fsync_tree(data_dir)
-    pfd = os.open(os.path.dirname(data_dir), os.O_RDONLY)
-    try:
-        os.fsync(pfd)
-    finally:
-        os.close(pfd)
+    _fsync_path(os.path.dirname(data_dir))
     payload = json.dumps(manifest)
     # immutable snapshot first (time travel), then the pointer swap
     snap = _snapshot_path(table_dir, version)
     os.makedirs(os.path.dirname(snap), exist_ok=True)
     _write_durable(snap, payload)
-    fd, tmp = tempfile.mkstemp(dir=table_dir, suffix=".manifest.tmp")
-    with os.fdopen(fd, "w") as f:
-        f.write(payload)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(table_dir))  # THE commit point: one atomic rename
-    dfd = os.open(table_dir, os.O_RDONLY)
-    try:
-        os.fsync(dfd)  # persist the rename itself across power loss
-    finally:
-        os.close(dfd)
+    _write_durable(_manifest_path(table_dir), payload)  # THE commit point
     return manifest
 
 
-def _backfill_legacy_snapshots(table_dir: str, cur: dict) -> None:
-    """First commit to a legacy (first-cut) table: materialize
-    snapshot files for its existing versions so time travel keeps
-    working once _manifests exists (a legacy version's dirs list is
-    exactly its own full-rewrite directory). Runs once, under the
-    lease."""
-    vdir = os.path.join(table_dir, "_versions")
-    os.makedirs(os.path.join(table_dir, "_manifests"), exist_ok=True)
-    if os.path.isdir(vdir):
-        for entry in sorted(os.listdir(vdir)):
-            m = _VERSION_RE.fullmatch(entry)
-            if m is None:
-                continue
-            v = int(m.group(1))
-            if v > cur["version"]:
-                continue  # crashed-commit orphan, not a version
-            snap = {"version": v, "dirs": [os.path.join("_versions", entry)]}
-            if v == cur["version"]:
-                snap = dict(cur)  # keep fence/txn of the head
-            _write_durable(_snapshot_path(table_dir, v), json.dumps(snap))
-
-
 def _write_durable(path: str, payload: str) -> None:
-    """Write ``path`` atomically (temp + rename) and fsync file and
-    parent dirent."""
+    """Write ``path`` atomically — a ``.manifest.tmp`` temp beside it,
+    fsynced, then one os.replace — and fsync the parent dirent, so the
+    rename itself survives a power loss. A crash leaves at most the
+    temp, which :func:`vacuum` sweeps."""
     d = os.path.dirname(path)
-    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=_TMP_SUFFIX)
     with os.fdopen(fd, "w") as f:
         f.write(payload)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
-    dfd = os.open(d, os.O_RDONLY)
+    _fsync_path(d)
+
+
+def _fsync_path(path: str) -> None:
+    """fsync one file or directory by path."""
+    fd = os.open(path, os.O_RDONLY)
     try:
-        os.fsync(dfd)
+        os.fsync(fd)
     finally:
-        os.close(dfd)
+        os.close(fd)
 
 
 def _dir_rowcount(data_dir: str) -> int:
@@ -461,62 +441,33 @@ def _fsync_tree(path: str) -> None:
     output, not the whole table history."""
     for root, dirs, files in os.walk(path, topdown=False):
         for name in files:
-            fd = os.open(os.path.join(root, name), os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        fd = os.open(root, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
+            _fsync_path(os.path.join(root, name))
+        _fsync_path(root)
 
 
 def _read_dirs(
     spark: SparkSession,
     table_dir: str,
     dirs: list[str],
-    schema: dict[str, str] | None,
+    schema: dict[str, str],
 ) -> DataFrame:
-    """Union the delta directories of one version. Multi-dir versions
-    unionByName with null-fill so post-evolution reads see old deltas
-    null-filled in the evolved columns; the final select pins the
-    manifest's column order.
-
-    When the manifest records a schema, each dir is read WITH it: an
-    inference read would fail outright on a delta dir holding zero
-    parquet files (a committed empty partitioned append writes only
-    _SUCCESS — UNABLE_TO_INFER_SCHEMA), poisoning every later read of
-    the whole table; the recorded schema turns that dir into an empty
-    frame instead. It also pins hive-partition column types at the
-    SCAN instead of directory inference."""
+    """Union the delta directories of one version, each read WITH the
+    version's recorded schema — no inference job, and a delta dir
+    holding zero parquet files (a committed empty partitioned append
+    writes only _SUCCESS) reads as an empty frame instead of failing
+    with UNABLE_TO_INFER_SCHEMA. Multi-dir versions unionByName, so
+    post-evolution reads see old deltas null-filled in the evolved
+    columns; the final select pins the manifest's column order."""
     from pyspark.sql import functions as F
 
-    if schema:
-        ddl = _ddl(schema)
-        frames = [
-            spark.read.schema(ddl).parquet(os.path.join(table_dir, d))
-            for d in dirs
-        ]
-    else:
-        frames = [spark.read.parquet(os.path.join(table_dir, d)) for d in dirs]
-    if len(frames) == 1:
-        out = frames[0]
-    else:
-        out = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-        )
-    if schema:
-        # CAST to the recorded schema, not just select: hive-partition
-        # columns come back with DIRECTORY-INFERRED types (a string
-        # region partition stays string, but '2024-01-01' infers date,
-        # '42' infers int) — the manifest's recorded type is the
-        # contract
-        out = out.select(
-            *[F.col(c).cast(t).alias(c) for c, t in schema.items()]
-        )
-    return out
+    ddl = _ddl(schema)
+    frames = [spark.read.schema(ddl).parquet(os.path.join(table_dir, d)) for d in dirs]
+    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    # CAST to the recorded schema, not just select: hive-partition
+    # columns come back with DIRECTORY-INFERRED types (a string region
+    # partition stays string, but '2024-01-01' infers date, '42' infers
+    # int) — the manifest's recorded type is the contract
+    return out.select(*[F.col(c).cast(t).alias(c) for c, t in schema.items()])
 
 
 def _range_disjoint(rng, lo, hi) -> bool:
@@ -608,37 +559,23 @@ def read_table(
                 if bound is not None:
                     term = getattr(F.col(c), op)(F.lit(bound))
                     cond = term if cond is None else (cond & term)
-        if not dirs and m.get("schema"):
-            # every dir pruned: an empty frame with the table schema
-            ddl = _ddl(m["schema"])
-            empty = spark.createDataFrame([], ddl)
-            return empty.filter(cond) if cond is not None else empty
-        if not dirs:
-            dirs = m["dirs"]  # legacy table without recorded schema:
-            # cannot synthesize an empty typed frame — skip pruning
-    out = _read_dirs(spark, table_dir, dirs, m.get("schema"))
+    if dirs:
+        out = _read_dirs(spark, table_dir, dirs, m["schema"])
+    else:  # every dir pruned: an empty frame with the table schema
+        out = spark.createDataFrame([], _ddl(m["schema"]))
     return out.filter(cond) if cond is not None else out
 
 
 def _load_snapshot(table_dir: str, version: int, cur: dict) -> dict:
     """Version snapshot, or the current manifest for the head; raises
-    a 'vacuumed' error when retention dropped it. The legacy fallback
-    (first-cut tables: full-rewrite dirs named after their version, no
-    snapshot files) applies ONLY when the table has no _manifests
-    directory at all — in a dir-list table a data dir named v{N} can
-    outlive version N's snapshot (it stays referenced by newer
-    versions), so its existence must not masquerade as the snapshot."""
+    a 'vacuumed' error when retention dropped it. A data dir named
+    v{N} can outlive version N's snapshot (newer versions still
+    reference it), so only the snapshot file answers for version N."""
     if version == cur["version"]:
         return cur
     try:
-        with open(_snapshot_path(table_dir, version)) as f:
-            return _normalize(json.load(f))
+        return _load(_snapshot_path(table_dir, version), table_dir)
     except FileNotFoundError:
-        legacy = os.path.join("_versions", f"v{version:08d}")
-        if not os.path.isdir(
-            os.path.join(table_dir, "_manifests")
-        ) and os.path.isdir(os.path.join(table_dir, legacy)):
-            return {"version": version, "dirs": [legacy], "schema": None}
         raise VacuumedError(
             f"version {version} of {table_dir!r} was vacuumed"
         ) from None
@@ -694,12 +631,7 @@ def read_changes(
     if not by_version:
         # empty feed with the bound version's schema, so downstream
         # unions and writes see stable columns
-        if schema:
-            out = spark.createDataFrame([], _ddl(schema))
-        else:
-            out = _read_dirs(
-                spark, table_dir, read_manifest(table_dir)["dirs"], None
-            ).limit(0)
+        out = spark.createDataFrame([], _ddl(schema))
         if version_column:
             out = out.withColumn(version_column, F.lit(None).cast("long"))
         return out
@@ -723,7 +655,7 @@ def read_changes(
 
 def plan_changes(
     table_dir: str, since_version: int, until_version: int | None = None
-) -> tuple[list[tuple[int, list[str]]], dict[str, str] | None]:
+) -> tuple[list[tuple[int, list[str]]], dict[str, str]]:
     """The change feed's plan over versions (since, until]: the delta
     directories each data-changing version added, as ``[(version,
     dirs)]`` in commit order, and the table schema as of ``until``
@@ -775,11 +707,7 @@ def plan_changes(
         prev = dirs
     # column set AS OF the feed's upper bound — cur's schema may have
     # evolved past `head`, and those columns don't exist in the fed dirs
-    schema = (
-        cur.get("schema")
-        if head == 0
-        else _load_snapshot(table_dir, head, cur).get("schema")
-    )
+    schema = (cur if head == 0 else _load_snapshot(table_dir, head, cur))["schema"]
     return by_version, schema
 
 
@@ -1089,7 +1017,7 @@ def compact(
                 )
         n_files = max(1, -(-total // target_file_bytes))  # ceil division
         parts = tuple(cur.get("partition_by") or ())
-        df = _read_dirs(spark, table_dir, cur["dirs"], cur.get("schema"))
+        df = _read_dirs(spark, table_dir, cur["dirs"], cur["schema"])
         # cluster by partition columns so the fold yields few files per
         # partition, and PRESERVE the table's layout property
         df = df.repartition(n_files, *parts) if parts else df.repartition(n_files)
@@ -1099,27 +1027,19 @@ def compact(
         )
 
 
-def vacuum(
-    table_dir: str, keep_last: int = 2, staging_ttl_secs: float = 24 * 3600
-) -> list[int]:
+def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
     """Reclaim history past retention: drop version snapshots older
     than the newest ``keep_last``, then delete every delta directory
     NO retained version references (versions share dirs, so age alone
     never justifies deletion), plus crashed-commit debris — dirs and
     snapshots numbered ABOVE the current version (under the lease no
     commit is in flight, so anything above current is provably
-    garbage), stray ``.manifest.tmp`` files, and ``_staging`` spool
-    files older than ``staging_ttl_secs`` (earlier releases shipped an
-    executor-side DataSource writer that spooled parquet into
-    ``_staging`` before its commit; a crashed job leaked them on
-    existing tables, and an AGE threshold — not existence — kept live
-    spools, which were written without the lease, safe). Returns the
-    dropped COMMITTED version numbers."""
+    garbage) and stray ``.manifest.tmp`` files beside the pointer and
+    the snapshots. Returns the dropped COMMITTED version numbers."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1: the live version is never vacuumed")
-    mpath = _manifest_path(table_dir)
     removed: list[int] = []
-    with writer_lease(mpath):
+    with writer_lease(_manifest_path(table_dir)):
         cur = read_manifest(table_dir)
         if cur is None:
             return removed
@@ -1127,26 +1047,20 @@ def vacuum(
         # 1. drop out-of-retention (and orphaned future) snapshots
         mdir = os.path.join(table_dir, "_manifests")
         retained: list[dict] = [cur]
-        if os.path.isdir(mdir):
-            for entry in sorted(os.listdir(mdir)):
-                m = re.fullmatch(r"v(\d{8})\.json", entry)
-                if m is None:
-                    continue  # debris: never wedge retention on it
-                v = int(m.group(1))
-                if v < cutoff or v > cur["version"]:
-                    os.unlink(os.path.join(mdir, entry))
-                    if v < cutoff:
-                        removed.append(v)
-                elif v != cur["version"]:
-                    with open(os.path.join(mdir, entry)) as f:
-                        retained.append(_normalize(json.load(f)))
+        for entry in sorted(os.listdir(mdir)):
+            m = re.fullmatch(r"v(\d{8})\.json", entry)
+            if m is None:
+                continue  # debris: never wedge retention on it
+            v = int(m.group(1))
+            if v < cutoff or v > cur["version"]:
+                os.unlink(os.path.join(mdir, entry))
+                if v < cutoff:
+                    removed.append(v)
+            elif v != cur["version"]:
+                retained.append(_load(os.path.join(mdir, entry), table_dir))
         # 2. delete data dirs no retained version references
         referenced = {d for m in retained for d in m["dirs"]}
         vdir = os.path.join(table_dir, "_versions")
-        legacy_retained = {  # legacy tables: dir name IS the version
-            os.path.join("_versions", f"v{v:08d}")
-            for v in range(max(1, cutoff), cur["version"] + 1)
-        }
         for entry in sorted(os.listdir(vdir)):
             # strict name match: stray non-version entries (editor
             # backups, operator debris like 'v1.bak') are skipped, not
@@ -1155,7 +1069,7 @@ def vacuum(
             if _VERSION_RE.fullmatch(entry) is None:
                 continue
             rel = os.path.join("_versions", entry)
-            if rel not in referenced and rel not in legacy_retained:
+            if rel not in referenced:
                 shutil.rmtree(os.path.join(vdir, entry))
                 v = int(entry[1:])
                 if v < cutoff and v not in removed:
@@ -1172,28 +1086,9 @@ def vacuum(
                                 os.unlink(os.path.join(sdir, s))
                             except FileNotFoundError:
                                 pass
-        for entry in os.listdir(table_dir):
-            if entry.endswith(".manifest.tmp"):
-                os.unlink(os.path.join(table_dir, entry))
-        staging = os.path.join(table_dir, "_staging")
-        if os.path.isdir(staging):
-            import time as _time
-
-            horizon = _time.time() - staging_ttl_secs
-            for entry in os.listdir(staging):
-                p = os.path.join(staging, entry)
-                try:
-                    if os.path.getmtime(p) < horizon:
-                        # operator debris can be a DIRECTORY (e.g. a
-                        # write pointed into _staging); a bare unlink
-                        # would raise and wedge retention on this
-                        # entry forever — the same single-debris rule
-                        # the _versions/_manifests sweeps follow
-                        if os.path.isdir(p):
-                            shutil.rmtree(p, ignore_errors=True)
-                        else:
-                            os.unlink(p)
-                except OSError:
-                    pass  # a writer just cleaned it up itself / EPERM:
-                    # never let one entry abort the sweep
+        # 3. temps of crashed pointer and snapshot writes
+        for d in (table_dir, mdir):
+            for entry in os.listdir(d):
+                if entry.endswith(_TMP_SUFFIX):
+                    os.unlink(os.path.join(d, entry))
     return sorted(set(removed))

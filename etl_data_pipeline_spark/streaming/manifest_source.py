@@ -224,7 +224,7 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
         if hi <= lo:
             return []
         by_version, schema = plan_changes(self.table_dir, lo, hi)
-        want = _arrow_schema_for(schema or {})
+        want = _arrow_schema_for(schema)
         return [
             _FilePartition(f, want, pv)
             for _v, dirs in by_version
@@ -255,10 +255,10 @@ class ManifestTableDataSource(DataSource):
         from etl_data_pipeline_spark.sinks.manifest import _ddl, read_manifest
 
         cur = read_manifest(_table_path(self.options))
-        if cur is None or not cur.get("schema"):
+        if cur is None:
             raise ValueError(
                 f"{FORMAT_NAME}: cannot infer schema — table has no committed "
-                f"manifest schema (pass .schema(...) explicitly)"
+                f"manifest (pass .schema(...) explicitly)"
             )
         return _ddl(cur["schema"])
 

@@ -172,43 +172,42 @@ def test_referential_is_broadcast_no_fact_shuffle(spark, sf_dir):
 
 
 def test_drop_mode_quarantine_replay_is_idempotent(spark, tmp_path):
-    """Sink write fails AFTER the quarantine write -> whole batch
-    replays (watermark untouched). The quarantine write is keyed on
-    the batch's FROZEN stored watermark (lower bound) — stable even
-    when new rows arrive before the replay and change the batch's
-    upper bound — so the replay overwrites the same batch=* subdir
-    instead of leaving a stale sibling with duplicated rows."""
+    """The quarantine write is keyed on the batch's FROZEN stored
+    watermark (its lower bound), never on its upper bound, so a batch
+    that replays after new rows arrived overwrites the same batch=*
+    subdir instead of leaving a stale sibling with duplicated rows. A
+    full-load table's key is always ``full``: its second run, over a
+    source that gained a bad row, is exactly such a replay."""
     src = tmp_path / "src"; src.mkdir()
     sinkd = tmp_path / "sink"
     spark.createDataFrame(
         [(1, 5.0), (2, -1.0), (3, 7.0)], "id long, amount double"
     ).write.parquet(str(src / "orders.parquet"))
-    store = WatermarkStore(tmp_path / "wm.json")
-    rules = (Expectation.in_range("amount", lo=0.0),)
-    pipe = IncrementalPipeline(spark, _spec(src, sinkd, "drop", rules), store)
-    t = pipe.spec.tables[0]
-    df = spark.read.parquet(str(src / "orders.parquet"))
-    # two "replays" of the same batch: the stored watermark (lower
-    # bound, here None -> "full") is the subdir key both times
-    pipe._apply_expectations(t, df, batch_wm=None)
-    # simulate a new bad row arriving between failure and replay: the
-    # replayed batch now includes it, but the key is unchanged
-    df2 = df.union(
-        spark.createDataFrame([(4, -9.0)], "id long, amount double")
+    t = TableSpec(
+        name="orders",
+        source_format="parquet",
+        source_options={"dir": str(src)},
+        sink_format="parquet",
+        sink_options={"dir": str(sinkd)},
+        expectations=(Expectation.in_range("amount", lo=0.0),),
+        expectations_mode="drop",
     )
-    pipe._apply_expectations(t, df2, batch_wm=None)
+    store = WatermarkStore(tmp_path / "wm.json")
+    pipe = IncrementalPipeline(spark, PipelineSpec(tables=[t]), store)
+    r = pipe.run_table(t)
+    assert (r.status, r.rows) == ("loaded", 2)
+    spark.createDataFrame([(4, -9.0)], "id long, amount double") \
+        .write.mode("append").parquet(str(src / "orders.parquet"))
+    r = pipe.run_table(t)
+    assert (r.status, r.rows) == ("loaded", 2)  # 4 read, 2 quarantined
     quar = spark.read.parquet(str(sinkd / "orders_quarantine"))
     assert sorted(r.id for r in quar.collect()) == [2, 4]  # no duplicates
-    import os as _os
     subdirs = [
-        d for d in _os.listdir(sinkd / "orders_quarantine")
+        d for d in os.listdir(sinkd / "orders_quarantine")
         if d.startswith("batch=")
     ]
     assert subdirs == ["batch=full"]  # one subdir, not one per replay
-    # and the real pipeline run still loads/advances as before
-    res = pipe.run()
-    assert res[0].status == "loaded"
-    assert store.get("orders") == "3"
+    assert store.get("orders") is None  # a full load records no watermark
 
 
 def test_upsert_static_txn_rejected(spark, tmp_path):

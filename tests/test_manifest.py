@@ -333,7 +333,8 @@ def test_txn_fence_is_exactly_once(spark, tmp_path):
 
 def test_vacuum_skips_nonversion_debris(spark, tmp_path):
     """Operator debris in _versions (v1.bak, editor backups) must be
-    skipped, not ValueError-crash retention enforcement forever."""
+    skipped, not ValueError-crash retention enforcement forever; the
+    temps of crashed pointer and snapshot writes are swept."""
     t = str(tmp_path / "t")
     for n in (1, 2, 3, 4):
         commit(_frame(spark, n, "w"), t)
@@ -341,9 +342,17 @@ def test_vacuum_skips_nonversion_debris(spark, tmp_path):
     os.makedirs(os.path.join(vdir, "v00000001.bak"))
     with open(os.path.join(vdir, "vnotes.txt"), "w") as f:
         f.write("debris")
+    temps = [
+        os.path.join(t, "tmpa1b2.manifest.tmp"),
+        os.path.join(t, "_manifests", "tmpc3d4.manifest.tmp"),
+    ]
+    for p in temps:
+        with open(p, "w") as f:
+            f.write("{")
     removed = vacuum(t, keep_last=2)
     assert removed == [1, 2]
     assert os.path.isdir(os.path.join(vdir, "v00000001.bak"))  # untouched
+    assert not any(os.path.exists(p) for p in temps)
     assert read_table(spark, t).count() == 4
 
 
@@ -407,50 +416,6 @@ def test_append_writes_only_the_delta(spark, tmp_path):
     delta_only = spark.read.parquet(os.path.join(t, m["dirs"][-1]))
     assert delta_only.count() == 7  # not 1007
     assert read_table(spark, t).count() == 1007
-
-
-def _legacy_append(spark, t):
-    return commit(_frame(spark, 3, "c"), t, mode="append")
-
-
-def _legacy_merge(spark, t):
-    # keys 4-5 replace rows of v2, keys 6-8 are new: 9 rows, as the append
-    batch = spark.range(4, 9).select(F.col("id").alias("k"), F.lit("c").alias("v"))
-    return merge_upsert(spark, t, batch, ("k",))
-
-
-@pytest.mark.parametrize(
-    "write, n_dirs",
-    [(_legacy_append, 2), (_legacy_merge, 1)],
-    ids=["commit", "merge_upsert"],
-)
-def test_legacy_single_dir_manifest_still_reads(spark, tmp_path, write, n_dirs):
-    """Tables written by the first-cut manifest format ({'dir': ...},
-    full-rewrite versions, no snapshot files) stay readable, writable
-    and vacuum-able; the first write of either kind (append commit or
-    merge) backfills the legacy snapshots, so time travel survives."""
-    t = str(tmp_path / "t")
-    # hand-build a legacy table: two full-rewrite version dirs + a
-    # single-dir manifest pointing at v2
-    _frame(spark, 4, "a").write.parquet(os.path.join(t, "_versions", "v00000001"))
-    _frame(spark, 6, "b").write.parquet(os.path.join(t, "_versions", "v00000002"))
-    with open(os.path.join(t, "MANIFEST.json"), "w") as f:
-        json.dump(
-            {"version": 2, "dir": os.path.join("_versions", "v00000002"), "fence": 2},
-            f,
-        )
-    assert read_table(spark, t).count() == 6
-    assert read_table(spark, t, version=1).count() == 4  # legacy time travel
-    m3 = write(spark, t)  # schema derived from data
-    assert m3["version"] == 3 and len(m3["dirs"]) == n_dirs
-    assert read_table(spark, t).count() == 9
-    # migration backfilled snapshots: pre-migration time travel survives
-    assert read_table(spark, t, version=1).count() == 4
-    assert read_table(spark, t, version=2).count() == 6
-    removed = vacuum(t, keep_last=2)  # keeps v2 (legacy) + v3
-    assert removed == [1]
-    assert read_table(spark, t).count() == 9
-    assert read_table(spark, t, version=2).count() == 6
 
 
 def test_change_feed_reads_only_the_delta_dirs(spark, tmp_path):
@@ -748,28 +713,6 @@ def test_model_based_random_op_sequence(spark, tmp_path):
             assert feed == want, f"step {step} feed since {since}"
 
 
-def test_vacuum_reclaims_stale_staging_spools(spark, tmp_path):
-    """Crashed writer jobs of earlier releases left _staging parquet
-    on existing tables; vacuum deletes spools past the age threshold
-    but never touches fresh ones."""
-    import time
-
-    t = str(tmp_path / "t")
-    commit(_frame(spark, 3, "a"), t)
-    staging = os.path.join(t, "_staging")
-    os.makedirs(staging)
-    stale = os.path.join(staging, "dead.parquet")
-    fresh = os.path.join(staging, "live.parquet")
-    for p in (stale, fresh):
-        with open(p, "w") as f:
-            f.write("x")
-    old = time.time() - 100_000
-    os.utime(stale, (old, old))
-    vacuum(t, keep_last=2)  # default TTL 24h
-    assert not os.path.exists(stale)
-    assert os.path.exists(fresh)
-
-
 def test_manifest_tracks_row_counts(spark, tmp_path):
     """Audit bookkeeping: per-commit delta_rows (footer metadata, no
     data read) and a running total_rows, for every commit kind that
@@ -887,3 +830,104 @@ def test_read_table_where_prunes_dirs_and_matches_filter(spark, tmp_path):
     none = read_table(spark, t, where={"k": (90_000, 99_000)})
     assert none.count() == 0
     assert set(none.columns) == {"k", "k2"}
+
+
+def test_reads_build_with_no_spark_job(spark, tmp_path):
+    """Every reader builds its frame from the recorded schema: head and
+    time-travel reads, pruned reads and the change feed (empty, plain
+    and version-tagged) run no schema-inference job on a multi-dir,
+    schema-evolved table."""
+    from etl_data_pipeline_spark.sinks.manifest import read_changes
+    from tests.test_pipeline import _jobs_of
+
+    t = str(tmp_path / "t")  # three versions, three dirs, one added column
+    commit(_frame(spark, 4, "a"), t)
+    commit(_frame(spark, 2, "b").withColumn("x", F.lit(1)), t, mode="append",
+           merge_schema=True)
+    commit(_frame(spark, 3, "c").withColumn("x", F.lit(2)), t, mode="append")
+    builds = {
+        "head": lambda: read_table(spark, t),
+        "v1": lambda: read_table(spark, t, version=1),
+        "v2": lambda: read_table(spark, t, version=2),
+        "pruned": lambda: read_table(spark, t, where={"k": 100}),
+        "feed": lambda: read_changes(spark, t, 1),
+        "feed_v": lambda: read_changes(spark, t, 0, version_column="_v"),
+        "feed_empty": lambda: read_changes(spark, t, 3),
+    }
+    frames = {}
+    for name, build in builds.items():
+        frames[name], jobs = _jobs_of(spark, build)
+        assert jobs == 0, name
+    assert frames["head"].columns == ["k", "v", "x"]
+    assert frames["v1"].columns == ["k", "v"]
+    assert frames["head"].count() == 9 and frames["v2"].count() == 6
+    assert frames["pruned"].count() == 0
+    assert frames["feed"].filter("x IS NOT NULL").count() == 5
+    assert frames["feed_v"].groupBy("_v").count().count() == 3
+    assert frames["feed_empty"].columns == ["k", "v", "x"]
+
+
+def _tree(t):
+    """Every file under ``t`` but the writer-lease sidecar, by bytes."""
+    out = {}
+    for root, _dirs, files in os.walk(t):
+        for fn in files:
+            if not fn.endswith(".lease"):
+                p = os.path.join(root, fn)
+                with open(p, "rb") as f:
+                    out[os.path.relpath(p, t)] = f.read()
+    return out
+
+
+def test_first_cut_manifest_is_rejected_untouched(spark, tmp_path):
+    """A manifest outside the one format — here the first-cut
+    {"version", "dir"} form — is a ValueError naming the table and
+    the missing keys from every reader and writer, raised before any
+    data is read, written or deleted."""
+    t = str(tmp_path / "t")
+    _frame(spark, 4, "a").write.parquet(os.path.join(t, "_versions", "v00000001"))
+    _frame(spark, 6, "b").write.parquet(os.path.join(t, "_versions", "v00000002"))
+    with open(os.path.join(t, "MANIFEST.json"), "w") as f:
+        json.dump({"version": 2, "dir": os.path.join("_versions", "v00000002")}, f)
+    before = _tree(t)
+    batch = _frame(spark, 3, "c")
+    for name, call in {
+        "read_table": lambda: read_table(spark, t),
+        "commit": lambda: commit(batch, t, mode="append"),
+        "merge_upsert": lambda: merge_upsert(spark, t, batch, ("k",)),
+        "vacuum": lambda: vacuum(t, keep_last=1),
+    }.items():
+        with pytest.raises(ValueError) as exc:
+            call()
+        msg = str(exc.value)
+        assert t in msg and "['dirs', 'schema', 'total_rows']" in msg, name
+        assert _tree(t) == before, name
+
+
+def test_manifest_key_set_is_stable(spark, tmp_path):
+    """The on-disk keys of a written manifest (readers outside the
+    package parse MANIFEST.json directly): six always, and
+    partition_by, txn and data_change only when set. Each version's
+    snapshot is byte-for-byte its pointer."""
+    from etl_data_pipeline_spark.sinks.manifest import compact
+
+    base = {"version", "dirs", "schema", "fence", "delta_rows", "total_rows"}
+    t = str(tmp_path / "t")
+
+    def keys():
+        with open(os.path.join(t, "MANIFEST.json")) as f:
+            pointer = f.read()
+        m = json.loads(pointer)
+        snap = os.path.join(t, "_manifests", f"v{m['version']:08d}.json")
+        with open(snap) as f:
+            assert f.read() == pointer
+        return set(m)
+
+    commit(_frame(spark, 4, "a"), t)
+    assert keys() == base
+    commit(_frame(spark, 2, "b"), t, mode="append", txn=("app", 0))
+    assert keys() == base | {"txn"}
+    compact(spark, t)
+    assert keys() == base | {"txn", "data_change"}
+    commit(_frame(spark, 3, "c"), t, partition_by=("v",))
+    assert keys() == base | {"txn", "partition_by"}

@@ -433,24 +433,6 @@ def test_empty_merge_batch_with_txn_records_mark(spark, tmp_path):
     assert m3["version"] == m["version"]
 
 
-def test_vacuum_survives_staging_directory_debris(spark, tmp_path):
-    """A DIRECTORY in _staging (operator debris) must not wedge the
-    retention sweep (r9 review: bare unlink raised IsADirectoryError
-    and aborted vacuum forever)."""
-    import time
-
-    td = _table(spark, tmp_path)
-    staging = os.path.join(td, "_staging")
-    os.makedirs(os.path.join(staging, "debris_dir"))
-    with open(os.path.join(staging, "debris_dir", "x.bin"), "w") as f:
-        f.write("junk")
-    old = time.time() - 48 * 3600
-    os.utime(os.path.join(staging, "debris_dir"), (old, old))
-    removed = M.vacuum(td, keep_last=1)
-    assert not os.path.exists(os.path.join(staging, "debris_dir"))
-    assert removed  # versions past retention were actually reclaimed
-
-
 def test_merge_prunes_on_timestamp_keys_via_instants(spark, tmp_path):
     """Timestamp merge keys prune via integer epoch-microsecond
     instants on BOTH sides (footer stats are UTC instants; the batch

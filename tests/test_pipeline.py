@@ -133,6 +133,9 @@ def test_error_isolation(spark, sf_dir, tmp_path):
     ).run()
     by_table = {r.table: r.status for r in results}
     assert by_table == {"missing_table": "failed", "region": "loaded"}
+    # the missing source is named, not buried in a Spark analysis trace
+    missing = next(r for r in results if r.table == "missing_table")
+    assert str(tmp_path / "missing_table.parquet") in missing.error
 
 
 def test_cli_main_reference_contract(spark, sf_dir, tmp_path, monkeypatch, capsys):

@@ -7,6 +7,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from etl_data_pipeline_spark.session import load_table, read_parquet
 from etl_data_pipeline_spark.sources import read_source
@@ -126,3 +127,17 @@ def test_events_ts_is_timestamp_on_a_memo_hit(spark, tmp_path):
         us = df.selectExpr("unix_micros(ts) AS us").first().us
         assert us == 1_700_000_000_123_456
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "false"
+
+
+def test_missing_local_source_raises_before_any_reader(spark, tmp_path):
+    """A local parquet source that does not exist is a FileNotFoundError
+    naming the path, raised before Spark sees it: no job runs, and no
+    failed analysis reaches the session's listeners."""
+
+    def read():
+        with pytest.raises(FileNotFoundError) as exc:
+            read_source(spark, "parquet", "nope", {"dir": str(tmp_path)})
+        return exc.value
+
+    err, jobs = _jobs_of(spark, read)
+    assert (err.filename, jobs) == (os.path.join(str(tmp_path), "nope.parquet"), 0)

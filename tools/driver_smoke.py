@@ -75,7 +75,7 @@ assert statuses["nonexistent"] == "failed" and statuses["region"] == "loaded"
 # 5. manifest round-trip smoke: commit -> read_table -> version-keyed
 # pipeline over the change feed
 from etl_data_pipeline_spark.sinks.manifest import commit as mcommit
-from etl_data_pipeline_spark.sinks.manifest import read_manifest, read_table
+from etl_data_pipeline_spark.sinks.manifest import read_manifest, read_table, vacuum
 
 mt = os.path.join(tmp, "morders")
 src_orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -96,6 +96,9 @@ rv = vpipe.run()
 assert rv[0].status == "loaded" and rv[0].new_watermark == 2, rv
 assert spark.read.parquet(os.path.join(tmp, "down", "morders")).count() == 1500
 assert vpipe.run()[0].status == "skipped_empty"
-print("manifest round-trip: OK (v2, 1500 rows, version-feed caught up)")
+# retention over the same table: v1 is reclaimed, the head time-travels
+assert vacuum(mt, keep_last=1) == [1]
+assert read_table(spark, mt, version=2).count() == 1500
+print("manifest round-trip: OK (v2, 1500 rows, version-feed caught up, vacuumed to v2)")
 
 print("DRIVER SMOKE: ALL OK")
