@@ -167,7 +167,22 @@ class IncrementalPipeline:
           idempotent append WRITES parquet, so csv/json/orc/avro/xml
           with merge_keys would silently produce parquet files under
           the declared format's path (and jdbc would die on a
-          KeyError) — reject the combination loudly instead."""
+          KeyError) — reject the combination loudly instead.
+        - 'txn' in sink_options is rejected: a static (app_id,
+          version) marks every batch after the first as a replay, so
+          the sink silently stops updating while each run reports
+          ``loaded`` and advances the watermark. A txn fence must be
+          per run, which static config cannot express; the pipeline's
+          replay safety comes from merge_keys and merge idempotency."""
+        if "txn" in t.sink_options:
+            raise ValueError(
+                f"table {t.name}: 'txn' in sink_options is static "
+                "per-table config and would fence out every batch "
+                "after the first; manifest appends with merge_keys and "
+                "upsert merges are replay-idempotent without it "
+                "(remove 'txn', or call sinks.manifest.commit or "
+                "merge_upsert directly with a per-run version)"
+            )
         if t.sink_options.get("mode") == "upsert" and (
             t.sink_format != "manifest" or not t.merge_keys
         ):
@@ -601,27 +616,11 @@ class IncrementalPipeline:
         must already be key-unique or merge fails loudly.
 
         ``partition_by`` in sink_options reaches the table's FIRST
-        commit (it is a table property thereafter). A ``txn`` option
-        is rejected: see below."""
+        commit (it is a table property thereafter); a ``txn`` option is
+        rejected up front (:meth:`_validate_sink_config`)."""
         from etl_data_pipeline_spark.sinks.manifest import merge_upsert
 
         opts = t.sink_options
-        if "txn" in opts:
-            # A static (app_id, version) in per-table config would mark
-            # every batch after the first as a replay — _merge_locked
-            # silently skips the merge and the table silently stops
-            # updating. The pipeline's own replay safety comes from
-            # whole-batch compaction + merge idempotency, so a txn
-            # fence here must be PER-RUN, which static config cannot
-            # express. Reject loudly instead of losing data quietly.
-            raise ValueError(
-                f"table {t.name}: 'txn' in sink_options is static "
-                "per-table config and would fence out every batch "
-                "after the first; upsert merges are replay-idempotent "
-                "without it (remove 'txn', or call "
-                "sinks.manifest.merge_upsert directly with a per-run "
-                "version)"
-            )
         partition_by = opts.get("partition_by")
         merge_upsert(
             self.spark,

@@ -170,12 +170,11 @@ def _orc_append(df: DataFrame, table: str, options: dict) -> None:
 
 def _manifest_sink(df: DataFrame, table: str, options: dict) -> None:
     """Append through the manifest-pointer table (sinks/manifest.py):
-    copy-on-write union published by a single-rename commit, so unlike
+    an O(delta) append published by a single-rename commit, so unlike
     the bare parquet append, readers get snapshot isolation and the
-    table carries a version history. ``manifest_mode: overwrite`` in
-    options replaces instead; ``merge_keys`` makes the append
-    replay-idempotent (content fence) and ``txn: (app_id, version)``
-    adds the streaming exactly-once transaction fence."""
+    table carries a version history. ``merge_keys`` makes the append
+    replay-idempotent (content fence); ``partition_by`` reaches the
+    table's first commit."""
     from etl_data_pipeline_spark.sinks.manifest import commit as manifest_commit
 
     merge_keys = options.get("merge_keys")
@@ -183,10 +182,8 @@ def _manifest_sink(df: DataFrame, table: str, options: dict) -> None:
     manifest_commit(
         df,
         _target_path(table, options),
-        mode=options.get("manifest_mode", "append"),
-        merge_schema=bool(options.get("merge_schema", False)),
+        mode="append",
         merge_keys=tuple(merge_keys) if merge_keys else None,
-        txn=options.get("txn"),
         partition_by=tuple(partition_by) if partition_by else None,
     )
 
@@ -812,10 +809,12 @@ def idempotent_append_parquet(
     never the broadcast — the key-only scan of the sink is what keeps
     the build side small). Honest scale bound: the build side grows
     with the SINK's distinct keys; when that no longer fits a hash
-    relation the plan degrades to a shuffled anti-join, and the true
-    at-scale replay fence is the manifest table's ``merge_keys`` /
-    ``txn`` commit (sinks/manifest.py), which skips by key range and
-    transaction mark without scanning keys at all.
+    relation the plan degrades to a shuffled anti-join. The manifest
+    table's ``merge_keys`` commit (sinks/manifest.py) is the same
+    anti-join against the keys of every directory of the current
+    version; only its ``txn`` fence skips a replayed batch without
+    reading any keys, and only ``merge_upsert`` prunes directories by
+    their recorded key ranges.
     """
     path = _target_path(table, options)
     # the lease makes the read-check-append atomic: two concurrent

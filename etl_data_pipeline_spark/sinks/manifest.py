@@ -25,12 +25,16 @@ A manifest (the pointer and every snapshot) is one JSON object:
 ``version`` (int), ``dirs`` (delta directories relative to the table),
 ``schema`` (ordered column -> Spark simpleString type), ``fence``
 (the writer's fencing token), ``delta_rows`` and ``total_rows`` (row
-counts from parquet footers), and, only when set, ``partition_by``,
-``data_change: false`` (a layout-only commit) and ``txn`` ({app_id:
-highest committed version}). There is one format: every read of a
-manifest file rejects one without ``version``, ``dirs``, ``schema``
-or ``total_rows`` with a ``ValueError`` naming the table and the
-missing keys, before any data is read or written.
+counts from parquet footers), ``ranges`` ({dir: {column: [lo, hi]}},
+each delta directory's column min/max from the same footers, which
+merge and read pruning consult), and, only when set,
+``partition_by``, ``data_change: false`` (a layout-only commit) and
+``txn`` ({app_id: highest committed version}). There is one format:
+every read of a manifest file rejects one without ``version``,
+``dirs``, ``schema`` or ``total_rows`` with a ``ValueError`` naming
+the table and the missing keys, before any data is read or written.
+A manifest without ``ranges`` (written before they were recorded)
+reads and commits as any other; its directories are never pruned.
 
 **Append is O(delta), not O(table)**: an append commit writes ONLY the
 incoming rows as a new delta directory and publishes a manifest whose
@@ -67,11 +71,14 @@ so that swap is the only piece to replace.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import math
 import os
 import re
 import shutil
 import tempfile
+from decimal import Decimal
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -356,18 +363,23 @@ def _publish(
 
     A crash before the pointer swap leaves an orphan directory and an
     unchanged manifest (the next commit of this version clears it).
-    Row counts come from parquet footers: ``delta_rows`` is the new
-    directory's rows (0 for a layout-only commit), ``total_rows`` the
-    running total."""
+    Row counts and ranges come from one walk of the new directory's
+    parquet footers: ``delta_rows`` is its rows (0 for a layout-only
+    commit), ``total_rows`` the running total, and ``ranges`` carries
+    the kept directories' entries over from ``cur`` and adds its own."""
     version = 1 if cur is None else cur["version"] + 1
     rel = os.path.join("_versions", f"v{version:08d}")
     data_dir = os.path.join(table_dir, rel)
     shutil.rmtree(data_dir, ignore_errors=True)  # crashed orphan of a failed commit
     write(data_dir)
-    delta = _dir_rowcount(data_dir)
+    delta, delta_ranges = _footer_stats(data_dir, schema)
     if skip_empty and delta == 0:
         shutil.rmtree(data_dir, ignore_errors=True)
         return cur
+    prev = (cur or {}).get("ranges", {})
+    ranges = {d: prev[d] for d in kept if d in prev}
+    if delta_ranges:
+        ranges[rel] = delta_ranges
     manifest = {"version": version, "dirs": kept + [rel], "schema": schema, "fence": fence}
     if parts:
         manifest["partition_by"] = list(parts)
@@ -375,6 +387,7 @@ def _publish(
     manifest["total_rows"] = (
         cur["total_rows"] - dropped_rows if kept else 0
     ) + delta
+    manifest["ranges"] = ranges
     if not data_change:
         # layout-only commit (compaction): logically the same rows —
         # the change feed skips it instead of re-emitting the table
@@ -419,18 +432,138 @@ def _fsync_path(path: str) -> None:
         os.close(fd)
 
 
-def _dir_rowcount(data_dir: str) -> int:
-    """Row count of one delta directory from parquet FOOTERS only —
-    metadata reads, no data pages, driver-side (the dir is one
-    commit's output, not the table)."""
+# the longest string end a range records: a text column's stats would
+# otherwise bloat every manifest (parquet itself drops them past 4 KB)
+_MAX_STAT_CHARS = 256
+
+# Python type of a recordable footer stat per Spark column type, after
+# _norm_stat (timestamps are epoch microseconds); decimals of any
+# precision are Decimal, and other types are never recorded
+_STAT_TYPES = {
+    "tinyint": int, "smallint": int, "int": int, "bigint": int,
+    "timestamp": int, "float": float, "double": float, "boolean": bool,
+    "string": str, "date": dt.date, "timestamp_ntz": dt.datetime,
+}
+
+
+def _stat_type(dtype: str):
+    return Decimal if dtype.startswith("decimal(") else _STAT_TYPES.get(dtype)
+
+
+def _footer_stats(data_dir: str, schema: dict[str, str]) -> tuple[int, dict]:
+    """Row count and column ranges of one delta directory from parquet
+    FOOTERS only — metadata reads, no data pages, driver-side (the dir
+    is one commit's output, not the table).
+
+    The ranges are ``{col: [lo, hi]}`` over every file and row group,
+    as plain JSON scalars (:func:`_encode_stat`), for the top-level
+    columns of ``schema`` whose type ``_STAT_TYPES`` lists or that are
+    decimals. A column is left out, so pruning keeps the dir, when any
+    row group lacks min/max stats or holds a non-finite value or a
+    string end longer than ``_MAX_STAT_CHARS``; binary, nested and
+    hive-partition columns (absent from the files) are never
+    recorded."""
     import pyarrow.parquet as pq
 
-    n = 0
+    rows = 0
+    bounds: dict[str, list] = {}
+    unknown: set[str] = set()
     for root, _dirs, files in os.walk(data_dir):
         for name in files:
-            if name.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(root, name)).metadata.num_rows
-    return n
+            if not name.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(root, name)).metadata
+            rows += md.num_rows
+            groups = [md.row_group(rg) for rg in range(md.num_row_groups)]
+            for i in range(md.num_columns):
+                col = md.schema.column(i)
+                want = _stat_type(schema.get(col.path, ""))
+                if want is None or col.path in unknown:
+                    continue
+                for g in groups:
+                    mm = _minmax(g.column(i), col)
+                    if mm is None or not all(_recordable(v, want) for v in mm):
+                        unknown.add(col.path)
+                        break
+                    b = bounds.setdefault(col.path, list(mm))
+                    b[0], b[1] = min(b[0], mm[0]), max(b[1], mm[1])
+    ranges = {
+        c: [_encode_stat(v) for v in b] for c, b in bounds.items() if c not in unknown
+    }
+    return rows, ranges
+
+
+def _minmax(chunk, col) -> tuple | None:
+    """(min, max) of one column chunk's footer stats through
+    :func:`_norm_stat`; None when the footer has none pyarrow can
+    decode."""
+    from pyarrow import ArrowException
+
+    st = chunk.statistics
+    if st is None or not st.has_min_max:
+        return None
+    if col.logical_type.type == "DECIMAL" and chunk.physical_type in ("INT32", "INT64"):
+        # pyarrow cannot decode int-backed decimal stats: scale the raw
+        # unscaled integers
+        return tuple(Decimal(v).scaleb(-col.scale) for v in (st.min_raw, st.max_raw))
+    try:
+        return _norm_stat(st.min), _norm_stat(st.max)
+    except (ArrowException, ValueError, OverflowError):
+        return None
+
+
+def _norm_stat(v):
+    """Normalize a parquet footer stat for comparison against
+    Spark-side aggregates: footer TIMESTAMP stats come back tz-AWARE
+    (Spark writes isAdjustedToUTC instants) while Spark's F.min/F.max
+    collect as naive session-time values — an aware-vs-naive
+    comparison raises TypeError, silently disabling pruning for every
+    timestamp-keyed merge. Both sides are therefore normalized to the
+    INTEGER epoch-microsecond instant (the batch side via
+    F.unix_micros in _validate_batch_keys): converting either side
+    to a naive wall-clock rendering instead would be WRONG under a
+    non-UTC session timezone (shifted ranges ⇒ a dir wrongly pruned ⇒
+    silent row loss in merges) and ambiguous inside DST folds —
+    integer instants have neither problem. Naive footer timestamps
+    (TIMESTAMP_NTZ columns) stay naive, as the batch's are."""
+    if isinstance(v, dt.datetime) and v.tzinfo is not None:
+        epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+        return (v - epoch) // dt.timedelta(microseconds=1)
+    return v
+
+
+def _recordable(v, want: type) -> bool:
+    if type(v) is not want:
+        return False
+    if want is float:
+        return math.isfinite(v)
+    return want is not str or len(v) <= _MAX_STAT_CHARS
+
+
+def _encode_stat(v):
+    """A recordable stat as a plain JSON scalar: dates and naive
+    timestamps as ISO strings, decimals as their exact string."""
+    if isinstance(v, dt.date):
+        return v.isoformat()
+    return str(v) if isinstance(v, Decimal) else v
+
+
+_DECODE_STAT = {
+    Decimal: Decimal,
+    dt.date: dt.date.fromisoformat,
+    dt.datetime: dt.datetime.fromisoformat,
+}
+
+
+def _recorded_range(m: dict, d: str, col: str) -> tuple | None:
+    """(lo, hi) of ``col`` in delta dir ``d`` as manifest ``m`` records
+    it, decoded by the column's type in ``m``'s schema; None when
+    unrecorded, which keeps the dir."""
+    rng = m.get("ranges", {}).get(d, {}).get(col)
+    if rng is None:
+        return None
+    decode = _DECODE_STAT.get(_stat_type(m["schema"][col]))
+    return tuple(map(decode, rng)) if decode else tuple(rng)
 
 
 def _fsync_tree(path: str) -> None:
@@ -486,25 +619,24 @@ def _range_disjoint(rng, lo, hi) -> bool:
     return False
 
 
-def prune_dirs(
-    table_dir: str, dirs: list[str], ranges: dict[str, tuple]
-) -> list[str]:
-    """Delta directories that can contain rows matching every column
-    range in ``ranges`` ({col: (lo, hi)}, None = unbounded side).
+def prune_dirs(m: dict, ranges: dict[str, tuple]) -> list[str]:
+    """Delta directories of manifest ``m`` that can contain rows
+    matching every column range in ``ranges`` ({col: (lo, hi)}, None =
+    unbounded side).
 
-    Uses the same cached parquet footer min/max sidecar as merge
-    pruning (:func:`_dir_key_range_cached` — driver-side metadata
-    only, computed once per immutable dir). A dir with unknown stats
-    for a column is KEPT: pruning is an optimization, never the
-    correctness boundary. This is what makes z-ordered writes
-    (write_zordered) pay off on the READ side: clustered files give
-    narrow per-dir ranges, so a selective filter touches a strict
+    Reads the per-dir min/max ``m`` records (its ``ranges``, written
+    from the parquet footers when each dir was published), the same
+    ranges merge pruning uses: no file is opened. A dir with no
+    recorded range for a column is KEPT: pruning is an optimization,
+    never the correctness boundary. This is what makes z-ordered
+    writes (write_zordered) pay off on the READ side: clustered files
+    give narrow per-dir ranges, so a selective filter touches a strict
     subset of dirs."""
     return [
         d
-        for d in dirs
+        for d in m["dirs"]
         if not any(
-            _range_disjoint(_dir_key_range_cached(table_dir, d, col), lo, hi)
+            _range_disjoint(_recorded_range(m, d, col), lo, hi)
             for col, (lo, hi) in ranges.items()
         )
     ]
@@ -519,7 +651,7 @@ def read_table(
     """Read the current version (or a pinned one — time travel).
 
     ``where`` ({col: (lo, hi) | scalar}) both PRUNES delta directories
-    via cached footer min/max stats (prune_dirs) and applies the exact
+    by the read version's recorded ranges (prune_dirs) and applies the exact
     row filter to the result, so ``read_table(..., where=w)`` equals
     ``read_table(...)`` filtered — just cheaper: at 100 TB the scan,
     not the merge, dominates, and a selective filter on a z-ordered
@@ -553,7 +685,7 @@ def read_table(
         ranges = {
             c: (v if isinstance(v, tuple) else (v, v)) for c, v in where.items()
         }
-        dirs = prune_dirs(table_dir, dirs, ranges)
+        dirs = prune_dirs(m, ranges)
         for c, (lo, hi) in ranges.items():
             for bound, op in ((lo, "__ge__"), (hi, "__le__")):
                 if bound is not None:
@@ -730,149 +862,6 @@ def history(table_dir: str) -> list[dict]:
     return out
 
 
-# sentinel for "the footers could not be READ" — distinct from "the
-# stats are genuinely absent": the former must never be cached (a
-# transient IO blip would otherwise permanently disable pruning for
-# an immutable dir), the latter is a stable, cacheable fact
-_STATS_READ_FAILED = object()
-
-
-def _norm_stat(v):
-    """Normalize a parquet footer stat for comparison against
-    Spark-side aggregates: footer TIMESTAMP stats come back tz-AWARE
-    (Spark writes isAdjustedToUTC instants) while Spark's F.min/F.max
-    collect as naive session-time values — an aware-vs-naive
-    comparison raises TypeError, silently disabling pruning for every
-    timestamp-keyed merge. Both sides are therefore normalized to the
-    INTEGER epoch-microsecond instant (the batch side via
-    F.unix_micros in _validate_batch_keys): converting either side
-    to a naive wall-clock rendering instead would be WRONG under a
-    non-UTC session timezone (shifted ranges ⇒ a dir wrongly pruned ⇒
-    silent row loss in merges) and ambiguous inside DST folds —
-    integer instants have neither problem. Naive footer timestamps
-    (TIMESTAMP_NTZ files) stay naive: incomparable with the integer ⇒
-    _range_disjoint keeps the dir ⇒ never prunes, never corrupts."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-        return (v - epoch) // _dt.timedelta(microseconds=1)
-    return v
-
-
-def _dir_key_range(table_dir: str, rel_dir: str, column: str):
-    """(min, max) of ``column`` across every parquet footer under one
-    delta directory; None when stats are genuinely absent (missing
-    footer stats, a hive-partition column absent from the files,
-    incomparable stat types); the ``_STATS_READ_FAILED`` sentinel when
-    a footer could not be read at all. Driver-side METADATA reads only
-    (the same footers `_dir_rowcount` uses); no data pages touched."""
-    import pyarrow.parquet as pq
-
-    lo = hi = None
-    for root, _dirs, files in os.walk(os.path.join(table_dir, rel_dir)):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            try:
-                md = pq.ParquetFile(os.path.join(root, fn)).metadata
-            except OSError:
-                return _STATS_READ_FAILED
-            try:
-                idx = md.schema.names.index(column)
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    mn, mx = _norm_stat(st.min), _norm_stat(st.max)
-                    if lo is None or mn < lo:
-                        lo = mn
-                    if hi is None or mx > hi:
-                        hi = mx
-            except (ValueError, TypeError):
-                return None
-    return None if lo is None else (lo, hi)
-
-
-def _dir_key_range_cached(table_dir: str, rel_dir: str, column: str):
-    """:func:`_dir_key_range` behind a per-(dir, column) JSON cache
-    under ``table/_stats/``. Delta directories are IMMUTABLE once
-    published, so a computed range never invalidates — without the
-    cache, every merge re-opens the parquet footers of EVERY directory
-    in the manifest, making merge latency grow with total table age
-    instead of O(new dirs since the last merge) (the Delta/Iceberg
-    answer is stats in the commit metadata; a sidecar keyed by the
-    immutable dir is the same idea retrofitted without a manifest
-    format change). Cache write failures are ignored — the cache is an
-    optimization, never the correctness boundary."""
-    cache_dir = os.path.join(table_dir, "_stats")
-    name = rel_dir.replace(os.sep, "__") + f".{column}.json"
-    cache_path = os.path.join(cache_dir, name)
-    try:
-        with open(cache_path) as f:
-            cached = json.load(f)
-        # a malformed sidecar (foreign writer, hand edit) is a cache
-        # MISS, never an error surfaced to merges/pruned reads — the
-        # cache must not become the correctness boundary
-        if cached is None:
-            return None
-        if isinstance(cached, list) and len(cached) == 2:
-            return (_stat_from_json(cached[0]), _stat_from_json(cached[1]))
-    except (FileNotFoundError, ValueError, TypeError, OSError):
-        pass
-    rng = _dir_key_range(table_dir, rel_dir, column)
-    if rng is _STATS_READ_FAILED:
-        # transient footer-read failure: behave as "no stats" for THIS
-        # call but do NOT cache — the dir's footers may be fine on the
-        # next attempt
-        return None
-    enc = None if rng is None else [_stat_to_json(v) for v in rng]
-    if enc is None or all(v is not _UNSERIALIZABLE for v in enc):
-        try:
-            os.makedirs(cache_dir, exist_ok=True)
-            fd, tmp = tempfile.mkstemp(dir=cache_dir, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(enc, f)
-            os.replace(tmp, cache_path)
-        except OSError:
-            pass
-    return rng
-
-
-_UNSERIALIZABLE = object()
-
-
-def _stat_to_json(v):
-    """JSON form of a footer stat: native for int/float/str, a tagged
-    ISO string for date/datetime (temporal merge keys are the common
-    case the cache previously refused, re-reading every footer on
-    every merge), the _UNSERIALIZABLE sentinel otherwise (skip
-    caching; correctness unaffected)."""
-    import datetime as _dt
-
-    if isinstance(v, bool) or not isinstance(
-        v, (int, float, str, _dt.date, _dt.datetime)
-    ):
-        return _UNSERIALIZABLE
-    if isinstance(v, _dt.datetime):
-        return {"__ts__": v.isoformat()}
-    if isinstance(v, _dt.date):
-        return {"__d__": v.isoformat()}
-    return v
-
-
-def _stat_from_json(v):
-    import datetime as _dt
-
-    if isinstance(v, dict):
-        if "__ts__" in v:
-            return _dt.datetime.fromisoformat(v["__ts__"])
-        if "__d__" in v:
-            return _dt.date.fromisoformat(v["__d__"])
-        raise ValueError(f"unknown stat tag: {v!r}")
-    return v
-
-
 def merge_upsert(
     spark: SparkSession,
     table_dir: str,
@@ -887,16 +876,20 @@ def merge_upsert(
     the scale-defining part — delta directories that provably contain
     NO matched key are carried into the new version UNTOUCHED.
 
-    Pruning uses parquet footer min/max statistics on the FIRST merge
-    key (the Delta/Iceberg file-skipping idiom, at directory grain):
-    a dir whose key range cannot intersect the batch's [min, max] is
+    Pruning uses the FIRST merge key's per-dir min/max that the
+    current manifest records in ``ranges`` (footer statistics taken
+    when each dir was published — the Delta/Iceberg file-skipping
+    idiom, at directory grain, with no file opened at merge time): a
+    dir whose key range cannot intersect the batch's [min, max] is
     kept as-is; everything else is rewritten as survivors (anti-join
     on the full key) unioned with the batch into ONE new directory.
     Cost is O(matched dirs + batch), not O(table) — on a table loaded
     by time- or id-ordered appends, a merge touching recent keys
     rewrites only the recent directories. Pruning degrades SAFELY:
-    missing stats / partition-column keys / unordered data just mean
-    more dirs rewritten, never a wrong result.
+    an unrecorded range (missing stats, a partition-column, binary or
+    over-long string key, a dir written before ranges were recorded)
+    or unordered data just mean more dirs rewritten, never a wrong
+    result.
 
     Contract:
     - batch columns must match the manifest schema exactly (merge is
@@ -970,8 +963,7 @@ def _merge_locked(
     kept: list[str] = []
     for d in cur["dirs"]:
         disjoint = stats["n"] == 0 or _range_disjoint(
-            _dir_key_range_cached(table_dir, d, keys[0]),
-            stats["kmin"], stats["kmax"],
+            _recorded_range(cur, d, keys[0]), stats["kmin"], stats["kmax"]
         )
         (kept if disjoint else touched).append(d)
     out = batch
@@ -979,7 +971,8 @@ def _merge_locked(
         existing = _read_dirs(spark, table_dir, touched, schema)
         survivors = existing.join(batch.select(*keys), on=keys, how="left_anti")
         out = survivors.unionByName(batch)
-    dropped_rows = sum(_dir_rowcount(os.path.join(table_dir, d)) for d in touched)
+    # rows only: an empty schema records no ranges
+    dropped_rows = sum(_footer_stats(os.path.join(table_dir, d), {})[0] for d in touched)
     return _publish(
         table_dir, cur, fence, _parquet_writer(out, parts), kept,
         dropped_rows, schema, marks, parts,
@@ -1074,18 +1067,6 @@ def vacuum(table_dir: str, keep_last: int = 2) -> list[int]:
                 v = int(entry[1:])
                 if v < cutoff and v not in removed:
                     removed.append(v)
-                # drop the merge-pruning stats sidecars of a deleted
-                # dir (cache keyed by the immutable dir; dir gone ->
-                # entries are dead weight)
-                sdir = os.path.join(table_dir, "_stats")
-                if os.path.isdir(sdir):
-                    prefix = rel.replace(os.sep, "__") + "."
-                    for s in os.listdir(sdir):
-                        if s.startswith(prefix):
-                            try:
-                                os.unlink(os.path.join(sdir, s))
-                            except FileNotFoundError:
-                                pass
         # 3. temps of crashed pointer and snapshot writes
         for d in (table_dir, mdir):
             for entry in os.listdir(d):

@@ -796,7 +796,7 @@ def test_partitioned_table_null_partition_value(spark, tmp_path):
 def test_read_table_where_prunes_dirs_and_matches_filter(spark, tmp_path):
     """read_table(where=...) must (a) equal read_table().filter(...)
     exactly and (b) scan a strict subset of parquet files when the
-    cached footer stats prove dirs dead — the read-side payoff of
+    manifest's recorded ranges prove dirs dead — the read-side payoff of
     clustered/z-ordered ingest layouts."""
     from pyspark.sql import functions as F
 
@@ -906,12 +906,12 @@ def test_first_cut_manifest_is_rejected_untouched(spark, tmp_path):
 
 def test_manifest_key_set_is_stable(spark, tmp_path):
     """The on-disk keys of a written manifest (readers outside the
-    package parse MANIFEST.json directly): six always, and
+    package parse MANIFEST.json directly): seven always, and
     partition_by, txn and data_change only when set. Each version's
     snapshot is byte-for-byte its pointer."""
     from etl_data_pipeline_spark.sinks.manifest import compact
 
-    base = {"version", "dirs", "schema", "fence", "delta_rows", "total_rows"}
+    base = {"version", "dirs", "schema", "fence", "delta_rows", "total_rows", "ranges"}
     t = str(tmp_path / "t")
 
     def keys():

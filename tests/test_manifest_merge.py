@@ -1,5 +1,5 @@
-"""merge_upsert: row-level MERGE on manifest tables with footer-stats
-directory pruning (sinks/manifest.py)."""
+"""merge_upsert: row-level MERGE on manifest tables with directory
+pruning by the key ranges each manifest records (sinks/manifest.py)."""
 
 from __future__ import annotations
 
@@ -142,12 +142,14 @@ def test_merge_preserves_partition_layout(spark, tmp_path):
 
 
 def test_dir_key_range_reads_footers(spark, tmp_path):
+    """Each published dir's column min/max come from its parquet
+    footers and are recorded in the manifest that publishes it."""
     td = _table(spark, tmp_path)
-    dirs = M.read_manifest(td)["dirs"]
-    lo, hi = M._dir_key_range(td, dirs[0], "k")
-    assert (lo, hi) == (0, 99)
-    assert M._dir_key_range(td, dirs[1], "k") == (100, 199)
-    assert M._dir_key_range(td, dirs[0], "no_such_col") is None
+    m = M.read_manifest(td)
+    dirs = m["dirs"]
+    assert m["ranges"][dirs[0]] == {"k": [0, 99], "v": ["a0", "a99"]}
+    assert M._recorded_range(m, dirs[1], "k") == (100, 199)
+    assert M._recorded_range(m, dirs[0], "no_such_col") is None
 
 
 def test_pipeline_upsert_mode_cdc(spark, tmp_path):
@@ -321,50 +323,10 @@ def test_merge_first_write_partition_by(spark, tmp_path):
         M.merge_upsert(spark, td, batch, ("k",), partition_by=("v",))
 
 
-def test_dir_key_range_cache_hits(spark, tmp_path):
-    """Second range lookup reads the sidecar cache, not the footers —
-    and the cached value equals the computed one."""
-    td = _table(spark, tmp_path)
-    d0 = M.read_manifest(td)["dirs"][0]
-    first = M._dir_key_range_cached(td, d0, "k")
-    assert first == (0, 99)
-    cache = os.path.join(td, "_stats")
-    assert os.path.isdir(cache) and len(os.listdir(cache)) == 1
-    # rewrite the cache entry to a sentinel: the next call must be
-    # cache-served (sentinel comes back), proving footers aren't re-read
-    entry = os.path.join(cache, os.listdir(cache)[0])
-    with open(entry, "w") as f:
-        f.write("[7, 8]")
-    assert M._dir_key_range_cached(td, d0, "k") == (7, 8)
-
-
-def test_vacuum_drops_stats_of_deleted_dirs(spark, tmp_path):
-    """Stats sidecars are keyed by immutable dirs; when vacuum deletes
-    a dir, its cache entries go too (fresh entries for live dirs
-    stay)."""
-    td = _table(spark, tmp_path)
-    dirs = M.read_manifest(td)["dirs"]
-    for d in dirs:
-        M._dir_key_range_cached(td, d, "k")
-    assert len(os.listdir(os.path.join(td, "_stats"))) == 3
-    # merge touching the middle range rewrites it; old versions expire
-    batch = spark.createDataFrame([(150, "U")], "k long, v string")
-    M.merge_upsert(spark, td, batch, ("k",))
-    M.vacuum(td, keep_last=1)
-    left = os.listdir(os.path.join(td, "_stats"))
-    # dirs[1] (the rewritten [100,200) range) was deleted by vacuum ->
-    # its sidecar is gone; the two still-referenced dirs keep theirs
-    gone_prefix = dirs[1].replace(os.sep, "__") + "."
-    assert not any(s.startswith(gone_prefix) for s in left)
-    assert any(s.startswith(dirs[0].replace(os.sep, "__") + ".") for s in left)
-
-
 def test_merge_prunes_on_date_keys(spark, tmp_path):
-    """Temporal merge keys get footer-stats pruning too (r9 review):
-    the sidecar previously refused to serialize date/datetime ranges,
-    silently re-reading every footer per merge — and tz-aware footer
-    stats vs Spark's naive aggregates made timestamp keys never prune
-    at all. Dates now prune exactly like ints, through the cache."""
+    """Date merge keys prune exactly like ints: the manifest records
+    a date range as ISO strings and decodes it by the column's
+    recorded type."""
     import datetime as dt
 
     td = str(tmp_path / "dt")
@@ -389,29 +351,10 @@ def test_merge_prunes_on_date_keys(spark, tmp_path):
     assert dirs_before[2] not in m["dirs"]
     got = {(r.day, r.v) for r in M.read_table(spark, td).collect()}
     assert (d0 + dt.timedelta(days=25), "UPD") in got and len(got) == 30
-    # and the range round-trips through the JSON sidecar
-    rng = M._dir_key_range_cached(td, dirs_before[0], "day")
+    # the kept dir's range is carried over as recorded
+    assert m["ranges"][dirs_before[0]]["day"] == ["2026-01-01", "2026-01-10"]
+    rng = M._recorded_range(m, dirs_before[0], "day")
     assert rng == (d0, d0 + dt.timedelta(days=9))
-    rng2 = M._dir_key_range_cached(td, dirs_before[0], "day")  # cache hit
-    assert rng2 == rng
-
-
-def test_malformed_stats_sidecar_is_a_cache_miss(spark, tmp_path):
-    """A foreign/corrupt _stats sidecar must never crash merges or
-    pruned reads — wrong-shape JSON is treated as a miss and
-    recomputed (r9 review)."""
-    td = _table(spark, tmp_path)
-    dirs = M.read_manifest(td)["dirs"]
-    sdir = os.path.join(td, "_stats")
-    os.makedirs(sdir, exist_ok=True)
-    name = dirs[0].replace(os.sep, "__") + ".k.json"
-    for bad in ("5", "[5]", '{"x": 1}', "not json at all"):
-        with open(os.path.join(sdir, name), "w") as f:
-            f.write(bad)
-        assert M._dir_key_range_cached(td, dirs[0], "k") == (0, 99)
-    batch = spark.createDataFrame([(250, "UPD")], "k long, v string")
-    m = M.merge_upsert(spark, td, batch, ("k",))
-    assert dirs[0] in m["dirs"]  # pruned, not crashed
 
 
 def test_empty_merge_batch_with_txn_records_mark(spark, tmp_path):
@@ -465,8 +408,8 @@ def test_merge_prunes_on_timestamp_keys_via_instants(spark, tmp_path):
     finally:
         spark.conf.set(conf, prev)
     dirs_before = M.read_manifest(td)["dirs"]
-    # the cached footer range is the INTEGER instant pair
-    rng = M._dir_key_range_cached(td, dirs_before[0], "ts")
+    # the recorded footer range is the INTEGER instant pair
+    rng = M.read_manifest(td)["ranges"][dirs_before[0]]["ts"]
     assert all(isinstance(v, int) for v in rng)
     batch = spark.createDataFrame(
         [(t0 + dt.timedelta(hours=25), "UPD")], "ts timestamp, v string"
@@ -476,3 +419,151 @@ def test_merge_prunes_on_timestamp_keys_via_instants(spark, tmp_path):
     assert dirs_before[2] not in m["dirs"]
     got = {(r.ts, r.v) for r in M.read_table(spark, td).collect()}
     assert (t0 + dt.timedelta(hours=25), "UPD") in got and len(got) == 30
+
+
+@pytest.mark.parametrize(
+    "typ", ["string", "decimal(10,2)", "decimal(30,2)", "timestamp_ntz"]
+)
+def test_merge_prunes_on_key_type(spark, tmp_path, typ):
+    """String, decimal (int- and fixed-width-backed) and timestamp_ntz
+    merge keys prune like ints: a batch inside the middle dir's range
+    rewrites only that dir, and the merged table is exact."""
+    import datetime as dt
+    from decimal import Decimal
+
+    to_key = {
+        "string": lambda i: f"k{i:04d}",
+        "decimal(10,2)": lambda i: Decimal(i) / 4,
+        "decimal(30,2)": lambda i: Decimal(i) / 4,
+        "timestamp_ntz": lambda i: dt.datetime(2026, 1, 1) + dt.timedelta(minutes=i),
+    }[typ]
+    td = str(tmp_path / "t")
+    for lo in (0, 100, 200):
+        rows = [(to_key(i), f"a{i}") for i in range(lo, lo + 100)]
+        M.commit(spark.createDataFrame(rows, f"k {typ}, v string"), td,
+                 mode="append" if lo else "overwrite")
+    before = M.read_manifest(td)["dirs"]
+    batch = spark.createDataFrame([(to_key(150), "UPD")], f"k {typ}, v string")
+    m = M.merge_upsert(spark, td, batch, ("k",))
+    assert before[0] in m["dirs"] and before[2] in m["dirs"]
+    assert before[1] not in m["dirs"]
+    got = {(r.k, r.v) for r in M.read_table(spark, td).collect()}
+    assert (to_key(150), "UPD") in got and (to_key(150), "a150") not in got
+    assert len(got) == 300
+
+
+def test_ranges_leave_out_what_cannot_prune_safely(spark, tmp_path):
+    """Only plain comparable columns get a recorded range: a NaN or
+    infinite float, a string end past the length bound, binary,
+    nested, INT96 timestamp (no footer stats) and hive-partition
+    columns are left out, and a filter on them reads every dir."""
+    import datetime as dt
+
+    td = str(tmp_path / "t")
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        m = M.commit(spark.createDataFrame(
+            [(1, float("nan"), 1.0, "x" * (M._MAX_STAT_CHARS + 1), "ab", b"q",
+              (1, "a"), True, dt.datetime(2026, 1, 1), "p1"),
+             (2, 2.0, float("inf"), "y", "cd", b"r", (2, "b"), False,
+              dt.datetime(2026, 1, 2), "p2")],
+            "k long, dn double, di double, longs string, s string, bi binary, "
+            "st struct<x:int,y:string>, b boolean, ts timestamp, p string",
+        ), td, partition_by=("p",))
+    finally:
+        spark.conf.set(conf, prev)
+    assert m["ranges"] == {
+        m["dirs"][0]: {"k": [1, 2], "s": ["ab", "cd"], "b": [False, True]}
+    }
+    assert M.read_table(spark, td, where={"dn": (3.0, None)}).count() == 1  # NaN
+    assert M.read_table(spark, td, where={"k": (5, None)}).inputFiles() == []
+
+
+def test_manifest_without_ranges_reads_merges_and_vacuums(spark, tmp_path):
+    """A table whose manifests carry no ``ranges`` (as written before
+    ranges were recorded) still reads, merges and vacuums; its old
+    dirs are never pruned, and the merge's new dir records its range."""
+    import json
+
+    td = _table(spark, tmp_path)
+    mdir = os.path.join(td, "_manifests")
+    for path in [os.path.join(td, "MANIFEST.json")] + [
+        os.path.join(mdir, f) for f in os.listdir(mdir)
+    ]:
+        with open(path) as f:
+            old = json.load(f)
+        del old["ranges"]
+        with open(path, "w") as f:
+            json.dump(old, f)
+    before = M.read_manifest(td)["dirs"]
+    pruned = M.read_table(spark, td, where={"k": 5}).inputFiles()
+    assert set(pruned) == set(M.read_table(spark, td).inputFiles())
+    batch = spark.createDataFrame([(150, "UPD")], "k long, v string")
+    m = M.merge_upsert(spark, td, batch, ("k",))
+    assert not set(before) & set(m["dirs"])  # every old dir rewritten
+    assert list(m["ranges"]) == m["dirs"] and m["ranges"][m["dirs"][0]]["k"] == [0, 299]
+    got = _content(spark, td)
+    assert (150, "UPD") in got and len(got) == 300
+    assert M.vacuum(td, keep_last=1) == [1, 2, 3]
+    assert _content(spark, td) == got
+
+
+def test_ranges_follow_their_dirs_through_compact_and_vacuum(spark, tmp_path):
+    """Every manifest records ranges for exactly its own dirs: a merge
+    carries the kept dirs' entries over unchanged, compaction records
+    the folded dir's, and vacuum leaves the head's ranges naming only
+    dirs still on disk, with no stats store beside the table."""
+    td = _table(spark, tmp_path)
+    m = M.read_manifest(td)
+    assert list(m["ranges"]) == m["dirs"]
+    batch = spark.createDataFrame([(150, "UPD")], "k long, v string")
+    m2 = M.merge_upsert(spark, td, batch, ("k",))
+    assert list(m2["ranges"]) == m2["dirs"]
+    for d in (m["dirs"][0], m["dirs"][2]):
+        assert m2["ranges"][d] == m["ranges"][d]
+    assert m2["ranges"][m2["dirs"][-1]]["k"] == [100, 199]
+    c = M.compact(spark, td)
+    assert list(c["ranges"]) == c["dirs"] and c["ranges"][c["dirs"][0]]["k"] == [0, 299]
+    M.vacuum(td, keep_last=1)
+    head = M.read_manifest(td)
+    assert head["ranges"] == c["ranges"]
+    assert all(os.path.isdir(os.path.join(td, d)) for d in head["ranges"])
+    assert sorted(os.listdir(td)) == [
+        "MANIFEST.json", "MANIFEST.json.lease", "_manifests", "_versions"
+    ]
+
+
+@pytest.mark.parametrize("merge_keys", [None, ("k",)])
+def test_pipeline_manifest_append_rejects_static_txn(spark, tmp_path, merge_keys):
+    """A static ``txn`` in a manifest-append table's sink_options would
+    commit the first batch and fence out every later one while each
+    run reports ``loaded``: the table fails before any data work, and
+    the sink and the watermark are untouched."""
+    from etl_data_pipeline_spark.pipeline import IncrementalPipeline
+    from etl_data_pipeline_spark.spec import PipelineSpec, TableSpec
+    from etl_data_pipeline_spark.watermark import WatermarkStore
+
+    src = tmp_path / "s"
+    src.mkdir()
+    spark.createDataFrame([(1, 1, "a")], "change_id long, k long, v string") \
+        .write.parquet(str(src / "t.parquet"))
+    sink = str(tmp_path / "tbl")
+    M.commit(spark.createDataFrame([(0, 0, "z")], "change_id long, k long, v string"), sink)
+    before = M.read_manifest(sink)
+    spec = PipelineSpec(tables=[TableSpec(
+        name="t",
+        watermark_column="change_id",
+        watermark_type="id",
+        source_format="parquet",
+        source_options={"dir": str(src)},
+        sink_format="manifest",
+        sink_options={"path": sink, "txn": ("app", 1)},
+        merge_keys=merge_keys,
+    )])
+    store = WatermarkStore(tmp_path / "wm.json")
+    res = IncrementalPipeline(spark, spec, store).run()
+    assert res[0].status == "failed" and "'txn'" in res[0].error
+    assert M.read_manifest(sink) == before
+    assert store.get("t") is None

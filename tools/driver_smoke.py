@@ -74,8 +74,12 @@ assert statuses["nonexistent"] == "failed" and statuses["region"] == "loaded"
 
 # 5. manifest round-trip smoke: commit -> read_table -> version-keyed
 # pipeline over the change feed
+from pyspark.sql import functions as F
+
 from etl_data_pipeline_spark.sinks.manifest import commit as mcommit
-from etl_data_pipeline_spark.sinks.manifest import read_manifest, read_table, vacuum
+from etl_data_pipeline_spark.sinks.manifest import (
+    merge_upsert, read_manifest, read_table, vacuum,
+)
 
 mt = os.path.join(tmp, "morders")
 src_orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -96,9 +100,21 @@ rv = vpipe.run()
 assert rv[0].status == "loaded" and rv[0].new_watermark == 2, rv
 assert spark.read.parquet(os.path.join(tmp, "down", "morders")).count() == 1500
 assert vpipe.run()[0].status == "skipped_empty"
-# retention over the same table: v1 is reclaimed, the head time-travels
-assert vacuum(mt, keep_last=1) == [1]
-assert read_table(spark, mt, version=2).count() == 1500
-print("manifest round-trip: OK (v2, 1500 rows, version-feed caught up, vacuumed to v2)")
+# a merge whose keys lie only in the second commit's range rewrites that
+# dir alone: the first commit's dir is carried over by its recorded range
+upd = src_orders.filter("o_orderkey >= 1000 AND o_orderkey < 1100").withColumn(
+    "o_orderpriority", F.lit("merged")
+)
+m3 = merge_upsert(spark, mt, upd, ("o_orderkey",))
+assert m3["dirs"][0] == m["dirs"][0] and m["dirs"][1] not in m3["dirs"], m3["dirs"]
+assert read_table(spark, mt).filter("o_orderpriority = 'merged'").count() == upd.count() > 0
+# retention over the same table: v1 and v2 are reclaimed, the head
+# time-travels, the carried-over dir survives and no stats store exists
+assert vacuum(mt, keep_last=1) == [1, 2]
+assert read_table(spark, mt, version=3).count() == 1500
+assert os.path.isdir(os.path.join(mt, m["dirs"][0]))
+assert not os.path.exists(os.path.join(mt, "_stats"))
+print("manifest round-trip: OK (v3, 1500 rows, version-feed caught up, "
+      "merge pruned to one dir, vacuumed to v3)")
 
 print("DRIVER SMOKE: ALL OK")
