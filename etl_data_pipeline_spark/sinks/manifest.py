@@ -34,7 +34,8 @@ every read of a manifest file rejects one without ``version``,
 ``dirs``, ``schema`` or ``total_rows`` with a ``ValueError`` naming
 the table and the missing keys, before any data is read or written.
 A manifest without ``ranges`` (written before they were recorded)
-reads and commits as any other; its directories are never pruned.
+reads and commits as any other; reads never prune its directories,
+and the first ``merge_upsert`` walks their footers and records them.
 
 **Append is O(delta), not O(table)**: an append commit writes ONLY the
 incoming rows as a new delta directory and publishes a manifest whose
@@ -378,8 +379,7 @@ def _publish(
         return cur
     prev = (cur or {}).get("ranges", {})
     ranges = {d: prev[d] for d in kept if d in prev}
-    if delta_ranges:
-        ranges[rel] = delta_ranges
+    ranges[rel] = delta_ranges  # {} too: the dir's footers were walked
     manifest = {"version": version, "dirs": kept + [rel], "schema": schema, "fence": fence}
     if parts:
         manifest["partition_by"] = list(parts)
@@ -603,6 +603,15 @@ def _read_dirs(
     return out.select(*[F.col(c).cast(t).alias(c) for c, t in schema.items()])
 
 
+def _lt(a, b) -> bool:
+    """``a < b`` as Spark's filter compares them: a double against an
+    integer or decimal compares as double (Decimal('9.99') equals the
+    double 9.99 in Spark, an exact compare puts it below)."""
+    if float in (type(a), type(b)) and all(isinstance(v, (int, float, Decimal)) for v in (a, b)):
+        return float(a) < float(b)
+    return a < b
+
+
 def _range_disjoint(rng, lo, hi) -> bool:
     """True when [rng.min, rng.max] provably misses [lo, hi] (either
     bound may be None = unbounded). Unknown stats (``rng`` None) and
@@ -610,9 +619,9 @@ def _range_disjoint(rng, lo, hi) -> bool:
     if rng is None:
         return False
     try:
-        if lo is not None and rng[1] < lo:
+        if lo is not None and _lt(rng[1], lo):
             return True
-        if hi is not None and rng[0] > hi:
+        if hi is not None and _lt(hi, rng[0]):
             return True
     except TypeError:
         return False
@@ -887,9 +896,10 @@ def merge_upsert(
     by time- or id-ordered appends, a merge touching recent keys
     rewrites only the recent directories. Pruning degrades SAFELY:
     an unrecorded range (missing stats, a partition-column, binary or
-    over-long string key, a dir written before ranges were recorded)
-    or unordered data just mean more dirs rewritten, never a wrong
-    result.
+    over-long string key) or unordered data just mean more dirs
+    rewritten, never a wrong result. A dir with no ``ranges`` entry
+    (published before ranges were recorded) has its footers walked
+    once here; the new version records the result.
 
     Contract:
     - batch columns must match the manifest schema exactly (merge is
@@ -959,6 +969,11 @@ def _merge_locked(
     # in the (app_id -> batch) sequence, and a later out-of-order replay
     # of this batch id WITH data would not be fenced. Nothing can
     # match, so every dir is kept.
+    ranges = dict(cur.get("ranges", {}))
+    for d in cur["dirs"]:
+        if d not in ranges:  # published before ranges were recorded
+            ranges[d] = _footer_stats(os.path.join(table_dir, d), schema)[1]
+    cur = {**cur, "ranges": ranges}
     touched: list[str] = []
     kept: list[str] = []
     for d in cur["dirs"]:

@@ -832,6 +832,44 @@ def test_read_table_where_prunes_dirs_and_matches_filter(spark, tmp_path):
     assert set(none.columns) == {"k", "k2"}
 
 
+def test_read_table_where_compares_float_bounds_as_spark_does(spark, tmp_path):
+    """A double bound against a decimal or bigint column, and a decimal
+    bound against a double column, compare as double in Spark's filter,
+    so pruning must too: an exact compare would drop the dir holding
+    the 9.99 / 0.30 / 2**53+1 / 0.1 edge rows the filter matches."""
+    from decimal import Decimal
+
+    from etl_data_pipeline_spark.sinks.manifest import commit, read_table
+
+    t = str(tmp_path / "t")
+    ddl = "price decimal(10,2), d double, k bigint"
+    commit(spark.createDataFrame(
+        [(Decimal("0.30"), 0.1, 2**53 + 1), (Decimal("9.99"), 0.5, 2**53 + 1)], ddl
+    ), t)
+    commit(spark.createDataFrame([(Decimal("20.00"), 5.0, 0)], ddl), t, mode="append")
+    full = read_table(spark, t)
+    for where in (
+        {"price": (9.99, None)},
+        {"price": (None, 0.3)},
+        {"price": 9.99},
+        {"d": (None, Decimal("0.1"))},
+        {"k": (None, float(2**53))},
+    ):
+        c, v = next(iter(where.items()))
+        lo, hi = v if isinstance(v, tuple) else (v, v)
+        brute = full
+        if lo is not None:
+            brute = brute.filter(F.col(c) >= F.lit(lo))
+        if hi is not None:
+            brute = brute.filter(F.col(c) <= F.lit(hi))
+        expect = sorted(brute.collect())
+        assert expect, where
+        assert sorted(read_table(spark, t, where=where).collect()) == expect, where
+    # the dirs still prune where the bound clears them
+    high = read_table(spark, t, where={"price": (15.0, None)})
+    assert set(high.inputFiles()) < set(full.inputFiles())
+
+
 def test_reads_build_with_no_spark_job(spark, tmp_path):
     """Every reader builds its frame from the recorded schema: head and
     time-travel reads, pruned reads and the change feed (empty, plain

@@ -481,10 +481,11 @@ def test_ranges_leave_out_what_cannot_prune_safely(spark, tmp_path):
     assert M.read_table(spark, td, where={"k": (5, None)}).inputFiles() == []
 
 
-def test_manifest_without_ranges_reads_merges_and_vacuums(spark, tmp_path):
+def test_manifest_without_ranges_reads_merges_and_vacuums(spark, tmp_path, monkeypatch):
     """A table whose manifests carry no ``ranges`` (as written before
-    ranges were recorded) still reads, merges and vacuums; its old
-    dirs are never pruned, and the merge's new dir records its range."""
+    ranges were recorded) still reads, merges and vacuums. Reads keep
+    its old dirs; the first merge walks their footers once, prunes by
+    them and records them, so the next merge opens no old footer."""
     import json
 
     td = _table(spark, tmp_path)
@@ -502,11 +503,21 @@ def test_manifest_without_ranges_reads_merges_and_vacuums(spark, tmp_path):
     assert set(pruned) == set(M.read_table(spark, td).inputFiles())
     batch = spark.createDataFrame([(150, "UPD")], "k long, v string")
     m = M.merge_upsert(spark, td, batch, ("k",))
-    assert not set(before) & set(m["dirs"])  # every old dir rewritten
-    assert list(m["ranges"]) == m["dirs"] and m["ranges"][m["dirs"][0]]["k"] == [0, 299]
+    assert m["dirs"][:2] == [before[0], before[2]]  # only the middle dir rewritten
+    assert list(m["ranges"]) == m["dirs"]
+    assert [m["ranges"][d]["k"] for d in m["dirs"]] == [[0, 99], [200, 299], [100, 199]]
+    walked = []
+    real = M._footer_stats
+    monkeypatch.setattr(
+        M, "_footer_stats", lambda d, s: walked.append((d, bool(s))) or real(d, s)
+    )
+    batch = spark.createDataFrame([(250, "UPD")], "k long, v string")
+    m = M.merge_upsert(spark, td, batch, ("k",))
+    assert before[0] in m["dirs"] and before[2] not in m["dirs"]
+    assert [d for d, ranged in walked if ranged] == [os.path.join(td, m["dirs"][-1])]
     got = _content(spark, td)
-    assert (150, "UPD") in got and len(got) == 300
-    assert M.vacuum(td, keep_last=1) == [1, 2, 3]
+    assert {(150, "UPD"), (250, "UPD")} <= got and len(got) == 300
+    assert M.vacuum(td, keep_last=1) == [1, 2, 3, 4]
     assert _content(spark, td) == got
 
 
