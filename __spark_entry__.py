@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A verifier runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row count + schema +
+order-insensitive values; ``tools/check_correctness.py`` is the
+local run of that check).
 
 Implementation lives in the ``etl_data_pipeline_spark`` package; this
 module only aggregates the per-operator registries

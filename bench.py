@@ -4,32 +4,18 @@
 Prints ONE JSON line:
   {"metric": "bench_total_sec", "value": N, "unit": "sec",
    "queries": {name: sec, ...}, "sf": 0.1, "runs": 3,
-   "loadavg": [start_1m, end_1m]}
+   "loadavg": [start_1m, end_1m], "control_sec": [start, end]}
 
 Each query is forced end-to-end with the noop sink (full distributed
-execution, zero driver materialization — the honest way to time a
-plan). An untimed full warmup pass absorbs session startup, codegen
-JIT, and parquet footer caching; then REPS timed passes run and each
-query reports its MEDIAN — a single-run protocol is meaningless on a
-shared host (the recorded floor itself swings 26→33 s with loadavg,
-see BASELINE.md), and the median of 3 interleaved passes is robust to
-a transient load spike landing on one query. The cache is cleared
-between passes so a query's persisted intermediates never make its
-next rep artificially fast. Loadavg at start/end is recorded so a
-hot-host run is identifiable after the fact.
-
-Quiet-window gate (round-5 VERDICT "Next round" #2): this host's
-loadavg swings with external noisy neighbors and inflates heavy-tail
-timings 20-60% (BASELINE.md documents a 64.8 s hot-host artifact vs
-44.1 s quiet for identical code). So before timing anything the
-harness polls ``os.getloadavg()`` and waits — up to a bounded budget
-(default 600 s, env ``SPARK_GRAFT_BENCH_WAIT_SEC``) — for 1-minute
-loadavg to drop below ``SPARK_GRAFT_BENCH_LOADAVG_MAX`` (default
-2.0). If the budget expires while still hot it runs anyway but stamps
-``"hot_host": true`` in the JSON, so a recorded number is either
-quiet-by-construction or self-labeled as unrepresentative. The wait
-happens BEFORE SparkSession startup so the idle JVM never skews the
-sampled loadavg.
+execution, zero driver materialization). An untimed warm-up pass
+absorbs session startup, codegen JIT and parquet footer caching; then
+REPS timed passes run and each query reports its MEDIAN, which a
+transient load spike landing on one pass cannot move. Persisted
+intermediates and checkpoint blocks are released between runs, so no
+query's next rep is served from its previous one. The 1-minute
+loadavg at start and end and the in-JVM control query's time before
+and after the timed passes are recorded beside the timings, so a run
+on a contended host can be recognised after the fact.
 """
 
 from __future__ import annotations
@@ -44,9 +30,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from etl_data_pipeline_spark.functions.caching import release_tracked
 from etl_data_pipeline_spark.session import get_spark, load_table
 
-# Headline set: the shapes that dominate real pipelines at scale —
-# scan+join+agg stars, windows/top-k, dedup (exact/LSH/pairwise),
-# similarity, text quality, streaming-window analog.
+# The headline set: 52 distinct registered queries (pinned by a test).
+# It covers the shapes that dominate real pipelines at scale —
+# scan+join+agg stars, windows and top-k, exact/LSH/pairwise dedup,
+# similarity and ANN recall, text quality, event analytics, iterative
+# jobs (PageRank, LR training, PCA) and curation pipelines — and it
+# includes the registry's most expensive queries, so the total carries
+# the worst tail instead of hiding it.
 BENCH_QUERIES = [
     "agg_groupby",
     "join_multiway",
@@ -72,87 +62,38 @@ BENCH_QUERIES = [
     "events_funnel",
     "pipeline_corpus_curation",
     "pipeline_incremental",
-    # round-2 additions (new floors; no round-1 comparison exists)
     "text_contamination",
     "text_pii_scrub",
     "corpus_pack_sequences",
     "multimodal_decode_header",
     "pipeline_corpus_curation_v2",
-    # round-3 additions (new floors; no earlier comparison exists)
     "subq_in_heavy_orders",
     "agg_promo_share",
     "udaf_grouped",
-    # round-4 additions: the registry sweep's most expensive citizens —
-    # the headline set must carry its own worst tail, not hide it in
-    # the sweep table (VERDICT r3 nit #4)
     "dedup_embedding_cosine",
     "dedup_canonical",
     "recsys_negative_samples",
-    # round-5 additions: the two heaviest of the new TPC-H shapes
-    # (multi-dim star agg; double groupBy + self-rejoin)
     "tpch_q9ish",
     "tpch_q21ish",
-    # round-7 additions (new floors): the span-level corpus rewrite
-    # (heaviest new op — 3 shuffles over all token positions), the
-    # shared-work ANN recall pipeline, and the segment-walk dispatch
-    # decode (codegen fold; the cheap-scan representative)
     "dedup_substring_scrub",
     "sim_ann_recall",
     "multimodal_sniff_dispatch",
-    # round-7 late additions (new floors): the iterative-DataFrame
-    # exhibit (5 join+agg rounds with plan truncation) and the
-    # explicit runtime Bloom-filter build+probe+join
     "graph_pagerank",
     "join_bloom_pruned",
-    # round-7 third-continuation additions (new floors): the applied
-    # PCA pipeline (power iteration + one-pass projection — the
-    # heaviest new op), the broadcast-containment decontamination
-    # scan, and the basket pair expansion
     "embedding_pca_project",
     "text_contamination_fuzzy",
     "basket_affinity",
-    # round-8 additions (new floors): the minhash estimator-vs-exact
-    # accounting pass (LSH candidate generation + K-array compare) and
-    # the metadata-filtered IVF ANN (nprobe=2 + label predicate in
-    # candidate generation)
     "dedup_minhash_estimate",
     "sim_ann_ivf_filtered",
-    # round-9 addition (new floor): the trained-centroid IVF — one
-    # shortlist-assisted Lloyd step + shortlist assignment, the
-    # heaviest member of the re-routed IVF family
     "sim_ann_ivf_trained",
-    # round-10 addition (new floor; no earlier comparison exists):
-    # the clustered-corpus recall curve — the round's headline, and
-    # the corpus derivation + recall tail exercise transform-heavy
-    # columnar arithmetic no other headline query covers
     "sim_ann_ivf_clustered_recall",
-    # round-12 additions (new floors): the r10/r11 registrations that
-    # now define the engine's story — the oracled 20-step LR training
-    # loop, the trained-centroid recall curve, and the kmeans
-    # bucket-miss accountability pass (r11 verdict item 5)
     "classifier_train_lr",
     "sim_ann_ivf_clustered_trained_recall",
     "embedding_kmeans_coverage",
 ]
 
-# The round-1 headline set (everything registered before the round-2
-# additions marker above) — its subtotal is the one number with a
-# BASELINE.md floor (28.7 s recorded round 1), so the bench artifact
-# reports it directly instead of leaving the judge to re-slice.
-R1_HEADLINE = BENCH_QUERIES[: BENCH_QUERIES.index("text_contamination")]
-
-# Quiet-host wall seconds of the in-JVM control query below. Host
-# contention of the memory-bandwidth/IO class can pass a loadavg gate
-# (and a pure-Python spin loop) while every Spark query runs ~35%
-# slow. The control is a fixed shuffle+aggregate over GENERATED data
-# (no input files, no Python rows): it exercises exactly the JVM
-# codegen + hash + exchange write/read + memory-bandwidth path the
-# bench queries live on, so its wall time moves with the same
-# contention they feel. Reference value recorded in BASELINE.md:
-# best-of-6 at loadavg 0.34 (post-JIT runs read 2.17-2.54 s; if the
-# true quiet floor is lower the normalization under-discounts, i.e.
-# errs conservative).
-QUIET_CONTROL_SEC = 2.17
+# timed passes per query; each query reports the median
+REPS = 3
 
 
 def spark_control(spark) -> float:
@@ -162,9 +103,9 @@ def spark_control(spark) -> float:
     aggregation cannot collapse the exchange and ~48M rows genuinely
     cross the shuffle — a memory-bandwidth-class load. Deterministic
     (range + modular arithmetic), reads nothing, and is NOT part of
-    the timed query set: it runs OUTSIDE the timed region, purely so
-    a driver comparison can normalize for host contention that
-    loadavg cannot see."""
+    the timed query set: it runs OUTSIDE the timed region, so a
+    comparison of two runs can see host contention that loadavg
+    cannot."""
     from pyspark.sql import functions as F
 
     df = (
@@ -181,30 +122,6 @@ def spark_control(spark) -> float:
     return round(time.time() - t0, 3)
 
 
-def wait_for_quiet_host() -> tuple[float, bool]:
-    """Block until 1-min loadavg < SPARK_GRAFT_BENCH_LOADAVG_MAX or the
-    SPARK_GRAFT_BENCH_WAIT_SEC budget expires. Returns (seconds waited,
-    still_hot). Poll interval 15 s — loadavg's 1-min EMA moves slowly,
-    so finer polling buys nothing."""
-    limit = float(os.environ.get("SPARK_GRAFT_BENCH_LOADAVG_MAX", "2.0"))
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_WAIT_SEC", "600"))
-    t0 = time.time()
-    while True:
-        load = os.getloadavg()[0]
-        waited = time.time() - t0
-        if load < limit:
-            return round(waited, 1), False
-        if waited >= budget:
-            print(
-                f"bench: host still hot after {waited:.0f}s "
-                f"(loadavg {load:.2f} >= {limit}); running anyway, "
-                "stamping hot_host=true",
-                file=sys.stderr,
-            )
-            return round(waited, 1), True
-        time.sleep(min(15.0, budget - waited))
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -214,27 +131,19 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    waited_sec, hot_host = wait_for_quiet_host()
-
     qs = entrymod.queries()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     load_start = os.getloadavg()[0]
 
     # warmup pass (untimed): JVM JIT + codegen + parquet footer caches
     load_table(spark, sf_dir, "region").count()
     for name in BENCH_QUERIES:
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # warmup-pass persisted intermediates are dead lineage now — drop
-    # them so the timed passes measure each query self-contained.
-    # release_tracked additionally frees localCheckpoint blocks, which
-    # clearCache cannot see (r13; they accumulated across all 52
-    # queries before — ~130 MB of dead blocks at sf0.1 plus the GC
-    # pressure of their blown cleanup queue, which landed as a 1-4 s
-    # first-Python-query penalty on whichever query followed the heavy
-    # tail — udaf_grouped's phantom ×3 "regression" in PERF_r12).
+    # the warm-up's persisted intermediates and localCheckpoint blocks
+    # are dead lineage now; release_tracked frees the blocks, which
+    # clearCache cannot see, so their cleanup never lands on a timed
+    # query
     release_tracked(spark)
     spark.catalog.clearCache()
 
@@ -244,53 +153,32 @@ def main() -> None:
     control_start = spark_control(spark)
 
     samples: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}
-    for _ in range(reps):
+    for _ in range(REPS):
         for name in BENCH_QUERIES:
             fn = qs[name]
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(time.time() - t0)
-            # drop this query's persisted intermediates OUTSIDE the
-            # timer so its next rep recomputes from the source —
-            # including its checkpoint blocks (release_tracked), which
-            # clearCache cannot free (r13).
+            # outside the timer: the next rep recomputes from the source
             release_tracked(spark)
             spark.catalog.clearCache()
 
     timings = {
         name: round(sorted(ts)[len(ts) // 2], 3) for name, ts in samples.items()
     }
-    total = round(sum(timings.values()), 3)
     control_end = spark_control(spark)  # end bracket, JIT already warm
-    control = min(control_start, control_end)
     print(
         json.dumps(
             {
                 "metric": "bench_total_sec",
-                "value": total,
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
-                "runs": reps,
+                "runs": REPS,
                 "loadavg": [round(load_start, 2), round(os.getloadavg()[0], 2)],
-                "hot_host": hot_host,
-                "quiet_wait_sec": waited_sec,
-                # In-JVM control brackets [start, end] (seconds; see
-                # spark_control — catches the memory-bandwidth-class
-                # contention loadavg cannot). The normalized
-                # total scales by min(quiet/control, 1.0): clamped so a
-                # faster-than-reference host can never INFLATE a
-                # result, only a slower one discounts toward its
-                # quiet-host equivalent.
+                # in-JVM control brackets [start, end] in seconds
                 "control_sec": [control_start, control_end],
-                "control_normalized_total": round(
-                    total * min(QUIET_CONTROL_SEC / control, 1.0), 3
-                ),
-                # the only subtotal with a recorded round-1 floor
-                # (BASELINE.md: 28.7 s) — self-adjudicating
-                "r1_headline_subtotal": round(
-                    sum(timings[n] for n in R1_HEADLINE if n in timings), 3
-                ),
             }
         )
     )

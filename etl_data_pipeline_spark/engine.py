@@ -111,8 +111,9 @@ class EtlEngine:
         txn: tuple[str, int] | None = None,
     ) -> dict:
         """Row-level MERGE (upsert) into a manifest table: matched rows
-        replaced, unmatched inserted, unmatched delta dirs pruned via
-        parquet footer stats (sinks/manifest.py:merge_upsert)."""
+        replaced, unmatched inserted, and delta dirs whose key range
+        (recorded in the manifest when each dir was published) misses
+        the batch carried over untouched (sinks/manifest.py:merge_upsert)."""
         from etl_data_pipeline_spark.sinks.manifest import merge_upsert
 
         return merge_upsert(self.spark, table_dir, batch, merge_keys, txn=txn)

@@ -5,10 +5,11 @@ Each submodule exposes two parallel dicts:
 - ``QUERIES``: name -> fn(spark, sf_dir) -> DataFrame   (the Spark impl)
 - ``ORACLE``:  name -> ANSI SQL string for DuckDB        (the oracle)
 
-Names registered here are exactly the names the driver sees through
-``__spark_entry__.queries()`` / ``oracle_sql()``. A query with no
-ORACLE entry gets the driver's weaker rows-only check (documented per
-query).
+Names registered here are exactly the names ``__spark_entry__.queries()``
+/ ``oracle_sql()`` return. A query with no ORACLE entry is checked for
+rows only (documented per query). Registry order is the module list in
+:func:`collect_registry`, then each module's own dict order; nothing
+depends on it beyond being stable.
 """
 
 from __future__ import annotations
@@ -23,7 +24,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def collect_registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    """Aggregate QUERIES/ORACLE from every operator module."""
+    """Aggregate QUERIES/ORACLE from every operator module; a name
+    registered twice is a ``ValueError``, as is an oracle without a
+    query."""
     from etl_data_pipeline_spark.operators import (
         aggregates,
         analytics,
@@ -49,23 +52,10 @@ def collect_registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
         text_analysis,
     )
 
-    # Registry order is load-bearing: external verification harnesses
-    # may check a prefix of the registry, so families whose queries do
-    # not yet have a hard correctness record are listed FIRST and
-    # families fully verified in earlier rounds come last. Within that
-    # constraint the order is stable (dict insertion order).
     modules = [
-        # -- families holding this round's hoisted entries --
-        graph,  # NEW in r7: zero driver evidence yet -> checked first
-        tpch,  # NEW in r5: zero driver evidence yet -> checked first
-        subqueries, features, batch_analogs, reshape, curation, text_analysis,
-        multimodal,
-        # -- verified green in earlier rounds; cheap families first so
-        #    the checked prefix stays fast --
-        scalars, setops, windows, scans, aggregates, udfs,
-        joins, asof, analytics,
-        # -- verified green and most expensive at the gate; last --
-        dedup, similarity,
+        graph, tpch, subqueries, features, batch_analogs, reshape, curation,
+        text_analysis, multimodal, scalars, setops, windows, scans,
+        aggregates, udfs, joins, asof, analytics, dedup, similarity,
     ]
     queries: dict[str, QueryFn] = {}
     oracle: dict[str, str] = {}
@@ -78,37 +68,7 @@ def collect_registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
     unknown = set(oracle) - set(queries)
     if unknown:
         raise ValueError(f"oracle entries without queries: {unknown}")
-    # Individual queries whose latest verification row is OLDEST get
-    # hoisted to the very front regardless of family (the harness
-    # checks only a ~50-entry prefix per round, so the hoist rotates
-    # stale evidence back into the check window).
-    # Since round 11 the cut is MACHINE-derived (round-10 VERDICT item
-    # 4): `python tools/evidence_freshness.py --hoist 60 --write`
-    # recomputes the rotation from the union of CORRECTNESS_r*.json —
-    # queries with no driver evidence first (new registrations), then
-    # stalest-green-round order — and writes it to hoist.json beside
-    # this file; run it once per round after registering new queries.
-    hoist = _load_hoist()
-    ordered = {name: queries[name] for name in hoist if name in queries}
-    ordered.update(queries)
-    return {name: _pinned_utc(fn) for name, fn in ordered.items()}, oracle
-
-
-def _load_hoist() -> list[str]:
-    """The checked-in rotation cut (see collect_registry). The file is
-    ``{"max_round": N, "names": [...]}`` — max_round records which
-    correctness evidence the cut was derived from, so the freshness
-    test can verify it against that view rather than records written
-    after the cut. (A bare list is accepted for older checkouts.)"""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "hoist.json")
-    if not os.path.exists(path):  # pre-r11 checkouts / partial installs
-        return []
-    with open(path) as f:
-        data = json.load(f)
-    return list(data["names"] if isinstance(data, dict) else data)
+    return {name: _pinned_utc(fn) for name, fn in queries.items()}, oracle
 
 
 def _pinned_utc(fn: QueryFn) -> QueryFn:

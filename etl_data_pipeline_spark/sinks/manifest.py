@@ -25,17 +25,19 @@ A manifest (the pointer and every snapshot) is one JSON object:
 ``version`` (int), ``dirs`` (delta directories relative to the table),
 ``schema`` (ordered column -> Spark simpleString type), ``fence``
 (the writer's fencing token), ``delta_rows`` and ``total_rows`` (row
-counts from parquet footers), ``ranges`` ({dir: {column: [lo, hi]}},
-each delta directory's column min/max from the same footers, which
-merge and read pruning consult), and, only when set,
+counts from parquet footers), ``dir_rows`` ({dir: row count}) and
+``ranges`` ({dir: {column: [lo, hi]}}, each delta directory's column
+min/max), both from the footer walk that published the directory and
+consulted by merge and read pruning, and, only when set,
 ``partition_by``, ``data_change: false`` (a layout-only commit) and
 ``txn`` ({app_id: highest committed version}). There is one format:
 every read of a manifest file rejects one without ``version``,
 ``dirs``, ``schema`` or ``total_rows`` with a ``ValueError`` naming
 the table and the missing keys, before any data is read or written.
-A manifest without ``ranges`` (written before they were recorded)
-reads and commits as any other; reads never prune its directories,
-and the first ``merge_upsert`` walks their footers and records them.
+A manifest without ``ranges`` or ``dir_rows`` (written before they
+were recorded) reads and commits as any other; reads never prune its
+unranged directories, and the first ``merge_upsert`` walks their
+footers once and records both.
 
 **Append is O(delta), not O(table)**: an append commit writes ONLY the
 incoming rows as a new delta directory and publishes a manifest whose
@@ -366,8 +368,9 @@ def _publish(
     unchanged manifest (the next commit of this version clears it).
     Row counts and ranges come from one walk of the new directory's
     parquet footers: ``delta_rows`` is its rows (0 for a layout-only
-    commit), ``total_rows`` the running total, and ``ranges`` carries
-    the kept directories' entries over from ``cur`` and adds its own."""
+    commit), ``total_rows`` the running total, and ``dir_rows`` and
+    ``ranges`` carry the kept directories' entries over from ``cur``
+    and add its own."""
     version = 1 if cur is None else cur["version"] + 1
     rel = os.path.join("_versions", f"v{version:08d}")
     data_dir = os.path.join(table_dir, rel)
@@ -377,8 +380,13 @@ def _publish(
     if skip_empty and delta == 0:
         shutil.rmtree(data_dir, ignore_errors=True)
         return cur
-    prev = (cur or {}).get("ranges", {})
-    ranges = {d: prev[d] for d in kept if d in prev}
+
+    def carried(key: str) -> dict:
+        prev = (cur or {}).get(key, {})
+        return {d: prev[d] for d in kept if d in prev}
+
+    dir_rows, ranges = carried("dir_rows"), carried("ranges")
+    dir_rows[rel] = delta
     ranges[rel] = delta_ranges  # {} too: the dir's footers were walked
     manifest = {"version": version, "dirs": kept + [rel], "schema": schema, "fence": fence}
     if parts:
@@ -387,6 +395,7 @@ def _publish(
     manifest["total_rows"] = (
         cur["total_rows"] - dropped_rows if kept else 0
     ) + delta
+    manifest["dir_rows"] = dir_rows
     manifest["ranges"] = ranges
     if not data_change:
         # layout-only commit (compaction): logically the same rows —
@@ -897,9 +906,11 @@ def merge_upsert(
     rewrites only the recent directories. Pruning degrades SAFELY:
     an unrecorded range (missing stats, a partition-column, binary or
     over-long string key) or unordered data just mean more dirs
-    rewritten, never a wrong result. A dir with no ``ranges`` entry
-    (published before ranges were recorded) has its footers walked
-    once here; the new version records the result.
+    rewritten, never a wrong result. The rows a rewrite drops are the
+    touched dirs' recorded ``dir_rows``, so the merge opens no footer
+    but the new dir's. A dir with no ``ranges`` or ``dir_rows`` entry
+    (published before they were recorded) has its footers walked once
+    here; the new version records the result.
 
     Contract:
     - batch columns must match the manifest schema exactly (merge is
@@ -969,11 +980,12 @@ def _merge_locked(
     # in the (app_id -> batch) sequence, and a later out-of-order replay
     # of this batch id WITH data would not be fenced. Nothing can
     # match, so every dir is kept.
+    dir_rows = dict(cur.get("dir_rows", {}))
     ranges = dict(cur.get("ranges", {}))
     for d in cur["dirs"]:
-        if d not in ranges:  # published before ranges were recorded
-            ranges[d] = _footer_stats(os.path.join(table_dir, d), schema)[1]
-    cur = {**cur, "ranges": ranges}
+        if d not in dir_rows or d not in ranges:  # published before recorded
+            dir_rows[d], ranges[d] = _footer_stats(os.path.join(table_dir, d), schema)
+    cur = {**cur, "dir_rows": dir_rows, "ranges": ranges}
     touched: list[str] = []
     kept: list[str] = []
     for d in cur["dirs"]:
@@ -986,11 +998,9 @@ def _merge_locked(
         existing = _read_dirs(spark, table_dir, touched, schema)
         survivors = existing.join(batch.select(*keys), on=keys, how="left_anti")
         out = survivors.unionByName(batch)
-    # rows only: an empty schema records no ranges
-    dropped_rows = sum(_footer_stats(os.path.join(table_dir, d), {})[0] for d in touched)
     return _publish(
         table_dir, cur, fence, _parquet_writer(out, parts), kept,
-        dropped_rows, schema, marks, parts,
+        sum(dir_rows[d] for d in touched), schema, marks, parts,
     )
 
 

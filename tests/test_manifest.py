@@ -944,12 +944,15 @@ def test_first_cut_manifest_is_rejected_untouched(spark, tmp_path):
 
 def test_manifest_key_set_is_stable(spark, tmp_path):
     """The on-disk keys of a written manifest (readers outside the
-    package parse MANIFEST.json directly): seven always, and
+    package parse MANIFEST.json directly): eight always, and
     partition_by, txn and data_change only when set. Each version's
     snapshot is byte-for-byte its pointer."""
     from etl_data_pipeline_spark.sinks.manifest import compact
 
-    base = {"version", "dirs", "schema", "fence", "delta_rows", "total_rows", "ranges"}
+    base = {
+        "version", "dirs", "schema", "fence", "delta_rows", "total_rows",
+        "dir_rows", "ranges",
+    }
     t = str(tmp_path / "t")
 
     def keys():

@@ -50,18 +50,30 @@ def test_merge_updates_inserts_preserves(spark, tmp_path):
     assert (150, "a150") in _content(spark, td, version=3)
 
 
-def test_merge_prunes_disjoint_dirs(spark, tmp_path):
+def test_merge_prunes_disjoint_dirs(spark, tmp_path, monkeypatch):
     """A batch whose keys hit only the middle range must leave the
     first and third delta dirs in the manifest UNTOUCHED (same rel
-    paths) — the footer-stats pruning contract."""
+    paths). Pruning and the dropped-row count come from the manifest's
+    recorded ranges and row counts, so the only parquet footers the
+    merge opens are the new dir's."""
+    import pyarrow.parquet as pq
+
     td = _table(spark, tmp_path)
     before = M.read_manifest(td)["dirs"]
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(
+        pq, "ParquetFile", lambda path, *a, **k: opened.append(path) or real(path, *a, **k)
+    )
     batch = spark.createDataFrame([(120, "X"), (180, "Y")], "k long, v string")
     m = M.merge_upsert(spark, td, batch, ("k",))
     assert before[0] in m["dirs"], "dir [0,100) wrongly rewritten"
     assert before[2] in m["dirs"], "dir [200,300) wrongly rewritten"
     assert before[1] not in m["dirs"], "matched dir must be rewritten"
     assert len(m["dirs"]) == 3  # two kept + one new
+    new_dir = os.path.join(td, m["dirs"][-1])
+    assert opened and all(p.startswith(new_dir + os.sep) for p in opened), opened
+    assert m["dir_rows"] == dict.fromkeys(m["dirs"], 100)
     got = _content(spark, td)
     assert (120, "X") in got and (180, "Y") in got and len(got) == 300
 
@@ -482,50 +494,56 @@ def test_ranges_leave_out_what_cannot_prune_safely(spark, tmp_path):
 
 
 def test_manifest_without_ranges_reads_merges_and_vacuums(spark, tmp_path, monkeypatch):
-    """A table whose manifests carry no ``ranges`` (as written before
-    ranges were recorded) still reads, merges and vacuums. Reads keep
-    its old dirs; the first merge walks their footers once, prunes by
-    them and records them, so the next merge opens no old footer."""
+    """A table whose manifests carry no ``ranges`` and ``dir_rows``, or
+    no ``dir_rows`` only (as written before each was recorded), still
+    reads, merges and vacuums. Reads keep its unranged dirs; the first
+    merge walks the old footers once, prunes by them and records both,
+    so the next merge opens no footer but its new dir's."""
     import json
 
-    td = _table(spark, tmp_path)
-    mdir = os.path.join(td, "_manifests")
-    for path in [os.path.join(td, "MANIFEST.json")] + [
-        os.path.join(mdir, f) for f in os.listdir(mdir)
-    ]:
-        with open(path) as f:
-            old = json.load(f)
-        del old["ranges"]
-        with open(path, "w") as f:
-            json.dump(old, f)
-    before = M.read_manifest(td)["dirs"]
-    pruned = M.read_table(spark, td, where={"k": 5}).inputFiles()
-    assert set(pruned) == set(M.read_table(spark, td).inputFiles())
-    batch = spark.createDataFrame([(150, "UPD")], "k long, v string")
-    m = M.merge_upsert(spark, td, batch, ("k",))
-    assert m["dirs"][:2] == [before[0], before[2]]  # only the middle dir rewritten
-    assert list(m["ranges"]) == m["dirs"]
-    assert [m["ranges"][d]["k"] for d in m["dirs"]] == [[0, 99], [200, 299], [100, 199]]
     walked = []
     real = M._footer_stats
     monkeypatch.setattr(
         M, "_footer_stats", lambda d, s: walked.append((d, bool(s))) or real(d, s)
     )
-    batch = spark.createDataFrame([(250, "UPD")], "k long, v string")
-    m = M.merge_upsert(spark, td, batch, ("k",))
-    assert before[0] in m["dirs"] and before[2] not in m["dirs"]
-    assert [d for d, ranged in walked if ranged] == [os.path.join(td, m["dirs"][-1])]
-    got = _content(spark, td)
-    assert {(150, "UPD"), (250, "UPD")} <= got and len(got) == 300
-    assert M.vacuum(td, keep_last=1) == [1, 2, 3, 4]
-    assert _content(spark, td) == got
+    for unrecorded in (("ranges", "dir_rows"), ("dir_rows",)):
+        td = _table(spark, tmp_path, name="_".join(unrecorded))
+        mdir = os.path.join(td, "_manifests")
+        for path in [os.path.join(td, "MANIFEST.json")] + [
+            os.path.join(mdir, f) for f in os.listdir(mdir)
+        ]:
+            with open(path) as f:
+                old = json.load(f)
+            for key in unrecorded:
+                del old[key]
+            with open(path, "w") as f:
+                json.dump(old, f)
+        before = M.read_manifest(td)["dirs"]
+        pruned = set(M.read_table(spark, td, where={"k": 5}).inputFiles())
+        everything = set(M.read_table(spark, td).inputFiles())
+        assert (pruned == everything) == ("ranges" in unrecorded), unrecorded
+        batch = spark.createDataFrame([(150, "UPD")], "k long, v string")
+        m = M.merge_upsert(spark, td, batch, ("k",))
+        assert m["dirs"][:2] == [before[0], before[2]]  # only the middle dir rewritten
+        assert list(m["ranges"]) == list(m["dir_rows"]) == m["dirs"]
+        assert [m["ranges"][d]["k"] for d in m["dirs"]] == [[0, 99], [200, 299], [100, 199]]
+        walked.clear()
+        batch = spark.createDataFrame([(250, "UPD")], "k long, v string")
+        m = M.merge_upsert(spark, td, batch, ("k",))
+        assert before[0] in m["dirs"] and before[2] not in m["dirs"]
+        assert walked == [(os.path.join(td, m["dirs"][-1]), True)]
+        got = _content(spark, td)
+        assert {(150, "UPD"), (250, "UPD")} <= got and len(got) == 300
+        assert M.vacuum(td, keep_last=1) == [1, 2, 3, 4]
+        assert _content(spark, td) == got
 
 
 def test_ranges_follow_their_dirs_through_compact_and_vacuum(spark, tmp_path):
-    """Every manifest records ranges for exactly its own dirs: a merge
-    carries the kept dirs' entries over unchanged, compaction records
-    the folded dir's, and vacuum leaves the head's ranges naming only
-    dirs still on disk, with no stats store beside the table."""
+    """Every manifest records ranges and row counts for exactly its own
+    dirs: a merge carries the kept dirs' entries over unchanged,
+    compaction records the folded dir's, and vacuum leaves the head's
+    entries naming only dirs still on disk, with no stats store beside
+    the table."""
     td = _table(spark, tmp_path)
     m = M.read_manifest(td)
     assert list(m["ranges"]) == m["dirs"]
@@ -540,6 +558,7 @@ def test_ranges_follow_their_dirs_through_compact_and_vacuum(spark, tmp_path):
     M.vacuum(td, keep_last=1)
     head = M.read_manifest(td)
     assert head["ranges"] == c["ranges"]
+    assert head["dir_rows"] == {c["dirs"][0]: 300}
     assert all(os.path.isdir(os.path.join(td, d)) for d in head["ranges"])
     assert sorted(os.listdir(td)) == [
         "MANIFEST.json", "MANIFEST.json.lease", "_manifests", "_versions"

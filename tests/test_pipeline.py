@@ -1123,3 +1123,50 @@ def test_all_null_watermark_batch_loads_and_keeps_the_watermark(spark, tmp_path)
     assert (r.status, r.new_watermark) == ("loaded", None)
     assert spark.read.parquet(str(tmp_path / "sink" / "t")).count() == 2
     assert store.get("t") is None
+
+
+def test_registered_source_and_sink_run_incrementally(spark, tmp_path):
+    """register_source / register_sink plug a custom format into the
+    pipeline: the source gets the table's source_options, the second
+    run loads only the rows past the watermark into the custom sink,
+    and both registries are restored afterwards."""
+    from etl_data_pipeline_spark.sinks import SINKS, register_sink
+    from etl_data_pipeline_spark.sources import SOURCES, register_source
+
+    rows = [(i, f"r{i}") for i in range(5)]
+    landed = []
+
+    def source(spark_, table, options):
+        assert (table, options) == ("events", {"tag": "mem"})
+        return spark_.createDataFrame(rows, "id long, v string")
+
+    def sink(df, table, options):
+        landed.append((table, sorted(r.id for r in df.collect())))
+
+    assert "mem" not in SOURCES and "mem" not in SINKS
+    register_source("mem", source)
+    register_sink("mem", sink)
+    try:
+        spec = PipelineSpec(
+            tables=[
+                TableSpec(
+                    name="events",
+                    watermark_column="id",
+                    watermark_type="id",
+                    source_format="mem",
+                    source_options={"tag": "mem"},
+                    sink_format="mem",
+                )
+            ]
+        )
+        store = WatermarkStore(tmp_path / "state.json")
+        pipe = IncrementalPipeline(spark, spec, store)
+        assert [(r.status, r.rows) for r in pipe.run()] == [("loaded", 5)]
+        assert store.get("events") == "4"
+        rows.extend((i, f"r{i}") for i in range(5, 8))
+        assert [(r.status, r.rows) for r in pipe.run()] == [("loaded", 3)]
+        assert store.get("events") == "7"
+        assert landed == [("events", [0, 1, 2, 3, 4]), ("events", [5, 6, 7])]
+    finally:
+        SOURCES.pop("mem", None)
+        SINKS.pop("mem", None)

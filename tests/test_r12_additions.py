@@ -404,21 +404,21 @@ def test_domain_cap_invariants(spark, sf_dir):
     assert rows == again
 
 
-# ---- bench r1 subtotal ---------------------------------------------------
+# ---- bench and heavy-set names -------------------------------------------
 
 
-def test_bench_r1_headline_slice():
-    """The self-adjudicating r1 subtotal must cover EXACTLY the 24
-    round-1 queries (everything before the round-2 marker) — a
-    reordering of BENCH_QUERIES that silently changed the floor's
-    denominator would make the BASELINE comparison meaningless."""
+def test_bench_and_heavy_set_names_are_registered():
+    """bench.py times 52 distinct registry queries and the ``--heavy``
+    answer gate names only registered ones, so a renamed query fails
+    here, not after a bench run's warm-up pass."""
     import bench
+    from tools.check_correctness import HEAVY_SET
 
-    assert len(bench.R1_HEADLINE) == 24
-    assert bench.R1_HEADLINE[0] == "agg_groupby"
-    assert bench.R1_HEADLINE[-1] == "pipeline_incremental"
-    assert "text_contamination" not in bench.R1_HEADLINE
-    assert set(bench.R1_HEADLINE) <= set(bench.BENCH_QUERIES)
+    from etl_data_pipeline_spark.operators import collect_registry
+
+    queries, _oracle = collect_registry()
+    assert len(set(bench.BENCH_QUERIES)) == len(bench.BENCH_QUERIES) == 52
+    assert set(bench.BENCH_QUERIES) | set(HEAVY_SET) <= set(queries)
 
 
 # ---- with_global_position edge shapes (the pure-JVM r12 default) ----------

@@ -3,8 +3,7 @@
 Runs every ``__spark_entry__.queries()`` entry at a given SF and
 compares with its DuckDB oracle: row count, column names, and an
 order-insensitive value comparison (sorted by all columns, values
-normalized to strings). Use while iterating; the driver runs its own
-version per-round.
+normalized to strings). Exits non-zero when any query fails.
 
 Dtype fidelity: both sides are materialized through pandas (Spark
 ``toPandas()``, DuckDB ``.df()``) — the same path the driver uses —
@@ -13,7 +12,7 @@ being masked. Numeric cells are tagged by kind (``i:``/``f:``): an
 oracle that yields float64 123.0 against Spark's int64 123 FAILS,
 exactly as the driver's exact hash does.
 
-Usage: python tools/check_correctness.py [sf_dir] [query ...]
+Usage: python tools/check_correctness.py [sf_dir] [--heavy] [query ...]
 """
 
 from __future__ import annotations
@@ -33,12 +32,13 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-# The STANDING heavy-set answer gate (r8 established it; r9 verdict
-# item 7 made the list live here so re-gates cover later additions by
-# default): the queries whose 10x/100x ANSWER evidence the 100 TB
-# claim rests on. Run with `--heavy` against .scaledata/sf3 or sf10.
+# The heavy-set answer gate, run with ``--heavy`` against a scaled tier
+# (tools/gen_scale_data.py): queries whose answers must hold at 10x-100x
+# the driver tier, not only at it — whole-corpus passes, multi-shuffle
+# dedup and ANN pipelines, iterative model training, and the queries
+# whose global window was replaced by the distributed positional
+# recipe. Every name is registered (pinned by a test).
 HEAVY_SET = [
-    # r8 original 14
     "tpch_q9ish",
     "events_sessionize",
     "pipeline_corpus_curation_v3",
@@ -53,31 +53,22 @@ HEAVY_SET = [
     "dedup_minhash_lsh",
     "sim_ann_pq_adc",
     "embedding_pca_project",
-    # r8/r9 registrations with only ad-hoc sf3/sf10 evidence
     "sim_ann_ivf_trained",
     "sim_ann_ivf_trained_recall",
     "pipeline_dedup_report",
-    # r10 registrations
     "sim_ann_ivf_clustered_recall",
     "sim_ann_ivf_clustered_trained_recall",
     "embedding_kmeans_coverage",
     "classifier_train_lr",
     "classifier_train_lr_eval",
-    # r11 plan swaps (single-partition window -> distributed
-    # positional recipe): keep their oracle parity pinned at 30x, not
-    # just the driver tier
     "events_rfm",
     "corpus_interleave",
     "export_shuffle",
-    # r12: scale-relevant r7 ops that until now had only sf1 evidence
-    # (r11 verdict item 4; sim_ann_pq_adc was already in the r8 list)
     "pareto_frontier",
     "events_attribution",
     "dedup_semantic",
     "events_pattern_match",
     "timeseries_holt",
-    # r12 registration: domain capping is a whole-corpus pass — keep
-    # its oracle parity pinned at 30x from day one
     "corpus_domain_cap",
     "corpus_domain_cap_decisions",
 ]
