@@ -1,5 +1,6 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: headline queries at the tier
+``session.DEFAULT_SF_DIR`` names ($SPARK_GRAFT_SF_DIR) on
+local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
   {"metric": "bench_total_sec", "value": N, "unit": "sec",
@@ -28,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_data_pipeline_spark.functions.caching import release_tracked
-from etl_data_pipeline_spark.session import get_spark, load_table
+from etl_data_pipeline_spark.session import DEFAULT_SF_DIR, get_spark, load_table
 
 # The headline set: 52 distinct registered queries (pinned by a test).
 # It covers the shapes that dominate real pipelines at scale —
@@ -98,18 +99,21 @@ REPS = 3
 
 def spark_control(spark) -> float:
     """Time ONE fixed in-JVM shuffle+agg (noop sink) — the bench's
-    machine-speed control. 48M generated rows → 1M-group hash
-    aggregate: at 64 map tasks each holds <1M groups, so partial
-    aggregation cannot collapse the exchange and ~48M rows genuinely
-    cross the shuffle — a memory-bandwidth-class load. Deterministic
-    (range + modular arithmetic), reads nothing, and is NOT part of
-    the timed query set: it runs OUTSIDE the timed region, so a
-    comparison of two runs can see host contention that loadavg
-    cannot."""
+    machine-speed control, sized to the host: 1.5M generated rows per
+    core (defaultParallelism) → 1M-group hash aggregate, in 2 map
+    tasks per core. Each map task holds 750k rows, fewer than the 1M
+    groups, so partial aggregation cannot collapse the exchange and
+    every row genuinely crosses the shuffle — a memory-bandwidth-class
+    load (on local[32]: 48M rows in 64 tasks). Deterministic (range +
+    modular arithmetic), reads nothing, and is NOT part of the timed
+    query set: it runs OUTSIDE the timed region, so a comparison of
+    two runs on the same host shape can see host contention that
+    loadavg cannot."""
     from pyspark.sql import functions as F
 
+    cores = spark.sparkContext.defaultParallelism
     df = (
-        spark.range(0, 48_000_000, 1, 64)
+        spark.range(0, 1_500_000 * cores, 1, 2 * cores)
         .select(
             (F.col("id") % 1_000_000).alias("k"),
             ((F.col("id") * 2654435761) % 1_000_003).alias("v"),
@@ -123,7 +127,7 @@ def spark_control(spark) -> float:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:

@@ -26,7 +26,7 @@ This module owns both lifecycles:
 Release ends the life of what it frees. A released cache only costs
 recomputation, but a released checkpoint has no lineage behind its
 blocks: any frame built on it (``with_global_position`` output, the
-graph, PCA and IVF iterates) fails for good if executed afterwards.
+graph and IVF iterates) fails for good if executed afterwards.
 Release between queries, once their results are consumed.
 
 Driver-side bookkeeping only: a list of DataFrame handles per

@@ -25,6 +25,8 @@ Mining of Massive Datasets ch.3), SimHash (Charikar 2002; Manku et al.
 
 from __future__ import annotations
 
+import itertools
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -882,8 +884,8 @@ def dedup_levenshtein_entropy(
     boundaries, so constant regions (the zero-padded prefix that makes
     the fixed split's leading blocks huge) stop dominating block sizes.
 
-    Boundary derivation — deterministic, engine-portable, collect-free:
-    per digit position p, the DISCRIMINATIVE MASS disc_p = n_p² − Σ_c
+    Boundary derivation — deterministic and engine-portable: per digit
+    position p, the DISCRIMINATIVE MASS disc_p = n_p² − Σ_c
     c_p(c)² (twice the number of record pairs position p distinguishes
     — the collision-counting / Rényi-2 form of entropy, chosen over
     Shannon's because it is ALL-INTEGER arithmetic: no ln(), so the
@@ -901,15 +903,20 @@ def dedup_levenshtein_entropy(
     τ = 2 substitutions, the class the fixed split's own docstring
     promises — is identical to the fixed split; only block sizes
     change. Candidate coverage OUTSIDE that class is narrower than
-    the fixed split's since round 9's two-level keys (_entropy_keyed):
+    the fixed split's under the two-level keys (_entropy_keyed):
     a position-shifting (indel) pair that incidentally kept one
     fixed segment aligned could surface under the 3 one-level keys
     but may share none of the 9 composite keys. Neither scheme ever
     guaranteed indel pairs (that takes PassJoin's shifted-substring
     machinery); the oracle replays the same keying, so cross-engine
-    equality is unaffected. Plan: one tiny (position, digit) aggregate + three
-    1-row folds broadcast back — the derivation adds no full-data
-    shuffle; candidate generation and verify are the shared
+    equality is unaffected.
+
+    Collect contract: the derivation's input is bounded by the schema,
+    not the data — one row per digit position — so that relation is
+    collected once and the boundaries are computed on the driver in
+    Python integers; nothing corpus-sized is collected. The corpus
+    work is one map-side-combined (position, digit) count aggregate;
+    candidate generation and verify are the shared
     _levenshtein_best_match tail. The block-cap guard stays (a corpus
     whose digits are constant EVERYWHERE still degenerates; refuse
     rather than run quadratic).
@@ -931,13 +938,12 @@ def dedup_levenshtein_entropy(
     check_correctness.py HEAVY_SET for this query): the sf3 tier's
     SEQUENTIAL ids put ~10⁸ true pairs inside τ = 2 (every id within
     two substitutions of ~100 neighbors) — the OUTPUT is quadratic,
-    not the plan. r9 measured the engine side green at 2,045 s wall
-    and hash-equal; the r11 judge hit the same wall independently.
-    Re-running that proves only that emitting 10⁸ rows is slow.
-    The operative scale evidence is a realistic-key run: 450 k rows
-    with richer keys finished in 27.4 s, because richer keys keep the
-    true-pair count linear; plus the sf0.01 oracle hash in the full
-    correctness gate.
+    not the plan. The engine side was measured green at 2,045 s wall
+    and hash-equal; re-running that proves only that emitting 10⁸
+    rows is slow. The operative scale evidence is a realistic-key
+    run: 450 k rows with richer keys finished in 27.4 s, because
+    richer keys keep the true-pair count linear; plus the sf0.01
+    oracle hash in the full correctness gate.
     """
     keyed = _entropy_keyed(spark, sf_dir)
     if not exhibit:
@@ -952,31 +958,35 @@ def _entropy_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The entropy-aware (seg, seg_val) keying relation — separate so
     tests can measure its block-size distribution directly.
 
-    TWO-LEVEL (round 9): level 1 splits the digits into τ+1 = 3
-    entropy-balanced segments as before; level 2 re-applies the same
-    derivation to each segment's COMPLEMENT (the positions a pair
-    agreeing on that segment can still differ in), splitting it into 3
-    more entropy-balanced sub-segments. A record emits 9 keys —
-    (s, t) for s, t ∈ {0,1,2} with value val_s ':' subval_{s,t} — and
-    the pigeonhole survives both levels FOR SUBSTITUTIONS: ≤ τ = 2
-    substitutions leave ≥ 1 level-1 segment untouched (val_s equal),
-    and all of them land in that segment's complement, where they
-    leave ≥ 1 of the 3 sub-segments untouched (subval equal), so every
-    true pair shares ≥ 1 composite key. (Substitutions don't shift
-    position frames, so the sub-partition need not be contiguous in
-    the original string — the complement is concatenated across the
-    level-1 gap and split in complement coordinates.) This is
-    PassJoin's recursive-partition idea (Li et al. 2011) restricted to
-    the substitution case the level-1 scheme already documents.
+    TWO-LEVEL: level 1 splits the digits into τ+1 = 3 entropy-balanced
+    segments; level 2 re-applies the same derivation to each segment's
+    COMPLEMENT (the positions a pair agreeing on that segment can
+    still differ in), splitting it into 3 more entropy-balanced
+    sub-segments. A record emits 9 keys — (s, t) for s, t ∈ {0,1,2}
+    with value val_s ':' subval_{s,t} — and the pigeonhole survives
+    both levels FOR SUBSTITUTIONS: ≤ τ = 2 substitutions leave ≥ 1
+    level-1 segment untouched (val_s equal), and all of them land in
+    that segment's complement, where they leave ≥ 1 of the 3
+    sub-segments untouched (subval equal), so every true pair shares
+    ≥ 1 composite key. (Substitutions don't shift position frames, so
+    the sub-partition need not be contiguous in the original string —
+    the complement is concatenated across the level-1 gap and split in
+    complement coordinates.) This is PassJoin's recursive-partition
+    idea (Li et al. 2011) restricted to the substitution case the
+    level-1 scheme already documents.
 
     Why: one level bounds blocks at ~n/10 on zero-padded SEQUENTIAL
     ids (the tail segment is ~1 digit), which crosses the block cap at
     ~500k records. Each composite key covers segment ∪ sub-segment ≈
     5/9 of the discriminative mass, so blocks shrink to ~n/10³ on the
-    same adversarial ids — bounded well past the 30× tier. Level-2
-    boundaries reuse the per-position collision-mass relation (no new
-    corpus pass; three more ≤L-row folds), all-integer as before, so
-    the DuckDB oracle reproduces every boundary bit-exactly."""
+    same adversarial ids — bounded well past the 30× tier.
+
+    Plan: the per-position collision masses (≤ one row per digit
+    position) are collected once; both levels' boundaries are plain
+    Python integers (_thirds), all-integer as in the DuckDB oracle, so
+    every boundary is bit-exact across engines; the 9 keys are
+    substrings at literal offsets, a map-only projection of the
+    customer scan."""
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     digits = F.regexp_replace(F.col("c_name"), "[^0-9]", "")
     base = cust.select("c_custkey", "c_name", digits.alias("digits"))
@@ -993,134 +1003,72 @@ def _entropy_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").alias("n_p"),
         F.sum(F.col("n") * F.col("n")).alias("s2"),
     )
-    # per-position discriminative mass — persisted: feeds the level-1
-    # cumsum AND the three level-2 complement cumsums
-    posd = tracked_persist(
-        p.select("pos", (F.col("n_p") * F.col("n_p") - F.col("s2")).alias("disc"))
-    )
-    wcum = Window.orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)
-    cum = posd.select("pos", F.sum("disc").over(wcum).alias("cumdisc"))
-    tot = cum.agg(F.max("cumdisc").alias("total"), F.max("pos").alias("L"))
-    joined = cum.crossJoin(F.broadcast(tot))
-    b1 = joined.filter(F.col("cumdisc") * 3 >= F.col("total")).agg(
-        F.min("pos").alias("b1")
-    )
-    b2 = joined.filter(F.col("cumdisc") * 3 >= F.col("total") * 2).agg(
-        F.min("pos").alias("b2")
-    )
-    # persist the 1-ROW bounds relation: it feeds the three level-2
-    # derivations AND both sides of the downstream block self-join,
-    # and without the persist the whole derivation subtree (char
-    # explode + two aggregates + window + three folds) replays per use
-    bounds = tracked_persist(
-        b1.crossJoin(b2)
-        .crossJoin(tot)
-        .select(
-            F.least(F.greatest(F.col("b1"), F.lit(1)), F.col("L") - 2).alias(
-                "b1c"
-            ),
-            "b2",
-            "L",
+    # positions are 1..L with no gap (each name explodes 1..its length),
+    # so list index + 1 is the position
+    disc = [
+        r.disc
+        for r in sorted(
+            p.select("pos", (F.col("n_p") * F.col("n_p") - F.col("s2")).alias("disc"))
+            .collect()
         )
-        .select(
-            "b1c",
-            F.least(
-                F.greatest(F.col("b2"), F.col("b1c") + 1), F.col("L") - 1
-            ).alias("b2c"),
-            "L",
-        )
-    )
-    # level 2: for each level-1 segment s, split its COMPLEMENT (in
-    # complement coordinates, ordered by original position) at 1/3 and
-    # 2/3 of the complement's cumulative disc — same derivation, same
-    # clamps, over the already-persisted posd/bounds relations
-    comp_filters = [
-        F.col("pos") > F.col("b1c"),  # complement of seg 0 = (b1c, L]
-        (F.col("pos") <= F.col("b1c")) | (F.col("pos") > F.col("b2c")),
-        F.col("pos") <= F.col("b2c"),  # complement of seg 2 = [1, b2c]
     ]
-    sub_bounds = None
-    for s, flt in enumerate(comp_filters):
-        comp = (
-            posd.crossJoin(F.broadcast(bounds))
-            .filter(flt)
-            .select(
-                "disc",
-                F.row_number().over(Window.orderBy("pos")).alias("rn"),
-            )
-        )
-        wc = Window.orderBy("rn").rowsBetween(Window.unboundedPreceding, 0)
-        cc = comp.select("rn", F.sum("disc").over(wc).alias("cd"))
-        ct = cc.agg(F.max("cd").alias("ctotal"), F.max("rn").alias("cl"))
-        cj = cc.crossJoin(F.broadcast(ct))
-        sb1 = cj.filter(F.col("cd") * 3 >= F.col("ctotal")).agg(
-            F.min("rn").alias("sb1")
-        )
-        sb2 = cj.filter(F.col("cd") * 3 >= F.col("ctotal") * 2).agg(
-            F.min("rn").alias("sb2")
-        )
-        one = (
-            sb1.crossJoin(sb2)
-            .crossJoin(ct)
-            .select(
-                F.least(F.greatest(F.col("sb1"), F.lit(1)), F.col("cl") - 2)
-                .alias(f"sb1c_{s}"),
-                "sb2",
-                "cl",
-            )
-            .select(
-                f"sb1c_{s}",
-                F.least(
-                    F.greatest(F.col("sb2"), F.col(f"sb1c_{s}") + 1),
-                    F.col("cl") - 1,
-                ).alias(f"sb2c_{s}"),
-                F.col("cl").alias(f"cl_{s}"),
-            )
-        )
-        sub_bounds = one if sub_bounds is None else sub_bounds.crossJoin(one)
-    allb = tracked_persist(bounds.crossJoin(sub_bounds))
+    b1c, b2c, L = _thirds(disc)
+    # level 2: each segment's COMPLEMENT, in original position order
+    pos_disc = list(enumerate(disc, 1))
+    comp_disc = [
+        [d for i, d in pos_disc if i > b1c],
+        [d for i, d in pos_disc if i <= b1c or i > b2c],
+        [d for i, d in pos_disc if i <= b2c],
+    ]
     # per-record key emission: 9 composite keys (3 level-1 segments ×
     # 3 complement sub-segments), seg = s*3 + t, value = val_s ':' sub
     dg = F.col("digits")
-    lv1_vals = [
-        dg.substr(F.lit(1), F.col("b1c")),
-        dg.substr(F.col("b1c") + 1, F.col("b2c") - F.col("b1c")),
-        dg.substr(F.col("b2c") + 1, F.col("L") - F.col("b2c")),
-    ]
+    lv1_vals = _split3(dg, b1c, b2c, L)
     comps = [
-        dg.substr(F.col("b1c") + 1, F.col("L") - F.col("b1c")),
-        F.concat(
-            dg.substr(F.lit(1), F.col("b1c")),
-            dg.substr(F.col("b2c") + 1, F.col("L") - F.col("b2c")),
-        ),
-        dg.substr(F.lit(1), F.col("b2c")),
+        _span(dg, b1c + 1, L),
+        F.concat(lv1_vals[0], lv1_vals[2]),
+        _span(dg, 1, b2c),
     ]
-    keys = []
-    for s in range(3):
-        sb1c, sb2c, cl = (
-            F.col(f"sb1c_{s}"), F.col(f"sb2c_{s}"), F.col(f"cl_{s}")
-        )
-        for sub in (
-            comps[s].substr(F.lit(1), sb1c),
-            comps[s].substr(sb1c + 1, sb2c - sb1c),
-            comps[s].substr(sb2c + 1, cl - sb2c),
-        ):
-            keys.append(F.concat(lv1_vals[s], F.lit(":"), sub))
-    keyed = base.crossJoin(F.broadcast(allb)).select(
+    keys = [
+        F.concat(lv1_vals[s], F.lit(":"), sub)
+        for s in range(3)
+        for sub in _split3(comps[s], *_thirds(comp_disc[s]))
+    ]
+    return base.select(
         "c_custkey",
         "c_name",
         F.posexplode(F.array(*keys)).alias("seg", "seg_val"),
     )
-    # localCheckpoint: the boundary derivation above is ~30 tiny
-    # single-task stages (two window folds per complement, 1-row
-    # crossJoin chain); left as lazy lineage it REPLAYS inside every
-    # consumer of this relation — both sides of the block self-join,
-    # the broadcast build, the cap-guard count and the rank-1 window —
-    # which measured 85 s at sf0.1 vs 11 s truncated (r11; the same
-    # plan-nesting failure mode the iterative operators hit in r10).
-    # Eager is right: every caller consumes the full relation at least
-    # twice, and the keyed rows are 9 small columns per record.
-    return tracked_checkpoint(keyed)
+
+
+def _thirds(disc: list[int]) -> tuple[int, int, int | None]:
+    """(b1c, b2c, L) for a run of per-position collision masses, in
+    the run's own 1-based coordinates: b1/b2 are the first positions
+    whose running sum reaches 1/3 and 2/3 of the total, clamped as the
+    oracle's SQL clamps them — b1c = least(greatest(b1, 1), L − 2),
+    b2c = least(greatest(b2, b1c + 1), L − 1) — with SQL's
+    NULL-skipping least/greatest: an empty run gives (1, 2, NULL), and
+    a run shorter than 3 clamps below 1."""
+    if not disc:
+        return 1, 2, None
+    cum = list(itertools.accumulate(disc))
+    total, L = cum[-1], len(disc)
+    b1 = next(i for i, c in enumerate(cum, 1) if 3 * c >= total)
+    b2 = next(i for i, c in enumerate(cum, 1) if 3 * c >= 2 * total)
+    b1c = min(b1, L - 2)
+    return b1c, min(max(b2, b1c + 1), L - 1), L
+
+
+def _span(col: Column, first: int, last: int | None) -> Column:
+    """SQL substr of positions first..last at literal offsets; a NULL
+    ``last`` gives a NULL length, so NULL."""
+    length = None if last is None else last - first + 1
+    return col.substr(F.lit(first), F.lit(length).cast("int"))
+
+
+def _split3(col: Column, b1c: int, b2c: int, L: int | None) -> list[Column]:
+    """The three contiguous pieces [1, b1c], (b1c, b2c], (b2c, L]."""
+    return [_span(col, 1, b1c), _span(col, b1c + 1, b2c), _span(col, b2c + 1, L)]
 
 
 EMB_LSH_TABLES = 8      # OR-construction: candidate if same-bucket in ANY table

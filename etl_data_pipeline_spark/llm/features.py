@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.functions.hashing import md5_long60, sql_md5_long60
-from etl_data_pipeline_spark.functions.rounding import hround, sql_round
+from etl_data_pipeline_spark.functions.rounding import _round6_py, hround, sql_round
 from etl_data_pipeline_spark.session import (
     MODEL_LOOP_CONF,
     derived_session,
@@ -278,16 +278,6 @@ def _lr_margin(wmap, js="js"):
         ),
         6,
     )
-
-
-def _round6_py(x: float) -> float:
-    """Driver-side hround(x, 6): floor(x·10⁶ + 0.5)/10⁶ in Python
-    floats — the identical IEEE-754 op sequence rounding.hround emits
-    in the JVM (np_round's formula), so a driver-computed weight step
-    is bit-equal to an executor-computed one."""
-    import math
-
-    return math.floor(x * 1000000 + 0.5) / 1000000
 
 
 def _lr_trained_weights(spark: SparkSession, sf_dir: str):

@@ -16,6 +16,7 @@ Scale design:
 
 from __future__ import annotations
 
+import math
 import random
 from functools import reduce
 
@@ -26,15 +27,9 @@ from etl_data_pipeline_spark.functions.caching import (
     tracked_checkpoint,
     tracked_persist,
 )
-from etl_data_pipeline_spark.functions.rounding import hround, sql_round
+from etl_data_pipeline_spark.functions.rounding import _round6_py, hround, sql_round
 from etl_data_pipeline_spark.llm.vector import cosine, dot as _dot, rank_topk, scored_pairs
-from etl_data_pipeline_spark.session import (
-    MODEL_LOOP_CONF,
-    derived_session,
-    load_table,
-    reroot,
-    spread,
-)
+from etl_data_pipeline_spark.session import load_table, spread
 
 TOP_K = 5
 QUERY_MOD = 100  # query set = vec_id % 100 == 0
@@ -1505,89 +1500,47 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself hasn't converged. The oracle unrolls the identical
     PCA_ITERS steps as chained CTEs.
 
-    Scale posture: the corpus-sized work is exactly one
-    embedding_covariance pass (O(dim²) state, map-side combined);
-    the iteration then runs on the d² matrix — persisted once,
-    re-joined per step with the d-row iterate (broadcast), never
-    touching corpus rows again. Driver never sees a vector: the
-    matvec is join + groupBy, the norm a 1-row broadcast aggregate.
+    Collect contract: the corpus-sized work is exactly one
+    embedding_covariance pass (O(dim²) state, map-side combined). Its
+    upper triangle is bounded by the schema — dim(dim+1)/2 rows — so
+    it is collected once and the iteration and the Rayleigh quotient
+    run on the driver (_pca_power_iterate); nothing corpus-sized is
+    collected, and the result is a dim-row local frame.
     """
     _, _, cov_ut = _covariance_parts(spark, sf_dir)
-    vec, _cov = _pca_power_iterate(cov_ut)
-    return _pca_eigen_output(vec, _cov)
+    x, eigenvalue = _pca_power_iterate(cov_ut)
+    return spark.createDataFrame(
+        [(i, xi, eigenvalue) for i, xi in sorted(x.items())],
+        "dim int, loading double, eigenvalue double",
+    )
 
 
-def _pca_power_iterate(cov_ut: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The PCA_ITERS rounded power-iteration loop; returns (final
-    iterate (i, x), persisted full matrix (i, j, c)), both in
-    ``cov_ut``'s session, which the loop does not touch."""
-    # persist the UPPER TRIANGLE before mirroring: both union branches
-    # otherwise re-run the corpus-sized covariance aggregation (the
-    # dim_i < dim_j filter pushes below the aggregate, so the branches
-    # are non-identical and Catalyst cannot reuse the exchange —
-    # verified: 0 ReusedExchange without this).
-    cov_ut = tracked_persist(cov_ut)
-    lower = cov_ut.filter(F.col("dim_i") < F.col("dim_j")).select(
-        F.col("dim_j").alias("i"), F.col("dim_i").alias("j"), F.col("cov").alias("c")
-    )
-    # repartition(1) before persisting: the union inherits ~2× the
-    # covariance shuffle partitioning (64 near-empty partitions of a
-    # 4096-row matrix), and every one of the 8 iteration jobs would
-    # re-launch that many scan tasks. One partition = one task per
-    # step — d² rows is driver-trivial but TASK COUNT is the cost here.
-    cov = tracked_persist(
-        cov_ut.select(
-            F.col("dim_i").alias("i"), F.col("dim_j").alias("j"), F.col("cov").alias("c")
-        )
-        .unionAll(lower)
-        .repartition(1)
-    )
-    # the steps run on a derived session with MODEL_LOOP_CONF (AQE
-    # off, a model-sized reduce width): the iterate is d-sized (on a
-    # 32-core host: 4.1→3.4 s median on embedding_pca_project at
-    # sf0.1, identical output)
-    mat = reroot(cov, derived_session(cov.sparkSession, MODEL_LOOP_CONF))
-    vec = mat.select(F.col("i")).distinct().select("i", F.lit(PCA_INIT).alias("x"))
+def _pca_power_iterate(cov_ut: DataFrame) -> tuple[dict[int, float], float | None]:
+    """The PCA_ITERS rounded power-iteration steps and the
+    Rayleigh-quotient eigenvalue, in Python floats on the driver over
+    the collected upper triangle; returns ({dim: loading}, eigenvalue)
+    — the eigenvalue is NULL for an empty matrix. Every matvec and
+    normalized iterate is rounded with _round6_py, the driver twin of
+    hround, so float-sum order noise is absorbed at each step exactly
+    as between Spark and the DuckDB oracle (see PCA_INIT)."""
+    cov: dict[int, dict[int, float]] = {}
+    for r in cov_ut.collect():
+        cov.setdefault(r.dim_i, {})[r.dim_j] = r.cov
+        cov.setdefault(r.dim_j, {})[r.dim_i] = r.cov
+
+    def matvec(x: dict[int, float]) -> dict[int, float]:
+        return {i: sum(c * x[j] for j, c in row.items()) for i, row in cov.items()}
+
+    x = {i: PCA_INIT for i in cov}
     for _ in range(PCA_ITERS):
-        # localCheckpoint (not persist): the norm aggregate AND the
-        # normalized iterate both reference the matvec, so each step
-        # would otherwise DOUBLE the logical plan (2^T growth) and
-        # Catalyst re-optimization explodes — the iterative-DataFrame
-        # trap dedup_clusters documents; persist alone doesn't help
-        # because the optimizer still walks the un-truncated lineage.
-        y = tracked_checkpoint(
-            mat.join(F.broadcast(vec.withColumnRenamed("i", "j")), "j")
-            .groupBy("i")
-            .agg(hround(F.sum(F.col("c") * F.col("x")), 6).alias("y"))
-            .coalesce(1)
-        )
-        norm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-        vec = y.crossJoin(F.broadcast(norm)).select(
-            "i", hround(F.col("y") / F.col("nrm"), 6).alias("x")
-        )
-    # back in the caller's session: what consumes the iterate plans
-    # with the caller's conf (AQE on)
-    return reroot(vec, cov.sparkSession), cov
-
-
-def _pca_eigen_output(vec: DataFrame, cov: DataFrame) -> DataFrame:
-    """Rayleigh-quotient eigenvalue + (dim, loading, eigenvalue)."""
-    yf = (
-        cov.join(F.broadcast(vec.withColumnRenamed("i", "j")), "j")
-        .groupBy("i")
-        .agg(F.sum(F.col("c") * F.col("x")).alias("y"))
-    )
-    lam = (
-        yf.join(F.broadcast(vec), "i")
-        .agg(
-            hround(
-                F.sum(F.col("y") * F.col("x")) / F.sum(F.col("x") * F.col("x")), 6
-            ).alias("eigenvalue")
-        )
-    )
-    return vec.crossJoin(F.broadcast(lam)).select(
-        F.col("i").alias("dim"), F.col("x").alias("loading"), "eigenvalue"
-    )
+        y = {i: _round6_py(v) for i, v in matvec(x).items()}
+        nrm = math.sqrt(sum(v * v for v in y.values()))
+        x = {i: _round6_py(v / nrm) for i, v in y.items()}
+    if not x:
+        return x, None
+    yf = matvec(x)
+    num = sum(yf[i] * xi for i, xi in x.items())
+    return x, _round6_py(num / sum(xi * xi for xi in x.values()))
 
 
 def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1607,17 +1560,17 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: ONE corpus pass — posexplode to (vec_id, dim, val)
     cells, two broadcast joins (64-row means, 64-row loading), one
     map-side-combinable groupBy(vec_id) carrying two double sums. The
-    power iteration's cost is corpus-independent (see
-    embedding_pca_power); nothing here shuffles vectors.
+    loading is a dim-row local frame from the driver-side iteration
+    (embedding_pca_power's collect contract: the schema-bounded
+    covariance is collected once, nothing corpus-sized is); nothing
+    here shuffles vectors.
     """
     # one _covariance_parts call: the persisted corpus frame, the
     # rounded means, and the covariance feed BOTH the iteration and
     # the projection — no second corpus scan, no duplicate means agg
     e, means, cov_ut = _covariance_parts(spark, sf_dir)
-    loading_vec, _ = _pca_power_iterate(cov_ut)
-    pc = loading_vec.select(
-        F.col("i").alias("dim"), F.col("x").alias("loading")
-    )
+    x, _ = _pca_power_iterate(cov_ut)
+    pc = spark.createDataFrame(sorted(x.items()), "dim int, loading double")
     cells = e.select("vec_id", F.posexplode("v").alias("dim", "val"))
     xc = F.col("val") - F.col("mean")
     agg = (

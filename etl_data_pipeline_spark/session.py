@@ -44,20 +44,20 @@ _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CLONE_LOCK = threading.Lock()
 
-# Conf of the model-sized iterate loops (the LR trainer's gradient
-# steps, PCA's power iteration), which build on a derived_session of
-# their own. Each step is a fixed small-state aggregate whose reduce
-# side is bounded by the model, not the data, so AQE's runtime
-# re-planning has nothing to improve at any scale while its per-stage
-# materialisation adds one job per step (on a 32-core host: 7.8 s vs
+# Conf of the model-sized iterate loop (the LR trainer's gradient
+# steps), which builds on a derived_session of its own. Each step is a
+# fixed small-state aggregate whose reduce side is bounded by the
+# model, not the data, so AQE's runtime re-planning has nothing to
+# improve at any scale while its per-stage materialisation adds one
+# job per step (on a 32-core host: 7.8 s vs
 # 12.0 s for the 20-step LR loop at sf0.1, identical weights). With
 # AQE's coalescing off, the steps would reduce at the full session
 # width (= core count locally, thousands on a cluster) for a handful
 # of groups — at 32 local cores classifier_train_lr ran slower than at
 # 8 (11.6 s vs 7.1 s) — so the width is pinned to AQE_OFF_REDUCE_WIDTH,
-# which covers the largest model (64 rows). Without AQE's skew split,
-# a shuffled-hash join could not spill, so the loops prefer sort-merge
-# (their joins are broadcasts anyway). Corpus-shaped plans keep AQE:
+# which covers the model (at most 33 rows). Without AQE's skew split,
+# a shuffled-hash join could not spill, so the loop prefers sort-merge
+# (its joins are broadcasts anyway). Corpus-shaped plans keep AQE:
 # it is what turns the tiny-iterate joins into broadcasts locally
 # while falling back to shuffle joins at scale.
 AQE_OFF_REDUCE_WIDTH = 8

@@ -71,9 +71,9 @@ def test_composing_session_storage_returns_to_baseline(spark, sf_dir):
     engine's localCheckpoint sites register with the tracker too
     (tracked_checkpoint), so the checkpointed IVF family is IN scope —
     the r12 narrowing (dedup_semantic routed around the checkpoint
-    gap) is reverted, closing the r12 ADVICE item. The LR and PCA
-    loops persist and checkpoint on a session derived from the
-    caller's; release by the caller's session frees those too."""
+    gap) is reverted, closing the r12 ADVICE item. The LR loop runs
+    on a session derived from the caller's; release by the caller's
+    session frees what it cached too."""
     from etl_data_pipeline_spark.llm import curation, dedup, features, similarity
 
     release_tracked(spark, blocking=True)  # clean slate

@@ -134,10 +134,12 @@ def test_load_table_reads_nanosecond_events(spark, tmp_path):
 
 
 def test_model_loop_job_counts(spark, sf_dir):
-    """The derived loop session runs the same jobs the loops ran on the
-    caller's session with AQE switched off: 25 for one LR training
-    (2 build queries, 20 gradient steps, the design), 41 for a
-    collected PCA projection. Every table is read once first, so no
+    """The LR trainer's derived loop session runs the same jobs the
+    loop ran on the caller's session with AQE switched off: 25 for one
+    training (2 build queries, 20 gradient steps, the design). A
+    collected PCA projection runs 15 on the caller's session: its
+    power iteration is driver-side over the collected covariance, so
+    no loop session is involved. Every table is read once first, so no
     count holds a schema-inference job (load_table memoises the
     schema), whatever ran earlier in the session."""
     from etl_data_pipeline_spark.llm import features, similarity
@@ -151,7 +153,7 @@ def test_model_loop_job_counts(spark, sf_dir):
         spark, lambda: similarity.embedding_pca_project(spark, sf_dir).collect()
     )
     release_tracked(spark, blocking=True)
-    assert (lr_jobs, pca_jobs) == (25, 41)
+    assert (lr_jobs, pca_jobs) == (25, 15)
 
 
 def _executed_plans(spark, description):

@@ -73,7 +73,7 @@ def test_round6_py_matches_hround(spark):
     """The driver-side weight update must round exactly like the
     executor expression it replaced: floor(x*1e6+0.5)/1e6 over a value
     sweep including tie and negative cases."""
-    from etl_data_pipeline_spark.llm.features import _round6_py
+    from etl_data_pipeline_spark.functions.rounding import _round6_py
 
     vals = [
         0.0, -0.0, 1.2345675, -1.2345675, 0.0000005, -0.0000005,

@@ -252,9 +252,9 @@ def test_embedding_pca_power_matches_numpy_trajectory(spark, sf_dir):
 
 
 def test_embedding_pca_power_plan_no_corpus_rejoin(spark, sf_dir):
-    """The corpus must be scanned only by the covariance stage; the
-    iteration joins the tiny matrix with broadcast iterates — no
-    cartesian product, no corpus-side shuffle join."""
+    """The corpus is scanned only by the covariance stage, whose upper
+    triangle is collected once; the iteration runs on the driver and
+    the result is a local frame — no cartesian product in the plan."""
     plan = _plan(similarity.embedding_pca_power(spark, sf_dir))
     assert "CartesianProduct" not in plan
 
