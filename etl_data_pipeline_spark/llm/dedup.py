@@ -1658,12 +1658,27 @@ def _oracle_levenshtein() -> str:
     """
 
 
-def _oracle_levenshtein_entropy() -> str:
-    """DuckDB rerun of the FULL two-level entropy-aware pipeline: the
-    all-integer collision-mass boundary derivation at BOTH levels
-    (bit-exact across engines — the reason Rényi-2 replaced Shannon
-    here), then the same 9-key blocking + verify + rank as the
-    fixed-segment oracle."""
+def _sql_substr(s: str, pos: str, length: str) -> str:
+    """DuckDB SQL for Spark's ``substr(s, pos, length)`` at a start
+    ``pos >= 0``, the only starts the entropy keying produces. Spark
+    reads a start of 0 as 1 and a negative length as empty; DuckDB
+    reads the first as the position before the string and runs the
+    second backwards. A NULL length gives NULL in both."""
+    return (
+        f"substr({s}, greatest({pos}, 1)::INT,"
+        f" (CASE WHEN {length} < 0 THEN 0 ELSE {length} END)::INT)"
+    )
+
+
+def _oracle_entropy_keyed() -> str:
+    """The CTEs of the DuckDB entropy keying, ending in ``keyed``
+    (c_custkey, c_name, seg, seg_val): the all-integer collision-mass
+    boundary derivation at BOTH levels (bit-exact across engines — the
+    reason Rényi-2 replaced Shannon here) and the 9 keys, replaying
+    ``_entropy_keyed`` key by key — Spark's ``substr`` (_sql_substr),
+    and _thirds' (1, 2, NULL) bounds for a complement with no digit
+    position, so a key a segment cannot fill is NULL as in Spark."""
+    sub = _sql_substr
     return f"""
         WITH c AS (
             SELECT c_custkey, c_name,
@@ -1693,63 +1708,68 @@ def _oracle_levenshtein_entropy() -> str:
         ), bounds AS (
             SELECT b1c, least(greatest(b2, b1c + 1), L - 1) AS b2c, L
             FROM b1c_t, b2t
+        ), segs AS (
+            SELECT * FROM (VALUES (0), (1), (2)) s(s)
         ), compd AS (
             -- level 2: each segment's complement re-indexed in
             -- complement coordinates (original position order)
-            SELECT s.s, d.disc,
-                   row_number() OVER (PARTITION BY s.s ORDER BY d.pos) AS rn
-            FROM posd d, bounds, (VALUES (0), (1), (2)) s(s)
-            WHERE (s.s = 0 AND d.pos > b1c)
-               OR (s.s = 1 AND (d.pos <= b1c OR d.pos > b2c))
-               OR (s.s = 2 AND d.pos <= b2c)
+            SELECT segs.s, d.disc,
+                   row_number() OVER (PARTITION BY segs.s ORDER BY d.pos) AS rn
+            FROM posd d, bounds, segs
+            WHERE (segs.s = 0 AND d.pos > b1c)
+               OR (segs.s = 1 AND (d.pos <= b1c OR d.pos > b2c))
+               OR (segs.s = 2 AND d.pos <= b2c)
         ), ccum AS (
             SELECT s, rn,
                    sum(disc) OVER (PARTITION BY s ORDER BY rn) AS cd
             FROM compd
         ), ctot AS (
-            SELECT s, max(cd) AS ctotal, max(rn) AS cl FROM ccum GROUP BY s
-        ), csb1 AS (
-            SELECT ccum.s, min(rn) AS sb1
-            FROM ccum JOIN ctot ON ccum.s = ctot.s
-            WHERE 3 * cd >= ctotal GROUP BY ccum.s
-        ), csb2 AS (
-            SELECT ccum.s, min(rn) AS sb2
-            FROM ccum JOIN ctot ON ccum.s = ctot.s
-            WHERE 3 * cd >= 2 * ctotal GROUP BY ccum.s
+            -- one row per segment, an empty complement included
+            SELECT segs.s, max(cd) AS ctotal, max(rn) AS cl
+            FROM segs LEFT JOIN ccum ON ccum.s = segs.s GROUP BY segs.s
+        ), csb AS (
+            SELECT ctot.s, ctotal, cl,
+                   min(rn) FILTER (WHERE 3 * cd >= ctotal) AS sb1,
+                   min(rn) FILTER (WHERE 3 * cd >= 2 * ctotal) AS sb2
+            FROM ctot LEFT JOIN ccum ON ccum.s = ctot.s
+            GROUP BY ctot.s, ctotal, cl
         ), csb1c AS (
-            SELECT csb1.s, least(greatest(sb1, 1), cl - 2) AS sb1c, cl
-            FROM csb1 JOIN ctot ON csb1.s = ctot.s
+            SELECT s, least(greatest(sb1, 1), cl - 2) AS sb1c, sb2, cl FROM csb
         ), cbounds AS (
-            SELECT csb1c.s, sb1c,
-                   least(greatest(sb2, sb1c + 1), cl - 1) AS sb2c, cl
-            FROM csb1c JOIN csb2 ON csb1c.s = csb2.s
+            SELECT s, sb1c, least(greatest(sb2, sb1c + 1), cl - 1) AS sb2c, cl
+            FROM csb1c
         ), lv1 AS (
-            SELECT c.c_custkey, c.c_name, s.s,
-                   CASE s.s
-                       WHEN 0 THEN substr(digits, 1, b1c::INT)
-                       WHEN 1 THEN substr(digits, b1c::INT + 1, (b2c - b1c)::INT)
-                       ELSE substr(digits, b2c::INT + 1, (L - b2c)::INT)
+            SELECT c.c_custkey, c.c_name, segs.s,
+                   CASE segs.s
+                       WHEN 0 THEN {sub("digits", "1", "b1c")}
+                       WHEN 1 THEN {sub("digits", "b1c + 1", "b2c - b1c")}
+                       ELSE {sub("digits", "b2c + 1", "L - b2c")}
                    END AS val_s,
-                   CASE s.s
-                       WHEN 0 THEN substr(digits, b1c::INT + 1, (L - b1c)::INT)
-                       WHEN 1 THEN substr(digits, 1, b1c::INT)
-                                   || substr(digits, b2c::INT + 1, (L - b2c)::INT)
-                       ELSE substr(digits, 1, b2c::INT)
+                   CASE segs.s
+                       WHEN 0 THEN {sub("digits", "b1c + 1", "L - b1c")}
+                       WHEN 1 THEN {sub("digits", "1", "b1c")}
+                                   || {sub("digits", "b2c + 1", "L - b2c")}
+                       ELSE {sub("digits", "1", "b2c")}
                    END AS comp
-            FROM c, bounds, (VALUES (0), (1), (2)) s(s)
+            FROM c, bounds, segs
         ), keyed AS (
             SELECT l.c_custkey, l.c_name, l.s * 3 + t.t AS seg,
                    l.val_s || ':' ||
                    CASE t.t
-                       WHEN 0 THEN substr(l.comp, 1, cb.sb1c::INT)
-                       WHEN 1 THEN substr(l.comp, cb.sb1c::INT + 1,
-                                          (cb.sb2c - cb.sb1c)::INT)
-                       ELSE substr(l.comp, cb.sb2c::INT + 1,
-                                   (cb.cl - cb.sb2c)::INT)
+                       WHEN 0 THEN {sub("l.comp", "1", "cb.sb1c")}
+                       WHEN 1 THEN {sub("l.comp", "cb.sb1c + 1", "cb.sb2c - cb.sb1c")}
+                       ELSE {sub("l.comp", "cb.sb2c + 1", "cb.cl - cb.sb2c")}
                    END AS seg_val
             FROM lv1 l
             JOIN cbounds cb ON cb.s = l.s, (VALUES (0), (1), (2)) t(t)
-        ), cand AS (
+        )"""
+
+
+def _oracle_levenshtein_entropy() -> str:
+    """DuckDB rerun of the FULL two-level entropy-aware pipeline: the
+    keying of _oracle_entropy_keyed, then the same blocking + verify +
+    rank as the fixed-segment oracle."""
+    return f"""{_oracle_entropy_keyed()}, cand AS (
             SELECT a.c_custkey AS cust_a, b.c_custkey AS cust_b,
                    a.c_name AS name_a, b.c_name AS name_b
             FROM keyed a JOIN keyed b

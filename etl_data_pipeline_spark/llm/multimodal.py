@@ -731,7 +731,7 @@ def _bmp_payload_col() -> Column:
     width = 16 + F.conv(F.substring(d, 1, 3), 16, 10).cast("int") % 4080
     height = 16 + F.conv(F.substring(d, 4, 3), 16, 10).cast("int") % 4080
     top_down = _hexbyte(d, 4) % 4 == 0
-    bpp = F.array(F.lit(8), F.lit(24), F.lit(32)).getItem(_hexbyte(d, 5) % 3)
+    bpp = F.array(F.lit(8), F.lit(24), F.lit(32))[_hexbyte(d, 5) % 3]
     corrupt_sig = _hexbyte(d, 6) % 16 == 0
     tlen = F.length(F.col("text").cast("binary"))
     # stored height: two's-complement u32 of (top_down ? -h : h)

@@ -115,9 +115,8 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     footer, a directory with no parquet files) PROPAGATES. A sink that
     treats "cannot read" as "first write" silently becomes destructive
     exactly when the data is in trouble: upsert would overwrite-drop
-    every unmatched sink row, idempotent append would degrade to a
-    duplicating plain append, and the rollup would lose its batch-id
-    dedup state and double-count on replay.
+    every unmatched sink row, and idempotent append would degrade to a
+    duplicating plain append.
     """
     _recover_interrupted_swap(path)
     if not os.path.exists(path):

@@ -166,56 +166,6 @@ def _register_named(named: dict, sch: dict, value) -> None:
         named[f"{ns}.{sch['name']}"] = value
 
 
-def avro_to_ddl(sch, named: dict | None = None) -> str:
-    """Avro schema (parsed JSON) -> Spark simpleString type."""
-    named = named if named is not None else {}
-    nullable, sch = _is_null_union(sch)
-    if isinstance(sch, str):
-        if sch in named:  # named-type reference (record/enum/fixed)
-            return named[sch]
-        prim = {
-            "null": "void",
-            "boolean": "boolean",
-            "int": "int",
-            "long": "bigint",
-            "float": "float",
-            "double": "double",
-            "bytes": "binary",
-            "string": "string",
-        }
-        if sch not in prim:
-            raise AvroUnsupported(f"unresolved Avro type reference: {sch!r}")
-        return prim[sch]
-    t = sch["type"]
-    logical = sch.get("logicalType")
-    if logical == "date" and t == "int":
-        return "date"
-    if logical in ("timestamp-millis", "timestamp-micros") and t == "long":
-        return "timestamp"
-    if logical == "decimal":
-        raise AvroUnsupported("decimal logical type not supported (read as bytes upstream)")
-    if t == "record":
-        fields = ", ".join(
-            f"{f['name']}: {avro_to_ddl(f['type'], named)}" for f in sch["fields"]
-        )
-        ddl = f"struct<{fields}>"
-        _register_named(named, sch, ddl)
-        return ddl
-    if t == "array":
-        return f"array<{avro_to_ddl(sch['items'], named)}>"
-    if t == "map":
-        return f"map<string,{avro_to_ddl(sch['values'], named)}>"
-    if t == "enum":
-        _register_named(named, sch, "string")
-        return "string"
-    if t == "fixed":
-        _register_named(named, sch, "binary")
-        return "binary"
-    if isinstance(t, (str, dict, list)):  # {"type": "long", ...} wrapper
-        return avro_to_ddl(t, named)
-    raise AvroUnsupported(f"unsupported Avro schema: {sch!r}")
-
-
 def avro_to_spark_type(sch, named: dict | None = None):
     """Avro schema (parsed JSON) -> pyspark DataType, built directly
     with type constructors — NOT via the DDL parser, because the

@@ -29,6 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from etl_data_pipeline_spark.functions.rounding import hround
 from etl_data_pipeline_spark.session import derived_session
+from etl_data_pipeline_spark.sinks import manifest
 from etl_data_pipeline_spark.watermark import WatermarkStore, parse_watermark
 
 
@@ -834,68 +835,67 @@ def session_funnel_ooo(
     )
 
 
-def _fenced_merge_swap(
+def _commit_state(
     spark: SparkSession,
-    agg_path: str,
+    table_dir: str,
     batch_df: DataFrame,
     batch_id: int,
-    partial_fn,
-    fold_fn,
+    build,
 ) -> None:
-    """The shared body of the three merging rollup sinks (hourly
-    rollup, weekly HLL, CMS): read under the writer lease, batch-id
-    fence, per-batch partial, fold into the existing state, atomic
-    swap. One definition, so a fence-ordering or swap-protocol fix
-    lands once for all three sinks.
+    """The exactly-once micro-batch body of every sink whose state is
+    one manifest table rewritten per batch: the hourly rollup, the
+    weekly HLL, the CMS, the dedup index and the domain-cap state.
 
-    The WHOLE read-dedup-merge-swap holds the lease: one stream's
-    batches are serial, but a second stream (or a compaction) on the
-    same target would otherwise read the same last_batch_id, pass the
-    dedup check, and its swap would overwrite this batch's
-    contribution — the lost-update race the other merging sinks close
-    the same way. First-refresh ONLY on a missing path: any other read
-    error aborts the merge, else the batch-id dedup state is lost and a
-    replayed batch double-counts.
+    foreachBatch replays a batch, with the same ``batch_id``, after a
+    crash between the sink's commit and the checkpoint's; folding it
+    in twice would double-count. The table's txn mark, keyed by the
+    table's own name, is the last batch folded in, and it publishes in
+    the same single-rename commit as the state it describes. A batch
+    at or below the mark returns before any Spark job runs; so does an
+    empty batch, which leaves the mark where it is.
 
-    Fence read is ONE row, not an aggregate: every row of these
-    tables carries the identical last_batch_id (written as a single
-    literal), so the previous full-table F.max scan per micro-batch
-    paid O(table) I/O to recover a constant. (run_incremental_dedup
-    keeps its own body: its rows retain their ORIGINAL batch ids, so
-    max() there is genuinely required.)
+    ``build(batch_df, state)`` returns the new state from the batch
+    and the current version (None before the first commit); it may
+    also write per-batch outputs that a replay overwrites. The new
+    state commits as the next version with ``txn=(name, batch_id)``,
+    and the table is vacuumed down to that version and the one before
+    it. Readers of the state see whole versions through
+    ``manifest.read_table``.
 
-    CONTRACT: every caller must rewrite the WHOLE table each batch with
-    one uniform last_batch_id literal — a sink that kept per-row batch
-    ids would under-read the fence here and double-count replays. The
-    swap below writes the fence as one literal, so the invariant holds
-    by construction."""
-    from etl_data_pipeline_spark.sinks import (
-        _overwrite_swap_locked,
-        read_parquet_if_exists,
-        writer_lease,
+    One stream per state table: batch ids restart at 0 under a new
+    checkpoint, and a second stream's ids would be compared against
+    the first one's mark."""
+    app = os.path.basename(table_dir)
+    cur = manifest.read_manifest(table_dir)
+    if cur is not None and batch_id <= cur.get("txn", {}).get(app, -1):
+        return
+    if batch_df.isEmpty():
+        return
+    state = None if cur is None else manifest.read_table(spark, table_dir)
+    manifest.commit(
+        build(batch_df, state), table_dir, mode="overwrite",
+        txn=(app, int(batch_id)),
     )
+    manifest.vacuum(table_dir, keep_last=2)
 
-    with writer_lease(agg_path):
-        existing = read_parquet_if_exists(spark, agg_path)
-        row = (
-            existing.select("last_batch_id").first()
-            if existing is not None
-            else None
-        )
-        last = row[0] if row is not None else None
-        if last is not None and batch_id <= last:
-            return  # replayed batch — already merged atomically
-        if batch_df.isEmpty():
-            return
-        partial = partial_fn(batch_df)
-        merged = (
-            partial
-            if existing is None
-            else fold_fn(existing.drop("last_batch_id"), partial)
-        ).withColumn("last_batch_id", F.lit(batch_id))
-        # staging write scans the existing state BEFORE the swap, so
-        # read-while-replace is safe
-        _overwrite_swap_locked(merged, agg_path)
+
+def _fold(state: DataFrame | None, partial: DataFrame, keys, *merges) -> DataFrame:
+    """``partial`` folded into ``state`` (None before the first batch):
+    their union regrouped on ``keys`` with the mergeable ``merges``."""
+    if state is None:
+        return partial
+    return state.unionByName(partial).groupBy(*keys).agg(*merges)
+
+
+def _hourly_rollup(batch: DataFrame, state: DataFrame | None) -> DataFrame:
+    partial = batch.groupBy(
+        F.date_trunc("hour", "ts").alias("hour_bucket"), "event_type"
+    ).agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
+    return _fold(
+        state, partial, ["hour_bucket", "event_type"],
+        F.sum("n_events").alias("n_events"),
+        F.sum("sum_value").alias("sum_value"),
+    )
 
 
 def run_incremental_rollup(
@@ -910,39 +910,24 @@ def run_incremental_rollup(
 
     The reference's incremental idea (only new rows move, app.py:96-132)
     applied to AGGREGATES: each batch contributes mergeable partials
-    (count/sum), combined with the existing rollup and swapped in
-    atomically. At 100 TB the rollup table is tiny relative to events,
-    so refresh cost is O(batch + rollup), not O(history).
+    (count/sum), combined with the existing rollup and committed as the
+    manifest table's next version. At 100 TB the rollup table is tiny
+    relative to events, so refresh cost is O(batch + rollup), not
+    O(history).
 
-    Exactly-once WITHOUT a separate state file: foreachBatch replays a
-    batch after a crash between write and checkpoint-commit, and
-    merging twice would double-count — so the last merged batch_id is
-    carried as a column of the rollup table itself, making data and
-    dedup state one atomic swap. (A sidecar state file would reopen the
-    crash window between data-swap and state-write — the same §2.C #5
-    gap the reference has, but non-idempotent for aggregates.)
+    Exactly-once WITHOUT a separate state file (_commit_state): the
+    last merged batch id is the table's txn mark, so data and dedup
+    state publish in one commit. (A sidecar state file would reopen
+    the crash window between data write and state write — the same
+    §2.C #5 gap the reference has, but non-idempotent for aggregates.)
     """
-    agg_table = "rollup_hourly"
-    agg_path = os.path.join(target_dir, agg_table)
+    agg_path = os.path.join(target_dir, "rollup_hourly")
     # schema forwarded so hive-partitioned sources (whose partition
     # columns a footer cannot type) can pass an explicit DDL
     stream = events_file_stream(spark, source_dir, schema=schema)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        _fenced_merge_swap(
-            spark, agg_path, batch_df, batch_id,
-            partial_fn=lambda b: b.groupBy(
-                F.date_trunc("hour", "ts").alias("hour_bucket"), "event_type"
-            ).agg(
-                F.count("*").alias("n_events"), F.sum("value").alias("sum_value")
-            ),
-            fold_fn=lambda prev, part: prev.unionByName(part)
-            .groupBy("hour_bucket", "event_type")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("sum_value").alias("sum_value"),
-            ),
-        )
+        _commit_state(spark, agg_path, batch_df, batch_id, _hourly_rollup)
 
     return (
         stream.writeStream.foreachBatch(_merge)
@@ -969,23 +954,20 @@ def run_stream_hll_rollup(
     maintained sketch is IDENTICAL to a from-scratch sketch over all
     data (the parity test asserts estimate equality, not closeness).
 
-    State is the rollup table itself (weeks × ~2^lgK bytes); the same
-    last_batch_id-in-table exactly-once contract as the other merging
-    sinks — replayed batches are no-ops, data and dedup state swap
-    atomically under the writer lease."""
+    State is the manifest table ``hll_weekly`` (weeks × ~2^lgK bytes),
+    committed per batch by _commit_state — replayed batches are
+    no-ops."""
     agg_path = os.path.join(target_dir, "hll_weekly")
     stream = events_file_stream(spark, source_dir, schema=schema)
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        _fenced_merge_swap(
-            spark, agg_path, batch_df, batch_id,
-            partial_fn=lambda b: b.groupBy(
-                F.date_trunc("week", "ts").alias("week")
-            ).agg(F.hll_sketch_agg("user_id", F.lit(14)).alias("sk")),
-            fold_fn=lambda prev, part: prev.unionByName(part)
-            .groupBy("week")
-            .agg(F.hll_union_agg("sk").alias("sk")),
+    def _sketch(batch: DataFrame, state: DataFrame | None) -> DataFrame:
+        partial = batch.groupBy(F.date_trunc("week", "ts").alias("week")).agg(
+            F.hll_sketch_agg("user_id", F.lit(14)).alias("sk")
         )
+        return _fold(state, partial, ["week"], F.hll_union_agg("sk").alias("sk"))
+
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        _commit_state(spark, agg_path, batch_df, batch_id, _sketch)
 
     return (
         stream.writeStream.foreachBatch(_merge)
@@ -1014,26 +996,26 @@ def run_stream_cms(
 
     Cell derivation is the SAME shared expression as the batch
     operator (operators.aggregates.cms_cell_array), so seeds/width
-    cannot drift. State is the d×w sketch table itself (8 K rows at
-    the shipped parameters, constant at any stream volume); the same
-    last_batch_id-in-table exactly-once contract as the other merging
-    sinks — replayed batches are no-ops."""
+    cannot drift. State is the d×w manifest table ``cms_sketch`` (8 K
+    rows at the shipped parameters, constant at any stream volume),
+    committed per batch by _commit_state — replayed batches are
+    no-ops."""
     from etl_data_pipeline_spark.operators.aggregates import cms_cell_array
     agg_path = os.path.join(target_dir, "cms_sketch")
     stream = events_file_stream(spark, source_dir, schema=schema)
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        _fenced_merge_swap(
-            spark, agg_path, batch_df, batch_id,
-            partial_fn=lambda b: b.select(
-                F.explode(cms_cell_array(F.col(token_col))).alias("c")
-            )
+    def _sketch(batch: DataFrame, state: DataFrame | None) -> DataFrame:
+        partial = (
+            batch.select(F.explode(cms_cell_array(F.col(token_col))).alias("c"))
             .groupBy("c.j", "c.bucket")
-            .agg(F.count("*").alias("cell_cnt")),
-            fold_fn=lambda prev, part: prev.unionByName(part)
-            .groupBy("j", "bucket")
-            .agg(F.sum("cell_cnt").alias("cell_cnt")),
+            .agg(F.count("*").alias("cell_cnt"))
         )
+        return _fold(
+            state, partial, ["j", "bucket"], F.sum("cell_cnt").alias("cell_cnt")
+        )
+
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        _commit_state(spark, agg_path, batch_df, batch_id, _sketch)
 
     return (
         stream.writeStream.foreachBatch(_merge)
@@ -1202,9 +1184,6 @@ def run_stream_to_manifest(
     streaming table's small-files hygiene. Change-feed consumers are
     unaffected (read_changes skips layout-only versions).
     """
-    from etl_data_pipeline_spark.sinks.manifest import commit as manifest_commit
-    from etl_data_pipeline_spark.sinks.manifest import compact as manifest_compact
-
     stream = events_file_stream(spark, source_dir, schema=schema)
     ckpt = checkpoint_dir or os.path.join(table_dir, "_checkpoint")
 
@@ -1212,7 +1191,7 @@ def run_stream_to_manifest(
         # empty micro-batches still advance the fence: a replay of an
         # empty batch is a no-op either way, and recording it keeps
         # the (app_id -> batch) mark contiguous for observers
-        m = manifest_commit(
+        m = manifest.commit(
             batch_df, table_dir, mode="append", txn=(app_id, int(batch_id))
         )
         if (
@@ -1222,7 +1201,7 @@ def run_stream_to_manifest(
             # only compact after a commit this batch actually made
             and m.get("txn", {}).get(app_id) == int(batch_id)
         ):
-            manifest_compact(batch_df.sparkSession, table_dir)
+            manifest.compact(batch_df.sparkSession, table_dir)
 
     return (
         stream.writeStream.foreachBatch(_sink)
@@ -1264,8 +1243,6 @@ def run_stream_merge(
     """
     from pyspark.sql.window import Window
 
-    from etl_data_pipeline_spark.sinks.manifest import merge_upsert
-
     stream = events_file_stream(spark, source_dir, schema=schema)
     ckpt = checkpoint_dir or os.path.join(table_dir, "_checkpoint")
     keys = list(key_cols)
@@ -1280,7 +1257,7 @@ def run_stream_merge(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        merge_upsert(
+        manifest.merge_upsert(
             batch_df.sparkSession, table_dir, latest, tuple(keys),
             txn=(app_id, int(batch_id)),
         )
@@ -1310,12 +1287,12 @@ def run_incremental_dedup(
     pipeline runs at the door.
 
     State layout: ONE index row per kept doc — (doc_id, band
-    signatures array, shingle-hash set, last_batch_id) — swapped
-    atomically under the writer lease with the batch-id fence the
-    other merging sinks use, so data and exactly-once dedup state are
-    a single atomic unit (a replayed batch after a crash between
-    write and checkpoint-commit is a no-op, and the per-batch-id
-    decision directories are overwrite-idempotent). Probing explodes
+    signatures array, shingle-hash set) — in the manifest table
+    ``dedup_index``, rewritten per batch as index ∪ kept by
+    _commit_state, so data and exactly-once dedup state are a single
+    commit (a replayed batch after a crash between write and
+    checkpoint-commit is a no-op, and the per-batch-id decision
+    directories are overwrite-idempotent). Probing explodes
     the index's band arrays per batch — O(index × bands) at this
     scale; a production layout materializes the banded table as the
     persisted artifact instead (llm.dedup.dedup_minhash_incremental's
@@ -1337,11 +1314,6 @@ def run_incremental_dedup(
         _minhash_cols,
         _shingles,
     )
-    from etl_data_pipeline_spark.sinks import (
-        _overwrite_swap_locked,
-        read_parquet_if_exists,
-        writer_lease,
-    )
     from pyspark.sql.window import Window
 
     index_path = os.path.join(target_dir, "dedup_index")
@@ -1349,21 +1321,13 @@ def run_incremental_dedup(
     stream = events_file_stream(spark, source_dir, schema=schema)
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
-        with writer_lease(index_path):
-            index = read_parquet_if_exists(spark, index_path)
-            last = (
-                index.agg(F.max("last_batch_id")).first()[0]
-                if index is not None
-                else None
-            )
-            if last is not None and batch_id <= last:
-                return  # replayed batch — decisions + index already swapped
-            if batch_df.isEmpty():
-                return
+        persisted: list[DataFrame] = []
+
+        def build(batch: DataFrame, index: DataFrame | None) -> DataFrame:
             # within-batch exact dedup: digest keeper wins, losers get
             # batch-local skip decisions
             w_dig = Window.partitionBy("digest").orderBy("doc_id")
-            by_digest = batch_df.select(
+            by_digest = batch.select(
                 "doc_id", "text", F.md5("text").alias("digest")
             ).withColumn("keeper_doc", F.first("doc_id").over(w_dig))
             exact_skips = (
@@ -1391,99 +1355,88 @@ def run_incremental_dedup(
             # persist: consumed by the probe AND (filtered) the index
             # merge — without it the shingle+minhash compute runs twice
             batch_sigs = ms.select("doc_id", "sh_hash", bands.alias("bands")).persist()
-            persisted_decided = None
-            try:
-                if index is not None:
-                    b_band = batch_sigs.select(
-                        F.col("doc_id").alias("batch_doc"),
-                        F.col("sh_hash").alias("sh_b"),
-                        F.posexplode("bands").alias("band_id", "band_sig"),
-                    )
-                    i_band = index.select(
-                        F.col("doc_id").alias("index_doc"),
-                        F.col("sh_hash").alias("sh_i"),
-                        F.posexplode("bands").alias("band_id", "band_sig"),
-                    )
-                    cand = (
-                        b_band.join(i_band, ["band_id", "band_sig"])
-                        .select("batch_doc", "index_doc", "sh_b", "sh_i")
-                        .dropDuplicates(["batch_doc", "index_doc"])
-                    )
-                    s_int = F.size(F.array_intersect("sh_b", "sh_i"))
-                    jac = s_int / F.greatest(
-                        F.size("sh_b") + F.size("sh_i") - s_int, F.lit(1)
-                    )
-                    # round BEFORE the threshold filter and the
-                    # best-match window, exactly like the batch twin
-                    # (dedup_minhash_incremental, llm/dedup.py): with
-                    # rounding only at output, a raw jaccard in
-                    # [threshold - 5e-7, threshold) was kept by batch
-                    # and dropped here (and ulp-apart candidates could
-                    # rank differently) — divergent decisions between
-                    # two documented-identical paths
-                    verified = cand.select(
-                        "batch_doc", "index_doc", hround(jac, 6).alias("jaccard")
-                    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-                    best = Window.partitionBy("batch_doc").orderBy(
-                        F.desc("jaccard"), F.asc("index_doc")
-                    )
-                    matches = (
-                        verified.withColumn("rn", F.row_number().over(best))
-                        .filter(F.col("rn") == 1)
-                        .select(
-                            F.col("batch_doc").alias("doc_id"),
-                            F.col("index_doc").alias("match_doc"),
-                            F.col("jaccard").alias("match_jaccard"),
-                        )
-                    )
-                else:
-                    matches = None
-                uniq_ids = batch_sigs.select("doc_id")
-                if matches is not None:
-                    decided = uniq_ids.join(matches, "doc_id", "left").select(
-                        "doc_id",
-                        F.when(F.col("match_doc").isNotNull(), "skip_duplicate")
-                        .otherwise("keep")
-                        .alias("decision"),
-                        "match_doc",
-                        "match_jaccard",
-                    )
-                else:
-                    decided = uniq_ids.select(
-                        "doc_id",
-                        F.lit("keep").alias("decision"),
-                        F.lit(None).cast("long").alias("match_doc"),
-                        F.lit(None).cast("double").alias("match_jaccard"),
-                    )
-                # persist: `decided` embeds the O(index) band join +
-                # exact-jaccard verify, and it feeds TWO actions (the
-                # decision write and the index swap's kept filter) —
-                # unpersisted, the dominant per-batch cost ran twice
-                decided = persisted_decided = decided.persist()
-                decisions = decided.unionByName(exact_skips)
-                # idempotent per-batch sink: replay overwrites, never appends
-                decisions.write.mode("overwrite").parquet(
-                    os.path.join(decisions_dir, f"batch={batch_id}")
+            persisted.append(batch_sigs)
+            uniq_ids = batch_sigs.select("doc_id")
+            if index is not None:
+                b_band = batch_sigs.select(
+                    F.col("doc_id").alias("batch_doc"),
+                    F.col("sh_hash").alias("sh_b"),
+                    F.posexplode("bands").alias("band_id", "band_sig"),
                 )
-                kept = batch_sigs.join(
-                    decided.filter(F.col("decision") == "keep").select("doc_id"),
+                i_band = index.select(
+                    F.col("doc_id").alias("index_doc"),
+                    F.col("sh_hash").alias("sh_i"),
+                    F.posexplode("bands").alias("band_id", "band_sig"),
+                )
+                cand = (
+                    b_band.join(i_band, ["band_id", "band_sig"])
+                    .select("batch_doc", "index_doc", "sh_b", "sh_i")
+                    .dropDuplicates(["batch_doc", "index_doc"])
+                )
+                s_int = F.size(F.array_intersect("sh_b", "sh_i"))
+                jac = s_int / F.greatest(
+                    F.size("sh_b") + F.size("sh_i") - s_int, F.lit(1)
+                )
+                # round BEFORE the threshold filter and the
+                # best-match window, exactly like the batch twin
+                # (dedup_minhash_incremental, llm/dedup.py): with
+                # rounding only at output, a raw jaccard in
+                # [threshold - 5e-7, threshold) was kept by batch
+                # and dropped here (and ulp-apart candidates could
+                # rank differently) — divergent decisions between
+                # two documented-identical paths
+                verified = cand.select(
+                    "batch_doc", "index_doc", hround(jac, 6).alias("jaccard")
+                ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+                best = Window.partitionBy("batch_doc").orderBy(
+                    F.desc("jaccard"), F.asc("index_doc")
+                )
+                matches = (
+                    verified.withColumn("rn", F.row_number().over(best))
+                    .filter(F.col("rn") == 1)
+                    .select(
+                        F.col("batch_doc").alias("doc_id"),
+                        F.col("index_doc").alias("match_doc"),
+                        F.col("jaccard").alias("match_jaccard"),
+                    )
+                )
+                decided = uniq_ids.join(matches, "doc_id", "left").select(
                     "doc_id",
-                ).select(
-                    "doc_id", "bands", "sh_hash",
-                    F.lit(batch_id).cast("long").alias("last_batch_id"),
+                    F.when(F.col("match_doc").isNotNull(), "skip_duplicate")
+                    .otherwise("keep")
+                    .alias("decision"),
+                    "match_doc",
+                    "match_jaccard",
                 )
-                merged = (
-                    kept
-                    if index is None
-                    else index.withColumn(
-                        "last_batch_id", F.col("last_batch_id").cast("long")
-                    ).unionByName(kept)
+            else:
+                decided = uniq_ids.select(
+                    "doc_id",
+                    F.lit("keep").alias("decision"),
+                    F.lit(None).cast("long").alias("match_doc"),
+                    F.lit(None).cast("double").alias("match_jaccard"),
                 )
-                _overwrite_swap_locked(merged, index_path)
-            finally:
-                if persisted_decided is not None:
-                    persisted_decided.unpersist()
-                batch_sigs.unpersist()
+            # persist: `decided` embeds the O(index) band join +
+            # exact-jaccard verify, and it feeds TWO actions (the
+            # decision write and the index commit's kept filter) —
+            # unpersisted, the dominant per-batch cost ran twice
+            decided = decided.persist()
+            persisted.append(decided)
+            decisions = decided.unionByName(exact_skips)
+            # idempotent per-batch sink: replay overwrites, never appends
+            decisions.write.mode("overwrite").parquet(
+                os.path.join(decisions_dir, f"batch={batch_id}")
+            )
+            kept = batch_sigs.join(
+                decided.filter(F.col("decision") == "keep").select("doc_id"),
+                "doc_id",
+            ).select("doc_id", "bands", "sh_hash")
+            return kept if index is None else index.unionByName(kept)
+
+        try:
+            _commit_state(spark, index_path, batch_df, batch_id, build)
+        finally:
+            for df in persisted:
+                df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_probe)
@@ -1491,8 +1444,8 @@ def run_incremental_dedup(
         # availableNow by default (drain-and-stop, the test/replay
         # shape); pass e.g. {"processingTime": "1 second"} for the
         # continuous soak form — the exactly-once story is identical
-        # (lease + batch-id fence + overwrite-idempotent decisions),
-        # only the scheduler differs
+        # (txn mark + overwrite-idempotent decisions), only the
+        # scheduler differs
         .trigger(**(trigger or {"availableNow": True}))
         .start()
     )
@@ -1530,7 +1483,7 @@ def run_incremental_ann_index(
     and its replay mark publish in a single atomic rename, and a
     replayed batch after a crash between write and checkpoint-commit
     is detected without reading the batch at all. Contrast
-    run_incremental_dedup, whose per-batch state swap REWRITES its
+    run_incremental_dedup, whose per-batch state commit REWRITES its
     (small, signature-only) index: an ANN index is the corpus, so
     maintenance must be O(batch), never O(index).
 
@@ -1566,7 +1519,6 @@ def run_incremental_ann_index(
     )
     from etl_data_pipeline_spark.functions.caching import tracked_persist
     from etl_data_pipeline_spark.session import load_table, spread
-    from etl_data_pipeline_spark.sinks import manifest
 
     index_table = os.path.join(target_dir, "ann_index")
     decisions_dir = os.path.join(target_dir, "ann_decisions")
@@ -1715,7 +1667,6 @@ def run_incremental_classifier_scores(
         _lr_trained_weights,
         lr_doc_features,
     )
-    from etl_data_pipeline_spark.sinks import manifest
 
     _X, W = _lr_trained_weights(spark, sf_dir)  # frozen, localCheckpointed
     scores_table = os.path.join(target_dir, "clf_scores")
@@ -1799,20 +1750,16 @@ def run_incremental_domain_cap(
     that window, same division of labor as the dedup job's nightly
     LSH sweep.
 
-    Exactly-once: writer lease + last_batch_id fence on the state
-    table + overwrite-idempotent per-batch decision directories —
-    the run_incremental_dedup recipe verbatim; a replayed batch after
-    a crash between decision write and state swap is a no-op.
+    Exactly-once: the state is the manifest table ``domcap_state``,
+    committed per batch by _commit_state, and the per-batch decision
+    directories are overwrite-idempotent — the run_incremental_dedup
+    recipe. A batch replayed after a crash before its state commit
+    rewrites the same decisions; one replayed after it is a no-op.
     """
     from etl_data_pipeline_spark.functions.hashing import md5_long60
     from etl_data_pipeline_spark.llm.curation import (
         DOMAIN_CAP_SALT,
         DOMAIN_CAP_SHARE,
-    )
-    from etl_data_pipeline_spark.sinks import (
-        _overwrite_swap_locked,
-        read_parquet_if_exists,
-        writer_lease,
     )
 
     share = DOMAIN_CAP_SHARE if cap_share is None else cap_share
@@ -1823,100 +1770,89 @@ def run_incremental_domain_cap(
     )
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        with writer_lease(state_path):
-            state = read_parquet_if_exists(spark, state_path)
-            last = (
-                state.agg(F.max("last_batch_id")).first()[0]
-                if state is not None
-                else None
-            )
-            if last is not None and batch_id <= last:
-                return  # replayed batch — decisions + state already swapped
-            if batch_df.isEmpty():
-                return
-            docs = batch_df.select(
+        persisted: list[DataFrame] = []
+
+        def build(batch: DataFrame, state: DataFrame | None) -> DataFrame:
+            docs = batch.select(
                 "doc_id",
                 "source",
                 F.size(F.split("text", " ")).alias("n_tokens"),
             ).persist()
-            try:
-                batch_stats = docs.groupBy("source").agg(
-                    F.count("*").alias("docs_b"),
-                    F.sum("n_tokens").alias("tokens_b"),
-                )
-                if state is not None:
-                    merged = (
-                        state.select("source", "docs_pre", "tokens_pre")
-                        .join(batch_stats, "source", "full")
-                        .select(
-                            "source",
-                            (
-                                F.coalesce("docs_pre", F.lit(0))
-                                + F.coalesce("docs_b", F.lit(0))
-                            ).alias("docs_pre"),
-                            (
-                                F.coalesce("tokens_pre", F.lit(0))
-                                + F.coalesce("tokens_b", F.lit(0))
-                            ).alias("tokens_pre"),
-                        )
-                    )
-                else:
-                    merged = batch_stats.select(
+            persisted.append(docs)
+            batch_stats = docs.groupBy("source").agg(
+                F.count("*").alias("docs_b"),
+                F.sum("n_tokens").alias("tokens_b"),
+            )
+            if state is not None:
+                merged = (
+                    state.select("source", "docs_pre", "tokens_pre")
+                    .join(batch_stats, "source", "full")
+                    .select(
                         "source",
-                        F.col("docs_b").alias("docs_pre"),
-                        F.col("tokens_b").alias("tokens_pre"),
+                        (
+                            F.coalesce("docs_pre", F.lit(0))
+                            + F.coalesce("docs_b", F.lit(0))
+                        ).alias("docs_pre"),
+                        (
+                            F.coalesce("tokens_pre", F.lit(0))
+                            + F.coalesce("tokens_b", F.lit(0))
+                        ).alias("tokens_pre"),
                     )
-                total = merged.agg(F.sum("tokens_pre").alias("total_tokens"))
-                # same quantized-threshold arithmetic as the batch op
-                # (exact IEEE doubles, same operation order) so the
-                # convergence contract is bit-level, not approximate
-                thresh = merged.crossJoin(F.broadcast(total)).select(
+                )
+            else:
+                merged = batch_stats.select(
                     "source",
-                    "docs_pre",
-                    "tokens_pre",
-                    F.floor(
-                        F.least(
-                            F.lit(1.0),
-                            F.lit(share)
-                            * F.col("total_tokens").cast("double")
-                            / F.col("tokens_pre"),
-                        )
-                        * 1000000
-                        + 0.5
+                    F.col("docs_b").alias("docs_pre"),
+                    F.col("tokens_b").alias("tokens_pre"),
+                )
+            total = merged.agg(F.sum("tokens_pre").alias("total_tokens"))
+            # same quantized-threshold arithmetic as the batch op
+            # (exact IEEE doubles, same operation order) so the
+            # convergence contract is bit-level, not approximate
+            thresh = merged.crossJoin(F.broadcast(total)).select(
+                "source",
+                "docs_pre",
+                "tokens_pre",
+                F.floor(
+                    F.least(
+                        F.lit(1.0),
+                        F.lit(share)
+                        * F.col("total_tokens").cast("double")
+                        / F.col("tokens_pre"),
                     )
-                    .cast("long")
-                    .alias("keep_thresh"),
+                    * 1000000
+                    + 0.5
                 )
-                doc_hash = (
-                    md5_long60(
-                        F.concat(F.lit(DOMAIN_CAP_SALT), F.col("doc_id"))
-                    )
-                    % 1000000
-                )
-                decisions = docs.join(
-                    F.broadcast(thresh.select("source", "keep_thresh")),
-                    "source",
-                ).select(
-                    "doc_id",
-                    "source",
-                    "n_tokens",
-                    F.when(doc_hash < F.col("keep_thresh"), "keep")
-                    .otherwise("skip_over_cap")
-                    .alias("decision"),
-                    "keep_thresh",
-                )
-                # idempotent per-batch sink: replay overwrites, never appends
-                decisions.write.mode("overwrite").parquet(
-                    os.path.join(decisions_dir, f"batch={batch_id}")
-                )
-                _overwrite_swap_locked(
-                    thresh.withColumn(
-                        "last_batch_id", F.lit(batch_id).cast("long")
-                    ),
-                    state_path,
-                )
-            finally:
-                docs.unpersist()
+                .cast("long")
+                .alias("keep_thresh"),
+            )
+            doc_hash = (
+                md5_long60(F.concat(F.lit(DOMAIN_CAP_SALT), F.col("doc_id")))
+                % 1000000
+            )
+            decisions = docs.join(
+                F.broadcast(thresh.select("source", "keep_thresh")),
+                "source",
+            ).select(
+                "doc_id",
+                "source",
+                "n_tokens",
+                F.when(doc_hash < F.col("keep_thresh"), "keep")
+                .otherwise("skip_over_cap")
+                .alias("decision"),
+                "keep_thresh",
+            )
+            # idempotent per-batch sink: replay overwrites, never appends
+            decisions.write.mode("overwrite").parquet(
+                os.path.join(decisions_dir, f"batch={batch_id}")
+            )
+            return thresh
+
+        try:
+            _commit_state(spark, state_path, batch_df, batch_id, build)
+        finally:
+            for df in persisted:
+                df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_gate)

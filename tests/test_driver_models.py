@@ -30,12 +30,7 @@ ENTROPY_CORPORA = {
 }
 
 
-@pytest.mark.parametrize("corpus", sorted(ENTROPY_CORPORA))
-def test_levenshtein_entropy_matches_oracle_on_edge_corpora(spark, tmp_path, corpus):
-    """dedup_levenshtein_entropy equals its DuckDB oracle on key shapes
-    the TPC-H tiers never produce: fewer than 3 digit positions (the
-    boundaries clamp below 1), no digit at all (an empty position list),
-    keys of varying length, one constant key and NULL names."""
+def _customer_dir(tmp_path, corpus: str) -> str:
     names = ENTROPY_CORPORA[corpus]
     pq.write_table(
         pa.table(
@@ -46,14 +41,53 @@ def test_levenshtein_entropy_matches_oracle_on_edge_corpora(spark, tmp_path, cor
         ),
         str(tmp_path / "customer.parquet"),
     )
-    got = dedup.dedup_levenshtein_entropy(spark, str(tmp_path)).toPandas()
+    return str(tmp_path)
+
+
+def _duckdb_rows(sf_dir: str, sql: str):
     con = duckdb.connect()
     con.execute(
-        f"CREATE VIEW customer AS SELECT * FROM read_parquet('{tmp_path}/customer.parquet')"
+        f"CREATE VIEW customer AS SELECT * FROM read_parquet('{sf_dir}/customer.parquet')"
     )
-    want = con.execute(dedup._oracle_levenshtein_entropy()).df()
-    con.close()
+    try:
+        return con.execute(sql).df()
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("corpus", sorted(ENTROPY_CORPORA))
+def test_levenshtein_entropy_matches_oracle_on_edge_corpora(spark, tmp_path, corpus):
+    """dedup_levenshtein_entropy equals its DuckDB oracle on key shapes
+    the TPC-H tiers never produce: fewer than 3 digit positions (the
+    boundaries clamp below 1), no digit at all (an empty position list),
+    keys of varying length, one constant key and NULL names."""
+    d = _customer_dir(tmp_path, corpus)
+    got = dedup.dedup_levenshtein_entropy(spark, d).toPandas()
+    want = _duckdb_rows(d, dedup._oracle_levenshtein_entropy())
     assert norm_frame(got) == norm_frame(want)
+
+
+@pytest.mark.parametrize("corpus", sorted(ENTROPY_CORPORA))
+def test_entropy_keying_matches_oracle_on_edge_corpora(spark, tmp_path, corpus):
+    """The oracle's ``keyed`` CTE emits the same (record, seg, seg_val)
+    multiset as _entropy_keyed, NULL keys included, so the two engines
+    search the same candidate blocks. Equal best matches alone cannot
+    show this: on short keys the blocks differ while the matches agree."""
+    from collections import Counter
+
+    d = _customer_dir(tmp_path, corpus)
+    got = Counter(
+        (r.c_custkey, r.seg, r.seg_val)
+        for r in dedup._entropy_keyed(spark, d).select("c_custkey", "seg", "seg_val").collect()
+    )
+    want_df = _duckdb_rows(
+        d, dedup._oracle_entropy_keyed() + " SELECT c_custkey, seg, seg_val FROM keyed"
+    )
+    want = Counter(
+        (int(k), int(s), None if v is None or v != v else v)
+        for k, s, v in want_df.itertuples(index=False)
+    )
+    assert got == want
 
 
 @pytest.mark.parametrize(
@@ -69,9 +103,8 @@ def test_levenshtein_entropy_matches_oracle_on_edge_corpora(spark, tmp_path, cor
 def test_entropy_thirds_clamp_as_sql(disc, want):
     """_thirds returns the values Spark's NULL-skipping
     least(greatest(b1, 1), L - 2) / least(greatest(b2, b1c + 1), L - 1)
-    give for the same running sums. The oracle comparison above cannot
-    see a wrong clamp: on short keys the two engines' substr already
-    disagree key by key while the best matches still agree."""
+    give for the same running sums, pinned here value by value; the
+    corpora above reach each clamp only through the keys it shapes."""
     assert dedup._thirds(disc) == want
 
 

@@ -99,6 +99,20 @@ def test_decode_header_matches_python_derivation(spark, sf_dir):
     assert j.count() == n and n > 0
 
 
+def test_decode_bmp_builds_without_future_warning(spark, sf_dir):
+    """The BMP payload indexes an array with a Column key through
+    ``column[key]``; ``getItem(<Column>)`` is deprecated and prints a
+    FutureWarning on every build."""
+    import warnings
+
+    from etl_data_pipeline_spark.llm.multimodal import multimodal_decode_bmp
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        multimodal_decode_bmp(spark, sf_dir)
+    assert not [w for w in caught if issubclass(w.category, FutureWarning)]
+
+
 def test_decode_stub_deterministic(spark, sf_dir):
     a = multimodal_decode_stub(spark, sf_dir).orderBy("doc_id").limit(5).collect()
     b = multimodal_decode_stub(spark, sf_dir).orderBy("doc_id").limit(5).collect()

@@ -483,6 +483,7 @@ def test_incremental_domain_cap_stream(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from etl_data_pipeline_spark.sinks.manifest import read_table
     from etl_data_pipeline_spark.streaming import jobs
 
     share = 0.3
@@ -557,7 +558,7 @@ def test_incremental_domain_cap_stream(spark, tmp_path):
     # the full corpus (the convergence contract)
     state = {
         r.source: r
-        for r in spark.read.parquet(os.path.join(tgt, "domcap_state")).collect()
+        for r in read_table(spark, os.path.join(tgt, "domcap_state")).collect()
     }
     assert {s: r.keep_thresh for s, r in state.items()} == final_t
     per_docs = {}
@@ -617,6 +618,7 @@ def test_incremental_domain_cap_kill_restart_sf01(spark, tmp_path):
 
     from etl_data_pipeline_spark.llm.curation import corpus_domain_cap
     from etl_data_pipeline_spark.session import load_table
+    from etl_data_pipeline_spark.sinks.manifest import read_table
     from etl_data_pipeline_spark.streaming import jobs
 
     sfd = "/root/testdata/sf0.1"
@@ -646,7 +648,7 @@ def test_incremental_domain_cap_kill_restart_sf01(spark, tmp_path):
     def state_rows(tgt):
         return sorted(
             (r.source, r.docs_pre, r.tokens_pre, r.keep_thresh)
-            for r in spark.read.parquet(os.path.join(tgt, "domcap_state")).collect()
+            for r in read_table(spark, os.path.join(tgt, "domcap_state")).collect()
         )
 
     def decisions(tgt):
@@ -689,7 +691,7 @@ def test_incremental_domain_cap_kill_restart_sf01(spark, tmp_path):
         if decided_count(tgt) != len(ids):
             return False
         try:
-            st = spark.read.parquet(os.path.join(tgt, "domcap_state"))
+            st = read_table(spark, os.path.join(tgt, "domcap_state"))
             return (
                 st.agg(F.sum("docs_pre")).first()[0] == len(ids)
             )

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.session import load_table
+from etl_data_pipeline_spark.sinks import manifest
 from etl_data_pipeline_spark.streaming import jobs
 from etl_data_pipeline_spark.watermark import WatermarkStore
 
@@ -121,9 +122,7 @@ def test_incremental_rollup_matches_batch(spark, event_chunks, tmp_path):
     target = str(tmp_path / "rollup_target")
     q = jobs.run_incremental_rollup(spark, src, target)
     q.awaitTermination(120)
-    got = spark.read.parquet(os.path.join(target, "rollup_hourly")).drop(
-        "last_batch_id"
-    )
+    got = manifest.read_table(spark, os.path.join(target, "rollup_hourly"))
     truth = ev.groupBy(
         F.date_trunc("hour", "ts").alias("hour_bucket"), "event_type"
     ).agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
@@ -134,9 +133,72 @@ def test_incremental_rollup_matches_batch(spark, event_chunks, tmp_path):
     assert g == t
     q2 = jobs.run_incremental_rollup(spark, src, target)
     q2.awaitTermination(120)
-    got2 = spark.read.parquet(os.path.join(target, "rollup_hourly"))
+    got2 = manifest.read_table(spark, os.path.join(target, "rollup_hourly"))
     assert got2.count() == got.count()
     assert got2.agg(F.sum("n_events")).first()[0] == ev.count()
+
+
+def test_commit_state_fences_replays_without_spark_jobs(spark, sf_dir, tmp_path):
+    """The per-batch state commit shared by the rollup, HLL, CMS, dedup
+    and domain-cap sinks: the table's txn mark advances once per data
+    batch, an empty batch leaves it where it is, and a batch at or below
+    it returns before any Spark job, leaving MANIFEST.json untouched."""
+    from tests.test_pipeline import _jobs_of
+
+    table = str(tmp_path / "rollup_hourly")
+    ev = load_table(spark, sf_dir, "events")
+    parts = [ev.filter(f"event_id % 3 = {i}") for i in range(3)]
+
+    def commit(batch, batch_id):
+        return _jobs_of(
+            spark,
+            lambda: jobs._commit_state(
+                spark, table, batch, batch_id, jobs._hourly_rollup
+            ),
+        )[1]
+
+    # isEmpty, then the state write; the manifest and state reads run none
+    assert commit(parts[0], 0) <= 3
+    assert manifest.read_manifest(table)["txn"] == {"rollup_hourly": 0}
+    with open(os.path.join(table, "MANIFEST.json"), "rb") as f:
+        before = f.read()
+    assert commit(ev.filter("event_id < 0"), 1) <= 1  # isEmpty only
+    assert commit(parts[1], 0) == 0  # replayed id: no job, no commit
+    with open(os.path.join(table, "MANIFEST.json"), "rb") as f:
+        assert f.read() == before
+    # folding into a state adds the union's regroup to the write
+    assert commit(parts[1], 2) <= 4 and commit(parts[2], 3) <= 4
+    m = manifest.read_manifest(table)
+    assert (m["version"], m["txn"]) == (3, {"rollup_hourly": 3})
+    got = manifest.read_table(spark, table)
+    assert got.agg(F.sum("n_events")).first()[0] == ev.count()
+    # the version before the head is kept, older ones are vacuumed
+    assert sorted(os.listdir(os.path.join(table, "_manifests"))) == [
+        "v00000002.json", "v00000003.json",
+    ]
+    assert len(os.listdir(os.path.join(table, "_versions"))) == 2
+
+
+def test_streaming_jobs_have_one_exactly_once_protocol():
+    """Every state table in streaming/jobs.py commits through the
+    manifest txn mark: the module imports none of the staged-swap
+    sink's locking helpers and names no batch-id column."""
+    import ast
+    import pathlib
+
+    banned = {"writer_lease", "read_parquet_if_exists", "_overwrite_swap_locked"}
+    tree = ast.parse(pathlib.Path(jobs.__file__).read_text())
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            found |= {a.name.rsplit(".", 1)[-1] for a in node.names} & banned
+        elif isinstance(node, ast.Name) and node.id == "last_batch_id":
+            found.add(node.id)
+        elif isinstance(node, ast.Attribute) and node.attr == "last_batch_id":
+            found.add(node.attr)
+        elif isinstance(node, ast.Constant) and "last_batch_id" in str(node.value):
+            found.add("last_batch_id")
+    assert not found, sorted(found)
 
 
 def test_stream_stream_join_matches_batch(spark, event_chunks):
@@ -507,8 +569,8 @@ def test_stream_hll_rollup_sketch_parity_and_replay(spark, event_chunks, tmp_pat
     target = str(tmp_path / "hll_target")
     q = jobs.run_stream_hll_rollup(spark, src, target)
     q.awaitTermination(120)
-    got = spark.read.parquet(os.path.join(target, "hll_weekly")).select(
-        "week", F.hll_sketch_estimate("sk").alias("est"), "last_batch_id"
+    got = manifest.read_table(spark, os.path.join(target, "hll_weekly")).select(
+        "week", F.hll_sketch_estimate("sk").alias("est")
     )
     got_rows = {r.week: r.est for r in got.collect()}
     oneshot = {
@@ -526,10 +588,11 @@ def test_stream_hll_rollup_sketch_parity_and_replay(spark, event_chunks, tmp_pat
     }
     for wk, est in got_rows.items():
         assert abs(est - exact[wk]) / exact[wk] <= 0.05
-    before = sorted(map(tuple, spark.read.parquet(os.path.join(target, "hll_weekly")).collect()))
+    hll = os.path.join(target, "hll_weekly")
+    before = sorted(map(tuple, manifest.read_table(spark, hll).collect()))
     q2 = jobs.run_stream_hll_rollup(spark, src, target)
     q2.awaitTermination(120)
-    after = sorted(map(tuple, spark.read.parquet(os.path.join(target, "hll_weekly")).collect()))
+    after = sorted(map(tuple, manifest.read_table(spark, hll).collect()))
     assert before == after
 
 
@@ -547,7 +610,7 @@ def test_stream_cms_exact_parity_and_replay(spark, event_chunks, tmp_path):
     q.awaitTermination(120)
     got = {
         (r.j, r.bucket): r.cell_cnt
-        for r in spark.read.parquet(os.path.join(target, "cms_sketch")).collect()
+        for r in manifest.read_table(spark, os.path.join(target, "cms_sketch")).collect()
     }
     oneshot = {
         (r.j, r.bucket): r.cell_cnt
@@ -560,12 +623,12 @@ def test_stream_cms_exact_parity_and_replay(spark, event_chunks, tmp_path):
     }
     assert got == oneshot and got  # exact cell-wise parity
     before = sorted(
-        map(tuple, spark.read.parquet(os.path.join(target, "cms_sketch")).collect())
+        map(tuple, manifest.read_table(spark, os.path.join(target, "cms_sketch")).collect())
     )
     q2 = jobs.run_stream_cms(spark, src, target)
     q2.awaitTermination(120)
     after = sorted(
-        map(tuple, spark.read.parquet(os.path.join(target, "cms_sketch")).collect())
+        map(tuple, manifest.read_table(spark, os.path.join(target, "cms_sketch")).collect())
     )
     assert before == after
 
@@ -1254,7 +1317,7 @@ def test_incremental_dedup_stream(spark, tmp_path):
     assert (dec[21].decision, dec[21].match_doc, dec[21].match_jaccard) == (
         "skip_duplicate", 20, 1.0,
     )
-    idx = spark.read.parquet(os.path.join(tgt, "dedup_index"))
+    idx = manifest.read_table(spark, os.path.join(tgt, "dedup_index"))
     kept_ids = sorted(r.doc_id for r in idx.select("doc_id").collect())
     assert kept_ids == sorted(
         d for d in dec if dec[d].decision == "keep"
@@ -1268,9 +1331,9 @@ def test_incremental_dedup_stream(spark, tmp_path):
     after = sorted(map(tuple, spark.read.parquet(
         os.path.join(tgt, "dedup_decisions")).collect()))
     assert after == before
-    assert spark.read.parquet(os.path.join(tgt, "dedup_index")).count() == len(
-        kept_ids
-    )
+    assert manifest.read_table(
+        spark, os.path.join(tgt, "dedup_index")
+    ).count() == len(kept_ids)
 
 
 def test_incremental_dedup_soak_sf01_kill_restart(spark, tmp_path):
@@ -1312,16 +1375,12 @@ def test_incremental_dedup_soak_sf01_kill_restart(spark, tmp_path):
     )
 
     def seed_index(tgt):
-        (
+        manifest.commit(
             docs.filter(~is_batch)
             .select("doc_id", sh_hashed.alias("sh_hash"))
             .select("doc_id", "sh_hash", *dd._minhash_cols())
-            .select(
-                "doc_id", bands.alias("bands"), "sh_hash",
-                F.lit(-1).cast("long").alias("last_batch_id"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(tgt, "dedup_index"))
+            .select("doc_id", bands.alias("bands"), "sh_hash"),
+            os.path.join(tgt, "dedup_index"),
         )
 
     batch_ids = sorted(
@@ -1386,8 +1445,8 @@ def test_incremental_dedup_soak_sf01_kill_restart(spark, tmp_path):
         try:
             dec = spark.read.parquet(os.path.join(tgt, "dedup_decisions"))
             keeps = dec.filter(F.col("decision") == "keep").count()
-            idx_n = spark.read.parquet(
-                os.path.join(tgt, "dedup_index")
+            idx_n = manifest.read_table(
+                spark, os.path.join(tgt, "dedup_index")
             ).count()
         except Exception:
             return False
@@ -1424,7 +1483,7 @@ def test_incremental_dedup_soak_sf01_kill_restart(spark, tmp_path):
     def index_rows(tgt):
         return sorted(
             (r.doc_id, tuple(r.bands), tuple(sorted(r.sh_hash)))
-            for r in spark.read.parquet(os.path.join(tgt, "dedup_index")).collect()
+            for r in manifest.read_table(spark, os.path.join(tgt, "dedup_index")).collect()
         )
 
     got = decisions(tgt)

@@ -117,4 +117,33 @@ assert not os.path.exists(os.path.join(mt, "_stats"))
 print("manifest round-trip: OK (v3, 1500 rows, version-feed caught up, "
       "merge pruned to one dir, vacuumed to v3)")
 
+
+# 6. streaming state smoke: two landed event files, two availableNow runs
+# of the incremental rollup over one checkpoint; the state is a manifest
+# table whose txn mark is the last micro-batch folded in
+import glob
+import shutil
+
+from etl_data_pipeline_spark.session import load_table
+from etl_data_pipeline_spark.streaming.jobs import run_incremental_rollup
+
+events = load_table(spark, "/root/testdata/sf0.001", "events")
+src, rollup = os.path.join(tmp, "events_src"), os.path.join(tmp, "rollup")
+os.makedirs(src)
+landed = 0
+for batch_id in (0, 1):
+    part = events.filter(F.col("event_id") % 2 == batch_id)
+    stage = os.path.join(tmp, f"events_stage{batch_id}")
+    part.coalesce(1).write.parquet(stage)
+    shutil.move(glob.glob(os.path.join(stage, "part-*.parquet"))[0],
+                os.path.join(src, f"events_{batch_id}.parquet"))
+    landed += part.count()
+    run_incremental_rollup(spark, src, rollup).awaitTermination(300)
+    state = os.path.join(rollup, "rollup_hourly")
+    n = read_table(spark, state).agg(F.sum("n_events")).first()[0]
+    mark = read_manifest(state)["txn"]["rollup_hourly"]
+    print(f"stream run{batch_id}: n_events={n} landed={landed} txn mark={mark}")
+    assert n == landed and mark == batch_id, (n, landed, mark)
+print("streaming rollup: OK (two batches folded once each)")
+
 print("DRIVER SMOKE: ALL OK")
